@@ -4515,15 +4515,18 @@ class StatementRunner(spark: SparkSession) {
 
   /** `SELECT ROUGHLY aggs FROM t [WHERE …]` — metadata-only aggregates
     * over an attached packed table: COUNT(*)/MIN/MAX/SUM/AVG answered
-    * purely from the stats sidecar (zero data files touched); a
-    * `col BETWEEN lo AND hi` or `col LIKE 'prefix%'` WHERE routes
-    * COUNT(*) through the tri-state hybrid path (ALL packs from
-    * metadata, SOME packs scanned with pruning, NONE untouched). Per
-    * the DPN contract the answers are EXACT, not approximate — the
-    * sidecar is metadata-complete for these shapes. */
+    * purely from the driver-resident stats sidecar (zero data files
+    * touched, no Spark job); a `col BETWEEN lo AND hi` or
+    * `col LIKE 'prefix%'` WHERE routes COUNT(*) through the tri-state
+    * hybrid path (ALL packs from metadata, SOME packs scanned with
+    * pruning, NONE untouched). Per the DPN contract the answers are
+    * EXACT, not approximate — the sidecar is metadata-complete for these
+    * shapes. The answer is a one-row local relation: the driver already
+    * holds it. */
   private def runRoughly(aggList: String, table: String,
                          whereClause: String): DataFrame = {
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val path = packedTables.getOrElse(table.toLowerCase,
       throw new IllegalArgumentException(
         s"SELECT ROUGHLY: table '$table' is not attached as a packed " +
@@ -4539,58 +4542,68 @@ class StatementRunner(spark: SparkSession) {
           "SELECT ROUGHLY supports COUNT(*) and MIN/MAX/SUM/AVG(column) " +
             s"aggregates only; got '$other'")
       }
+    val snap = StatsSidecar.snapshot(spark, path)
+    def requireStats(cols: Seq[String]): Unit = {
+      val missing = cols.distinct.filterNot(snap.columns)
+      if (missing.nonEmpty) throw new IllegalArgumentException(
+        s"SELECT ROUGHLY: no sidecar stats for column(s) " +
+          missing.mkString(", "))
+    }
+    def oneRow(cells: Seq[(String, DataType, Any)]): DataFrame =
+      spark.createDataFrame(
+        java.util.Collections.singletonList(Row.fromSeq(cells.map(_._3))),
+        StructType(cells.map { case (a, t, _) => StructField(a, t) }))
     Option(whereClause).map(_.trim).filter(_.nonEmpty) match {
       case None =>
-        val stats = StatsSidecar.readStats(spark, path)
-        val statCols = stats.select("column").distinct().collect()
-          .map(_.getString(0)).toSet
         val needed = specs.collect { case (_, c, _) if c.nonEmpty => c }.distinct
-        val missing = needed.filterNot(statCols)
-        if (missing.nonEmpty) throw new IllegalArgumentException(
-          s"SELECT ROUGHLY: no sidecar stats for column(s) " +
-            missing.mkString(", "))
-        if (statCols.isEmpty) throw new IllegalStateException(
+        requireStats(needed)
+        if (snap.columns.isEmpty) throw new IllegalStateException(
           s"SELECT ROUGHLY: empty stats sidecar for '$table'")
-        val per = (if (needed.nonEmpty) needed else Seq(statCols.head))
-          .map(c => c -> StatsSidecar.roughAgg(stats, c).first()).toMap
-        val total = per.values.head.getAs[Long]("n_rows")
-        val out = specs.map {
-          case ("count", _, a) => lit(total).as(a)
-          case ("min", c, a) => lit(per(c).getAs[Double]("min_v")).as(a)
-          case ("max", c, a) => lit(per(c).getAs[Double]("max_v")).as(a)
-          case ("sum", c, a) => lit(per(c).getAs[Double]("sum_v")).as(a)
+        val per = (if (needed.nonEmpty) needed else Seq(snap.columns.head))
+          .map(c => c -> snap.agg(c)).toMap
+        val total = per.values.head.nRows
+        def dbl(v: Option[Double]): Any = v.map(Double.box).orNull
+        oneRow(specs.map {
+          case ("count", _, a) => (a, LongType, total)
+          case ("min", c, a) => (a, DoubleType, dbl(per(c).minV))
+          case ("max", c, a) => (a, DoubleType, dbl(per(c).maxV))
+          case ("sum", c, a) => (a, DoubleType, dbl(per(c).sumV))
           case ("avg", c, a) =>
             val r = per(c)
-            val nonNull = r.getAs[Long]("n_rows") - r.getAs[Long]("n_nulls")
-            (if (nonNull == 0L) lit(null).cast("double")
-             else lit(r.getAs[Double]("sum_v") / nonNull)).as(a)
-        }
-        spark.range(1).select(out: _*)
+            val nonNull = r.nRows - r.nNulls
+            (a, DoubleType,
+              if (nonNull == 0L) null else dbl(r.sumV.map(_ / nonNull)))
+        })
       case Some(w) =>
         if (specs.exists(_._1 != "count"))
           throw new UnsupportedOperationException(
             "SELECT ROUGHLY with a WHERE clause answers COUNT(*) only " +
               "(the hybrid rough+exact count); other aggregates need the " +
               "full query path")
+        // an empty table counts 0 for any column
+        def counted(c: String)(n: => Long): Long = {
+          if (snap.columns.nonEmpty) requireStats(Seq(c))
+          n
+        }
         val n = w match {
-          case RoughBetweenRe(c, lo, hi) =>
-            StatsSidecar.countBetween(spark, path, c, lo.toDouble, hi.toDouble)
-          case RoughCmpRe(c, op, v) => op match {
+          case RoughBetweenRe(c, lo, hi) => counted(c)(
+            StatsSidecar.countBetween(spark, path, c, lo.toDouble, hi.toDouble))
+          case RoughCmpRe(c, op, v) => counted(c)(op match {
             case ">=" => StatsSidecar.countBetween(spark, path, c,
               v.toDouble, Double.PositiveInfinity)
             case "<=" => StatsSidecar.countBetween(spark, path, c,
               Double.NegativeInfinity, v.toDouble)
             case "=" => StatsSidecar.countBetween(spark, path, c,
               v.toDouble, v.toDouble)
-          }
-          case RoughPrefixRe(c, p) =>
-            StatsSidecar.countPrefix(spark, path, c, p)
+          })
+          case RoughPrefixRe(c, p) => counted(c)(
+            StatsSidecar.countPrefix(spark, path, c, p))
           case _ => throw new UnsupportedOperationException(
             "SELECT ROUGHLY WHERE supports 'col BETWEEN lo AND hi', " +
               "'col >= v', 'col <= v', 'col = v', and " +
               "\"col LIKE 'prefix%'\" shapes only")
         }
-        spark.range(1).select(specs.map { case (_, _, a) => lit(n).as(a) }: _*)
+        oneRow(specs.map { case (_, _, a) => (a, LongType, n) })
     }
   }
 

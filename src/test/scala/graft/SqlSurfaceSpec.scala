@@ -216,6 +216,30 @@ class SqlSurfaceSpec extends AnyFunSuite {
     }
   }
 
+  test("statement front-end: SELECT ROUGHLY WHERE on a column without " +
+      "sidecar stats refuses instead of counting 0") {
+    import org.apache.spark.sql.functions._
+    val scratch = java.nio.file.Files
+      .createTempDirectory("graft_roughly_nostats").toString
+    val li = Engine.table(spark, sf, "lineitem")
+      .select(col("l_quantity"), col("l_extendedprice"))
+    sources.StatsSidecar.writeWithStats(li, s"$scratch/li", 4096,
+      Seq("l_quantity"))
+    val runner = new sources.StatementRunner(spark)
+    runner.attachPacked("li_nostats", s"$scratch/li")
+    for (w <- Seq("l_extendedprice BETWEEN 1 AND 2", "l_extendedprice >= 1",
+        "l_extendedprice LIKE 'x%'")) {
+      val e = intercept[IllegalArgumentException] {
+        runner.run(s"SELECT ROUGHLY COUNT(*) FROM li_nostats WHERE $w")
+      }
+      assert(e.getMessage === "SELECT ROUGHLY: no sidecar stats for " +
+        "column(s) l_extendedprice")
+    }
+    assert(runner.run("SELECT ROUGHLY COUNT(*) AS n FROM li_nostats " +
+      "WHERE l_quantity BETWEEN 1 AND 2").first().getAs[Long]("n")
+      === li.where("l_quantity BETWEEN 1 AND 2").count())
+  }
+
   test("statement front-end: unsupported clauses fail fast, loudly") {
     val runner = new sources.StatementRunner(spark)
     val store = new sources.DeltaStore(spark,
