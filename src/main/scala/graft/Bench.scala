@@ -194,56 +194,12 @@ object Bench {
     // the loop; a load spike mid-run was averaged in invisibly) — a
     // pre/post divergence localizes contention to the run itself.
     val (calPre1, calPreN) = calibrate()
-    def measure(): Seq[(String, (Double, Double))] = {
+    val results: Seq[(String, (Double, Double))] = {
       val samples = interleavedSamples(spark, sfDir)
       filteredHeadline.map { n =>
         val ts = samples.map(_(n))
         n -> (if (ts.exists(_ < 0)) (-1.0, -1.0)
               else (ts.sorted.apply(RunsPerQuery / 2), ts.min))
-      }
-    }
-    var results = measure()
-    // Bench hygiene (r18 verdict): a round total >15% worse than the
-    // best of the last three committed rounds at the SAME sf is almost
-    // always host weather (r15/r16/r18 precedent: identical code swung
-    // 63-81 s with co-tenancy) — re-measure ONCE and keep the
-    // per-query better of the two passes, stamping `reruns` so the
-    // artifact shows the re-measure happened instead of a judge having
-    // to adjudicate it from calibration forensics.
-    var reruns = 0
-    val priorBest: Option[Double] = try {
-      val repo = java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_DETAIL", "/root/repo/BENCH_DETAIL.json"))
-        .getParent
-      val RoundRe = """^BENCH_r(\d+)\.json$""".r
-      val ValRe =
-        ("""(?s)"parsed":\s*\{\s*"metric":\s*"total",\s*"value":\s*""" +
-          """([\d.]+).*?"sf":\s*"([^"]+)"""").r
-      val it = java.nio.file.Files.list(repo).iterator()
-        .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-      val rounds = scala.collection.mutable.ArrayBuffer[(Int, java.nio.file.Path)]()
-      while (it.hasNext) {
-        val p = it.next()
-        RoundRe.findFirstMatchIn(p.getFileName.toString)
-          .foreach(m => rounds += ((m.group(1).toInt, p)))
-      }
-      val vals = rounds.sortBy(-_._1).take(3).flatMap { case (_, p) =>
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        ValRe.findFirstMatchIn(txt).collect {
-          case m if m.group(2) == sfDir => m.group(1).toDouble
-        }
-      }
-      if (vals.isEmpty) None else Some(vals.min)
-    } catch { case _: Throwable => None }
-    val total0 = results.map(_._2._1).filter(_ >= 0).sum
-    if (priorBest.exists(b => total0 > b * 1.15) &&
-        results.forall(_._2._1 >= 0)) {
-      reruns = 1
-      val second = measure().toMap
-      results = results.map { case (n, (med, mn)) =>
-        val (med2, mn2) = second(n)
-        if (med2 < 0) (n, (med, mn))
-        else (n, (math.min(med, med2), math.min(mn, mn2)))
       }
     }
     // Millisecond precision: 9-digit fractions made the r6 line overflow
@@ -262,7 +218,7 @@ object Bench {
     // round-over-round comparison stays apples-to-apples
     val (cal1, calN) = calibrate()
     val detail =
-      s"""{"metric":"total_detail","value":${ms(total)},"unit":"sec","runs_per_query":$RunsPerQuery,"protocol":"interleaved-median","reruns":$reruns,"total_min":${ms(totalMin)},"cal_pre_1t_ms":${ms(calPre1)},"cal_pre_allcores_ms":${ms(calPreN)},"cal_1t_ms":${ms(cal1)},"cal_allcores_ms":${ms(calN)},"failed":$failed,"queries":$qs,"queries_min":$qsMin,"sf":"$sfDir"}"""
+      s"""{"metric":"total_detail","value":${ms(total)},"unit":"sec","runs_per_query":$RunsPerQuery,"protocol":"interleaved-median","total_min":${ms(totalMin)},"cal_pre_1t_ms":${ms(calPre1)},"cal_pre_allcores_ms":${ms(calPreN)},"cal_1t_ms":${ms(cal1)},"cal_allcores_ms":${ms(calN)},"failed":$failed,"queries":$qs,"queries_min":$qsMin,"sf":"$sfDir"}"""
     // Full per-query medians/mins go to a repo file the judge reads
     // directly — the stdout tail capture is size-bounded (~2000 chars)
     // and the per-query map outgrew it in r13 (73 queries ≈ 2.3 kB →
@@ -297,7 +253,7 @@ object Bench {
     // here — total + failed + provenance only (`failed` is empty on a
     // clean round; a failing round's names are worth the chars).
     println(
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","runs_per_query":$RunsPerQuery,"protocol":"interleaved-median","reruns":$reruns,"total_min":${ms(totalMin)},"failed":$failed,"detail_file":"$detailPath","sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","runs_per_query":$RunsPerQuery,"protocol":"interleaved-median","total_min":${ms(totalMin)},"failed":$failed,"detail_file":"$detailPath","sf":"$sfDir"}""")
     spark.stop()
   }
 }

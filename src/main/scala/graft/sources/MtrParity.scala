@@ -1,20 +1,60 @@
 package graft.sources
 
-/** Value-parity engine against the reference's own golden `.result`
-  * files (mysql-test/suite/tianmu — the reference's CI corpus): parse
-  * an MTR `.test` file into statements, replay them through a
-  * [[StatementRunner]], and compare every deterministic SELECT's rows
-  * cell-for-cell (multiset, MySQL-rendered, numeric-tolerant for the
-  * float-print variants) with the block the golden records.
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.FiniteDuration
+import scala.util.Try
+
+/** The one harness for the reference's own MTR corpus
+  * (mysql-test/suite/tianmu — the reference's CI suite): it parses an
+  * MTR `.test` file into statements, prepares a [[StatementRunner]]
+  * the way MTR prepares the server, and either replays the file with
+  * success/error parity ([[replay]]) or compares every deterministic
+  * SELECT's rows cell-for-cell (multiset, MySQL-rendered,
+  * numeric-tolerant for the float-print variants) with the block the
+  * golden `.result` records ([[sweep]]).
   *
   * Lives in the MAIN tree so the driver-facing gate surface
   * (`q_sql_mtr_value_parity`) can pin parity counts in the per-round
-  * correctness artifact; the test tree's MtrValueSweep/MtrValueSpec/
-  * MtrDebug delegate here.
+  * correctness artifact; MtrReplaySpec, MtrValueSpec and the
+  * `graft.MtrTool` dev main in the test tree all call it.
   */
 object MtrParity {
-  val MtrDir = "/root/reference/mysql-test/suite/tianmu/t"
-  val ResDir = "/root/reference/mysql-test/suite/tianmu/r"
+  /** The reference checkout's mysql-test tree: the one corpus root. */
+  val MysqlTestDir = "/root/reference/mysql-test"
+  val MtrDir = s"$MysqlTestDir/suite/tianmu/t"
+  val ResDir = s"$MysqlTestDir/suite/tianmu/r"
+  private val StdDataDirs =
+    Seq(s"$MysqlTestDir/std_data", s"$MysqlTestDir/suite/tianmu/std_data")
+
+  /** Every corpus consumer calls this first: an absent corpus fails
+    * once, naming the directory, instead of once per file. */
+  def requireCorpus(): Unit =
+    if (!new java.io.File(MtrDir).isDirectory)
+      throw new java.io.FileNotFoundException(
+        s"MTR corpus not found: $MtrDir")
+
+  /** The checked-in fixture a relative INFILE path names, if present:
+    * MTR resolves such paths against the suite's test dir, and the
+    * std_data suffix re-roots under the std_data trees
+    * (`../../std_data/tianmu/loadfile` → mysql-test/std_data/tianmu/
+    * loadfile, load.test). */
+  def corpusFixture(path: String): Option[java.io.File] = {
+    val at = path.indexOf("std_data/")
+    val underStdData = if (at < 0) Nil else StdDataDirs.map(
+      new java.io.File(_, path.substring(at + "std_data/".length)))
+    (new java.io.File(MtrDir, path) +: underStdData).find(_.exists())
+  }
+
+  /** Lines of a corpus file. Some reference files carry GBK-encoded
+    * comment bytes (hash_join.test) — replace rather than abort. */
+  private def readLines(path: String): Vector[String] = {
+    val src = scala.io.Source.fromFile(path)(scala.io.Codec.UTF8
+      .onMalformedInput(java.nio.charset.CodingErrorAction.REPLACE)
+      .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE))
+    try src.getLines().toVector finally src.close()
+  }
 
   /** A fresh isolated session tuned for the STATEMENT tier: thousands
     * of sub-second queries over KB-sized tables. AQE is OFF — its
@@ -31,13 +71,24 @@ object MtrParity {
     * contract is pinned by DeltaStore's single-file write discipline,
     * not by scheduler partitioning. The ANALYTIC gates keep AQE: this
     * helper is only wired into the MTR/statement surfaces. */
-  def statementSession(
-      spark: org.apache.spark.sql.SparkSession
-  ): org.apache.spark.sql.SparkSession = {
+  def statementSession(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s.conf.set("spark.sql.shuffle.partitions", "2")
     s
+  }
+
+  /** `f` over `files` on `threads` threads, each file in its own
+    * [[statementSession]] of `spark`. Files start in the order given
+    * (callers put the longest first); results keep that order. */
+  def overFiles[A](spark: SparkSession, files: Seq[String], threads: Int,
+                   timeout: FiniteDuration)(
+      f: (String, SparkSession) => A): Seq[(String, Try[A])] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Await.result(Future.traverse(files)(file =>
+      Future((file, Try(f(file, statementSession(spark)))))), timeout)
+    finally pool.shutdown()
   }
 
   /** Statements whose output is inherently nondeterministic or
@@ -49,8 +100,7 @@ object MtrParity {
       """database|schema|benchmark|sleep|found_rows|row_count|""" +
       """last_insert_id|get_lock|release_lock)\s*\(|@|\binformation_schema\b""").r
 
-  case class Mismatch(file: String, stmt: String, expected: Seq[String],
-                      actual: Seq[String])
+  case class Mismatch(stmt: String, expected: Seq[String], actual: Seq[String])
   /** `skippedFixture` counts SELECT blocks over a table whose LOAD DATA
     * source file is physically absent from this checkout (environment,
     * not semantics — bigdata4load.txt is not shipped); `skippedSkew`
@@ -58,8 +108,7 @@ object MtrParity {
     * golden echo stream (the `.result` predates a `.test` edit — e.g.
     * auto_increment.test's unsigned inserts were halved after recording,
     * so the golden rows derive from statements that no longer run). */
-  case class SweepResult(file: String, compared: Int,
-                         mismatches: Seq[Mismatch],
+  case class SweepResult(compared: Int, mismatches: Seq[Mismatch],
                          skippedFixture: Int = 0, skippedSkew: Int = 0)
 
   /** Tables a DML statement writes (taint tracking for the two
@@ -86,8 +135,11 @@ object MtrParity {
     * `while ($x) { … }` blocks expand STATICALLY, with `$var`
     * substitution applied to the emitted lines (insert.test's
     * disable_query_log loops insert 100×5 rows — the golden
-    * `count(*)` pins 500, so the loop body must actually repeat). */
-  private def expandControlFlow(lines: Vector[String]): Vector[String] = {
+    * `count(*)` pins 500, so the loop body must actually repeat). A
+    * file without a `while` comes back unchanged. */
+  def expandControlFlow(lines: Vector[String]): Vector[String] = {
+    if (!lines.exists(l =>
+        """(?i)^\s*while\s*\(""".r.findFirstIn(l).isDefined)) return lines
     val LetRe = """(?i)^-{0,2}\s*let\s+\$(\w+)\s*=\s*(-?\d+)\s*;?\s*$""".r
     val IncRe = """(?i)^-{0,2}\s*(inc|dec)\s+\$(\w+)\s*;?\s*$""".r
     val WhileRe = """(?i)^-{0,2}\s*while\s*\(\s*\$(\w+)\s*\)\s*\{?\s*$""".r
@@ -148,14 +200,18 @@ object MtrParity {
     out.toVector
   }
 
-  /** Parse one MTR `.test` file into (statement, expectsError, quiet)
-    * triples — the statement grammar of mysqltest: `--error`
-    * annotations, `delimiter` switches, client commands skipped, block
-    * comments. `quiet` marks statements inside a disable_query_log
-    * span: the golden never echoes them, so the aligner must not
-    * search (a false hit would drag the cursor) and a missing echo is
-    * NOT version skew. */
-  def parseMtr(path: String): Seq[(String, Boolean, Boolean)] = {
+  /** Parse the lines of an MTR `.test` file into (statement,
+    * expectsError, quiet) triples the way the mysqltest client does:
+    * `--error`/`-- error` marks the next statement, `delimiter X` /
+    * `--delimiter X` switch the terminator (routine bodies stay ONE
+    * statement), client commands and `/* … */` comments are dropped,
+    * `;  # comment` still terminates, and `eval` substitutes
+    * `$MYSQL_TEST_DIR`. `quiet` marks statements inside a
+    * disable_query_log span: the golden never echoes them, so the
+    * aligner must not search (a false hit would drag the cursor) and a
+    * missing echo is NOT version skew. Control flow is not expanded
+    * here: compose with [[expandControlFlow]]. */
+  def parseMtr(lines: Seq[String]): Seq[(String, Boolean, Boolean)] = {
     val out = scala.collection.mutable.ArrayBuffer[(String, Boolean, Boolean)]()
     val cur = new StringBuilder
     var expectError = false
@@ -165,19 +221,7 @@ object MtrParity {
       """(?i)^(connect\b|connection\b|disconnect\b|let\b|inc\b|dec\b|sleep\b|real_sleep\b|source\b|echo\b|exit\b|die\b|while\b|if\b|(?:disable|enable)_\w+\b|\{|\})""".r
     val DelimiterCmd = """(?i)^delimiter\s+(\S+).*$""".r
     var inBlockComment = false
-    implicit val codec: scala.io.Codec = scala.io.Codec.UTF8
-      .onMalformedInput(java.nio.charset.CodingErrorAction.REPLACE)
-      .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE)
-    val src = scala.io.Source.fromFile(path)
-    val allLines0 =
-      try src.getLines().toVector
-      finally src.close()
-    val allLines =
-      if (allLines0.exists(l =>
-          """(?i)^\s*while\s*\(""".r.findFirstIn(l).isDefined))
-        expandControlFlow(allLines0)
-      else allLines0
-    allLines.foreach { rawLine =>
+    lines.foreach { rawLine =>
       var line = rawLine
       if (inBlockComment) {
         val end = line.indexOf("*/")
@@ -190,6 +234,10 @@ object MtrParity {
       val t = line.trim
       if (t.isEmpty) ()
       else if (t.startsWith("#")) {
+        // an --error directive whose TARGET got commented out together
+        // with it must expire — select.test leaves `-- error 1176`
+        // above `#select … use index`, and the error would otherwise
+        // leak onto the next live statement
         if ("""(?i)^#\s*(select|insert|update|delete|create|drop|alter|load|set|show)\b""".r
           .findFirstIn(t).isDefined) expectError = false
       }
@@ -205,6 +253,7 @@ object MtrParity {
           }
       } else if (cur.isEmpty && DelimiterCmd.findFirstMatchIn(t).isDefined) {
         val d = DelimiterCmd.findFirstMatchIn(t).get.group(1)
+        // `delimiter ;` (or `//;` while // is active) restores
         delim = d.stripSuffix(delim).stripSuffix(";") match {
           case "" => ";"; case x => x
         }
@@ -223,7 +272,7 @@ object MtrParity {
         if (effective.endsWith(delim)) {
           val stmt = cur.toString.trim.stripSuffix(delim)
             .replaceFirst("(?is)^eval\\s+", "")
-            .replace("$MYSQL_TEST_DIR", "/root/reference/mysql-test")
+            .replace("$MYSQL_TEST_DIR", MysqlTestDir)
           out += ((stmt, expectError, quiet))
           cur.clear()
           expectError = false
@@ -231,6 +280,113 @@ object MtrParity {
       }
     }
     out.toSeq
+  }
+
+  /** Files the reference DISABLES in its CI (disabled.def:
+    * `trigger : bug_for_trigger`, issue364, issue581) because they
+    * predate its tianmu trigger gate: CREATE TRIGGER on a tianmu table
+    * is 3240 unless tianmu_no_key_error=ON (sql_trigger.cc:229-235).
+    * Replaying them under the reference's own enabling flag is the
+    * only way the scripts' pinned successes are reachable at all. */
+  private val TriggerFlagFiles =
+    Set("trigger.test", "issue364.test", "issue581.test")
+
+  /** A runner over `session` prepared the way MTR prepares the server
+    * for `file`: the trigger flag for [[TriggerFlagFiles]], then the
+    * `<file>-master.opt` server flags (drop_index.test needs
+    * tianmu_no_key_error=ON) as session SETs — the engine models them
+    * as session variables. */
+  private def runnerFor(file: String,
+                        session: SparkSession): StatementRunner = {
+    val runner = new StatementRunner(session)
+    if (TriggerFlagFiles.contains(file))
+      runner.run("SET SESSION tianmu_no_key_error=ON")
+    val opt = new java.io.File(
+      s"$MtrDir/${file.stripSuffix(".test")}-master.opt")
+    if (opt.exists())
+      readLines(opt.getPath).mkString("\n").split("--").map(_.trim)
+        .filter(_.contains("=")).foreach { kv =>
+          val Array(k, v) = kv.split("=", 2)
+          Try(runner.run(s"SET SESSION $k=$v").collect())
+        }
+    runner
+  }
+
+  /** Statements replay skips, counted: fixture and harness gaps, not
+    * engine scope. Stored PROCEDUREs, procedural FUNCTION bodies,
+    * TRIGGERs and CALL are all IN scope (sources/Procedural.scala — the
+    * driver-side interpreter mirroring the reference's routing of
+    * routines to the MySQL SQL layer, engine_execute.cpp:374-382). */
+  private def outOfScope(stmt: String): Boolean =
+    // LOAD fixtures absent from this reference checkout (LFS-tracked
+    // bulk files, delete.test's bigdata4load.txt): the statement
+    // cannot run ANYWHERE without them
+    ("'(" + java.util.regex.Pattern.quote(MysqlTestDir) + "/[^']+)'").r
+      .findFirstMatchIn(stmt)
+      .exists(m => !new java.io.File(m.group(1)).exists()) ||
+    // a relative INFILE fixture that resolves nowhere in the reference
+    // trees (LFS-stripped, load.test's std_data/tianmu/loadfile) and
+    // that no earlier OUTFILE wrote cannot run anywhere either
+    """(?i)\bINFILE\s+'([^'$]+)'""".r.findFirstMatchIn(stmt).exists { m =>
+      val p = m.group(1)
+      !p.startsWith("/") && {
+        val flat = p.replaceAll("[^\\w.-]+", "_").stripPrefix("_")
+        // sandbox hits: the per-runner subdirectories
+        // (target/mtr_io/<runner>/<flat>) plus the legacy flat path
+        val io = new java.io.File("target/mtr_io")
+        val sandboxHit = (io +: Option(io.listFiles()).toSeq.flatten)
+          .exists(d => new java.io.File(d, flat).exists())
+        !sandboxHit && corpusFixture(p).isEmpty
+      }
+    } ||
+    // an UNQUOTED $var is an mysqltest harness variable (`let $i`
+    // loops — issue1876.test): its value lives in harness control flow
+    // replay does not interpret. Quoted ones ($MYSQLTEST_VARDIR paths)
+    // still run — the IO sandbox resolves them. Only at word START:
+    // `$i` is a harness variable, but `e$8b` is a legal MySQL
+    // identifier with an embedded $ (create_db.test)
+    """(?<!\w)\$\w+""".r.findFirstIn(
+      stmt.replaceAll("'[^']*'|\"[^\"]*\"", "")).isDefined ||
+    // `@x := …` INSIDE a query is MySQL's row-order-dependent
+    // accumulator hack (issue1897/1903/1910, range.test:189) — no
+    // relational analog (SURVEY §2.13); `SET @x := …` stays in scope,
+    // and so do routine BODIES (the interpreter evaluates their :=
+    // assignments itself — procedure.test's `select @sum:=(a+b)`)
+    (!"""(?i)^\s*(SET|CREATE\s+(?:DEFINER\s*=\s*\S+\s+)?(?:FUNCTION|PROCEDURE|TRIGGER)|CALL)\b""".r
+      .findFirstIn(stmt).isDefined &&
+      """@\w+\s*:=""".r.findFirstIn(
+        stmt.replaceAll("'[^']*'|\"[^\"]*\"", "")).isDefined)
+
+  /** `ran` counts executed statements, `skipped` the [[outOfScope]]
+    * ones; each failure names its statement. */
+  case class ReplayResult(ran: Int, skipped: Int, failures: Seq[String])
+
+  /** Replay `file` statement for statement with success/error parity:
+    * an unexpected success where an error is pinned, or any error
+    * where success is pinned, is a failure. `stopAtFirst` ends the
+    * replay at the first one. The statement stream is the file's own,
+    * without control-flow expansion. */
+  def replay(file: String, session: SparkSession,
+             stopAtFirst: Boolean): ReplayResult = {
+    val runner = runnerFor(file, session)
+    val stmts = parseMtr(readLines(s"$MtrDir/$file"))
+    val failures = scala.collection.mutable.ArrayBuffer[String]()
+    var ran = 0
+    var skipped = 0
+    stmts.iterator.takeWhile(_ => !(stopAtFirst && failures.nonEmpty))
+        .foreach { case (stmt, expectsError, _) =>
+      if (outOfScope(stmt)) skipped += 1
+      else {
+        val result = Try(runner.run(stmt).collect())
+        if (expectsError && result.isSuccess)
+          failures += s"expected an error, got success: $stmt"
+        else if (!expectsError && result.isFailure)
+          failures += s"unexpected failure for: $stmt\n  " +
+            result.failed.get.toString.take(300)
+        ran += 1
+      }
+    }
+    ReplayResult(ran, skipped, failures.toSeq)
   }
 
   /** Schema-aware cell rendering: the engine stores MySQL's zero date
@@ -311,26 +467,18 @@ object MtrParity {
 
   /** Replay `file`, comparing every eligible SELECT's rows against the
     * golden result block. */
-  def sweep(file: String,
-            session: org.apache.spark.sql.SparkSession): SweepResult = {
-    val stmts = parseMtr(s"$MtrDir/$file")
+  def sweep(file: String, session: SparkSession): SweepResult = {
+    val testLines = readLines(s"$MtrDir/$file")
+    val stmts = parseMtr(expandControlFlow(testLines))
     val resFile = new java.io.File(ResDir,
       file.stripSuffix(".test") + ".result")
-    if (!resFile.exists()) return SweepResult(file, 0, Seq.empty)
-    implicit val codec: scala.io.Codec = scala.io.Codec.UTF8
-      .onMalformedInput(java.nio.charset.CodingErrorAction.REPLACE)
-      .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE)
-    val src = scala.io.Source.fromFile(resFile)
-    val lines = try src.getLines().toVector finally src.close()
+    if (!resFile.exists()) return SweepResult(0, Seq.empty)
+    val lines = readLines(resFile.getPath)
     // `--echo` directive output lands verbatim in the golden (the
     // replication files print "[on slave]" banners) — never rows
-    val echoTexts: Set[String] = {
-      val tsrc = scala.io.Source.fromFile(s"$MtrDir/$file")
-      try tsrc.getLines().flatMap(l =>
-        """(?i)^\s*--\s*echo\s?(.*)$""".r.findFirstMatchIn(l.trim)
-          .map(_.group(1).trim)).toSet
-      finally tsrc.close()
-    }
+    val echoTexts: Set[String] = testLines.flatMap(l =>
+      """(?i)^\s*--\s*echo\s?(.*)$""".r.findFirstMatchIn(l.trim)
+        .map(_.group(1).trim)).toSet
 
     // align: find each statement's echo (line-by-line trimmed match);
     // the block between echo end and the next echo start is its output
@@ -343,7 +491,7 @@ object MtrParity {
     // in the golden echo; map our substituted path back so LOAD DATA
     // statements align instead of silently falling out of the stream
     def norm(l: String) = l.trim.stripSuffix(";").trim
-      .replace("/root/reference/mysql-test", "MYSQL_TEST_DIR")
+      .replace(MysqlTestDir, "MYSQL_TEST_DIR")
     stmts.zipWithIndex.foreach { case ((stmt, _, quiet), i) =>
       if (quiet) { echoAt(i) = -1; echoLen(i) = 0 }
       else {
@@ -362,20 +510,7 @@ object MtrParity {
       }
     }
 
-    val runner = new StatementRunner(session)
-    if (Set("trigger.test", "issue364.test", "issue581.test")
-        .contains(file))
-      runner.run("SET SESSION tianmu_no_key_error=ON")
-    val opt = new java.io.File(
-      s"$MtrDir/${file.stripSuffix(".test")}-master.opt")
-    if (opt.exists()) {
-      val osrc = scala.io.Source.fromFile(opt)
-      val txt = try osrc.mkString finally osrc.close()
-      txt.split("--").map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        scala.util.Try(runner.run(s"SET SESSION $k=$v").collect())
-      }
-    }
+    val runner = runnerFor(file, session)
 
     var compared = 0
     var skippedFixture = 0
@@ -428,6 +563,10 @@ object MtrParity {
       }
     }
 
+    def exec(sql: String): Try[(StructType, Array[Row])] = Try {
+      val df = runner.run(sql)
+      (df.schema, df.collect())
+    }
     stmts.zipWithIndex.foreach { case ((stmt, expectsError, quiet), i) =>
       val isSelect =
         """(?is)^\s*select\b""".r.findFirstIn(stmt).isDefined &&
@@ -471,35 +610,28 @@ object MtrParity {
           if ("""(?i)\b""" + java.util.regex.Pattern.quote(t) +
             """\b""").r.findFirstIn(stmt).isDefined => why }
       val deterministic = NonDeterministic.findFirstIn(stmt).isEmpty
-      val comparable = isSelect && !expectsError && deterministic &&
-        echoAt(i) >= 0 && i + 1 < stmts.length && taintHit.isEmpty
-      if (isSelect && !expectsError && deterministic && echoAt(i) >= 0 &&
-          taintHit.isDefined) {
+      val eligible = isSelect && !expectsError && deterministic &&
+        echoAt(i) >= 0
+      val comparable = eligible && i + 1 < stmts.length && taintHit.isEmpty
+      if (eligible && taintHit.isDefined) {
         if (taintHit.contains("fixture")) skippedFixture += 1
         else skippedSkew += 1
       }
-      val result: scala.util.Try[(org.apache.spark.sql.types.StructType,
-          Array[org.apache.spark.sql.Row])] =
+      val result: Try[(StructType, Array[Row])] =
         if (skipExec(i))
           // executed as part of an earlier combined INSERT
           scala.util.Success((null, Array.empty))
         else if (batchedStmt(i) != null) {
-          scala.util.Try(runner.run(batchedStmt(i)).collect()) match {
+          Try(runner.run(batchedStmt(i)).collect()) match {
             case scala.util.Success(_) =>
               scala.util.Success((null, Array.empty))
             case scala.util.Failure(_) =>
               // combined form failed — replay the run one statement at
               // a time to preserve exact per-statement semantics
               (i + 1 until batchEnd(i)).foreach(skipExec(_) = false)
-              scala.util.Try {
-                val df = runner.run(stmt)
-                (df.schema, df.collect())
-              }
+              exec(stmt)
           }
-        } else scala.util.Try {
-          val df = runner.run(stmt)
-          (df.schema, df.collect())
-        }
+        } else exec(stmt)
       if (comparable && result.isSuccess) {
         // the golden block: echo end → next echoed statement
         val next = (i + 1 until stmts.length).find(echoAt(_) >= 0)
@@ -543,12 +675,11 @@ object MtrParity {
                 else { remaining.remove(at); true }
               }
             }
-          if (!ok) mismatches += Mismatch(file, stmt.take(120),
+          if (!ok) mismatches += Mismatch(stmt.take(120),
             expected.sorted.take(40), actual.sorted.take(40))
         }
       }
     }
-    SweepResult(file, compared, mismatches.toSeq, skippedFixture,
-      skippedSkew)
+    SweepResult(compared, mismatches.toSeq, skippedFixture, skippedSkew)
   }
 }

@@ -189,31 +189,13 @@ class StatementRunner(spark: SparkSession) {
 
   /** Read-side resolution: MTR scripts address fixtures relative to the
     * suite's test dir (`../../std_data/…`, load.test) — resolve there
-    * first; otherwise fall back to the same sandbox mapping the write
-    * side uses, so OUTFILE→LOAD round-trips meet. */
+    * first ([[MtrParity.corpusFixture]]); otherwise fall back to the
+    * same sandbox mapping the write side uses, so OUTFILE→LOAD
+    * round-trips meet. */
   private def resolveReadPath(path: String): String =
-    if (path.startsWith("/") && !path.contains("$")) path
-    else if (path.contains("$")) sandboxIoPath(path)
-    else {
-      // MTR resolves relative fixture paths against its vardir; the
-      // checked-in fixtures live under the std_data trees — re-root the
-      // std_data suffix there (`../../std_data/tianmu/loadfile` →
-      // mysql-test/std_data/tianmu/loadfile, load.test)
-      val sub = path.indexOf("std_data/") match {
-        case -1 => None
-        case i => Some(path.substring(i + "std_data/".length))
-      }
-      (Seq(new java.io.File(
-        "/root/reference/mysql-test/suite/tianmu/t", path)) ++
-        sub.toSeq.flatMap(s =>
-          Seq(new java.io.File("/root/reference/mysql-test/std_data", s),
-            new java.io.File(
-              "/root/reference/mysql-test/suite/tianmu/std_data", s))))
-        .find(_.exists()) match {
-        case Some(f) => f.getCanonicalPath
-        case None => sandboxIoPath(path)
-      }
-    }
+    if (path.startsWith("/") || path.contains("$")) sandboxIoPath(path)
+    else MtrParity.corpusFixture(path).map(_.getCanonicalPath)
+      .getOrElse(sandboxIoPath(path))
 
   // DML statement forms against attached stores (the reference's primary
   // write surface: handler INSERT ha_tianmu.h write_row, DELETE/UPDATE
@@ -7242,8 +7224,9 @@ object Statements {
     * (file, blocks_compared, mismatches) counts, so a value-parity
     * regression — or silently shrunken coverage — flips the gate red
     * in CORRECTNESS_rN instead of hiding in a test-tree report. The
-    * full-corpus picture stays with `MtrValueSweep` (test tree). */
+    * full-corpus picture stays with `graft.MtrTool sweep` (test tree). */
   def qSqlMtrValueParity(s: SparkSession, dir: String): DataFrame = {
+    MtrParity.requireCorpus()
     val files = Seq("alter_column.test", "convert_conv_func.test",
       "escape.test", "func_math.test", "md5_function.test",
       "std_test.test", "time_function.test",
@@ -7252,18 +7235,10 @@ object Statements {
       // loose date-literal grammar, trailing-delimiter loads)
       "issue682.test", "issue959.test", "range.test",
       "unsigned_join.test")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val futs = files.map(f => scala.concurrent.Future(
-      (f, MtrParity.sweep(f, MtrParity.statementSession(s)))))
-    val rows =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs),
-        scala.concurrent.duration.Duration(20, "min"))
-      finally pool.shutdown()
+    val rows = MtrParity.overFiles(s, files, 4,
+      scala.concurrent.duration.Duration(20, "min"))(MtrParity.sweep)
     import s.implicits._
-    rows.map { case (f, r) => (f, r.compared, r.mismatches.length) }
+    rows.map { case (f, r) => (f, r.get.compared, r.get.mismatches.length) }
       .toDF("file", "blocks_compared", "mismatches")
   }
 

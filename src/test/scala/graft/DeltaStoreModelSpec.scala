@@ -1,0 +1,147 @@
+package graft
+
+import graft.sources.DeltaStore
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Model-based test of [[DeltaStore]]: random operation sequences run
+  * against a store and against an in-memory multiset model, and after
+  * every step `read()` must equal the model. This covers the reader
+  * cache (base and delta-part DataFrames reused across reads) and the
+  * mutation epoch, which must strictly increase on every step that
+  * changes what `read()` returns. */
+class DeltaStoreModelSpec extends AnyFunSuite {
+  private def spark = TestSession.spark
+
+  private type Rows = List[(Int, Option[String])]
+  private sealed trait Op
+  private case class AppendLocal(rows: Rows) extends Op
+  private case class AppendFile(rows: Rows) extends Op
+  private case object Flush extends Op
+  private case object Compact extends Op
+  private case object Truncate extends Op
+  private case object AlterAdd extends Op
+  private case class Txn(ops: List[Op], commit: Boolean) extends Op
+
+  private val rowsGen: Gen[Rows] = Gen.choose(0, 4).flatMap(Gen.listOfN(_,
+    Gen.zip(Gen.choose(-20, 20),
+      Gen.option(Gen.oneOf("a", "b", "ç", "")))))
+  private val simpleOp: Gen[Op] = Gen.frequency(
+    4 -> rowsGen.map(AppendLocal(_)), 3 -> rowsGen.map(AppendFile(_)),
+    2 -> Gen.const(Flush), 2 -> Gen.const(Compact),
+    1 -> Gen.const(Truncate), 1 -> Gen.const(AlterAdd))
+  private val opGen: Gen[Op] = Gen.frequency(
+    5 -> simpleOp,
+    1 -> Gen.zip(Gen.choose(1, 3).flatMap(Gen.listOfN(_, simpleOp)),
+      Gen.oneOf(true, false)).map { case (ops, c) => Txn(ops, c) })
+  private val caseGen: Gen[(Rows, List[Op])] =
+    Gen.zip(rowsGen, Gen.choose(1, 8).flatMap(Gen.listOfN(_, opGen)))
+
+  /** One run: `extra` added columns c1..cN, each holding `k + i` in
+    * appended rows and its ALTER default (100 + i) in rows that
+    * predate it. */
+  private class Run(dir: String, init: Rows) {
+    var extra = 0
+    val store = new DeltaStore(spark, s"$dir/store")
+    private var files = 0
+
+    private def cols = Seq("k", "v") ++ (1 to extra).map(i => s"c$i")
+    private def frame(rows: Rows) = {
+      val schema = StructType(Seq(StructField("k", IntegerType),
+        StructField("v", StringType)) ++
+        (1 to extra).map(i => StructField(s"c$i", IntegerType)))
+      val data = rows.map { case (k, v) =>
+        Row.fromSeq(Seq(k, v.orNull) ++ (1 to extra).map(k + _)) }
+      (spark.createDataFrame(
+        java.util.Arrays.asList(data: _*), schema), data.map(_.toSeq))
+    }
+    var model: Vector[Seq[Any]] = {
+      val (df, data) = frame(init)
+      store.writeBase(df)
+      data.toVector
+    }
+    private var last = observed()
+    assert(last === expected, "read() diverged from the model after writeBase")
+
+    /** `read()` as its column names and a sorted multiset of rows, each
+      * rendered in column-name order. */
+    def observed(): (Seq[String], Seq[String]) = {
+      val df = store.read()
+      val names = df.columns.toSeq.sorted
+      (names, df.select(names.map(df(_)): _*).collect()
+        .map(_.toSeq.mkString("|")).toSeq.sorted)
+    }
+    def expected: (Seq[String], Seq[String]) = {
+      val order = cols.zipWithIndex.sortBy(_._1).map(_._2)
+      (cols.sorted, model.map(r => order.map(r(_)).mkString("|")).sorted)
+    }
+
+    /** Apply one primitive step to store and model, then check. */
+    def step(what: String)(storeOp: => Unit)(modelOp: => Unit): Unit = {
+      val before = last
+      val e0 = store.mutationEpoch
+      storeOp
+      modelOp
+      val after = observed()
+      last = after
+      assert(after === expected, s"read() diverged from the model after $what")
+      assert(store.mutationEpoch >= e0, s"epoch went back after $what")
+      if (after != before)
+        assert(store.mutationEpoch > e0,
+          s"read() changed but mutationEpoch did not after $what")
+    }
+
+    def apply(op: Op): Unit = op match {
+      case AppendLocal(rows) =>
+        val (df, data) = frame(rows)
+        step(s"buffered append of ${rows.size}")(store.append(df))(
+          model ++= data)
+      case AppendFile(rows) =>
+        val (df, data) = frame(rows)
+        files += 1
+        val path = s"$dir/src-$files"
+        df.coalesce(1).write.parquet(path)
+        step(s"spilled append of ${rows.size}")(
+          store.append(spark.read.parquet(path)))(model ++= data)
+      case Flush => step("flush")(store.flush())(())
+      case Compact => step("compact")(store.compact())(())
+      case Truncate =>
+        step("truncate")(store.truncate())({ model = Vector.empty })
+      case AlterAdd =>
+        val i = extra + 1
+        step(s"ALTER ADD c$i")(store.alterAddColumn(s"c$i", lit(100 + i)))(
+          { extra = i; model = model.map(_ :+ (100 + i)) })
+      case Txn(ops, commit) =>
+        val (savedModel, savedExtra) = (model, extra)
+        step("beginTxn")(store.beginTxn())(())
+        ops.foreach(apply)
+        if (commit) step("commitTxn")(store.commitTxn())(())
+        else step("rollbackTxn")(store.rollbackTxn())(
+          { model = savedModel; extra = savedExtra })
+    }
+  }
+
+  test("random operation sequences: read() equals an in-memory model after " +
+      "every step, and mutationEpoch rises whenever read() changes") {
+    val t0 = System.nanoTime()
+    val sequences = 20
+    var steps = 0
+    (0 until sequences).foreach { i =>
+      caseGen(Gen.Parameters.default, Seed(7100L + i)).foreach {
+        case (init, ops) =>
+          val dir = java.nio.file.Files.createTempDirectory("graft_dsmodel")
+          val run = new Run(dir.toString, init)
+          withClue(s"sequence $i, init ${init.size} rows, ops $ops: ") {
+            ops.foreach(run.apply)
+          }
+          steps += ops.size
+      }
+    }
+    println(f"[deltastore-model] $sequences sequences, $steps ops in " +
+      f"${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+}

@@ -18,220 +18,20 @@ import org.scalatest.funsuite.AnyFunSuite
 class MtrReplaySpec extends AnyFunSuite {
   private def spark = TestSession.spark
 
-  private val MtrDir = "/root/reference/mysql-test/suite/tianmu/t"
-
-  /** (statement text, expectsError) pairs from an MTR .test file.
-    * Client-side constructs are handled the way the real mysqltest
-    * client does: `--` lines are directives (only `--error` affects the
-    * next statement), `delimiter X` switches the statement terminator
-    * (so stored-routine bodies parse as ONE statement and hit the
-    * out-of-scope skip instead of shredding), bare client commands
-    * (connect/let/inc/dec/sleep/…) are not SQL, and a trailing
-    * `# comment` after the terminating `;` does not glue the next
-    * statement on (issue1332's `select …; # NULL_VALUE` lines). */
-  private def parseMtr(path: String): Seq[(String, Boolean)] = {
-    val out = scala.collection.mutable.ArrayBuffer[(String, Boolean)]()
-    val cur = new StringBuilder
-    var expectError = false
-    var delim = ";"
-    val ClientCmd =
-      """(?i)^(connect\b|connection\b|disconnect\b|let\b|inc\b|dec\b|sleep\b|real_sleep\b|source\b|echo\b|exit\b|die\b|while\b|if\b|(?:disable|enable)_\w+\b|\{|\})""".r
-    val DelimiterCmd = """(?i)^delimiter\s+(\S+).*$""".r
-    var inBlockComment = false
-    // some reference files carry GBK-encoded comment bytes
-    // (hash_join.test) — replace rather than abort
-    implicit val codec: scala.io.Codec = scala.io.Codec.UTF8
-      .onMalformedInput(java.nio.charset.CodingErrorAction.REPLACE)
-      .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE)
-    val src = scala.io.Source.fromFile(path)
-    try src.getLines().foreach { rawLine =>
-      // strip /* … */ block comments (inner_join.test annotates every
-      // section with them); statements never embed them mid-expression
-      // in this corpus
-      var line = rawLine
-      if (inBlockComment) {
-        val end = line.indexOf("*/")
-        if (end >= 0) { line = line.substring(end + 2); inBlockComment = false }
-        else line = ""
-      }
-      line = line.replaceAll("""/\*.*?\*/""", "")
-      val openIdx = line.indexOf("/*")
-      if (openIdx >= 0) { line = line.substring(0, openIdx); inBlockComment = true }
-      val t = line.trim
-      if (t.isEmpty) ()
-      else if (t.startsWith("#")) {
-        // an --error directive whose TARGET got commented out together
-        // with it must expire — select.test leaves `-- error 1176`
-        // above `#select … use index`, and the error would otherwise
-        // leak onto the next live statement
-        if ("""(?i)^#\s*(select|insert|update|delete|create|drop|alter|load|set|show)\b""".r
-          .findFirstIn(t).isDefined) expectError = false
-      }
-      else if (t.startsWith("--")) {
-        // both MTR spellings: `--error N` and `-- error N`
-        if (t.matches("(?i)--\\s*error\\b.*")) expectError = true
-        else """(?i)^--\s*delimiter\s+(\S+)""".r.findFirstMatchIn(t)
-          .foreach { m =>
-            delim = m.group(1).stripSuffix(";") match {
-              case "" => ";"; case x => x
-            }
-          }
-      } else if (cur.isEmpty && DelimiterCmd.findFirstMatchIn(t).isDefined) {
-        val d = DelimiterCmd.findFirstMatchIn(t).get.group(1)
-        // `delimiter ;` (or `//;` while // is active) restores
-        delim = d.stripSuffix(delim).stripSuffix(";") match {
-          case "" => ";"; case x => x
-        }
-      } else if (cur.isEmpty && ClientCmd.findFirstIn(t).isDefined) ()
-      else {
-        // a terminator followed only by a # comment still terminates
-        val effective =
-          if (delim == ";") t.replaceFirst(";\\s*#[^'\"]*$", ";") else t
-        cur.append(
-          if (effective != t) line.replaceFirst(";\\s*#[^'\"]*$", ";")
-          else line).append('\n')
-        if (effective.endsWith(delim)) {
-          // `eval` substitutes MTR variables then executes — the only
-          // one these files use is $MYSQL_TEST_DIR (fixture paths)
-          val stmt = cur.toString.trim.stripSuffix(delim)
-            .replaceFirst("(?is)^eval\\s+", "")
-            .replace("$MYSQL_TEST_DIR", "/root/reference/mysql-test")
-          out += ((stmt, expectError))
-          cur.clear()
-          expectError = false
-        }
-      }
-    } finally src.close()
-    out.toSeq
-  }
-
-  /** Server-side statements this library does not carry (each with the
-    * scope rationale) — skipping is explicit and counted. */
-  private def outOfScope(stmt: String): Boolean =
-    // stored PROCEDUREs, procedural FUNCTION bodies, TRIGGERs, and CALL
-    // are all IN scope since round 17 (sources/Procedural.scala — the
-    // driver-side interpreter mirroring the reference's routing of
-    // routines to the MySQL SQL layer, engine_execute.cpp:374-382).
-    // Remaining skips are fixture/harness gaps, not engine scope:
-      // LOAD fixtures absent from this reference checkout (LFS-tracked
-      // bulk files): the statement cannot run ANYWHERE without them
-      """'(/root/reference/[^']+)'""".r.findFirstMatchIn(stmt)
-        .exists(m => !new java.io.File(m.group(1)).exists()) ||
-      // a relative INFILE fixture that resolves nowhere in the
-      // reference trees (LFS-stripped, load.test's std_data/tianmu/
-      // loadfile) cannot run anywhere either
-      """(?i)\bINFILE\s+'([^'$]+)'""".r.findFirstMatchIn(stmt).exists {
-        m =>
-          val p = m.group(1)
-          !p.startsWith("/") && {
-            val sub = p.indexOf("std_data/") match {
-              case -1 => None
-              case i => Some(p.substring(i + "std_data/".length))
-            }
-            val flat = p.replaceAll("[^\\w.-]+", "_").stripPrefix("_")
-            // sandbox hits: the legacy flat path plus the per-runner
-            // subdirectories (target/mtr_io/<runner>/<flat>)
-            val sandboxHit = new java.io.File(s"target/mtr_io/$flat")
-              .exists() ||
-              Option(new java.io.File("target/mtr_io").listFiles())
-                .exists(_.exists(d =>
-                  new java.io.File(d, flat).exists()))
-            !sandboxHit && (Seq(new java.io.File(MtrDir, p)) ++
-              sub.toSeq.flatMap(s => Seq(
-                new java.io.File("/root/reference/mysql-test/std_data", s),
-                new java.io.File(
-                  "/root/reference/mysql-test/suite/tianmu/std_data", s))))
-              .forall(!_.exists())
-          }
-      } ||
-      // a $MYSQL_TEST_DIR-anchored INFILE fixture missing from this
-      // checkout (LFS-stripped bulk data — delete.test's
-      // bigdata4load.txt) cannot run anywhere either
-      """(?i)\bINFILE\s+'\$MYSQL_TEST_DIR/([^']+)'""".r
-        .findFirstMatchIn(stmt).exists(m =>
-          !new java.io.File("/root/reference/mysql-test",
-            m.group(1)).exists()) ||
-      // an UNQUOTED $var is an mysqltest harness variable (`let $i`
-      // loops — issue1876.test): its value lives in harness control
-      // flow this replayer does not interpret. Quoted ones ($MYSQLTEST_
-      // VARDIR paths) still run — the IO sandbox resolves them.
-      // only at word START: `$i` is a harness variable, but `e$8b` is
-      // a legal MySQL identifier with an embedded $ (create_db.test)
-      """(?<!\w)\$\w+""".r.findFirstIn(
-        stmt.replaceAll("'[^']*'|\"[^\"]*\"", "")).isDefined ||
-      // `@x := …` INSIDE a query is MySQL's row-order-dependent
-      // accumulator hack (issue1897/1903/1910, range.test:189) — no
-      // relational analog (SURVEY §2.13); `SET @x := …` stays in
-      // scope, and so do routine BODIES (the interpreter evaluates
-      // their := assignments itself — procedure.test's
-      // `select @sum:=(a+b)`)
-      (!"""(?i)^\s*(SET|CREATE\s+(?:DEFINER\s*=\s*\S+\s+)?(?:FUNCTION|PROCEDURE|TRIGGER)|CALL)\b""".r
-        .findFirstIn(stmt).isDefined &&
-        """@\w+\s*:=""".r.findFirstIn(
-          stmt.replaceAll("'[^']*'|\"[^\"]*\"", "")).isDefined)
-
-  /** Files the reference DISABLES in its CI (disabled.def:
-    * `trigger : bug_for_trigger`, issue364, issue581) because they
-    * predate its tianmu trigger gate: CREATE TRIGGER on a tianmu table
-    * is 3240 unless tianmu_no_key_error=ON (sql_trigger.cc:229-235).
-    * Replaying them under the reference's own enabling flag is the
-    * only way the scripts' pinned successes are reachable at all. */
-  private val TriggerFlagFiles =
-    Set("trigger.test", "issue364.test", "issue581.test")
-
+  /** (ran, skipped) for `file`; the first parity failure fails the
+    * test, naming the statement. */
   private def replay(file: String,
-                     session: org.apache.spark.sql.SparkSession = spark,
-                     boundary: Option[(String, Boolean, Int) => Boolean]
-                       = None)
-      : (Int, Int) = {
-    val runner = new sources.StatementRunner(session)
-    if (TriggerFlagFiles.contains(file))
-      runner.run("SET SESSION tianmu_no_key_error=ON")
-    // MTR applies <file>-master.opt server flags before the file runs
-    // (drop_index.test needs tianmu_no_key_error=ON); replay them as
-    // session SETs — the engine models them as session variables.
-    val opt = new java.io.File(
-      s"$MtrDir/${file.stripSuffix(".test")}-master.opt")
-    if (opt.exists()) {
-      val src = scala.io.Source.fromFile(opt)
-      val txt = try src.mkString finally src.close()
-      txt.split("--").map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        scala.util.Try(runner.run(s"SET SESSION $k=$v").collect())
-      }
-    }
-    val stmts = parseMtr(s"$MtrDir/$file")
-    assert(stmts.nonEmpty, s"no statements parsed from $file")
-    var ran = 0
-    var skipped = 0
-    var skippedTriggers = 0
-    var stopped = false
-    stmts.foreach { case (stmt, expectsError) =>
-      if (stopped) ()
-      else if (boundary.exists(_(stmt, expectsError, skippedTriggers)))
-        stopped = true
-      else if (outOfScope(stmt)) {
-        skipped += 1
-        if ("""(?i)^\s*CREATE\s+(?:DEFINER\s*=\s*\S+\s+)?TRIGGER\b""".r
-          .findFirstIn(stmt).isDefined) skippedTriggers += 1
-      } else {
-        val result = scala.util.Try(runner.run(stmt).collect())
-        if (expectsError)
-          assert(result.isFailure,
-            s"[$file] expected an error, got success: $stmt")
-        else if (result.isFailure)
-          fail(s"[$file] unexpected failure for: $stmt\n  " +
-            result.failed.get.toString.take(300))
-        ran += 1
-      }
-    }
-    (ran, skipped)
+                     session: org.apache.spark.sql.SparkSession): (Int, Int) = {
+    val r = sources.MtrParity.replay(file, session, stopAtFirst = true)
+    if (r.failures.nonEmpty) fail(s"[$file] ${r.failures.head}")
+    (r.ran, r.skipped)
   }
 
   test("the reference's truncate_table.test replays with success/error " +
       "parity (databases, CREATE/LIKE/CTAS, views, multi-connection " +
       "truncates, qualified names)") {
-    val (ran, skipped) = replay("truncate_table.test")
+    sources.MtrParity.requireCorpus()
+    val (ran, skipped) = replay("truncate_table.test", spark)
     assert(ran >= 30, s"only $ran statements ran")
     assert(skipped <= 1, s"$skipped skipped (expected only CREATE PROCEDURE)")
   }
@@ -556,6 +356,7 @@ class MtrReplaySpec extends AnyFunSuite {
 
   test(s"${PinnedFiles.size} reference MTR files replay with " +
       "success/error parity (statement floors pinned)") {
+    sources.MtrParity.requireCorpus()
     // files are independent sessions — `spark.newSession()` isolates
     // temp views / session conf per file, so the corpus replays in
     // PARALLEL (12 files at a time on the shared TestSession context);
@@ -564,31 +365,24 @@ class MtrReplaySpec extends AnyFunSuite {
     // file (issue781, 1622 stmts, ~10 min under contention) must start
     // in the first wave or it alone sets the suite's tail — with
     // insertion order it started late and the pool drained around it.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(12)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val futs = PinnedFiles.sortBy(-_._2).map { case (file, floor, maxSkip) =>
-      scala.concurrent.Future {
-        val t0 = System.nanoTime()
-        val res = scala.util.Try(replay(file,
-          sources.MtrParity.statementSession(spark)))
-        val secs = (System.nanoTime() - t0) / 1e9
-        // per-file wall time to stdout: a pathological straggler must
-        // be visible by NAME, not as a silent hour
-        println(f"[mtr-replay] $file%-36s ${secs}%7.1fs " +
-          s"ok=${res.isSuccess} " +
-          res.map { case (r, sk) => s"ran=$r skipped=$sk" }
-            .getOrElse(""))
-        (file, floor, maxSkip, res)
-      }
+    val floors = PinnedFiles.map(p => p._1 -> (p._2, p._3)).toMap
+    val results = sources.MtrParity.overFiles(spark,
+      PinnedFiles.sortBy(-_._2).map(_._1), 12,
+      scala.concurrent.duration.Duration(90, "min")) { (file, session) =>
+      val t0 = System.nanoTime()
+      val res = scala.util.Try(replay(file, session))
+      val secs = (System.nanoTime() - t0) / 1e9
+      // per-file wall time to stdout: a pathological straggler must
+      // be visible by NAME, not as a silent hour
+      println(f"[mtr-replay] $file%-36s ${secs}%7.1fs " +
+        s"ok=${res.isSuccess} " +
+        res.map { case (r, sk) => s"ran=$r skipped=$sk" }.getOrElse(""))
+      res.get
     }
-    val results = scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(futs),
-      scala.concurrent.duration.Duration(90, "min"))
-    pool.shutdown()
     val failures = scala.collection.mutable.ArrayBuffer[String]()
     var total = 0
-    results.foreach { case (file, floor, maxSkip, res) =>
+    results.foreach { case (file, res) =>
+      val (floor, maxSkip) = floors(file)
       res match {
         case scala.util.Success((ran, skipped)) =>
           total += ran

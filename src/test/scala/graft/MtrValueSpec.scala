@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * file replays end to end and every deterministic SELECT's rows are
   * compared cell-for-cell (multiset, MySQL-rendered, numeric-tolerant
   * for the float-print variants) with the golden block the reference's
-  * CI recorded. [[MtrValueSweep]] is the shared engine; `sbt
-  * "Test/runMain graft.MtrValueSweep"` reports the full-corpus
+  * CI recorded. [[sources.MtrParity.sweep]] is the shared engine;
+  * `sbt "Test/runMain graft.MtrTool sweep"` reports the full-corpus
   * picture.
   *
   * Round 19: EVERY file the full sweep reports zero-mismatch is pinned
@@ -221,28 +221,19 @@ class MtrValueSpec extends AnyFunSuite {
   test(s"${CleanFiles.size} reference MTR files replay with full VALUE " +
       "parity on their deterministic SELECT blocks (golden .result " +
       "rows, cell-exact)") {
+    sources.MtrParity.requireCorpus()
     // 12-wide, LONGEST FIRST (block count as the duration proxy) — the
     // same straggler discipline as MtrReplaySpec: a big file started
     // late sets the suite's tail all by itself
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(12)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val futs = CleanFiles.sortBy(-_._2).map { case (file, floor) =>
-      scala.concurrent.Future {
-        (file, floor,
-          scala.util.Try(MtrValueSweep.sweep(file,
-            sources.MtrParity.statementSession(spark))))
-      }
-    }
-    val results =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs),
-        scala.concurrent.duration.Duration(75, "min"))
-      finally pool.shutdown()
+    val floors = CleanFiles.toMap
+    val results = sources.MtrParity.overFiles(spark,
+      CleanFiles.sortBy(-_._2).map(_._1), 12,
+      scala.concurrent.duration.Duration(75, "min"))(sources.MtrParity.sweep)
     val failures = scala.collection.mutable.ArrayBuffer[String]()
     var total = 0
     results.foreach {
-      case (file, floor, scala.util.Success(res)) =>
+      case (file, scala.util.Success(res)) =>
+        val floor = floors(file)
         total += res.compared
         if (res.compared < floor)
           failures += s"$file: compared ${res.compared} < floor $floor"
@@ -250,7 +241,7 @@ class MtrValueSpec extends AnyFunSuite {
           s"$file VALUE mismatch: ${m.stmt}\n  exp ${m.expected.take(2)
             .mkString(" | ").take(160)}\n  act ${m.actual.take(2)
             .mkString(" | ").take(160)}")
-      case (file, _, scala.util.Failure(e)) =>
+      case (file, scala.util.Failure(e)) =>
         failures += s"$file: ${String.valueOf(e.getMessage).take(160)}"
     }
     assert(failures.isEmpty, failures.mkString("\n"))
