@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): run the headline queries against
@@ -92,7 +93,15 @@ object Bench {
     "q_corpus_topics",          // topic-cluster composition report
     "q_bpe_train")              // iterative BPE merge training (8 steps)
 
-  def runOne(spark: SparkSession, name: String, sfDir: String): Double = {
+  def runOne(spark: SparkSession, name: String, sfDir: String): Double =
+    runCounted(spark, name, sfDir)._1
+
+  /** One run of `name`: seconds (-1 on error) and the number of
+    * classes Spark compiled for it (generated code is cached by its
+    * source, so a repeated query compiles 0 unless its code changed). */
+  def runCounted(spark: SparkSession, name: String,
+                 sfDir: String): (Double, Long) = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     try SparkEntry.queries(name)(spark, sfDir)
       .write.mode("overwrite").format("noop").save()
@@ -100,9 +109,10 @@ object Bench {
       case e: Throwable =>
         System.err.println(
           s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-        return -1.0
+        return (-1.0, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
     }
-    (System.nanoTime() - t0) / 1e9
+    ((System.nanoTime() - t0) / 1e9,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
   }
 
   /** Per-query protocol: run 5×, report the MEDIAN. The reference's
@@ -128,9 +138,9 @@ object Bench {
     * round where median >> min across the board is machine weather, not
     * a regression, and the artifact should show that by itself. */
   def interleavedSamples(spark: SparkSession,
-                         sfDir: String): Seq[Map[String, Double]] =
+                         sfDir: String): Seq[Map[String, (Double, Long)]] =
     (1 to RunsPerQuery).map(_ =>
-      filteredHeadline.map(n => n -> runOne(spark, n, sfDir)).toMap)
+      filteredHeadline.map(n => n -> runCounted(spark, n, sfDir)).toMap)
 
   /** Failures are first-class in the artifact: a benched query that
     * errors must scream from the parsed JSON (`"failed":["name",…]`),
@@ -194,13 +204,11 @@ object Bench {
     // the loop; a load spike mid-run was averaged in invisibly) — a
     // pre/post divergence localizes contention to the run itself.
     val (calPre1, calPreN) = calibrate()
-    val results: Seq[(String, (Double, Double))] = {
-      val samples = interleavedSamples(spark, sfDir)
-      filteredHeadline.map { n =>
-        val ts = samples.map(_(n))
-        n -> (if (ts.exists(_ < 0)) (-1.0, -1.0)
-              else (ts.sorted.apply(RunsPerQuery / 2), ts.min))
-      }
+    val samples = interleavedSamples(spark, sfDir)
+    val results: Seq[(String, (Double, Double))] = filteredHeadline.map { n =>
+      val ts = samples.map(_(n)._1)
+      n -> (if (ts.exists(_ < 0)) (-1.0, -1.0)
+            else (ts.sorted.apply(RunsPerQuery / 2), ts.min))
     }
     // Millisecond precision: 9-digit fractions made the r6 line overflow
     // the driver's output-tail capture window (BENCH_r06 parsed:null).
@@ -210,6 +218,10 @@ object Bench {
       .mkString("{", ",", "}")
     val qsMin = results.map { case (k, (_, mn)) => s""""$k":${ms(mn)}""" }
       .mkString("{", ",", "}")
+    // classes compiled per query in each pass, in pass order
+    val compiles = filteredHeadline.map(n =>
+      samples.map(_(n)._2).mkString(s""""$n":[""", ",", "]"))
+      .mkString("{", ",", "}")
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val totalMin = results.map(_._2._2).filter(_ >= 0).sum
     val failed = failedJson(results)
@@ -218,7 +230,7 @@ object Bench {
     // round-over-round comparison stays apples-to-apples
     val (cal1, calN) = calibrate()
     val detail =
-      s"""{"metric":"total_detail","value":${ms(total)},"unit":"sec","runs_per_query":$RunsPerQuery,"protocol":"interleaved-median","total_min":${ms(totalMin)},"cal_pre_1t_ms":${ms(calPre1)},"cal_pre_allcores_ms":${ms(calPreN)},"cal_1t_ms":${ms(cal1)},"cal_allcores_ms":${ms(calN)},"failed":$failed,"queries":$qs,"queries_min":$qsMin,"sf":"$sfDir"}"""
+      s"""{"metric":"total_detail","value":${ms(total)},"unit":"sec","runs_per_query":$RunsPerQuery,"protocol":"interleaved-median","total_min":${ms(totalMin)},"cal_pre_1t_ms":${ms(calPre1)},"cal_pre_allcores_ms":${ms(calPreN)},"cal_1t_ms":${ms(cal1)},"cal_allcores_ms":${ms(calN)},"failed":$failed,"queries":$qs,"queries_min":$qsMin,"compiles":$compiles,"sf":"$sfDir"}"""
     // Full per-query medians/mins go to a repo file the judge reads
     // directly — the stdout tail capture is size-bounded (~2000 chars)
     // and the per-query map outgrew it in r13 (73 queries ≈ 2.3 kB →

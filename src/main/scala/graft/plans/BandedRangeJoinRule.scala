@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types.{ArrayType, ByteType, IntegerType, LongType, ShortType}
 
 /** Optimizer rule: rewrite interval joins into banded equi joins.
@@ -134,12 +135,15 @@ class BandedRangeJoinRule(session: SparkSession)
   }
 }
 
-/** `spark.sql.extensions` entry point registering the graft optimizer
-  * rules (the standard public extension hook). */
+/** `spark.sql.extensions` entry point registering the graft analyzer,
+  * optimizer and physical rules (the standard public extension hook). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(new BandedRangeJoinRule(_))
     ext.injectOptimizerRule(new EditDistanceBandRule(_))
     ext.injectResolutionRule(new MySqlCoercionRule(_))
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = ParamLiteralRule
+    })
   }
 }

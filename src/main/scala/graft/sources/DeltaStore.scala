@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Here: `base-N/` is the columnar store (version-numbered directories,
   * pointer-flipped on rewrite so concurrent readers never straddle a
-  * half-swapped dir), `delta/` receives appends, reads
+  * half-swapped dir), `delta-M/` receives appends, reads
   * union the two, `compact()` folds delta into base. At scale the
   * pattern is the standard lakehouse ingest: appends land as small files
   * partitioned by arrival, queries see base ∪ delta with no blocking,
@@ -20,51 +20,63 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 class DeltaStore(spark: SparkSession, root: String) {
 
-  private val deltaPath = s"$root/delta"
-
-  // ---- versioned base directories ----
+  // ---- versioned base and delta directories ----
   // The base is NEVER rewritten in place: each rewrite lands in a fresh
   // `base-N+1` directory and the version pointer flips after the write
   // completes (MvccStore's manifest protocol, applied to the physical
   // dir). A reader holding a plan against `base-N` keeps reading files
   // that still exist — the delete-then-rename window of the old staging
   // swap (FAILED_READ_FILE under the parity gate's 4-way concurrency)
-  // is gone. Old versions GC with a grace of [[KeepVersions]]; an open
-  // savepoint pins its version so rollback is a pointer restore, not a
-  // directory copy.
+  // is gone. The delta is versioned the same way: compact and truncate
+  // retire `delta-M` by flipping to an empty `delta-M+1`, so a plan
+  // that read the old delta parts keeps reading them. Old versions of
+  // both GC with a grace of [[KeepVersions]]; an open savepoint pins
+  // its versions so rollback is a pointer restore, not a directory
+  // copy.
   private val KeepVersions = 2
   private val BaseVerRe = """base-(\d+)""".r
-  @volatile private var baseVer: Long = {
-    val r = new Path(root)
-    val found =
-      if (fs.exists(r))
-        fs.listStatus(r).filter(_.isDirectory).flatMap(st =>
-          st.getPath.getName match {
-            case BaseVerRe(n) => Some(n.toLong)
-            case _ => None
-          })
-      else Array.empty[Long]
-    if (found.isEmpty) 0L else found.max
-  }
-  private def basePath = s"$root/base-$baseVer"
+  private val DeltaVerRe = """delta-(\d+)""".r
+  private def versionsOf(re: scala.util.matching.Regex): Seq[(Long, Path)] =
+    if (!fs.exists(new Path(root))) Nil
+    else fs.listStatus(new Path(root)).filter(_.isDirectory).toSeq.flatMap(st =>
+      st.getPath.getName match {
+        case re(n) => Some(n.toLong -> st.getPath)
+        case _ => None
+      })
+  @volatile private var baseVer: Long =
+    versionsOf(BaseVerRe).map(_._1).maxOption.getOrElse(0L)
+  @volatile private var deltaVer: Long =
+    versionsOf(DeltaVerRe).map(_._1).maxOption.getOrElse(0L)
+  /** The current base directory. */
+  private[graft] def basePath = s"$root/base-$baseVer"
   private def baseDirOf(v: Long) = s"$root/base-$v"
+  private def deltaPath = s"$root/delta-$deltaVer"
 
-  /** Promote a freshly written `base-(v)` dir to current and GC stale
-    * versions past the grace window (never the savepoint-pinned one). */
-  private def promoteBase(v: Long): Unit = synchronized {
-    baseVer = v
-    bumpEpoch()
+  /** Delete the versions of `re` past the grace window behind `current`,
+    * never the savepoint-pinned one. */
+  private def collectGarbage(re: scala.util.matching.Regex, current: Long,
+                             pinned: Long): Unit = {
     val floor =
-      if (txnActive) math.min(txnBaseVer, v - KeepVersions)
-      else v - KeepVersions
-    if (fs.exists(new Path(root)))
-      fs.listStatus(new Path(root)).filter(_.isDirectory).foreach(st =>
-        st.getPath.getName match {
-          case BaseVerRe(n)
-              if n.toLong < floor && (!txnActive || n.toLong != txnBaseVer) =>
-            fs.delete(st.getPath, true)
-          case _ => ()
-        })
+      if (txnActive) math.min(pinned, current - KeepVersions)
+      else current - KeepVersions
+    versionsOf(re).foreach { case (n, p) =>
+      if (n < floor && (!txnActive || n != pinned)) fs.delete(p, true)
+    }
+  }
+
+  /** Promote a freshly written `base-(v)` dir holding `schema` to
+    * current, and GC stale versions. The reader cache is seeded with
+    * `schema`, so the next read infers nothing (inference is a Spark
+    * job reading the footers). */
+  private def promoteBase(v: Long,
+                          schema: org.apache.spark.sql.types.StructType
+  ): Unit = synchronized {
+    baseVer = v
+    baseCacheDf = spark.read.schema(schema).parquet(baseDirOf(v))
+    baseCacheVer = v
+    partCache.clear()
+    bumpEpoch()
+    collectGarbage(BaseVerRe, v, txnBaseVer)
   }
 
   /** In-memory insert buffer — the direct analog of the reference's
@@ -112,7 +124,7 @@ class DeltaStore(spark: SparkSession, root: String) {
     val next = baseVer + 1
     (if (single || smallStore) orderedSingle(df) else df)
       .write.mode("overwrite").parquet(baseDirOf(next))
-    promoteBase(next)
+    promoteBase(next, df.schema)
     bumpEpoch()
   }
 
@@ -175,8 +187,9 @@ class DeltaStore(spark: SparkSession, root: String) {
   // an MTR replay (32/40 samples of the runner's main thread inside
   // DataFrameReader.parquet; select.test = 1276 statements paid it
   // per table reference). Keyed on baseVer: compact/truncate/ALTER
-  // bump the version, dropping the base entry AND the part entries
-  // (whose read schema is pinned to the base schema of that version).
+  // bump the version, replacing the base entry and dropping the part
+  // entries (whose read schema is pinned to the base schema of that
+  // version).
   private var baseCacheVer = -1L
   private var baseCacheDf: DataFrame = null
   private val partCache =
@@ -240,6 +253,7 @@ class DeltaStore(spark: SparkSession, root: String) {
   private var txnBufferedSchema: org.apache.spark.sql.types.StructType = _
   private var txnDeltaFiles: Set[String] = Set.empty
   private var txnBaseVer = 0L
+  private var txnDeltaVer = 0L
   private def deltaFileNames: Set[String] =
     if (!exists(deltaPath)) Set.empty
     else fs.listStatus(new Path(deltaPath)).filter(_.isFile)
@@ -251,13 +265,13 @@ class DeltaStore(spark: SparkSession, root: String) {
     txnBufferedSchema = bufferedSchema
     txnDeltaFiles = deltaFileNames
     txnBaseVer = baseVer
+    txnDeltaVer = deltaVer
   }
 
   def commitTxn(): Unit = {
     txnActive = false
     txnBuffered = null
     txnBufferedSchema = null
-    fs.delete(new Path(s"$root/_txndelta"), true)
   }
 
   def rollbackTxn(): Unit = {
@@ -265,37 +279,36 @@ class DeltaStore(spark: SparkSession, root: String) {
     buffered.clear()
     if (txnBuffered != null) buffered ++= txnBuffered
     bufferedSchema = txnBufferedSchema
-    // restore delta files moved aside by an in-txn compaction
-    val aside = new Path(s"$root/_txndelta")
-    if (fs.exists(aside)) {
-      if (!exists(deltaPath)) fs.mkdirs(new Path(deltaPath))
-      fs.listStatus(aside).filter(_.isFile).foreach(st =>
-        fs.rename(st.getPath, new Path(deltaPath, st.getPath.getName)))
-      fs.delete(aside, true)
+    // an in-txn rewrite or compaction moved past the pinned versions:
+    // the versioned protocol kept them, so this is a pointer flip back
+    // (the old staging swap paid a full directory copy here). The
+    // versions the transaction wrote are deleted: a later flip reuses
+    // their numbers, and a reopened store takes the highest one.
+    baseVer = txnBaseVer
+    deltaVer = txnDeltaVer
+    Seq(BaseVerRe -> txnBaseVer, DeltaVerRe -> txnDeltaVer).foreach {
+      case (re, pinned) => versionsOf(re).foreach { case (n, p) =>
+        if (n > pinned) fs.delete(p, true)
+      }
     }
     // drop delta files the transaction added
     if (exists(deltaPath))
       fs.listStatus(new Path(deltaPath)).filter(_.isFile)
         .filterNot(st => txnDeltaFiles.contains(st.getPath.getName))
         .foreach(st => fs.delete(st.getPath, false))
-    // restore the base if an in-txn rewrite replaced it: the versioned
-    // protocol pins the savepoint dir, so this is a pointer flip back
-    // (the old staging swap paid a full directory copy here)
-    baseVer = txnBaseVer
     txnActive = false
     txnBuffered = null
     txnBufferedSchema = null
     bumpEpoch()
   }
 
-  /** Delta-dir teardown honoring an open savepoint: inside a
-    * transaction the files move aside (rollback restores them)
-    * instead of being deleted. */
+  /** Retire the current delta version: appends go to a fresh one, and
+    * the old parts stay readable for [[KeepVersions]] versions (a
+    * savepoint pins its own, so rollback flips back to it). */
   private def discardDelta(): Unit = {
     if (!exists(deltaPath)) return
-    val aside = new Path(s"$root/_txndelta")
-    if (txnActive && !fs.exists(aside)) fs.rename(new Path(deltaPath), aside)
-    else fs.delete(new Path(deltaPath), true)
+    deltaVer += 1
+    collectGarbage(DeltaVerRe, deltaVer, txnDeltaVer)
     bumpEpoch()
   }
 
@@ -325,7 +338,7 @@ class DeltaStore(spark: SparkSession, root: String) {
     val df = if (smallStore) orderedSingle(df0) else df0
     val next = baseVer + 1
     df.write.mode("overwrite").parquet(baseDirOf(next))
-    promoteBase(next)
+    promoteBase(next, df0.schema)
   }
 
   /** Fold the delta into the base and clear it (background-merge analog). */
@@ -341,7 +354,7 @@ class DeltaStore(spark: SparkSession, root: String) {
     * core/tianmu_table.h:76): keep the schema, drop all rows — base is
     * overwritten with an empty frame, delta cleared. */
   def truncate(): Unit = {
-    rewriteBase(spark.read.parquet(basePath).limit(0))
+    rewriteBase(baseDf().limit(0))
     buffered.clear()
     bufferedSchema = null
     discardDelta()
@@ -385,7 +398,7 @@ class DeltaStore(spark: SparkSession, root: String) {
     * UPDATE/DELETE compaction jobs do. */
   def rewriteWith(f: DataFrame => DataFrame): Unit = {
     compact()
-    val base = spark.read.parquet(basePath)
+    val base = baseDf()
     val result = f(base)
     // re-stamp column METADATA the transform's projections dropped
     // (withColumn loses it): the declared MySQL semantics — autoinc,
@@ -415,13 +428,13 @@ class DeltaStore(spark: SparkSession, root: String) {
     * covers the whole table. */
   def alterAddColumn(name: String, default: org.apache.spark.sql.Column): Unit = {
     compact()
-    rewriteBase(spark.read.parquet(basePath).withColumn(name, default))
+    rewriteBase(baseDf().withColumn(name, default))
   }
 
   /** ALTER TABLE … DROP COLUMN analog. */
   def alterDropColumn(name: String): Unit = {
     compact()
-    rewriteBase(spark.read.parquet(basePath).drop(name))
+    rewriteBase(baseDf().drop(name))
   }
 
   /** ALTER TABLE … MODIFY COLUMN analog (alter_column.test): retype in
@@ -429,7 +442,7 @@ class DeltaStore(spark: SparkSession, root: String) {
   def alterModifyColumn(name: String,
                         dt: org.apache.spark.sql.types.DataType): Unit = {
     compact()
-    rewriteBase(spark.read.parquet(basePath)
+    rewriteBase(baseDf()
       .withColumn(name, org.apache.spark.sql.functions.col(name).cast(dt)))
   }
 
@@ -439,7 +452,7 @@ class DeltaStore(spark: SparkSession, root: String) {
                         dt: Option[org.apache.spark.sql.types.DataType])
       : Unit = {
     compact()
-    val df = spark.read.parquet(basePath)
+    val df = baseDf()
     val retyped = dt.fold(df)(t => df.withColumn(oldName,
       org.apache.spark.sql.functions.col(oldName).cast(t)))
     rewriteBase(retyped.withColumnRenamed(oldName, newName))

@@ -40,9 +40,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Where the rough pass runs: on the driver, in plain Scala, with no
   * Spark job — as Tianmu walks its in-memory DPNs. The first call on a
   * packed path loads a [[Snapshot]]: every sidecar row, grouped by column
-  * and ordered by pack, plus one relation over the table root, opened on
-  * the first exact pass, whose file listing and inferred data schema are
-  * reused by every later one. Each call re-lists the sidecar directory
+  * and ordered by pack, plus one relation over the table root, opened
+  * with it, whose file listing and inferred data schema are reused by
+  * every exact pass. Each call re-lists the sidecar directory
   * (names, lengths and modification times of its files) and reloads the
   * snapshot when that listing, or the session, differs: a Parquet
   * rewrite always writes files under new names, so a table rewritten by
@@ -330,9 +330,12 @@ object StatsSidecar {
       else byColumn.getOrElse(column, throw new IllegalArgumentException(
         s"no sidecar stats for column '$column' in ${statsPath(path)}"))
 
-    /** The table, opened on first use (an empty table has no files to
-      * infer a schema from, and needs no exact pass). */
+    /** The table, opened with the snapshot so that its schema inference
+      * (a Spark job outside any query) is not part of a later count. An
+      * empty table has no files to infer a schema from, and needs no
+      * exact pass. */
     lazy val relation: DataFrame = spark.read.parquet(path)
+    if (rows.nonEmpty) relation
 
     def agg(column: String): Agg = {
       val ps = packs(column)

@@ -1,7 +1,9 @@
 package graft
 
 import graft.sources.DeltaStore
-import org.apache.spark.sql.Row
+import org.apache.spark.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -11,9 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Model-based test of [[DeltaStore]]: random operation sequences run
   * against a store and against an in-memory multiset model, and after
   * every step `read()` must equal the model. This covers the reader
-  * cache (base and delta-part DataFrames reused across reads) and the
-  * mutation epoch, which must strictly increase on every step that
-  * changes what `read()` returns. */
+  * cache (base and delta-part DataFrames reused across reads, the base
+  * entry seeded with the schema just written) and the mutation epoch,
+  * which must strictly increase on every step that changes what
+  * `read()` returns. A frame read before a step must still return the
+  * rows from before it: no step but a rollback deletes files a reader
+  * may hold. */
 class DeltaStoreModelSpec extends AnyFunSuite {
   private def spark = TestSession.spark
 
@@ -51,7 +56,8 @@ class DeltaStoreModelSpec extends AnyFunSuite {
 
     private def cols = Seq("k", "v") ++ (1 to extra).map(i => s"c$i")
     private def frame(rows: Rows) = {
-      val schema = StructType(Seq(StructField("k", IntegerType),
+      val schema = StructType(Seq(StructField("k", IntegerType,
+        metadata = new MetadataBuilder().putString("comment", "key").build()),
         StructField("v", StringType)) ++
         (1 to extra).map(i => StructField(s"c$i", IntegerType)))
       val data = rows.map { case (k, v) =>
@@ -67,10 +73,9 @@ class DeltaStoreModelSpec extends AnyFunSuite {
     private var last = observed()
     assert(last === expected, "read() diverged from the model after writeBase")
 
-    /** `read()` as its column names and a sorted multiset of rows, each
-      * rendered in column-name order. */
-    def observed(): (Seq[String], Seq[String]) = {
-      val df = store.read()
+    /** `df` (by default `read()`) as its column names and a sorted
+      * multiset of rows, each rendered in column-name order. */
+    def observed(df: DataFrame = store.read()): (Seq[String], Seq[String]) = {
       val names = df.columns.toSeq.sorted
       (names, df.select(names.map(df(_)): _*).collect()
         .map(_.toSeq.mkString("|")).toSeq.sorted)
@@ -81,14 +86,21 @@ class DeltaStoreModelSpec extends AnyFunSuite {
     }
 
     /** Apply one primitive step to store and model, then check. */
-    def step(what: String)(storeOp: => Unit)(modelOp: => Unit): Unit = {
+    def step(what: String, holdsFiles: Boolean = true)(storeOp: => Unit)(
+        modelOp: => Unit): Unit = {
       val before = last
       val e0 = store.mutationEpoch
+      val prior = store.read()
       storeOp
       modelOp
       val after = observed()
       last = after
       assert(after === expected, s"read() diverged from the model after $what")
+      if (holdsFiles)
+        assert(observed(prior) === before,
+          s"a frame read before $what changed or lost its files")
+      assert(store.read().schema === spark.read.parquet(store.basePath).schema,
+        s"read() schema is not the base's inferred schema after $what")
       assert(store.mutationEpoch >= e0, s"epoch went back after $what")
       if (after != before)
         assert(store.mutationEpoch > e0,
@@ -120,7 +132,7 @@ class DeltaStoreModelSpec extends AnyFunSuite {
         step("beginTxn")(store.beginTxn())(())
         ops.foreach(apply)
         if (commit) step("commitTxn")(store.commitTxn())(())
-        else step("rollbackTxn")(store.rollbackTxn())(
+        else step("rollbackTxn", holdsFiles = false)(store.rollbackTxn())(
           { model = savedModel; extra = savedExtra })
     }
   }
@@ -143,5 +155,61 @@ class DeltaStoreModelSpec extends AnyFunSuite {
     }
     println(f"[deltastore-model] $sequences sequences, $steps ops in " +
       f"${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
+  test("a frame read before compact() or truncate() still returns its rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsgrace").toString
+    val run = new Run(dir, List((1, Some("a")), (2, None)))
+    run(AppendFile(List((3, Some("b")))))
+    run(AppendLocal(List((4, Some("ç")))))
+    val df = run.store.read()
+    val rows = df.collect().toSeq
+    run(Compact)
+    assert(df.collect().toSeq === rows)
+    run(AppendFile(List((5, Some("")))))
+    val df2 = run.store.read()
+    val rows2 = df2.collect().toSeq
+    run(Truncate)
+    assert(df2.collect().toSeq === rows2)
+    assert(df.collect().toSeq === rows)
+  }
+
+  test("a store reopened after a rollback reads what the live store reads") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsreopen").toString
+    val run = new Run(dir, List((1, Some("a")), (2, None), (3, Some("b"))))
+    run(AppendFile(List((4, Some("c")))))
+    run(Txn(List(AppendFile(List((5, None))), Compact, AlterAdd,
+      AppendFile(List((6, Some("d")))), Truncate), commit = false))
+    val reopened = new DeltaStore(spark, s"$dir/store")
+    assert(run.observed(reopened.read()) === run.observed())
+    assert(run.observed() === run.expected)
+  }
+
+  test("read() after a base rewrite runs no Spark job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsnojob").toString
+    val store = new DeltaStore(spark, s"$dir/store")
+    val df = spark.range(5).selectExpr("CAST(id AS INT) AS k")
+    def readsWithNoJob(what: String)(op: => Unit): Unit = {
+      op
+      ListenerBridge.drain(sc)
+      jobs.set(0)
+      store.read()
+      ListenerBridge.drain(sc)
+      assert(jobs.get === 0, s"read() after $what ran ${jobs.get} job(s)")
+    }
+    sc.addSparkListener(listener)
+    try {
+      readsWithNoJob("writeBase")(store.writeBase(df))
+      readsWithNoJob("compact")({ store.append(df); store.compact() })
+      readsWithNoJob("rewriteWith")(store.rewriteWith(_.filter("k > 1")))
+      readsWithNoJob("ALTER ADD")(store.alterAddColumn("c", lit(1)))
+      readsWithNoJob("truncate")(store.truncate())
+    } finally sc.removeSparkListener(listener)
   }
 }
