@@ -21,6 +21,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - shuffle.partitions defaults to the local core count; on a real
   *    cluster this is expected to be overridden (or left to AQE's
   *    coalescing with a high initial value).
+  *  - The JVM-wide cache of generated classes holds [[CodegenCacheEntries]]
+  *    (Spark's default is 100). The reference compiles each statement
+  *    once into a step list (optimizer/compile/compiled_query.h:39-58);
+  *    here each query shape is compiled once by Janino, and literals no
+  *    longer enter the source ([[graft.plans.ParamLiteralRule]]), so the
+  *    working set is the number of shapes. Measured on a 4-core host:
+  *    one `graft.Bench` pass over the 76 headline queries compiles about
+  *    1,380 classes and the perfbench HTAP statement stream about
+  *    150-200, so at 100 entries every pass and every round recompiled
+  *    its classes. The cost is metaspace: loaded classes stay resident,
+  *    which perfbench reports as `peak_rss_mb`.
   */
 object Engine {
 
@@ -28,6 +39,11 @@ object Engine {
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
   val ExtraTables: Seq[String] = Seq("events", "documents", "embeddings")
   val AllTables: Seq[String] = TpchTables ++ ExtraTables
+
+  /** `spark.sql.codegen.cache.maxEntries`: a static conf, read once
+    * when Spark's `CodeGenerator` initializes, so it reaches every
+    * session in the JVM (see the scale notes above). */
+  private val CodegenCacheEntries = 4096
 
   def defaultParallelism: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -60,6 +76,7 @@ object Engine {
     .config("spark.sql.parquet.aggregatePushdown", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
     .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     .config("spark.ui.enabled", "false")
 

@@ -141,6 +141,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(new BandedRangeJoinRule(_))
     ext.injectOptimizerRule(new EditDistanceBandRule(_))
+    ext.injectOptimizerRule(_ => LocalFilterRule)
     ext.injectResolutionRule(new MySqlCoercionRule(_))
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions: Rule[SparkPlan] = ParamLiteralRule

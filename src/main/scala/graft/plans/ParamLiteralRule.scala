@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.types._
@@ -64,15 +65,22 @@ object ParamLiteral {
 
 /** Physical rule: turn the non-null literal operands of comparisons
   * (`=`, `<=>`, `<`, `<=`, `>`, `>=`; BETWEEN reaches the planner as two
-  * of them) in `FilterExec` conditions and `ProjectExec` projections
-  * into [[ParamLiteral]]s, so a query shape compiles once whatever its
-  * literals (the reference likewise compiles one step list per
-  * statement shape and interprets it over the packs).
+  * of them) and of `+`, `-` and `*` in `FilterExec` conditions and
+  * `ProjectExec` projections into [[ParamLiteral]]s, so a query shape
+  * compiles once whatever its literals (the reference likewise compiles
+  * one step list per statement shape and interprets it over the packs).
+  * In statement mode [[MySqlCoercionRule]] replaces long and double
+  * `+`, `-` and `*` with overflow-checked calls
+  * (`CheckedArithmetic`), whose operands are covered the same way:
+  * a key offset such as `INSERT … SELECT o_orderkey + 1240000000 …`
+  * compiled 4 whole-stage classes per new offset.
   *
   * Left alone: NULL, boolean, string, decimal and binary literals (see
-  * [[ParamLiteral.covered]]), literals outside a comparison, and scan
-  * nodes, whose pushed, data and partition filters need real `Literal`s
-  * for Parquet row-group pushdown and pack pruning.
+  * [[ParamLiteral.covered]]); literals under any other operator,
+  * including `/` and `%`, whose code generation may inspect a literal
+  * divisor; and scan nodes, whose pushed, data and partition filters
+  * need real `Literal`s for Parquet row-group pushdown and pack
+  * pruning.
   * Registered as a `preColumnarTransitions` rule ([[GraftExtensions]]),
   * which runs before `CollapseCodegenStages` both in
   * `QueryExecution.preparations` and in adaptive execution's per-stage
@@ -80,6 +88,12 @@ object ParamLiteral {
   * does not wrap, such as a point lookup with no exchange.
   */
 object ParamLiteralRule extends Rule[SparkPlan] {
+
+  /** The `graft.functions.MySql` methods [[MySqlCoercionRule]] calls
+    * for `+`, `-` and `*`; `/` and `%` stay out, as in [[parameterize]]. */
+  private val CheckedArithmetic: Set[String] =
+    Set("longAddChecked", "longSubChecked", "longMulChecked",
+      "doubleArithChecked")
 
   private def param(e: Expression): Expression = e match {
     case Literal(v, dt) if v != null && ParamLiteral.covered(dt) =>
@@ -89,7 +103,11 @@ object ParamLiteralRule extends Rule[SparkPlan] {
 
   private def parameterize(e: Expression): Expression = e.transformUp {
     case c @ (_: EqualTo | _: EqualNullSafe | _: LessThan |
-              _: LessThanOrEqual | _: GreaterThan | _: GreaterThanOrEqual) =>
+              _: LessThanOrEqual | _: GreaterThan | _: GreaterThanOrEqual |
+              _: Add | _: Subtract | _: Multiply) =>
+      c.withNewChildren(c.children.map(param))
+    case c: StaticInvoke if c.staticObject == graft.functions.MySql.getClass &&
+        CheckedArithmetic(c.functionName) =>
       c.withNewChildren(c.children.map(param))
   }
 

@@ -341,24 +341,26 @@ class DeltaStore(spark: SparkSession, root: String) {
     promoteBase(next, df0.schema)
   }
 
-  /** Fold the delta into the base and clear it (background-merge analog). */
-  def compact(): Unit = {
-    if (!exists(deltaPath) && buffered.isEmpty) return
-    rewriteBase(read())
+  /** Write `df` as the new base and clear the delta: the one base
+    * rewrite behind compact, truncate, rewriteWith and ALTER. `df` is
+    * planned before the buffer is cleared (the buffered rows entered
+    * it as a LocalRelation copy) and reads the retired delta version,
+    * which the grace window keeps. */
+  private def replaceTable(df: DataFrame): Unit = {
+    rewriteBase(df)
     buffered.clear()
     bufferedSchema = null
     discardDelta()
   }
 
+  /** Fold the delta into the base and clear it (background-merge analog). */
+  def compact(): Unit =
+    if (exists(deltaPath) || buffered.nonEmpty) replaceTable(read())
+
   /** TRUNCATE analog (the reference's TianmuTable::Truncate,
     * core/tianmu_table.h:76): keep the schema, drop all rows — base is
     * overwritten with an empty frame, delta cleared. */
-  def truncate(): Unit = {
-    rewriteBase(baseDf().limit(0))
-    buffered.clear()
-    bufferedSchema = null
-    discardDelta()
-  }
+  def truncate(): Unit = replaceTable(baseDf().limit(0))
 
   /** Rows currently sitting in the unmerged delta (buffered + spilled). */
   def deltaCount(): Long =
@@ -389,16 +391,17 @@ class DeltaStore(spark: SparkSession, root: String) {
     due
   }
 
-  /** Whole-table transform under the staged-rewrite discipline: compact
-    * pending delta first (so `f` sees every row exactly once), then
-    * stage-and-swap `f(read())`. The DELETE/UPDATE statement forms ride
-    * this — the reference executes them as handler-level row ops
-    * (ha_tianmu.h:101-102); a columnar lakehouse executes them as a
-    * filtered/projected base rewrite, which is also what its own
-    * UPDATE/DELETE compaction jobs do. */
+  /** Whole-table transform under the versioned-rewrite discipline:
+    * `f` sees every row exactly once, as `read()` returns them (base ∪
+    * delta parts ∪ buffered rows, in append order), and `f(read())` is
+    * written as the new base while the delta is cleared: one base
+    * rewrite whether or not the delta is empty. The DELETE/UPDATE
+    * statement forms ride this — the reference executes them as
+    * handler-level row ops (ha_tianmu.h:101-102); a columnar lakehouse
+    * executes them as a filtered/projected base rewrite, which is also
+    * what its own UPDATE/DELETE compaction jobs do. */
   def rewriteWith(f: DataFrame => DataFrame): Unit = {
-    compact()
-    val base = baseDf()
+    val base = read()
     val result = f(base)
     // re-stamp column METADATA the transform's projections dropped
     // (withColumn loses it): the declared MySQL semantics — autoinc,
@@ -419,42 +422,33 @@ class DeltaStore(spark: SparkSession, root: String) {
         case _ => result(rf.name)
       }
     }.toSeq: _*)
-    rewriteBase(restamped)
+    replaceTable(restamped)
   }
 
   /** ALTER TABLE … ADD COLUMN analog (TianmuTable add/drop,
-    * core/tianmu_table.h:73-75): rewrite base with the new column
-    * defaulted; pending delta is compacted first so the schema change
-    * covers the whole table. */
-  def alterAddColumn(name: String, default: org.apache.spark.sql.Column): Unit = {
-    compact()
-    rewriteBase(baseDf().withColumn(name, default))
-  }
+    * core/tianmu_table.h:73-75): rewrite base ∪ delta with the new
+    * column defaulted, so the schema change covers the whole table. */
+  def alterAddColumn(name: String, default: org.apache.spark.sql.Column): Unit =
+    replaceTable(read().withColumn(name, default))
 
   /** ALTER TABLE … DROP COLUMN analog. */
-  def alterDropColumn(name: String): Unit = {
-    compact()
-    rewriteBase(baseDf().drop(name))
-  }
+  def alterDropColumn(name: String): Unit = replaceTable(read().drop(name))
 
   /** ALTER TABLE … MODIFY COLUMN analog (alter_column.test): retype in
     * place via a cast rewrite; position and other columns unchanged. */
   def alterModifyColumn(name: String,
-                        dt: org.apache.spark.sql.types.DataType): Unit = {
-    compact()
-    rewriteBase(baseDf()
+                        dt: org.apache.spark.sql.types.DataType): Unit =
+    replaceTable(read()
       .withColumn(name, org.apache.spark.sql.functions.col(name).cast(dt)))
-  }
 
   /** ALTER TABLE … CHANGE COLUMN analog: rename (and optionally retype)
     * one column. */
   def alterRenameColumn(oldName: String, newName: String,
                         dt: Option[org.apache.spark.sql.types.DataType])
       : Unit = {
-    compact()
-    val df = baseDf()
+    val df = read()
     val retyped = dt.fold(df)(t => df.withColumn(oldName,
       org.apache.spark.sql.functions.col(oldName).cast(t)))
-    rewriteBase(retyped.withColumnRenamed(oldName, newName))
+    replaceTable(retyped.withColumnRenamed(oldName, newName))
   }
 }

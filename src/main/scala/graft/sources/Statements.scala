@@ -2043,10 +2043,10 @@ class StatementRunner(spark: SparkSession) {
     val matchedCount = store.read()
       .join(batch.select(keys.map(col): _*), keys, "left_semi")
       .agg(count(lit(1))).first().getLong(0)
-    // refresh in a finally: rewriteWith compacts FIRST, so even a
-    // failed statement (unresolvable update expr, insert.test's
-    // `update f1 = f3 + 10` through a view) has moved the base files —
-    // a stale temp view would fail every later read of the table
+    // refresh in a finally: the view must track the store whichever
+    // way the statement ends (insert.test's `update f1 = f3 + 10`
+    // through a view fails to resolve; rewriteWith then leaves the
+    // store as it was, since it writes nothing before `f` returns)
     try store.rewriteWith { base =>
       val inc = batch.select(
         schema.map(f => col(f.name).as(s"__v_${f.name}")).toSeq: _*)
@@ -2568,9 +2568,10 @@ class StatementRunner(spark: SparkSession) {
     * absent — MySQL's pick is arbitrary; PK order is a deterministic
     * refinement), first n, key columns only. STAGED to parquet before
     * the caller's rewrite: the selection's lazy plan reads the
-    * pre-rewrite base∪delta files, which `rewriteWith`'s compaction
-    * deletes — staging freezes the row set first (and bounds nothing on
-    * the driver; the n-row frame never collects). */
+    * pre-rewrite base∪delta, which the rewrite retires (a new base
+    * version, the delta cleared) — staging freezes the row set first,
+    * so the count and the rewrite see the same n keys (and bounds
+    * nothing on the driver; the n-row frame never collects). */
   private def doomedKeys(table: String, store: DeltaStore,
                          whereClause: String, orderClause: String,
                          n: Int): DataFrame = {

@@ -30,6 +30,7 @@ class DeltaStoreModelSpec extends AnyFunSuite {
   private case object Compact extends Op
   private case object Truncate extends Op
   private case object AlterAdd extends Op
+  private case class RewriteFilter(minKey: Int) extends Op
   private case class Txn(ops: List[Op], commit: Boolean) extends Op
 
   private val rowsGen: Gen[Rows] = Gen.choose(0, 4).flatMap(Gen.listOfN(_,
@@ -38,7 +39,8 @@ class DeltaStoreModelSpec extends AnyFunSuite {
   private val simpleOp: Gen[Op] = Gen.frequency(
     4 -> rowsGen.map(AppendLocal(_)), 3 -> rowsGen.map(AppendFile(_)),
     2 -> Gen.const(Flush), 2 -> Gen.const(Compact),
-    1 -> Gen.const(Truncate), 1 -> Gen.const(AlterAdd))
+    1 -> Gen.const(Truncate), 1 -> Gen.const(AlterAdd),
+    2 -> Gen.choose(-20, 20).map(RewriteFilter(_)))
   private val opGen: Gen[Op] = Gen.frequency(
     5 -> simpleOp,
     1 -> Gen.zip(Gen.choose(1, 3).flatMap(Gen.listOfN(_, simpleOp)),
@@ -127,6 +129,10 @@ class DeltaStoreModelSpec extends AnyFunSuite {
         val i = extra + 1
         step(s"ALTER ADD c$i")(store.alterAddColumn(s"c$i", lit(100 + i)))(
           { extra = i; model = model.map(_ :+ (100 + i)) })
+      case RewriteFilter(minKey) =>
+        step(s"rewriteWith k > $minKey")(
+          store.rewriteWith(_.filter(s"k > $minKey")))(
+          { model = model.filter(_.head.asInstanceOf[Int] > minKey) })
       case Txn(ops, commit) =>
         val (savedModel, savedExtra) = (model, extra)
         step("beginTxn")(store.beginTxn())(())
@@ -183,6 +189,25 @@ class DeltaStoreModelSpec extends AnyFunSuite {
     val reopened = new DeltaStore(spark, s"$dir/store")
     assert(run.observed(reopened.read()) === run.observed())
     assert(run.observed() === run.expected)
+  }
+
+  test("rewriteWith over a buffered or file-backed delta is one base " +
+      "rewrite") {
+    val deltas = Seq(
+      "buffered" -> List(AppendLocal(List((6, Some("d")), (7, Some(""))))),
+      "file-backed" -> List(AppendFile(List((4, Some("c")), (5, None)))),
+      "both" -> List(AppendFile(List((4, Some("c")))),
+        AppendLocal(List((6, None)))))
+    deltas.foreach { case (what, appends) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_dsonce")
+      val run = new Run(dir.toString, List((1, Some("a")), (2, None)))
+      def version = run.store.basePath.split("base-").last.toLong
+      appends.foreach(run.apply)
+      val v0 = version
+      run(RewriteFilter(1))
+      assert(version === v0 + 1, s"$what delta: base versions written")
+      assert(run.store.deltaCount() === 0, s"$what delta left rows")
+    }
   }
 
   test("read() after a base rewrite runs no Spark job") {

@@ -148,7 +148,7 @@ class IngestSpec extends AnyFunSuite {
     store.alterAddColumn("loaded_at", lit("2026-08-12"))
     val widened = store.read()
     assert(widened.columns.contains("loaded_at"))
-    assert(widened.count() === 15) // delta folded in before the rewrite
+    assert(widened.count() === 15) // delta folded in by the rewrite
     assert(store.deltaCount() === 0)
     store.alterDropColumn("loaded_at")
     assert(!store.read().columns.contains("loaded_at"))

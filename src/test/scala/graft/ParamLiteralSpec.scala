@@ -216,10 +216,35 @@ class ParamLiteralSpec extends AnyFunSuite {
       spark.range(1).queryExecution.sparkPlan)
     assert(ParamLiteralRule(plan) eq plan)
     val (df, _) = typed
-    val q = df.select((col("i") + 7).as("j"), (col("l") > 3L).as("g"))
+    val q = df.select((col("i") / 7).as("j"), (col("l") > 3L).as("g"))
     val exprs = q.queryExecution.executedPlan.expressions.mkString(" ")
     assert(params(q.queryExecution.executedPlan).map(_.literal) ===
       Seq(Literal(3L)), exprs)
+  }
+
+  test("+, - and * operands: results as Scala computes them, and a new " +
+      "literal compiles no class") {
+    val (df, data) = typed
+    def show(v: Any): String = String.valueOf(v)
+    Seq((5L, 3, 1.5), (Long.MaxValue, -7, -0.0), (-1L, Int.MaxValue, Double.NaN),
+        (Long.MinValue, 0, Double.NegativeInfinity)).zipWithIndex.foreach {
+      case ((a, b, c), i) =>
+        val q = df.select(col("id"), (col("l") + lit(a)).as("x"),
+          (col("i") * lit(b)).as("y"), (lit(c) - col("d")).as("z"))
+        val (got, n) = compiles(q.collect().sortBy(_.getInt(0))
+          .map(_.toSeq.map(show)).toSeq)
+        val want = data.map { r =>
+          def opt[T](k: Int)(f: T => Any): String =
+            show(Option(r.get(k)).map(v => f(v.asInstanceOf[T])).orNull)
+          Seq(show(r.getInt(0)), opt[Long](2)(_ + a), opt[Int](1)(_ * b),
+            opt[Double](6)(c - _))
+        }
+        withClue(s"l + $a, i * $b, $c - d: ") {
+          assert(got === want)
+          assert(params(q.queryExecution.executedPlan).size === 3)
+          if (i > 0) assert(n === 0, "compiled a class")
+        }
+    }
   }
 
   test("plan strings and EXPLAIN print the literal") {
