@@ -142,6 +142,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(new BandedRangeJoinRule(_))
     ext.injectOptimizerRule(new EditDistanceBandRule(_))
     ext.injectOptimizerRule(_ => LocalFilterRule)
+    ext.injectPlanNormalizationRule(_ => LocalFilterRule)
     ext.injectResolutionRule(new MySqlCoercionRule(_))
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions: Rule[SparkPlan] = ParamLiteralRule

@@ -50,7 +50,7 @@ class DeltaStore(spark: SparkSession, root: String) {
   /** The current base directory. */
   private[graft] def basePath = s"$root/base-$baseVer"
   private def baseDirOf(v: Long) = s"$root/base-$v"
-  private def deltaPath = s"$root/delta-$deltaVer"
+  private[graft] def deltaPath = s"$root/delta-$deltaVer"
 
   /** Delete the versions of `re` past the grace window behind `current`,
     * never the savepoint-pinned one. */
@@ -85,15 +85,18 @@ class DeltaStore(spark: SparkSession, root: String) {
     * batches land here as collected rows instead of paying a parquet
     * write job per INSERT (~0.3 s each; a 1000-statement MTR script was
     * minutes of file churn for kilobytes of data). Only plans whose
-    * leaves are all LocalRelations (VALUES text) buffer, and the buffer
-    * is capped — anything file-backed or past the cap goes straight to
-    * the parquet delta, so a corpus-sized INSERT…SELECT never collects.
+    * leaves are all LocalRelations buffer: VALUES text, and the rows of
+    * a statement-sized INSERT…SELECT, which the statement runner
+    * collects (at most [[DeltaStore.BufferCap]] + 1 rows) before it
+    * appends. The buffer is capped: anything file-backed or past the
+    * cap goes straight to the parquet delta, so a corpus-sized
+    * INSERT…SELECT is written, never held in driver memory.
     * Volatile by design, like a lost merge-thread buffer; [[flush]] is
     * the durable point and every compact/rewrite path flushes first. */
   private val buffered = scala.collection.mutable.ArrayBuffer
     .empty[org.apache.spark.sql.Row]
   private var bufferedSchema: org.apache.spark.sql.types.StructType = null
-  private val BufferCap = 65536
+  import DeltaStore.BufferCap
 
   private def fs = new Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -362,10 +365,31 @@ class DeltaStore(spark: SparkSession, root: String) {
     * overwritten with an empty frame, delta cleared. */
   def truncate(): Unit = replaceTable(baseDf().limit(0))
 
-  /** Rows currently sitting in the unmerged delta (buffered + spilled). */
-  def deltaCount(): Long =
-    buffered.size.toLong +
-      (if (exists(deltaPath)) spark.read.parquet(deltaPath).count() else 0L)
+  /** Rows currently sitting in the unmerged delta (buffered + spilled),
+    * counted on the driver: the buffer's size plus the row counts in
+    * the delta parts' Parquet footers. A part file is immutable once
+    * written, so its count is read once and kept while it is listed. */
+  def deltaCount(): Long = synchronized {
+    val parts =
+      if (!exists(deltaPath)) Seq.empty
+      else fs.listStatus(new Path(deltaPath)).toSeq
+        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        .map(_.getPath)
+    val listed = parts.map(_.toString).toSet
+    footerRows.filterInPlace((p, _) => listed(p))
+    buffered.size.toLong + parts.map(p => footerRows.getOrElseUpdate(
+      p.toString, footerRowCount(p))).sum
+  }
+  private val footerRows = scala.collection.mutable.HashMap.empty[String, Long]
+  private def footerRowCount(p: Path): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        p, spark.sparkContext.hadoopConfiguration))
+    try reader.getRecordCount finally reader.close()
+  }
+
+  /** Rows held in the in-memory insert buffer. */
+  private[graft] def bufferedCount: Int = buffered.size
 
   /** Parquet files currently in the delta dir (small-file pressure). */
   def deltaFileCount(): Long =
@@ -451,4 +475,11 @@ class DeltaStore(spark: SparkSession, root: String) {
       org.apache.spark.sql.functions.col(oldName).cast(t)))
     replaceTable(retyped.withColumnRenamed(oldName, newName))
   }
+}
+
+object DeltaStore {
+  /** Rows the in-memory insert buffer holds before it spills to the
+    * parquet delta; also the largest `INSERT … SELECT` result the
+    * statement runner collects to the driver instead of staging. */
+  val BufferCap = 65536
 }

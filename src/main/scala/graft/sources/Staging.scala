@@ -31,15 +31,21 @@ object Staging {
   /** Write `df` to a fresh staging dir and return the re-read frame —
     * semantically `df` with lineage cut and contents frozen.
     *
-    * `ordered = true` (the statement tier's INSERT…SELECT) preserves
-    * the frame's logical ROW ORDER across the round-trip: Spark
-    * re-reads a multi-file dir largest-file-first, which rotated a
-    * staged 4-partition batch (insert_into_select.test read 3750
-    * first). The order stamp is a monotonic id written with the data
-    * and sorted out on the way back — a shuffle, so it stays off by
-    * default for corpus-scale staging where order carries nothing. */
+    * `ordered = true` (the statement tier) preserves the frame's
+    * logical ROW ORDER across the round-trip: Spark re-reads a
+    * multi-file dir largest-file-first, which rotated a staged
+    * 4-partition batch (insert_into_select.test read 3750 first). The
+    * order stamp is a monotonic id written with the data and sorted out
+    * on the way back — a shuffle, so it stays off by default for
+    * corpus-scale staging where order carries nothing. */
   /** [[stage]] with `ordered = true` — the statement tier's default
-    * (every store write there rides the scan-order contract). */
+    * (every store write there rides the scan-order contract). Its
+    * callers there: a SELECT-sourced insert whose result exceeds
+    * [[DeltaStore.BufferCap]] rows (a smaller one is collected
+    * instead), `INSERT … SELECT … ON DUPLICATE KEY UPDATE`, DELETE
+    * with a subquery WHERE, the multi-table and `LIMIT` forms of
+    * DELETE and UPDATE, `UPDATE … JOIN`, and DELETE/UPDATE on a table
+    * with triggers. */
   def stageOrdered(df: DataFrame, tag: String): DataFrame =
     stage(df, tag, ordered = true)
 

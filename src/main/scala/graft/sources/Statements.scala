@@ -547,7 +547,13 @@ class StatementRunner(spark: SparkSession) {
     * integral column must lie inside the column's declared MySQL range;
     * otherwise the whole statement throws, naming the columns. Without
     * this, Spark's non-ANSI cast silently WRAPS (1234 → TINYINT = -46)
-    * — a silently-wrong row instead of MySQL's error. */
+    * — a silently-wrong row instead of MySQL's error.
+    *
+    * The probe is a filter and a projection, no shuffle: over a
+    * statement batch (a `LocalRelation`: VALUES text or a collected
+    * INSERT … SELECT) Spark evaluates it on the driver with no job,
+    * and over files it is one job with no exchange. The message names
+    * the failing columns of up to 5 rejected rows. */
   private def rangeCheck(named: DataFrame,
                          schema: org.apache.spark.sql.types.StructType,
                          provided: Seq[String],
@@ -698,14 +704,13 @@ class StatementRunner(spark: SparkSession) {
       checks ++ nullChecks ++ lenChecks ++ charsetChecks ++
         strNumChecks ++ temporalChecks
     if (all.nonEmpty) {
-      val bad = named.select(explode(array(all: _*)).as("c"))
-        .filter(col("c").isNotNull)
-        .groupBy(col("c")).agg(count(lit(1)).as("n"))
-        .limit(5).collect()
+      val bad = named.filter(coalesce(all: _*).isNotNull)
+        .select(array(all: _*)).limit(5).collect()
+        .flatMap(_.getSeq[String](0).filter(_ != null)).distinct
       if (bad.nonEmpty) throw new IllegalArgumentException(
         "INSERT: out of range, NULL, or over-length value for column(s) " +
-          bad.map(r => s"'${r.getString(0)}' (${r.getLong(1)} row(s))")
-            .mkString(", ") + " (MySQL strict mode, errors 1264/1048/1406)")
+          bad.map(c => s"'$c'").mkString(", ") +
+          " (MySQL strict mode, errors 1264/1048/1406)")
     }
   }
 
@@ -814,13 +819,13 @@ class StatementRunner(spark: SparkSession) {
       // multi-row form downgrades to the implicit default with a
       // warning — MySQL's documented asymmetry. INSERT IGNORE
       // (ignoreMode) downgrades even the single-row form.
-      import org.apache.spark.sql.functions.{array, explode}
       val req = schema.toSeq.filter(f =>
         provided.contains(f.name) && requiredCol(f))
       if (req.nonEmpty) {
-        val bad = named.select(explode(array(req.map(f =>
-          when(col(f.name).isNull, lit(f.name))): _*)).as("c"))
-          .filter(col("c").isNotNull).limit(1).collect()
+        val firstNull = coalesce(req.map(f =>
+          when(col(f.name).isNull, lit(f.name))): _*)
+        val bad = named.filter(firstNull.isNotNull).select(firstNull)
+          .limit(1).collect()
         if (bad.nonEmpty) throw new IllegalArgumentException(
           s"INSERT: column '${bad.head.getString(0)}' cannot be null " +
             "(MySQL error 1048)")
@@ -1347,17 +1352,64 @@ class StatementRunner(spark: SparkSession) {
     refreshTableView(table, store)
     fireAfterInsert(table, aligned)
     import spark.implicits._
-    Seq((table, aligned.count())).toDF("table_name", "rows_inserted")
+    // a VALUES batch is a LocalRelation: its rows count on the driver
+    val n = localPlanRows(aligned).fold(aligned.count())(_.length.toLong)
+    Seq((table, n)).toDF("table_name", "rows_inserted")
   }
 
+  /** Every SELECT-sourced insert (`INSERT`, `REPLACE` and `CREATE
+    * TABLE … SELECT`): run `source` once as `limit(BufferCap + 1)
+    * .collect()`, align and check the rows, hand the frozen batch to
+    * `write` between the insert triggers, and return its row count.
+    * Up to [[DeltaStore.BufferCap]] rows become a `LocalRelation`, so
+    * the checks, auto-increment numbering and the append (which
+    * buffers them) need no Spark job; a larger result is staged in one
+    * ordered write that an `Observation` counts. Either way the batch
+    * is frozen before the append, so `INSERT INTO t SELECT … FROM t`
+    * (insert_select.test) never reads its own rows (the Halloween
+    * problem; the reference materializes through its insert buffer
+    * too), and it keeps the source's scan order
+    * (insert_into_select.test's LIMIT 3). */
+  private def insertFromSelect(table: String, store: DeltaStore,
+                               source: DataFrame, colList: String,
+                               checkPk: Boolean)
+                              (write: DataFrame => Unit): Long = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val schema = store.read().schema
+    def aligned(df: DataFrame) =
+      assignAutoInc(store, alignToSchema(df, colList, schema))
+    val rows = source.limit(DeltaStore.BufferCap + 1).collect()
+    val (batch, n) =
+      if (rows.length <= DeltaStore.BufferCap) {
+        import scala.jdk.CollectionConverters._
+        val local = spark.createDataFrame(rows.toList.asJava,
+          org.apache.spark.sql.types.StructType(
+            source.schema.fields.map(_.copy(nullable = true))))
+        (fireBeforeInsert(table, aligned(local)), rows.length.toLong)
+      } else {
+        val obs = org.apache.spark.sql.Observation()
+        val staged = fireBeforeInsert(table, Staging.stageOrdered(
+          aligned(source).observe(obs, count(lit(1))), s"select-$table"))
+        (staged, observedCount(obs))
+      }
+    if (checkPk) enforcePkUnique(table, store, batch)
+    write(batch)
+    refreshTableView(table, store)
+    fireAfterInsert(table, batch)
+    n
+  }
+
+  /** The one count an [[org.apache.spark.sql.Observation]] was given,
+    * read after the action it observed has returned (bounded: Spark
+    * delivers the metrics when the action ends, so a missing one is an
+    * error, not a wait). */
+  private def observedCount(obs: org.apache.spark.sql.Observation): Long =
+    scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(60, "s")).getLong(0)
+
   /** `INSERT INTO t [cols] SELECT …` (engine_execute.cpp:470-513): run
-    * the SELECT through the dialect rewrite, align into the table
-    * schema, and append through the delta store. The batch is STAGED to
-    * parquet before the append — a self-referencing insert (`INSERT INTO
-    * t SELECT … FROM t`, insert_select.test) otherwise appends into
-    * files its own scan is reading (the classic Halloween problem; the
-    * reference materializes through its insert buffer for the same
-    * reason). */
+    * the SELECT through the dialect rewrite and append it through the
+    * delta store by [[insertFromSelect]]. */
   private def runInsertSelect(table0: String, colList0: String,
                               select0: String): DataFrame = {
     // `INSERT INTO t (SELECT …)` parses the parenthesized select into the
@@ -1380,19 +1432,11 @@ class StatementRunner(spark: SparkSession) {
         val s2 = select.replaceAll("(?i)@\\w+\\s*:=\\s*", "")
         if (s2.contains("@")) select else s2
       }
-    val result = spark.sql(MySqlDialect.rewrite(selectEff))
-    val aligned = assignAutoInc(store, alignToSchema(result, colList, schema))
-    // ordered staging: the re-read of a multi-file staging dir is
-    // size-ordered, which rotated the batch's scan order
-    // (insert_into_select.test's LIMIT 3)
-    val staged = fireBeforeInsert(table,
-      Staging.stageOrdered(aligned, "insert-select"))
-    enforcePkUnique(table, store, staged)
-    store.append(staged)
-    refreshTableView(table, store)
-    fireAfterInsert(table, staged)
+    val n = insertFromSelect(table, store,
+      spark.sql(MySqlDialect.rewrite(selectEff)), colList,
+      checkPk = true)(store.append)
     import spark.implicits._
-    Seq((table, staged.count())).toDF("table_name", "rows_inserted")
+    Seq((table, n)).toDF("table_name", "rows_inserted")
   }
 
   /** `INSERT IGNORE INTO t [cols] VALUES …`: batch rows that duplicate
@@ -1857,8 +1901,9 @@ class StatementRunner(spark: SparkSession) {
     Seq((table, batch.count())).toDF("table_name", "rows_replaced")
   }
 
-  /** `REPLACE INTO t [cols] SELECT …` — the batch comes from a query
-    * (staged like INSERT…SELECT: the select may read the target). */
+  /** `REPLACE INTO t [cols] SELECT …` — the batch comes from a query,
+    * frozen like INSERT…SELECT's ([[insertFromSelect]]: the select may
+    * read the target). */
   private def runReplaceSelect(table: String, colList0: String,
                                select0: String): DataFrame = {
     val (colList, select) =
@@ -1867,17 +1912,14 @@ class StatementRunner(spark: SparkSession) {
       else (colList0, select0.trim.stripPrefix("(").stripSuffix(")"))
     val store = attachedStore(table)
     val keys = primaryKeys.getOrElse(table.toLowerCase, Seq.empty)
-    val aligned = assignAutoInc(store, alignToSchema(
-      spark.sql(MySqlDialect.rewrite(select)), colList,
-      store.read().schema))
-    val staged = fireBeforeInsert(table,
-      Staging.stageOrdered(aligned, "replace-select"))
-    if (keys.isEmpty) store.append(staged)
-    else store.rewriteWith(base => Dml.replaceInto(base, staged, keys))
-    refreshTableView(table, store)
-    fireAfterInsert(table, staged)
+    val n = insertFromSelect(table, store,
+      spark.sql(MySqlDialect.rewrite(select)), colList, checkPk = false) {
+      batch =>
+        if (keys.isEmpty) store.append(batch)
+        else store.rewriteWith(base => Dml.replaceInto(base, batch, keys))
+    }
     import spark.implicits._
-    Seq((table, staged.count())).toDF("table_name", "rows_replaced")
+    Seq((table, n)).toDF("table_name", "rows_replaced")
   }
 
   /** `REPLACE INTO t SET a = 1, …` — the named single-row form. */
@@ -2376,7 +2418,7 @@ class StatementRunner(spark: SparkSession) {
           s"from ${m.group(2)})"))
 
   private def runDelete(table: String, whereClause: String): DataFrame = {
-    import org.apache.spark.sql.functions.{expr, not}
+    import org.apache.spark.sql.functions.{count_if, expr, not}
     val store = attachedStore(table)
     checkSafeUpdates(table, whereClause)
     // under NO_ZERO_DATE the zero-date rows of a NOT NULL temporal
@@ -2411,49 +2453,52 @@ class StatementRunner(spark: SparkSession) {
     }
     if (tableTriggered(table, "DELETE"))
       return runDeleteTriggered(table, store, whereClause)
-    val before = store.read().count()
-    try {
-    if (whereClause == null) store.truncate()
-    else {
-      // a WHERE carrying a subquery goes straight to full SQL
-      // resolution over the temp view — stripping the `t11.` prefix
-      // first would silently re-bind the subquery's correlated refs to
-      // the INNER table (delete.test's `t11.b <> (select b from t2
-      // where t11.a < t2.a)` must keep t11.a correlated, and error 1242
-      // when the subquery multi-matches)
-      if ("""(?i)\(\s*select\b""".r.findFirstIn(whereClause).isDefined) {
-        val keep = Staging.stageOrdered(
-          spark.sql(MySqlDialect.rewrite(
-            s"SELECT * FROM `$table` WHERE NOT " +
-              s"(($whereClause) <=> TRUE)")),
-          s"delete-subq-$table")
-        store.rewriteWith(_ => keep)
-      } else {
+    // a WHERE carrying a subquery goes straight to full SQL resolution
+    // over the temp view — stripping the `t11.` prefix first would
+    // silently re-bind the subquery's correlated refs to the INNER
+    // table (delete.test's `t11.b <> (select b from t2 where t11.a <
+    // t2.a)` must keep t11.a correlated, and error 1242 when the
+    // subquery multi-matches)
+    def deleteBySql(): Long = {
+      val before = store.read().count()
+      val keep = Staging.stageOrdered(
+        spark.sql(MySqlDialect.rewrite(
+          s"SELECT * FROM `$table` WHERE NOT " +
+            s"(($whereClause) <=> TRUE)")),
+        s"delete-subq-$table")
+      store.rewriteWith(_ => keep)
+      before - store.read().count()
+    }
+    val deleted = try {
+      if (whereClause == null) {
+        val before = store.read().count()
+        store.truncate()
+        before
+      } else if ("""(?i)\(\s*select\b""".r.findFirstIn(whereClause)
+          .isDefined) deleteBySql()
+      else {
         // self-qualified refs (`DELETE FROM t11 WHERE t11.b …`) resolve
         // against the bare frame once stripped
         val cleaned = whereClause.replaceAll(
           "(?i)\\b" + java.util.regex.Pattern.quote(table) + "\\.", "")
         val cond = expr(MySqlDialect.rewrite(cleaned))
-        // SQL DELETE semantics: NULL-condition rows survive (NOT NULL=NULL)
-        try store.rewriteWith(df => df.filter(not(cond) || cond.isNull))
-        catch {
-          case _: org.apache.spark.sql.AnalysisException =>
-            // unresolvable outside full SQL (issue669's NOT IN over a
-            // correlated subquery spelled without parens prefix)
-            val keep = Staging.stageOrdered(
-              spark.sql(MySqlDialect.rewrite(
-                s"SELECT * FROM `$table` WHERE NOT " +
-                  s"(($whereClause) <=> TRUE)")),
-              s"delete-subq-$table")
-            store.rewriteWith(_ => keep)
+        // SQL DELETE semantics: NULL-condition rows survive (NOT
+        // NULL=NULL); the rewrite counts the rows it drops
+        val obs = org.apache.spark.sql.Observation()
+        try {
+          store.rewriteWith(df => df.observe(obs, count_if(cond <=> true))
+            .filter(not(cond) || cond.isNull))
+          observedCount(obs)
+        } catch {
+          // unresolvable outside full SQL (issue669's NOT IN over a
+          // correlated subquery spelled without parens prefix)
+          case _: org.apache.spark.sql.AnalysisException => deleteBySql()
         }
       }
-    }
     // finally: a failed rewrite may still have compacted the base files
     } finally refreshTableView(table, store)
     import spark.implicits._
-    Seq((table, before - store.read().count()))
-      .toDF("table_name", "rows_deleted")
+    Seq((table, deleted)).toDF("table_name", "rows_deleted")
   }
 
   /** Row-wise DELETE over a trigger-bearing table: BEFORE DELETE per
@@ -2755,7 +2800,6 @@ class StatementRunner(spark: SparkSession) {
     val cond =
       if (whereClause == null) lit(true)
       else expr(MySqlDialect.rewrite(whereClause))
-    val touched = store.read().filter(cond).count()
     // ONE select so every RHS evaluates against the OLD row (standard
     // UPDATE semantics — sequential withColumn would leak new values
     // into later assignments)
@@ -2841,11 +2885,20 @@ class StatementRunner(spark: SparkSession) {
     // (it handles an empty trigger list).
     if (tableTriggered(table, "UPDATE") || (ignore && touchesPk))
       return runUpdateTriggered(table, store, cond, project, ignore,
-        touched)
-    try store.rewriteWith(project)
+        store.read().filter(cond).count())
+    // the rewrite counts the rows its condition selects; a WHERE with a
+    // subquery is counted on its own, before the rewrite
+    val counted = if (whereClause != null &&
+        """(?i)\(\s*select\b""".r.findFirstIn(whereClause).isDefined)
+      Some(store.read().filter(cond).count()) else None
+    val obs = org.apache.spark.sql.Observation()
+    try store.rewriteWith(df => project(if (counted.isDefined) df
+      else df.observe(obs, org.apache.spark.sql.functions.count_if(
+        cond <=> true))))
     finally refreshTableView(table, store)
     import spark.implicits._
-    Seq((table, touched)).toDF("table_name", "rows_updated")
+    Seq((table, counted.getOrElse(observedCount(obs))))
+      .toDF("table_name", "rows_updated")
   }
 
   /** Row-wise UPDATE over a trigger-bearing table: BEFORE UPDATE runs
@@ -4179,7 +4232,7 @@ class StatementRunner(spark: SparkSession) {
     * statement-tier fast paths below — an MTR replay runs thousands of
     * sub-second statements, and every avoidable job round-trip
     * (~50-100 ms of scheduler latency each) multiplies by that count. */
-  private def localPlanRows(df: DataFrame, cap: Int = 65536)
+  private def localPlanRows(df: DataFrame, cap: Int = DeltaStore.BufferCap)
       : Option[Array[org.apache.spark.sql.Row]] =
     df.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -6059,14 +6112,10 @@ class StatementRunner(spark: SparkSession) {
         store.read().columns.exists(_.equalsIgnoreCase(f.name))).foreach {
         f => store.alterAddColumn(f.name, lit(null).cast(f.dataType))
       }
-      val aligned = assignAutoInc(store, alignToSchema(result,
+      val n = insertFromSelect(table, store, result,
         result.columns.map(c => s"`$c`").mkString(","),
-        store.read().schema))
-      val staged = Staging.stageOrdered(aligned, s"create-select-$table")
-      enforcePkUnique(table, store, staged)
-      store.append(staged)
-      refreshTableView(table, store)
-      Seq((table, staged.count())).toDF("table_name", "rows_created")
+        checkPk = true)(store.append)
+      Seq((table, n)).toDF("table_name", "rows_created")
 
     case CreateTableRe(temporary, ifNotExists, table, body, options) =>
       // a TEMPORARY table shadows a BASE table of the same name, but a
@@ -6418,12 +6467,15 @@ class StatementRunner(spark: SparkSession) {
       // MySQL allows INTO OUTFILE before FROM or statement-final; the
       // SELECT is the statement minus the INTO clause span.
       val select = s.substring(0, m.start) + " " + tail
-      val df = spark.sql(MySqlDialect.rewrite(select))
-      val rows = df.count()
-      CsvLoader.export(df, sandboxIoPath(path), delimiter = opts.delimiter,
+      // the export's own write counts the rows it exports
+      val obs = org.apache.spark.sql.Observation()
+      CsvLoader.export(spark.sql(MySqlDialect.rewrite(select))
+          .observe(obs, org.apache.spark.sql.functions.count(
+            org.apache.spark.sql.functions.lit(1))),
+        sandboxIoPath(path), delimiter = opts.delimiter,
         quote = opts.quote, escape = opts.escape, lineSep = opts.lineSep)
       import spark.implicits._
-      Seq((path, rows)).toDF("outfile", "rows_exported")
+      Seq((path, observedCount(obs))).toDF("outfile", "rows_exported")
 
     // Server-admin and transaction-control statements MTR prologues
     // issue around the engine under test: the library is single-session

@@ -109,4 +109,36 @@ class CodegenCacheSpec extends AnyFunSuite {
         keys.filter(k => k >= lo && k <= lo + 49).map(_ + offset) }
     assert(ids.sorted.toSeq === want.sorted)
   }
+
+  test("a filter over VALUES rows and the strict check over a frozen " +
+      "INSERT … SELECT batch compile no class for new values") {
+    def values(a: Int, b: Int, lo: Int) = spark.sql("SELECT k, v FROM " +
+      s"VALUES ($a, 'x'), ($b, 'y') AS t(k, v) WHERE k > $lo")
+      .collect().map(_.getInt(0)).toSeq
+    values(1, 2, 0)
+    Seq((5, 9, 6), (11, 3, 2), (-4, 8, -10)).foreach { case (a, b, lo) =>
+      val (ks, n) = compiles(values(a, b, lo))
+      assert(n === 0, s"VALUES ($a), ($b) WHERE k > $lo compiled $n classes")
+      assert(ks === Seq(a, b).filter(_ > lo))
+    }
+    // every column carries a strict check: NOT NULL, INT range, length
+    runner.run("CREATE TABLE cg_s (id INT NOT NULL, tag VARCHAR(1)) " +
+      "ENGINE=TIANMU")
+    val keys = model.map(_._1).sorted
+    def insert(offset: Long, lo: Long, tag: String) = runner.run(
+      s"INSERT INTO cg_s SELECT CAST(o_orderkey + $offset AS INT), " +
+        s"'$tag' FROM ord WHERE o_orderkey BETWEEN $lo AND ${lo + 49}")
+      .collect()
+    insert(1L, keys(10), "a")
+    Seq((2L, keys(200), "b"), (3L, keys(400), "c")).foreach {
+      case (offset, lo, tag) =>
+        val (_, n) = compiles(insert(offset, lo, tag))
+        assert(n === 0, s"the strict check of batch $tag compiled $n classes")
+    }
+    // the first rejection compiles its result's row conversion once
+    assert(scala.util.Try(insert(4L, keys(600), "dd")).isFailure)
+    val (err, n) = compiles(scala.util.Try(insert(5L, keys(700), "ee")))
+    assert(err.isFailure && err.failed.get.getMessage.contains("tag"))
+    assert(n === 0, s"a second rejected batch compiled $n classes")
+  }
 }

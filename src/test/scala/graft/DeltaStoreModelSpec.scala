@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * cache (base and delta-part DataFrames reused across reads, the base
   * entry seeded with the schema just written) and the mutation epoch,
   * which must strictly increase on every step that changes what
-  * `read()` returns. A frame read before a step must still return the
+  * `read()` returns, and `deltaCount()` (read from Parquet footers),
+  * which must equal the buffered rows plus a Spark count of the delta
+  * parts. A frame read before a step must still return the
   * rows from before it: no step but a rollback deletes files a reader
   * may hold. */
 class DeltaStoreModelSpec extends AnyFunSuite {
@@ -87,6 +89,13 @@ class DeltaStoreModelSpec extends AnyFunSuite {
       (cols.sorted, model.map(r => order.map(r(_)).mkString("|")).sorted)
     }
 
+    /** Rows in the delta's parquet parts, counted by a Spark job. */
+    def sparkDeltaCount: Long = {
+      val dir = new java.io.File(store.deltaPath)
+      if (!Option(dir.list()).exists(_.exists(_.endsWith(".parquet")))) 0L
+      else spark.read.parquet(store.deltaPath).count()
+    }
+
     /** Apply one primitive step to store and model, then check. */
     def step(what: String, holdsFiles: Boolean = true)(storeOp: => Unit)(
         modelOp: => Unit): Unit = {
@@ -103,6 +112,9 @@ class DeltaStoreModelSpec extends AnyFunSuite {
           s"a frame read before $what changed or lost its files")
       assert(store.read().schema === spark.read.parquet(store.basePath).schema,
         s"read() schema is not the base's inferred schema after $what")
+      assert(store.deltaCount() === store.bufferedCount + sparkDeltaCount,
+        s"deltaCount() is not the buffer plus a Spark count of the " +
+          s"delta parts after $what")
       assert(store.mutationEpoch >= e0, s"epoch went back after $what")
       if (after != before)
         assert(store.mutationEpoch > e0,
