@@ -367,20 +367,14 @@ class DeltaStore(spark: SparkSession, root: String) {
 
   /** Rows currently sitting in the unmerged delta (buffered + spilled),
     * counted on the driver: the buffer's size plus the row counts in
-    * the delta parts' Parquet footers. A part file is immutable once
-    * written, so its count is read once and kept while it is listed. */
-  def deltaCount(): Long = synchronized {
+    * the delta parts' Parquet footers, with no Spark job. */
+  def deltaCount(): Long = {
     val parts =
       if (!exists(deltaPath)) Seq.empty
       else fs.listStatus(new Path(deltaPath)).toSeq
         .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath)
-    val listed = parts.map(_.toString).toSet
-    footerRows.filterInPlace((p, _) => listed(p))
-    buffered.size.toLong + parts.map(p => footerRows.getOrElseUpdate(
-      p.toString, footerRowCount(p))).sum
+    buffered.size.toLong + parts.map(s => footerRowCount(s.getPath)).sum
   }
-  private val footerRows = scala.collection.mutable.HashMap.empty[String, Long]
   private def footerRowCount(p: Path): Long = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(

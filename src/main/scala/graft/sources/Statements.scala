@@ -62,6 +62,21 @@ object StatementRunner {
     "STRICT_TRANS_TABLES,NO_ZERO_IN_DATE,NO_ZERO_DATE," +
       "ERROR_FOR_DIVISION_BY_ZERO,NO_AUTO_CREATE_USER," +
       "NO_ENGINE_SUBSTITUTION"
+
+  /** The one count an [[org.apache.spark.sql.Observation]] was given,
+    * read after the action it observed has returned. Spark 4.1
+    * completes an Observation from a `QueryExecutionListener`, which the
+    * listener bus calls on its own thread after the action ends, so the
+    * count can arrive late or, when the bus drops the event, never. The
+    * wait is bounded by `within`; past it the count is `recount`, so a
+    * statement whose write has committed does not fail for want of its
+    * count. */
+  private[graft] def observedCount(obs: org.apache.spark.sql.Observation,
+      within: scala.concurrent.duration.FiniteDuration =
+        scala.concurrent.duration.Duration(10, "s"))
+      (recount: => Long): Long =
+    try scala.concurrent.Await.result(obs.future, within).getLong(0)
+    catch { case _: java.util.concurrent.TimeoutException => recount }
 }
 
 class StatementRunner(spark: SparkSession) {
@@ -1390,7 +1405,7 @@ class StatementRunner(spark: SparkSession) {
         val obs = org.apache.spark.sql.Observation()
         val staged = fireBeforeInsert(table, Staging.stageOrdered(
           aligned(source).observe(obs, count(lit(1))), s"select-$table"))
-        (staged, observedCount(obs))
+        (staged, StatementRunner.observedCount(obs)(staged.count()))
       }
     if (checkPk) enforcePkUnique(table, store, batch)
     write(batch)
@@ -1399,13 +1414,13 @@ class StatementRunner(spark: SparkSession) {
     n
   }
 
-  /** The one count an [[org.apache.spark.sql.Observation]] was given,
-    * read after the action it observed has returned (bounded: Spark
-    * delivers the metrics when the action ends, so a missing one is an
-    * error, not a wait). */
-  private def observedCount(obs: org.apache.spark.sql.Observation): Long =
-    scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration(60, "s")).getLong(0)
+  /** Whether `cond` gives the same value each time it is evaluated
+    * over `df` (no RAND(), UUID(), …), so one plan may both apply it and
+    * count the rows it selects. */
+  private def deterministicOver(df: DataFrame,
+      cond: org.apache.spark.sql.Column): Boolean =
+    df.select(cond).queryExecution.analyzed.expressions
+      .forall(_.deterministic)
 
   /** `INSERT INTO t [cols] SELECT …` (engine_execute.cpp:470-513): run
     * the SELECT through the dialect rewrite and append it through the
@@ -2483,12 +2498,19 @@ class StatementRunner(spark: SparkSession) {
           "(?i)\\b" + java.util.regex.Pattern.quote(table) + "\\.", "")
         val cond = expr(MySqlDialect.rewrite(cleaned))
         // SQL DELETE semantics: NULL-condition rows survive (NOT
-        // NULL=NULL); the rewrite counts the rows it drops
+        // NULL=NULL); the rewrite counts the rows it drops. A frame
+        // read before the rewrite keeps its files, so it can recount.
         val obs = org.apache.spark.sql.Observation()
+        val prior = store.read()
         try {
-          store.rewriteWith(df => df.observe(obs, count_if(cond <=> true))
-            .filter(not(cond) || cond.isNull))
-          observedCount(obs)
+          if (!deterministicOver(prior, cond)) deleteBySql()
+          else {
+            store.rewriteWith(df => df
+              .observe(obs, count_if(cond <=> true))
+              .filter(not(cond) || cond.isNull))
+            StatementRunner.observedCount(obs)(
+              prior.filter(cond <=> true).count())
+          }
         } catch {
           // unresolvable outside full SQL (issue669's NOT IN over a
           // correlated subquery spelled without parens prefix)
@@ -2887,17 +2909,21 @@ class StatementRunner(spark: SparkSession) {
       return runUpdateTriggered(table, store, cond, project, ignore,
         store.read().filter(cond).count())
     // the rewrite counts the rows its condition selects; a WHERE with a
-    // subquery is counted on its own, before the rewrite
+    // subquery, or one that is not deterministic, is counted on its
+    // own, before the rewrite
+    val prior = store.read()
     val counted = if (whereClause != null &&
-        """(?i)\(\s*select\b""".r.findFirstIn(whereClause).isDefined)
-      Some(store.read().filter(cond).count()) else None
+        ("""(?i)\(\s*select\b""".r.findFirstIn(whereClause).isDefined ||
+          !deterministicOver(prior, cond)))
+      Some(prior.filter(cond).count()) else None
     val obs = org.apache.spark.sql.Observation()
     try store.rewriteWith(df => project(if (counted.isDefined) df
       else df.observe(obs, org.apache.spark.sql.functions.count_if(
         cond <=> true))))
     finally refreshTableView(table, store)
     import spark.implicits._
-    Seq((table, counted.getOrElse(observedCount(obs))))
+    Seq((table, counted.getOrElse(StatementRunner.observedCount(obs)(
+        prior.filter(cond <=> true).count()))))
       .toDF("table_name", "rows_updated")
   }
 
@@ -3143,12 +3169,16 @@ class StatementRunner(spark: SparkSession) {
     scala.collection.mutable.LinkedHashMap[String, TriggerDef]()
   private var dmlTxnDepth = 0
 
+  // a TEMPORARY table never carries triggers (CREATE TRIGGER on one is
+  // error 1361), and while it shadows a base table of the same name the
+  // base table's triggers do not fire on its rows
   private def triggersOn(table: String, event: String,
                          timing: String): Seq[TriggerDef] =
-    triggers.values.toSeq.filter(t => t.table == table.toLowerCase &&
+    if (tempTables.contains(table.toLowerCase)) Nil
+    else triggers.values.toSeq.filter(t => t.table == table.toLowerCase &&
       t.event == event && t.timing == timing)
   private def tableTriggered(table: String, event: String): Boolean =
-    triggers.values.exists(t =>
+    !tempTables.contains(table.toLowerCase) && triggers.values.exists(t =>
       t.table == table.toLowerCase && t.event == event)
 
   private val CreateTriggerRe: Regex =
@@ -6408,11 +6438,12 @@ class StatementRunner(spark: SparkSession) {
             org.apache.commons.io.FileUtils
               .deleteDirectory(new java.io.File(root)))
           // a dropped TEMPORARY table un-shadows its base counterpart
-          tempTables.remove(key)
+          val wasTemp = tempTables.remove(key)
           restoreShadowed(key, table)
           // DROP TABLE drops its triggers (trigger.test: a re-created
-          // t1 starts trigger-free)
-          triggers.filterInPlace((_, d) => d.table != key)
+          // t1 starts trigger-free); a temporary table has none, and
+          // dropping one keeps the triggers of the base table it shadowed
+          if (!wasTemp) triggers.filterInPlace((_, d) => d.table != key)
           (table, if (existed) "dropped" else "not attached")
         }.toDF("table_name", "status")
 
@@ -6469,13 +6500,14 @@ class StatementRunner(spark: SparkSession) {
       val select = s.substring(0, m.start) + " " + tail
       // the export's own write counts the rows it exports
       val obs = org.apache.spark.sql.Observation()
-      CsvLoader.export(spark.sql(MySqlDialect.rewrite(select))
-          .observe(obs, org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1))),
+      val query = spark.sql(MySqlDialect.rewrite(select))
+      CsvLoader.export(query.observe(obs, org.apache.spark.sql.functions
+          .count(org.apache.spark.sql.functions.lit(1))),
         sandboxIoPath(path), delimiter = opts.delimiter,
         quote = opts.quote, escape = opts.escape, lineSep = opts.lineSep)
       import spark.implicits._
-      Seq((path, observedCount(obs))).toDF("outfile", "rows_exported")
+      Seq((path, StatementRunner.observedCount(obs)(query.count())))
+        .toDF("outfile", "rows_exported")
 
     // Server-admin and transaction-control statements MTR prologues
     // issue around the engine under test: the library is single-session

@@ -127,6 +127,48 @@ class StatementJobsSpec extends AnyFunSuite {
       s"INTO OUTFILE '${out}_empty'") === 0)
   }
 
+  test("a DELETE whose WHERE is not deterministic returns the rows it " +
+      "deleted") {
+    runner.run("CREATE TABLE jd (id BIGINT NOT NULL) ENGINE=TIANMU")
+    run("INSERT INTO jd SELECT o_orderkey FROM ord")
+    val before = count("jd")
+    val n = run("DELETE FROM jd WHERE RAND() < 0.5")
+    assert(n > 0 && n < before)
+    assert(count("jd") === before - n)
+  }
+
+  test("an observed count that does not arrive in time is recounted") {
+    import org.apache.spark.sql.Observation
+    import scala.concurrent.duration._
+    val done = Observation()
+    spark.range(3).observe(done,
+      org.apache.spark.sql.functions.count(lit(1))).collect()
+    assert(StatementRunner.observedCount(done)(fail("recounted")) === 3)
+    val never = Observation()
+    spark.range(3).observe(never,
+      org.apache.spark.sql.functions.count(lit(1)))
+    assert(StatementRunner.observedCount(never, 10.millis)(7L) === 7)
+  }
+
+  test("a temporary table does not fire the triggers of the base table " +
+      "it shadows, and dropping it keeps them") {
+    val r = new StatementRunner(
+      sources.MtrParity.statementSession(spark))
+    def fired = r.run("SELECT @fired").first().get(0).toString
+    r.run("CREATE TABLE jtr (i INT) ENGINE=INNODB")
+    r.run("CREATE TRIGGER jtr_ins BEFORE INSERT ON jtr FOR EACH ROW " +
+      "SET @fired = @fired + 1")
+    r.run("SET @fired = 0")
+    r.run("CREATE TEMPORARY TABLE jtr (i INT) SELECT 1 AS i")
+    r.run("INSERT INTO jtr VALUES (2), (3)")
+    r.run("INSERT INTO jtr SELECT i + 10 FROM jtr")
+    assert(fired === "0")
+    assert(r.run("SELECT COUNT(*) FROM jtr").first().getLong(0) === 6)
+    r.run("DROP TEMPORARY TABLE jtr")
+    r.run("INSERT INTO jtr VALUES (4)")
+    assert(fired === "1")
+  }
+
   test("a strict-mode rejection leaves the table unchanged, on the " +
       "collected path and on the staged path") {
     runner.run("CREATE TABLE jr (id BIGINT NOT NULL, v INT, " +
