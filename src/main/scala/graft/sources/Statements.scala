@@ -3058,7 +3058,7 @@ class StatementRunner(spark: SparkSession) {
   // attached table); DROP detaches and deletes ONLY runner-created
   // stores (a table the caller attached owns its own files).
   private val CtasRe: Regex =
-    """(?is)^\s*CREATE\s+(?:TEMPORARY\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?\s+(?:AS\s+)?(\(?\s*SELECT\b.*?\)?)\s*;?\s*$""".r
+    """(?is)^\s*CREATE\s+(TEMPORARY\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?\s+(?:AS\s+)?(\(?\s*SELECT\b.*?\)?)\s*;?\s*$""".r
   // MySQL's hybrid form: explicit column definitions AND a SELECT
   // (ctas1.test, issue228.test, case_when.test). Declared columns come
   // first; SELECT columns merge by name, unmatched ones append.
@@ -6385,10 +6385,15 @@ class StatementRunner(spark: SparkSession) {
       Seq((clause.trim.take(64), "OK (session no-op)"))
         .toDF("setting", "status")
 
-    case CtasRe(ifNotExists, table, select) =>
+    case CtasRe(temporary, ifNotExists, table, select) =>
       import spark.implicits._
       val key = table.toLowerCase
-      if (stores.contains(key) || viewDefs.contains(key)) {
+      // a TEMPORARY create shadows a base table or view of the same
+      // name; only another TEMPORARY one occupies its name
+      val occupied =
+        if (temporary != null) tempTables.contains(key)
+        else stores.contains(key) || viewDefs.contains(key)
+      if (occupied) {
         // IF NOT EXISTS over an existing table is a Note-1050 no-op —
         // the SELECT is NOT inserted (create_table.test: three
         // `if not exists … select` statements leave t1's single row)
@@ -6404,6 +6409,10 @@ class StatementRunner(spark: SparkSession) {
         .createTempDirectory(s"graft-ctas-$key").toString
       val store = new DeltaStore(spark, root)
       store.writeBase(df)
+      if (temporary != null) {
+        shadowForTemp(key)
+        tempTables += key
+      }
       attach(table, store)
       ownedRoots(key) = root
       Seq((table, store.read().count()))

@@ -3,9 +3,10 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField,
+  StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Knowledge-Grid analog: a per-pack stats sidecar + rough (metadata-only)
@@ -49,17 +50,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[writeWithStats]] (which also drops the entry) or replaced by copying
   * files is seen on the next call. The data files are trusted to change
   * only together with their sidecar. The JVM keeps one snapshot per
-  * packed path it has read. A hybrid count then runs exactly one Spark
-  * query, over the RS_SOME packs, and none at all when the rough pass
-  * decides every pack. [[roughCheck]] and [[roughCheckPrefix]] state the
-  * same rules as DataFrames over [[readStats]]; a property test holds
-  * the two forms to the same answer.
+  * packed path it has read, and the snapshot loader is the only reader
+  * of the sidecar's files. A hybrid count then runs exactly one Spark
+  * job, over the RS_SOME packs (each task counts its rows, with no
+  * exchange), and none at all when the rough pass decides every pack.
+  * [[readStats]] is the snapshot's rows as a local relation and
+  * [[roughAgg]] folds one column's rows on the driver, so a rough
+  * aggregate over [[readStats]] runs no job either. [[roughCheck]] and
+  * [[roughCheckPrefix]] state the rough rules as DataFrames over
+  * [[readStats]]; a property test holds the two forms to the same
+  * answer.
   *
   * Scale: the sidecar has (packs × columns) rows — ~1e6 at 100 TB with
   * 1 GB packs — and the snapshot keeps them all on the driver, ~150
   * bytes each by object layout (~150 MB at 1e6): the same order as the
   * table's file listing (one status object per pack file) that Spark's
-  * driver already holds to scan it. A selective RS_SOME pack-id list
+  * driver already holds to scan it. [[readStats]]' local relation holds
+  * those same rows a second time, as Spark rows, once the first caller
+  * asks for it. A selective RS_SOME pack-id list
   * passes through the driver as partition-pruning literals; above
   * [[IsinMaxPacks]] the exact pass switches to a broadcast pack-id join
   * so a weak rough pass can never inline ~1e6 literals into the plan.
@@ -146,20 +154,38 @@ object StatsSidecar {
     snapshots.remove(path)
   }
 
+  /** The sidecar of `path` as a local relation over the current
+    * [[Snapshot]]'s rows: no file is read and no Spark job runs once the
+    * snapshot is loaded, and a rewritten sidecar is seen on the next
+    * call. */
   def readStats(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(statsPath(path))
+    snapshot(spark, path).stats
+
+  private val AggSchema = StructType(
+    Seq("n_rows", "n_nulls").map(StructField(_, LongType)) ++
+      Seq("min_v", "max_v", "sum_v").map(StructField(_, DoubleType)))
 
   /** Rough aggregates over one column — COUNT/nulls/MIN/MAX/SUM answered
     * from the sidecar alone (temp_table_roughquery.cpp analog; the sum is
-    * exact by the fixed-point convention, not approximate). */
-  def roughAgg(stats: DataFrame, column: String): DataFrame =
-    stats.filter(col("column") === column)
-      .agg(
-        sum(col("n_rows")).as("n_rows"),
-        sum(col("n_nulls")).as("n_nulls"),
-        min(col("min_v")).as("min_v"),
-        max(col("max_v")).as("max_v"),
-        (sum(col("sum_fp")).cast("double") / Scale).as("sum_v"))
+    * exact by the fixed-point convention, not approximate). The column's
+    * rows are collected and folded on the driver ([[Agg.of]]): over
+    * [[readStats]] that runs no Spark job, over a file-backed stats frame
+    * one job with no exchange. The answer is a one-row local relation
+    * (`n_rows`, `n_nulls` bigint; `min_v`, `max_v`, `sum_v` double), all
+    * NULL when no row is the column's, as a SQL aggregate over no rows. */
+  def roughAgg(stats: DataFrame, column: String): DataFrame = {
+    val ps = stats.filter(col("column") === column).collect()
+      .map(PackStat(_)).toSeq
+    val row =
+      if (ps.isEmpty) Row.fromSeq(Seq.fill(AggSchema.size)(null))
+      else {
+        val a = Agg.of(ps)
+        def dbl(v: Option[Double]): Any = v.map(Double.box).orNull
+        Row(a.nRows, a.nNulls, dbl(a.minV), dbl(a.maxV), dbl(a.sumV))
+      }
+    stats.sparkSession.createDataFrame(
+      java.util.Collections.singletonList(row), AggSchema)
+  }
 
   /** Tri-state per-pack classification of `lo <= column <= hi`
     * (RoughCheck analog): adds `state` ∈ 'NONE' | 'SOME' | 'ALL'. A pack
@@ -201,16 +227,25 @@ object StatsSidecar {
     val partialRows =
       if (some.isEmpty) 0L
       else if (some.size <= IsinMaxPacks)
-        snap.relation.filter(col(PackCol).isin(some: _*) && rowPred).count()
+        rowCount(snap.relation.filter(col(PackCol).isin(some: _*) && rowPred))
       else {
         val ids = spark.createDataFrame(
           java.util.Arrays.asList(some.map(Row(_)): _*),
           StructType(Seq(StructField(PackCol, IntegerType, nullable = false))))
-        snap.relation.join(broadcast(ids), Seq(PackCol)).filter(rowPred)
-          .count()
+        rowCount(snap.relation.join(broadcast(ids), Seq(PackCol))
+          .filter(rowPred))
       }
     fullRows + partialRows
   }
+
+  /** `df`'s row count as one Spark job: each task counts its own rows,
+    * and the driver adds them up. `Dataset.count()` aggregates through
+    * an exchange, which adaptive execution runs as two jobs. The count
+    * is still a Dataset action, so query listeners see its plan and its
+    * pruned scan. */
+  private def rowCount(df: DataFrame): Long =
+    df.select().mapPartitions(it => Iterator.single(it.size.toLong))(
+      Encoders.scalaLong).collect().sum
 
   /** Hybrid rough+exact COUNT of `lo <= column <= hi`: the rough pass
     * ([[classify]]) runs on the driver over the snapshot; ALL packs are
@@ -287,6 +322,20 @@ object StatsSidecar {
   private[graft] final case class Agg(nRows: Long, nNulls: Long,
       minV: Option[Double], maxV: Option[Double], sumV: Option[Double])
 
+  private[graft] object Agg {
+    /** The packs' figures folded as SQL's SUM, MIN and MAX fold them:
+      * NULL bounds and sums are skipped, and MIN and MAX order doubles
+      * as Spark does ([[cmp]]). */
+    def of(ps: Seq[PackStat]): Agg = {
+      def pick(vs: Seq[Double], keep: Int => Boolean) =
+        vs.reduceOption((a, b) => if (keep(cmp(a, b))) a else b)
+      val sums = ps.flatMap(_.sumFp)
+      Agg(ps.map(_.nRows).sum, ps.map(_.nNulls).sum,
+        pick(ps.flatMap(_.minV), _ <= 0), pick(ps.flatMap(_.maxV), _ >= 0),
+        if (sums.isEmpty) None else Some(sums.sum.toDouble / Scale))
+    }
+  }
+
   /** Spark SQL's order of doubles (`SQLOrderingUtil.compareDoubles`):
     * NaN equals NaN and sorts above every number, and -0.0 equals 0.0.
     * Scala's `<` and `>` are false whenever NaN is involved. */
@@ -314,9 +363,11 @@ object StatsSidecar {
   }
 
   /** The sidecar of one packed path, as loaded by one session. `key` is
-    * the sidecar directory's listing at load time. */
+    * the sidecar directory's listing at load time; `schema` is the
+    * sidecar's, which an empty sidecar has no row to carry. */
   private[graft] final class Snapshot(val spark: SparkSession, path: String,
-      val key: Seq[(String, Long, Long)], rows: Array[Row]) {
+      val key: Seq[(String, Long, Long)], schema: StructType,
+      rows: Array[Row]) {
     private val byColumn: Map[String, IndexedSeq[PackStat]] =
       rows.groupBy(_.getAs[String]("column")).map { case (c, rs) =>
         c -> rs.map(PackStat(_)).sortBy(_.pack).toIndexedSeq
@@ -337,15 +388,11 @@ object StatsSidecar {
     lazy val relation: DataFrame = spark.read.parquet(path)
     if (rows.nonEmpty) relation
 
-    def agg(column: String): Agg = {
-      val ps = packs(column)
-      def pick(vs: Seq[Double], keep: Int => Boolean) =
-        vs.reduceOption((a, b) => if (keep(cmp(a, b))) a else b)
-      val sums = ps.flatMap(_.sumFp)
-      Agg(ps.map(_.nRows).sum, ps.map(_.nNulls).sum,
-        pick(ps.flatMap(_.minV), _ <= 0), pick(ps.flatMap(_.maxV), _ >= 0),
-        if (sums.isEmpty) None else Some(sums.sum.toDouble / Scale))
-    }
+    /** The sidecar rows as a local relation ([[readStats]]), built once. */
+    lazy val stats: DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+    def agg(column: String): Agg = Agg.of(packs(column))
   }
 
   private val snapshots = new ConcurrentHashMap[String, Snapshot]()
@@ -367,8 +414,9 @@ object StatsSidecar {
     val cached = snapshots.get(path)
     if (cached != null && (cached.spark eq spark) && cached.key == key) cached
     else {
-      val fresh = new Snapshot(spark, path, key,
-        readStats(spark, path).collect())
+      val stats = spark.read.parquet(statsPath(path))
+      val fresh = new Snapshot(spark, path, key, stats.schema,
+        stats.collect())
       snapshots.put(path, fresh)
       fresh
     }

@@ -287,10 +287,9 @@ class RoughSpec extends AnyFunSuite {
     val (n, jobs, scans) = observed(
       StatsSidecar.countBetween(spark, scratch, "l_quantity", mid, mid))
     assert(n === exact(mid, mid))
-    // one count query; adaptive execution runs its shuffle map stage and
-    // its result stage as two jobs of that query
-    assert(jobs.nonEmpty && jobs.forall(_.isDefined)
-      && jobs.distinct.size === 1, s"jobs of one query expected: $jobs")
+    // one count query, run as one job with no exchange
+    assert(jobs.size === 1 && jobs.head.isDefined,
+      s"one job of one query expected: $jobs")
     assert(scans.size === 1)
     val scan = scans.head
     assert(scan.partitionFilters.exists(
@@ -298,6 +297,48 @@ class RoughSpec extends AnyFunSuite {
       s"expected _pack in PartitionFilters of\n$scan")
     assert(scan.relation.location.rootPaths.map(_.toUri.getPath)
       === Seq(scratch))
+  }
+
+  /** The rough aggregate stated with Spark's own aggregates: the
+    * reference that [[StatsSidecar.roughAgg]]'s driver fold must match. */
+  private def sparkAgg(stats: DataFrame, column: String): DataFrame =
+    stats.filter(col("column") === column)
+      .agg(
+        sum(col("n_rows")).as("n_rows"),
+        sum(col("n_nulls")).as("n_nulls"),
+        min(col("min_v")).as("min_v"),
+        max(col("max_v")).as("max_v"),
+        (sum(col("sum_fp")).cast("double") / 10000.0).as("sum_v"))
+
+  test("a warm readStats, and roughAgg over it, run no job") {
+    StatsSidecar.readStats(spark, scratch)
+    val (stats, readJobs, _) = observed(StatsSidecar.readStats(spark, scratch))
+    assert(readJobs.isEmpty, s"readStats ran $readJobs")
+    for (c <- Seq("l_quantity", "l_extendedprice")) {
+      val (rows, aggJobs, _) =
+        observed(StatsSidecar.roughAgg(stats, c).collect().toSeq)
+      assert(aggJobs.isEmpty, s"roughAgg($c) ran $aggJobs")
+      val files = spark.read.parquet(StatsSidecar.statsPath(scratch))
+      assert(StatsSidecar.roughAgg(files, c).collect().toSeq === rows)
+      assert(sparkAgg(files, c).collect().toSeq === rows, c)
+    }
+  }
+
+  test("roughAgg of a column with no stats, or of an empty sidecar, is " +
+      "one all-NULL row") {
+    val dir = Files.createTempDirectory("graft_roughnull")
+    val li = Engine.table(spark, sf, "lineitem").select(col("l_quantity"))
+    StatsSidecar.writeWithStats(li.filter(col("l_quantity") < 0),
+      s"$dir/empty", 512, Seq("l_quantity"))
+    for ((path, c) <- Seq((scratch, "no_such_column"),
+        (s"$dir/empty", "l_quantity"));
+        stats <- Seq(StatsSidecar.readStats(spark, path),
+          spark.read.parquet(StatsSidecar.statsPath(path)))) {
+      val agg = StatsSidecar.roughAgg(stats, c)
+      assert(agg.schema === sparkAgg(stats, c).schema, s"$path $c")
+      assert(agg.collect().toSeq === Seq(Row(null, null, null, null, null)),
+        s"$path $c")
+    }
   }
 
   test("SELECT ROUGHLY aggregates answer from the snapshot with no job") {
@@ -325,15 +366,23 @@ class RoughSpec extends AnyFunSuite {
       StatsSidecar.countBetween(spark, path, "l_quantity", 10.0, 30.0)
     def exactOf(df: DataFrame) =
       df.filter(col("l_quantity").between(10.0, 30.0)).count()
+    // readStats holds the sidecar files' rows
+    def statsOf(path: String) = {
+      def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(StatsSidecar.readStats(spark, path))
+        === rows(spark.read.parquet(StatsSidecar.statsPath(path))))
+    }
     val small = li.filter(col("l_quantity") < 20)
     val path = s"$dir/li"
     StatsSidecar.writeWithStats(li, path, 512, Seq("l_quantity"),
       clusterBy = Some(col("l_quantity")))
     assert(count(path) === exactOf(li))
+    statsOf(path)
     // rewritten through writeWithStats, in this JVM
     StatsSidecar.writeWithStats(small, path, 512, Seq("l_quantity"),
       clusterBy = Some(col("l_quantity")))
     assert(count(path) === exactOf(small))
+    statsOf(path)
     // replaced by files copied from another layout, behind its back
     val other = s"$dir/other"
     StatsSidecar.writeWithStats(li, other, 256, Seq("l_quantity"))
@@ -342,5 +391,6 @@ class RoughSpec extends AnyFunSuite {
       copyTree(Paths.get(other + suffix), Paths.get(path + suffix))
     }
     assert(count(path) === exactOf(li))
+    statsOf(path)
   }
 }

@@ -905,6 +905,26 @@ class SqlSurfaceSpec extends AnyFunSuite {
     runner.run("DROP TABLE comp_pk")
   }
 
+  test("statement front-end: CREATE TEMPORARY TABLE … SELECT shadows a " +
+      "base table of the same name until DROP TEMPORARY TABLE") {
+    import graft.sources.StatementRunner
+    val runner = new StatementRunner(spark)
+    def rows = runner.run("SELECT a FROM ctas_tmp ORDER BY a").collect()
+      .map(_.getInt(0)).toSeq
+    runner.run("CREATE TABLE ctas_tmp (a INT)")
+    runner.run("INSERT INTO ctas_tmp VALUES (1), (2)")
+    runner.run("CREATE TEMPORARY TABLE ctas_tmp SELECT a + 10 AS a " +
+      "FROM ctas_tmp")
+    assert(rows === Seq(11, 12))
+    // a second temporary table of the name is the duplicate error
+    intercept[IllegalArgumentException] {
+      runner.run("CREATE TEMPORARY TABLE ctas_tmp SELECT 1 AS a")
+    }
+    runner.run("DROP TEMPORARY TABLE ctas_tmp")
+    assert(rows === Seq(1, 2))
+    runner.run("DROP TABLE ctas_tmp")
+  }
+
   test("statement front-end: TEMPORARY tables, index DDL no-ops, and " +
       "database session statements") {
     import graft.sources.StatementRunner

@@ -3,11 +3,15 @@
 Spark jobs per operation, and where the time went.
 
     python3 tools/htap_classes.py .bench_build/runs/htap_statements/out/spans.jsonl
+    python3 tools/htap_classes.py .bench_build/runs/rough_scan/out/spans.jsonl
     python3 tools/htap_classes.py --json spans.jsonl
 
-A traced run (`perfbench/run.py --trace 1`) writes one span per line; each
-operation is an `op.<class>` span, and every span it contains, Spark jobs
-(`exec.job`) included, carries the operation's id. For each class this
+A traced run of any perfbench workload (`perfbench/run.py --trace 1`)
+writes one span per line; each operation is an `op.<class>` span
+(`op.delete`, `op.select_point`, … for htap_statements; `op.selective`,
+`op.rough_agg`, `op.full_scan`, `op.gate` for rough_scan), and every span
+it contains, Spark jobs (`exec.job`) included, carries the operation's
+id. For each class this
 prints: `n` operations, `p50_ms` (median operation latency), `jobs` (mean
 Spark jobs per operation, with the fewest and most), `job_ms` (mean self
 time of those jobs) and `driver_ms` (mean self time of every other span:

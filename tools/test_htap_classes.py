@@ -31,6 +31,20 @@ SPANS = [
 ]
 
 
+# rough_scan's classes: a hybrid count with one job, a rough aggregate
+# answered on the driver with none
+ROUGH_SPANS = [
+    span(1, -1, 1, "op.selective", 0, 80),
+    span(2, 1, 1, "statssidecar.count_between", 5, 75),
+    span(3, 2, 1, "exec.job", 30, 70),
+    span(4, -1, 2, "op.selective", 100, 200),
+    span(5, 4, 2, "statssidecar.count_between", 100, 200),
+    span(6, 5, 2, "exec.job", 120, 180),
+    span(7, -1, 3, "op.rough_agg", 300, 320),
+    span(8, 7, 3, "statssidecar.rough_agg", 302, 318),
+]
+
+
 class ClassesTest(unittest.TestCase):
     def test_per_class_numbers(self):
         t = htap_classes.classes(SPANS)
@@ -45,6 +59,19 @@ class ClassesTest(unittest.TestCase):
         p = t["select_point"]
         self.assertEqual((p["n"], p["jobs"], p["job_ms"]), (1, 0, 0))
         self.assertAlmostEqual(p["driver_ms"], 20.0)
+
+    def test_rough_scan_classes(self):
+        t = htap_classes.classes(ROUGH_SPANS)
+        self.assertEqual(sorted(t), ["rough_agg", "selective"])
+        s = t["selective"]
+        self.assertEqual((s["n"], s["p50_ms"]), (2, 90.0))
+        self.assertEqual((s["jobs"], s["jobs_min"], s["jobs_max"]), (1, 1, 1))
+        self.assertAlmostEqual(s["job_ms"], (40 + 60) / 2)
+        self.assertAlmostEqual(s["driver_ms"], (40 + 40) / 2)
+        r = t["rough_agg"]
+        self.assertEqual((r["n"], r["jobs"], r["jobs_max"], r["job_ms"]),
+                         (1, 0, 0, 0))
+        self.assertAlmostEqual(r["driver_ms"], 20.0)
 
     def test_reads_jsonl_and_renders(self):
         with tempfile.TemporaryDirectory() as d:
