@@ -1,10 +1,20 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.ListenerBridge
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Benchmark main (driver contract): run the headline queries against
-  * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR, print ONE summary JSON line, and write the
+  * per-query record to SPARK_GRAFT_BENCH_DETAIL (`./BENCH_DETAIL.json`
+  * when unset): median and min seconds, classes compiled per pass, and
+  * each query's layer split ([[SplitKeys]], median over the passes).
   * Queries are forced end-to-end with a noop sink (full plan execution,
   * no driver materialization — `count()` would let Catalyst shortcut
   * column reads). */
@@ -93,26 +103,113 @@ object Bench {
     "q_corpus_topics",          // topic-cluster composition report
     "q_bpe_train")              // iterative BPE merge training (8 steps)
 
-  def runOne(spark: SparkSession, name: String, sfDir: String): Double =
-    runCounted(spark, name, sfDir)._1
+  /** Everything the listeners heard during one run: Spark jobs, stages
+    * and tasks; the union of the jobs' wall intervals (`job_ms`) and the
+    * rest of the run's wall time (`driver_self_ms`: building, analysing,
+    * optimizing and planning the query, and the driver's work between
+    * jobs); the tracker's analysis, optimization and planning times,
+    * summed over the queries the run executed (a DataFrame analysed while
+    * the query is built reports to no listener); executor run, CPU and GC
+    * time and the input and shuffle bytes, summed over its tasks. */
+  val SplitKeys: Seq[String] = Seq("jobs", "stages", "tasks", "job_ms",
+    "driver_self_ms", "analysis_ms", "optimization_ms", "planning_ms",
+    "executor_run_ms", "executor_cpu_ms", "gc_ms", "input_bytes",
+    "shuffle_read_bytes", "shuffle_write_bytes")
 
-  /** One run of `name`: seconds (-1 on error) and the number of
-    * classes Spark compiled for it (generated code is cached by its
-    * source, so a repeated query compiles 0 unless its code changed). */
-  def runCounted(spark: SparkSession, name: String,
-                 sfDir: String): (Double, Long) = {
+  /** One measured run: seconds (-1 on error), the classes Spark compiled
+    * for it (generated code is cached by its source, so a repeated query
+    * compiles 0 unless its code changed), and its [[SplitKeys]] split. */
+  final case class Run(seconds: Double, compiles: Long,
+                       split: Map[String, Double])
+
+  /** The bench's one listener pair, registered on `spark` as a
+    * SparkListener and a QueryExecutionListener. [[take]] hands over what
+    * they heard since the previous call. */
+  final class Recorder(val spark: SparkSession)
+      extends SparkListener with QueryExecutionListener {
+    private val heard = mutable.Map.empty[String, Double].withDefaultValue(0.0)
+    private val jobStart = mutable.Map.empty[Int, Long]
+    private val jobSpans = mutable.ArrayBuffer.empty[(Long, Long)]
+
+    private def add(k: String, v: Double): Unit = synchronized { heard(k) += v }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      add("jobs", 1); jobStart(e.jobId) = e.time
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobStart.remove(e.jobId).foreach(t0 => jobSpans += ((t0, e.time)))
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      add("stages", 1)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      add("tasks", 1)
+      val m = e.taskMetrics
+      if (m != null) {
+        add("executor_run_ms", m.executorRunTime)
+        add("executor_cpu_ms", m.executorCpuTime / 1e6)
+        add("gc_ms", m.jvmGCTime)
+        add("input_bytes", m.inputMetrics.bytesRead)
+        add("shuffle_read_bytes", m.shuffleReadMetrics.totalBytesRead)
+        add("shuffle_write_bytes", m.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+
+    private def phases(qe: QueryExecution): Unit =
+      qe.tracker.phases.foreach { case (p, s) => add(s"${p}_ms", s.durationMs) }
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      phases(qe)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+      phases(qe)
+
+    spark.sparkContext.addSparkListener(this)
+    spark.listenerManager.register(this)
+    take(0)
+
+    /** Waits for the listener bus to deliver every queued event, then
+      * returns and clears what was heard; `wallMs` is the run's wall time,
+      * split into `job_ms` and `driver_self_ms`. */
+    def take(wallMs: Double): Map[String, Double] = {
+      ListenerBridge.drain(spark.sparkContext)
+      synchronized {
+        var jobMs = 0L
+        var end = Long.MinValue
+        jobSpans.sortBy(_._1).foreach { case (s, e) =>
+          jobMs += math.max(0L, e - math.max(s, end))
+          end = math.max(end, e)
+        }
+        val out = SplitKeys.map(k => k -> heard(k)).toMap ++ Map(
+          "job_ms" -> jobMs.toDouble,
+          "driver_self_ms" -> math.max(0.0, wallMs - jobMs))
+        heard.clear(); jobSpans.clear()
+        out
+      }
+    }
+
+    def close(): Unit = {
+      spark.sparkContext.removeSparkListener(this)
+      spark.listenerManager.unregister(this)
+    }
+  }
+
+  /** One run of `name`, forced with a noop sink. Only the run is timed:
+    * draining the listener bus and counting come after it. */
+  def runOne(rec: Recorder, name: String, sfDir: String): Run = {
     val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
-    try SparkEntry.queries(name)(spark, sfDir)
-      .write.mode("overwrite").format("noop").save()
-    catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-        return (-1.0, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
-    }
-    ((System.nanoTime() - t0) / 1e9,
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    val ok =
+      try {
+        SparkEntry.queries(name)(rec.spark, sfDir)
+          .write.mode("overwrite").format("noop").save()
+        true
+      } catch {
+        case e: Throwable =>
+          System.err.println(
+            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          false
+      }
+    val wallMs = (System.nanoTime() - t0) / 1e6
+    Run(if (ok) wallMs / 1e3 else -1.0,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, rec.take(wallMs))
   }
 
   /** Per-query protocol: run 5×, report the MEDIAN. The reference's
@@ -137,10 +234,10 @@ object Bench {
     * median 5.78 s under driver load vs 1.30 s idle, identical code) — a
     * round where median >> min across the board is machine weather, not
     * a regression, and the artifact should show that by itself. */
-  def interleavedSamples(spark: SparkSession,
-                         sfDir: String): Seq[Map[String, (Double, Long)]] =
+  def interleavedSamples(rec: Recorder,
+                         sfDir: String): Seq[Map[String, Run]] =
     (1 to RunsPerQuery).map(_ =>
-      filteredHeadline.map(n => n -> runCounted(spark, n, sfDir)).toMap)
+      filteredHeadline.map(n => n -> runOne(rec, n, sfDir)).toMap)
 
   /** Failures are first-class in the artifact: a benched query that
     * errors must scream from the parsed JSON (`"failed":["name",…]`),
@@ -196,17 +293,18 @@ object Bench {
     // nearly displaced the summary JSON line the driver parses.
     spark.sparkContext.setLogLevel("ERROR")
 
+    val rec = new Recorder(spark)
     // JVM/codegen warmup on the smallest query so per-query numbers
     // measure the plan, not classloading.
-    runOne(spark, "q06_forecast_revenue", sfDir)
+    runOne(rec, "q06_forecast_revenue", sfDir)
 
     // Calibration BRACKETS the query loop (r16 stamped one pair after
     // the loop; a load spike mid-run was averaged in invisibly) — a
     // pre/post divergence localizes contention to the run itself.
     val (calPre1, calPreN) = calibrate()
-    val samples = interleavedSamples(spark, sfDir)
+    val samples = interleavedSamples(rec, sfDir)
     val results: Seq[(String, (Double, Double))] = filteredHeadline.map { n =>
-      val ts = samples.map(_(n)._1)
+      val ts = samples.map(_(n).seconds)
       n -> (if (ts.exists(_ < 0)) (-1.0, -1.0)
             else (ts.sorted.apply(RunsPerQuery / 2), ts.min))
     }
@@ -220,8 +318,15 @@ object Bench {
       .mkString("{", ",", "}")
     // classes compiled per query in each pass, in pass order
     val compiles = filteredHeadline.map(n =>
-      samples.map(_(n)._2).mkString(s""""$n":[""", ",", "]"))
+      samples.map(_(n).compiles).mkString(s""""$n":[""", ",", "]"))
       .mkString("{", ",", "}")
+    // each split counter's median over the passes, per query
+    def num(v: Double): String = if (v == math.rint(v)) v.toLong.toString else ms(v)
+    val split = filteredHeadline.map { n =>
+      SplitKeys.map { k =>
+        s""""$k":${num(samples.map(_(n).split(k)).sorted.apply(RunsPerQuery / 2))}"""
+      }.mkString(s""""$n":{""", ",", "}")
+    }.mkString("{", ",", "}")
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val totalMin = results.map(_._2._2).filter(_ >= 0).sum
     val failed = failedJson(results)
@@ -230,36 +335,17 @@ object Bench {
     // round-over-round comparison stays apples-to-apples
     val (cal1, calN) = calibrate()
     val detail =
-      s"""{"metric":"total_detail","value":${ms(total)},"unit":"sec","runs_per_query":$RunsPerQuery,"protocol":"interleaved-median","total_min":${ms(totalMin)},"cal_pre_1t_ms":${ms(calPre1)},"cal_pre_allcores_ms":${ms(calPreN)},"cal_1t_ms":${ms(cal1)},"cal_allcores_ms":${ms(calN)},"failed":$failed,"queries":$qs,"queries_min":$qsMin,"compiles":$compiles,"sf":"$sfDir"}"""
-    // Full per-query medians/mins go to a repo file the judge reads
-    // directly — the stdout tail capture is size-bounded (~2000 chars)
-    // and the per-query map outgrew it in r13 (73 queries ≈ 2.3 kB →
-    // BENCH_r13 "parsed": null). The file is the per-query record.
+      s"""{"metric":"total_detail","value":${ms(total)},"unit":"sec","runs_per_query":$RunsPerQuery,"protocol":"interleaved-median","total_min":${ms(totalMin)},"cal_pre_1t_ms":${ms(calPre1)},"cal_pre_allcores_ms":${ms(calPreN)},"cal_1t_ms":${ms(cal1)},"cal_allcores_ms":${ms(calN)},"failed":$failed,"queries":$qs,"queries_min":$qsMin,"compiles":$compiles,"split":$split,"sf":"$sfDir"}"""
+    // Full per-query medians/mins go to a file — the stdout tail capture
+    // is size-bounded (~2000 chars) and the per-query map outgrew it in
+    // r13 (73 queries ≈ 2.3 kB → BENCH_r13 "parsed": null). The file is
+    // the per-query record.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-      "/root/repo/BENCH_DETAIL.json")
+      "BENCH_DETAIL.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
       (detail + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
-    // ALSO write a per-round copy (BENCH_DETAIL_r{N}.json, N = next
-    // after the highest committed BENCH_r*.json): the mutable
-    // BENCH_DETAIL.json is overwritten every run, so round-over-round
-    // per-query diffs needed git archaeology before this.
-    try {
-      val repo = java.nio.file.Paths.get(detailPath).getParent
-      val rn = java.nio.file.Files.list(repo).iterator()
-        .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-      var maxR = 0
-      while (rn.hasNext) {
-        val f = rn.next().getFileName.toString
-        """^BENCH_r(\d+)\.json$""".r.findFirstMatchIn(f)
-          .foreach(m => maxR = math.max(maxR, m.group(1).toInt))
-      }
-      java.nio.file.Files.write(
-        repo.resolve(f"BENCH_DETAIL_r${maxR + 1}%02d.json"),
-        (detail + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] round detail write failed: ${e.getMessage}") }
     // Compact summary printed LAST so the driver's tail capture always
     // gets a parseable JSON line. Bounded size FOREVER: no per-query map
     // here — total + failed + provenance only (`failed` is empty on a

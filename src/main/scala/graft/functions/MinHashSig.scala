@@ -3,87 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-
-/** All-permutation MinHash signature as ONE aggregate: for each input
-  * shingle hash h, fold min(h·aᵢ+bᵢ) for every permutation i into a
-  * single Array[Long] buffer in a tight JVM loop.
-  *
-  * Why a custom Catalyst aggregate (SURVEY §2 preference (b)): the
-  * declarative alternative — N separate `min` agg columns — generates an
-  * N-wide codegen'd HashAggregate whose one-shot Janino compilation costs
-  * seconds (see PLANS.md "measured plan lessons"), while N higher-order
-  * `transform`/`array_min` lambdas evaluate interpreted per element. One
-  * TypedImperativeAggregate keeps the plan narrow (one buffer), the
-  * update JIT-hot, and map-side partial aggregation intact: the shuffle
-  * still carries one 8·N-byte buffer per group, never per-shingle data. */
-case class MinHashSigAgg(child: Expression, as: Array[Long], bs: Array[Long],
-                         mutableAggBufferOffset: Int = 0,
-                         inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
-
-  private val n = as.length
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def createAggregationBuffer(): Array[Long] =
-    Array.fill(n)(Long.MaxValue)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = v.asInstanceOf[Long]
-      var i = 0
-      while (i < n) {
-        val p = h * as(i) + bs(i)
-        if (p < buf(i)) buf(i) = p
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < n) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(n * 8)
-    bb.asLongBuffer().put(buf)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](n)
-    java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(out)
-    out
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): MinHashSigAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MinHashSigAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): MinHashSigAgg = copy(child = c.head)
-}
-
-object MinHashSigAgg {
-  /** Aggregate column: array of min(h·a+b) over the group's h values. */
-  def minhashSig(h: Column, params: Seq[(Long, Long)]): Column =
-    GraftSqlBridge.column(
-      MinHashSigAgg(GraftSqlBridge.expression(h),
-        params.map(_._1).toArray, params.map(_._2).toArray)
-        .toAggregateExpression())
-}
 
 /** Per-document MinHash in ONE pass, no shuffle: walk the text's n-char
   * shingles with a rolling FNV-1a window, dedup hashes in an open-addressed
@@ -92,16 +13,15 @@ object MinHashSigAgg {
   * array<long> (one minimum per permutation)>.
   *
   * Why this beats the distributed formulation (explode → groupBy(doc_id) →
-  * [[MinHashSigAgg]] + collect_set): a signature is a per-document scalar —
-  * min over a multiset equals min over its distinct set, so nothing about
-  * it requires an aggregation boundary. The explode variant shuffles one
-  * row per shingle occurrence and rebuilds the distinct set inside the
-  * aggregate; this computes both operands where the text already lives,
-  * leaving the ONLY shuffle in the dedup pipeline the (band, bhash) LSH
-  * join. At 100 TB that is the difference between shuffling ~1000× the
-  * corpus (per-shingle rows) and shuffling nothing. [[MinHashSigAgg]] is
-  * kept for the genuinely aggregating case — signatures over grouped
-  * multi-row token streams. */
+  * an all-permutation min aggregate + collect_set): a signature is a
+  * per-document scalar — min over a multiset equals min over its distinct
+  * set, so nothing about it requires an aggregation boundary. The
+  * explode variant shuffles one row per shingle occurrence and rebuilds
+  * the distinct set inside the aggregate; this computes both operands
+  * where the text already lives, leaving the ONLY shuffle in the dedup
+  * pipeline the (band, bhash) LSH join. At 100 TB that is the difference
+  * between shuffling ~1000× the corpus (per-shingle rows) and shuffling
+  * nothing. */
 case class MinHashShingleSig(child: Expression, n: Int,
                              as: Array[Long], bs: Array[Long])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression

@@ -550,18 +550,6 @@ object MySql {
   private val LongMaxBD = new java.math.BigDecimal(Long.MaxValue)
   private val LongMinBD = new java.math.BigDecimal(Long.MinValue)
 
-  /** MySQL CAST(decimal AS SIGNED) SATURATES out-of-range values at the
-    * BIGINT rim instead of wrapping (bigint_unsigned.test pins
-    * `cast(19999999999999999999 as signed)` = 9223372036854775807);
-    * in-range values truncate toward zero, same as Spark's cast. */
-  def decToLongSaturate(d: org.apache.spark.sql.types.Decimal): Long = {
-    if (d == null) return 0L
-    val bd = d.toJavaBigDecimal
-    if (bd.compareTo(LongMaxBD) > 0) Long.MaxValue
-    else if (bd.compareTo(LongMinBD) < 0) Long.MinValue
-    else bd.longValue()
-  }
-
   /** A DECIMAL operand entering the bit-operator domain saturates at
     * the signed-BIGINT rim after MySQL's half-away rounding — the
     * reference evaluates decimals through its int64 tier
@@ -885,22 +873,6 @@ object MySql {
         frac
   }
   // scalastyle:on cyclomatic.complexity method.length
-
-  def strToDateRuntime(s: String, fmt: String): java.sql.Timestamp = {
-    if (s == null || fmt == null) return null
-    try {
-      val javaFmt = mysqlFormatToJava(fmt)
-        .replace("yyyy", "y").replace("dd", "d").replace("MM", "M")
-        .replace("HH", "H").replace("mm", "m").replace("ss", "s")
-      val f = java.time.format.DateTimeFormatter.ofPattern(javaFmt)
-      val parsed = f.parse(s.trim)
-      val date = try java.time.LocalDate.from(parsed)
-        catch { case _: Exception => java.time.LocalDate.of(1970, 1, 1) }
-      val time = try java.time.LocalTime.from(parsed)
-        catch { case _: Exception => java.time.LocalTime.MIDNIGHT }
-      java.sql.Timestamp.valueOf(java.time.LocalDateTime.of(date, time))
-    } catch { case _: Exception => null }
-  }
 
   /** MySQL `ADDTIME(ts, 'HH:MM:SS')`. */
   def addtime(ts: Column, t: Column): Column =

@@ -85,19 +85,4 @@ object Vectors {
     val denom = norm(a) * norm(b)
     when(denom === 0.0, 0.0).otherwise(dot(a, b) / denom)
   }
-
-  /** Word n-grams of a space-tokenised string column, as array<string>.
-    * Pure builtins: split → sequence → transform(slice). */
-  def wordNgrams(text: Column, n: Int): Column = {
-    val words = split(text, " ")
-    transform(
-      sequence(lit(1), greatest(size(words) - (n - 1), lit(0))),
-      i => concat_ws(" ", slice(words, i, lit(n))))
-  }
-
-  /** Distinct character n-grams (shingles) of a string column. */
-  def charShingles(text: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-      i => text.substr(i, lit(n))))
 }

@@ -34,13 +34,6 @@ object Collation {
 
   def ciLt(a: Column, b: Column): Column = upper(a) < upper(b)
 
-  def ciLeq(a: Column, b: Column): Column = upper(a) <= upper(b)
-
-  /** ci ORDER BY key with a deterministic binary tiebreak (MySQL's
-    * ordering among ci-equal strings is unspecified; pinning the
-    * tiebreak makes results reproducible). */
-  def ciAsc(c: Column): Seq[Column] = Seq(upper(c).asc, c.asc)
-
   // --- gate -----------------------------------------------------------------
 
   /** ci semantics gate: three deterministic case-variants of every part

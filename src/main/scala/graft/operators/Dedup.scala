@@ -65,9 +65,7 @@ object Dedup {
     * is the (band, bhash) LSH join. (Round-1 shape — explode to
     * per-shingle rows → groupBy(doc_id) with a custom
     * TypedImperativeAggregate + collect_set — shuffled ~1000× the corpus
-    * in per-shingle rows and was the top bench entry at 7.4 s;
-    * [[graft.functions.MinHashSigAgg]] remains for genuinely grouped
-    * token streams.)
+    * in per-shingle rows and was the top bench entry at 7.4 s.)
     *
     * The struct is projected in a separate select on purpose: Catalyst's
     * CollapseProject keeps the producing projection because `mh` is

@@ -189,16 +189,6 @@ class MySqlCoercionRule(spark: SparkSession) extends Rule[LogicalPlan] {
       children.exists(c => !isIntegral(c.dataType) &&
         c.dataType != NullType)
 
-  private def toIntegral(e: Expression): Expression =
-    if (isIntegral(e.dataType) || e.dataType == NullType) e
-    else e.dataType match {
-      // MySQL ROUNDS a fractional operand into integer context
-      // (-2.9 & x works on -3); Spark's cast truncates toward zero
-      case DoubleType | FloatType =>
-        Cast(Round(e, Literal(0)), LongType)
-      case _ => Cast(e, LongType)
-    }
-
   /** One bit operator evaluated in MySQL's u64 domain (see
     * [[graft.functions.MySql.bitAndU64]] and friends). Spark's own
     * coercion may already have squeezed the operand through an

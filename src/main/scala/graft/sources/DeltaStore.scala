@@ -452,13 +452,6 @@ class DeltaStore(spark: SparkSession, root: String) {
   /** ALTER TABLE … DROP COLUMN analog. */
   def alterDropColumn(name: String): Unit = replaceTable(read().drop(name))
 
-  /** ALTER TABLE … MODIFY COLUMN analog (alter_column.test): retype in
-    * place via a cast rewrite; position and other columns unchanged. */
-  def alterModifyColumn(name: String,
-                        dt: org.apache.spark.sql.types.DataType): Unit =
-    replaceTable(read()
-      .withColumn(name, org.apache.spark.sql.functions.col(name).cast(dt)))
-
   /** ALTER TABLE … CHANGE COLUMN analog: rename (and optionally retype)
     * one column. */
   def alterRenameColumn(oldName: String, newName: String,

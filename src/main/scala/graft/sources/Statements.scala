@@ -7317,7 +7317,9 @@ object Statements {
     * golden block ([[MtrParity.sweep]]). The oracle pins the exact
     * (file, blocks_compared, mismatches) counts, so a value-parity
     * regression — or silently shrunken coverage — flips the gate red
-    * in CORRECTNESS_rN instead of hiding in a test-tree report. The
+    * in the correctness report (for the last one kept, see
+    * `git show e85c1e8:CORRECTNESS_r20.json`) instead of hiding in a
+    * test-tree report. The
     * full-corpus picture stays with `graft.MtrTool sweep` (test tree). */
   def qSqlMtrValueParity(s: SparkSession, dir: String): DataFrame = {
     MtrParity.requireCorpus()

@@ -5,8 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType,
+  StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Knowledge-Grid analog: a per-pack stats sidecar + rough (metadata-only)
@@ -54,12 +54,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * of the sidecar's files. A hybrid count then runs exactly one Spark
   * job, over the RS_SOME packs (each task counts its rows, with no
   * exchange), and none at all when the rough pass decides every pack.
-  * [[readStats]] is the snapshot's rows as a local relation and
-  * [[roughAgg]] folds one column's rows on the driver, so a rough
-  * aggregate over [[readStats]] runs no job either. [[roughCheck]] and
-  * [[roughCheckPrefix]] state the rough rules as DataFrames over
-  * [[readStats]]; a property test holds the two forms to the same
-  * answer.
+  * [[readStats]] is the snapshot's rows as a local relation, and
+  * [[roughAgg]], [[roughCheck]] and [[roughCheckPrefix]] fold or class
+  * one column's rows on the driver with the same rules ([[Agg.of]],
+  * [[classify]], [[classifyPrefix]]), so over [[readStats]] they run no
+  * job either. One rough rule serves every caller; property tests hold
+  * it to row-level truth.
   *
   * Scale: the sidecar has (packs × columns) rows — ~1e6 at 100 TB with
   * 1 GB packs — and the snapshot keeps them all on the driver, ~150
@@ -174,8 +174,7 @@ object StatsSidecar {
     * (`n_rows`, `n_nulls` bigint; `min_v`, `max_v`, `sum_v` double), all
     * NULL when no row is the column's, as a SQL aggregate over no rows. */
   def roughAgg(stats: DataFrame, column: String): DataFrame = {
-    val ps = stats.filter(col("column") === column).collect()
-      .map(PackStat(_)).toSeq
+    val ps = packStats(stats, column)
     val row =
       if (ps.isEmpty) Row.fromSeq(Seq.fill(AggSchema.size)(null))
       else {
@@ -187,19 +186,28 @@ object StatsSidecar {
       java.util.Collections.singletonList(row), AggSchema)
   }
 
+  /** `column`'s sidecar rows in `stats`, collected to the driver. */
+  private def packStats(stats: DataFrame, column: String): Seq[PackStat] =
+    stats.filter(col("column") === column).collect().map(PackStat(_)).toSeq
+
+  private val CheckSchema = StructType(Seq(StructField(PackCol, IntegerType),
+    StructField("n_rows", LongType), StructField("state", StringType)))
+
+  /** Each pack of `column` with its `state` under `rule`, as a local
+    * relation (`_pack`, `n_rows`, `state`). */
+  private def classed(stats: DataFrame, column: String,
+                      rule: PackStat => String): DataFrame =
+    stats.sparkSession.createDataFrame(java.util.Arrays.asList(
+      packStats(stats, column).map(p => Row(p.pack, p.nRows, rule(p))): _*),
+      CheckSchema)
+
   /** Tri-state per-pack classification of `lo <= column <= hi`
-    * (RoughCheck analog): adds `state` ∈ 'NONE' | 'SOME' | 'ALL'. A pack
-    * is ALL only if every row (incl. no NULLs) passes; NONE if no row
-    * can. [[classify]] is the same rule on the driver. */
+    * (RoughCheck analog) by [[classify]]: each pack's `state` ∈ 'NONE' |
+    * 'SOME' | 'ALL'. A pack is ALL only if every row (incl. no NULLs)
+    * passes; NONE if no row can. */
   def roughCheck(stats: DataFrame, column: String,
                  lo: Double, hi: Double): DataFrame =
-    stats.filter(col("column") === column)
-      .select(col(PackCol), col("n_rows"),
-        when(col("max_v") < lo || col("min_v") > hi || col("n_rows") === 0,
-          "NONE")
-          .when(col("min_v") >= lo && col("max_v") <= hi
-            && col("n_nulls") === 0, "ALL")
-          .otherwise("SOME").as("state"))
+    classed(stats, column, classify(_, lo, hi))
 
   /** Above this many RS_SOME packs the exact pass stops inlining
     * `_pack IN (...)` literals and joins the scan against the pack-id
@@ -272,18 +280,10 @@ object StatsSidecar {
     *    above it (min_s ≥ prefix and min_s does not start with prefix);
     *  - ALL: both ends start with prefix (then everything between does),
     *    and no NULLs.
-    * [[classifyPrefix]] is the same rule on the driver. */
+    * The rule is [[classifyPrefix]]; the columns are [[roughCheck]]'s. */
   def roughCheckPrefix(stats: DataFrame, column: String,
                        prefix: String): DataFrame =
-    stats.filter(col("column") === column)
-      .select(col(PackCol), col("n_rows"),
-        when(col("max_s") < prefix
-          || (col("min_s") >= prefix && !col("min_s").startsWith(prefix))
-          || col("n_rows") === 0, "NONE")
-          .when(col("min_s").startsWith(prefix)
-            && col("max_s").startsWith(prefix)
-            && col("n_nulls") === 0, "ALL")
-          .otherwise("SOME").as("state"))
+    classed(stats, column, classifyPrefix(_, prefix))
 
   /** Hybrid rough+exact COUNT of `column LIKE 'prefix%'` (string twin of
     * [[countBetween]], rough pass [[classifyPrefix]]). */
@@ -342,8 +342,8 @@ object StatsSidecar {
   private def cmp(a: Double, b: Double): Int =
     if (a == b) 0 else java.lang.Double.compare(a, b)
 
-  /** [[roughCheck]]'s rule for one pack. A comparison with a NULL bound is
-    * never true, as in SQL's `when`. */
+  /** The rough rule of `lo <= column <= hi` for one pack. A comparison
+    * with a NULL bound is never true, as in SQL. */
   private[graft] def classify(p: PackStat, lo: Double, hi: Double): String =
     if (p.maxV.exists(cmp(_, lo) < 0) || p.minV.exists(cmp(_, hi) > 0)
         || p.nRows == 0) "NONE"
@@ -351,7 +351,8 @@ object StatsSidecar {
         && p.nNulls == 0) "ALL"
     else "SOME"
 
-  /** [[roughCheckPrefix]]'s rule for one pack. */
+  /** The rough rule of `column LIKE 'prefix%'` for one pack
+    * ([[roughCheckPrefix]] states it). */
   private[graft] def classifyPrefix(p: PackStat, prefix: String): String = {
     val pre = UTF8String.fromString(prefix)
     if (p.maxS.exists(_.binaryCompare(pre) < 0)

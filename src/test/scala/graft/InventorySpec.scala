@@ -58,11 +58,29 @@ class InventorySpec extends AnyFunSuite {
   // r12 verdict #3 "done" criterion: a seeded failure must show up in the
   // parsed bench line, not only as a -1 value.
   test("bench surfaces failures: runOne -> -1, summary lists the name") {
-    assert(Bench.runOne(spark, "no_such_query", sf) === -1.0)
-    assert(Bench.failedJson(Seq(
-      "a" -> (1.0, 0.9), "b" -> (-1.0, -1.0), "c" -> (0.2, 0.1)))
-      === """["b"]""")
+    val rec = new Bench.Recorder(spark)
+    val run = try Bench.runOne(rec, "no_such_query", sf) finally rec.close()
+    assert(run.seconds === -1.0)
+    assert(Bench.failedJson(Seq("a" -> (1.0, 0.9),
+      "no_such_query" -> (run.seconds, run.seconds), "c" -> (0.2, 0.1)))
+      === """["no_such_query"]""")
     assert(Bench.failedJson(Seq("a" -> (1.0, 0.9))) === "[]")
+  }
+
+  test("bench records each run's layer split") {
+    val rec = new Bench.Recorder(spark)
+    val sf001 = new java.io.File(sf).getParent + "/sf0.01"
+    val run = try Bench.runOne(rec, "q06_forecast_revenue", sf001)
+      finally rec.close()
+    val s = run.split
+    assert(s.keySet === Bench.SplitKeys.toSet)
+    assert(run.seconds > 0)
+    assert(s("jobs") >= 1, s)
+    assert(s("stages") >= s("jobs"), s)
+    assert(s("tasks") >= s("stages"), s)
+    assert(s("driver_self_ms") >= 0 &&
+      s("driver_self_ms") <= run.seconds * 1000, s)
+    assert(s("input_bytes") > 0, s)
   }
 
   test("group_concat output is sorted and comma-separated") {

@@ -8,10 +8,12 @@ import scala.jdk.CollectionConverters._
 import graft.sources.StatsSidecar
 import org.apache.spark.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType,
+  StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -170,67 +172,80 @@ class RoughSpec extends AnyFunSuite {
   private def opt[A](g: Gen[A]): Gen[Option[A]] =
     Gen.frequency(1 -> Gen.const(None), 4 -> g.map(Some(_)))
 
-  /** Random sidecar rows for column "c": empty packs, NULL-bearing and
-    * all-NULL packs, and bounds that tie with the predicate's. */
-  private def packsGen[A](value: Gen[A], minField: String,
-                          maxField: String): Gen[Seq[Map[String, Any]]] =
-    Gen.chooseNum(1, 12).flatMap(k => Gen.listOfN(k, for {
-      n <- Gen.frequency(1 -> Gen.const(0L), 5 -> Gen.chooseNum(1L, 5L))
-      nulls <- Gen.chooseNum(0L, n)
-      lo <- opt(value)
-      hi <- opt(value)
-    } yield (n, nulls, lo, hi))).map(_.zipWithIndex.map {
-      case ((n, nulls, lo, hi), pack) => Map[String, Any](
-        StatsSidecar.PackCol -> pack, "column" -> "c", "n_rows" -> n,
-        "n_nulls" -> nulls, minField -> lo.orNull, maxField -> hi.orNull)
-    })
+  /** A random table: column "c" of `dt`, NULLs included, and a small
+    * pack key "k". */
+  private def tableGen[A](value: Gen[A], dt: DataType): Gen[DataFrame] =
+    Gen.chooseNum(1, 24).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(Gen.chooseNum(0, 5), opt(value)))).map { rows =>
+      spark.createDataFrame(
+        rows.map { case (k, v) => Row(k, v.orNull) }.asJava,
+        StructType(Seq(StructField("k", IntegerType), StructField("c", dt))))
+    }
 
-  /** Each pack's state from the DataFrame rule (run as a Spark job over
-    * the rows) and from the driver rule, keyed by pack. */
-  private def bothRules(rows: Seq[Map[String, Any]],
-                        dfRule: DataFrame => DataFrame,
-                        local: StatsSidecar.PackStat => String)
-      : (Map[Int, String], Map[Int, String]) = {
-    val schema = StatsSidecar.readStats(spark, scratch).schema
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(
-      rows.map(m =>
-        Row.fromSeq(schema.fieldNames.toSeq.map(m.getOrElse(_, null)))),
-      1), schema)
-    (dfRule(df).collect().map(r => r.getInt(0) -> r.getString(2)).toMap,
-      df.collect().map(StatsSidecar.PackStat(_))
-        .map(p => p.pack -> local(p)).toMap)
+  /** `df` packed 3 rows a pack, clustered by the pack key or by the
+    * value, then each pack's rough state (`check` over the sidecar) held
+    * to the pack's own rows: a NONE pack holds no row matching `pred`,
+    * an ALL pack only matching rows (so no NULL). Returns the path. */
+  private def packsHoldTheirState(df: DataFrame, byValue: Boolean,
+                                  numeric: Boolean, pred: Column,
+                                  check: DataFrame => DataFrame): String = {
+    val path = s"${Files.createTempDirectory("graft_roughtruth")}/t"
+    StatsSidecar.writeWithStats(df, path, 3,
+      if (numeric) Seq("c") else Nil,
+      clusterBy = Some(col(if (byValue) "c" else "k")),
+      strCols = if (numeric) Nil else Seq("c"))
+    val rows = spark.read.parquet(path).groupBy(StatsSidecar.PackCol)
+      .agg(count(lit(1)), count_if(pred)).collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val states = check(StatsSidecar.readStats(spark, path)).collect()
+    val data = df.collect().toSeq
+    assert(states.map(_.getInt(0)).toSet === rows.keySet)
+    states.foreach { st =>
+      val (n, hits) = rows(st.getInt(0))
+      val what = s"pack ${st.getInt(0)} of $data"
+      assert(st.getLong(1) === n, what)
+      st.getString(2) match {
+        case "NONE" => assert(hits === 0, s"NONE $what")
+        case "ALL" => assert(hits === n, s"ALL $what")
+        case other => assert(other === "SOME", what)
+      }
+    }
+    path
   }
 
-  test("driver rough pass classes every pack as roughCheck does") {
+  test("rough range pass: NONE and ALL packs hold what they claim, " +
+      "hybrid count exact") {
     // ties, signed zeros, NaN (which Spark orders above every number and
     // Scala's < does not) and the infinite bounds of ROUGHLY's >= / <=
     val value = Gen.frequency(
       6 -> Gen.oneOf(-2.0, -1.0, -0.5, 0.0, 0.5, 1.0, 2.0),
       1 -> Gen.oneOf(-0.0, Double.NaN, Double.PositiveInfinity,
         Double.NegativeInfinity))
-    val packs = packsGen(value, "min_v", "max_v")
-    forAll(Gen.zip(packs, value, value)) { case (rows, lo, hi) =>
-      val (viaDf, viaDriver) = bothRules(rows,
-        StatsSidecar.roughCheck(_, "c", lo, hi),
-        StatsSidecar.classify(_, lo, hi))
-      assert(viaDriver === viaDf, s"lo=$lo hi=$hi rows=$rows")
+    forAll(Gen.zip(tableGen(value, DoubleType), Gen.oneOf(true, false),
+        value, value), n = 20) { case (df, byValue, lo, hi) =>
+      val pred = col("c") >= lo && col("c") <= hi
+      val path = packsHoldTheirState(df, byValue, numeric = true, pred,
+        StatsSidecar.roughCheck(_, "c", lo, hi))
+      assert(StatsSidecar.countBetween(spark, path, "c", lo, hi)
+        === df.filter(pred).count(), s"lo=$lo hi=$hi")
     }
   }
 
-  test("driver prefix rough pass classes every pack as roughCheckPrefix " +
-      "does") {
+  test("rough prefix pass: NONE and ALL packs hold what they claim, " +
+      "hybrid count exact") {
     // U+E000 sorts above a surrogate pair in UTF-16 but below it in the
     // UTF-8 byte order Spark compares strings in
     val piece = Gen.oneOf("a", "b", "ab", "\u00e9", "\uE000", "\uFFFD",
       "\uD83D\uDE00", "z")
     def str(max: Int) = Gen.chooseNum(0, max)
       .flatMap(k => Gen.listOfN(k, piece).map(_.mkString))
-    val packs = packsGen(str(3), "min_s", "max_s")
-    forAll(Gen.zip(packs, str(2))) { case (rows, prefix) =>
-      val (viaDf, viaDriver) = bothRules(rows,
-        StatsSidecar.roughCheckPrefix(_, "c", prefix),
-        StatsSidecar.classifyPrefix(_, prefix))
-      assert(viaDriver === viaDf, s"prefix=$prefix rows=$rows")
+    forAll(Gen.zip(tableGen(str(3), StringType), Gen.oneOf(true, false),
+        str(2)), n = 20) { case (df, byValue, prefix) =>
+      val pred = col("c").startsWith(prefix)
+      val path = packsHoldTheirState(df, byValue, numeric = false, pred,
+        StatsSidecar.roughCheckPrefix(_, "c", prefix))
+      assert(StatsSidecar.countPrefix(spark, path, "c", prefix)
+        === df.filter(pred).count(), s"prefix=$prefix")
     }
   }
 
