@@ -40,19 +40,41 @@ object Staging {
     * corpus-scale staging where order carries nothing. */
   /** [[stage]] with `ordered = true` — the statement tier's default
     * (every store write there rides the scan-order contract). Its
-    * callers there: a SELECT-sourced insert whose result exceeds
+    * callers there freeze a row set that later work would otherwise
+    * re-read: a SELECT-sourced insert whose result exceeds
     * [[DeltaStore.BufferCap]] rows (a smaller one is collected
-    * instead), `INSERT … SELECT … ON DUPLICATE KEY UPDATE`, DELETE
-    * with a subquery WHERE, the multi-table and `LIMIT` forms of
-    * DELETE and UPDATE, `UPDATE … JOIN`, and DELETE/UPDATE on a table
-    * with triggers. */
+    * instead), `INSERT … SELECT … ON DUPLICATE KEY UPDATE`, the rows a
+    * multi-table DELETE matched, and the rows of a DELETE on a table
+    * with triggers, marked before its BEFORE triggers run. */
   def stageOrdered(df: DataFrame, tag: String): DataFrame =
     stage(df, tag, ordered = true)
 
+  /** The staging directories written in the innermost [[scoped]] call
+    * on this thread. */
+  private val scopes =
+    ThreadLocal.withInitial[List[scala.collection.mutable.Buffer[String]]](
+      () => Nil)
+
+  /** Run `body`, then delete the staging directories it wrote: for a
+    * caller, such as one SQL statement, that has consumed its staged
+    * frames when it returns. Nested scopes delete only their own. */
+  def scoped[T](body: => T): T = {
+    val dirs = scala.collection.mutable.Buffer[String]()
+    scopes.set(dirs :: scopes.get)
+    try body
+    finally {
+      scopes.set(scopes.get.tail)
+      dirs.foreach(d => org.apache.commons.io.FileUtils
+        .deleteQuietly(new java.io.File(d)))
+    }
+  }
+
   def stage(df: DataFrame, tag: String,
             ordered: Boolean = false): DataFrame = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-stage-$tag").toString + "/data"
+    val top = java.nio.file.Files
+      .createTempDirectory(s"graft-stage-$tag").toString
+    scopes.get.headOption.foreach(_ += top)
+    val dir = top + "/data"
     if (ordered) {
       import org.apache.spark.sql.functions._
       df.withColumn("__stage_order", monotonically_increasing_id())

@@ -138,23 +138,44 @@ class StatementRunner(spark: SparkSession) {
       f.metadata.contains("graft.mysql.type") &&
       f.metadata.getString("graft.mysql.type").startsWith("TIMESTAMP")
 
+  private def timestampCols(schema: org.apache.spark.sql.types.StructType)
+      : Set[String] = schema.filter(isTimestampDecl).map(_.name).toSet
+
+  /** `df` with its columns `cols` moved by `sign` times the session
+    * offset: 1 takes stored UTC TIMESTAMPs into the session zone, -1
+    * takes them back. */
+  private def tzShift(df: DataFrame, cols: Set[String],
+                      sign: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    sessionTzMin match {
+      case Some(off) if off != 0 && df.columns.exists(cols) =>
+        df.select(df.schema.map { f =>
+          if (cols(f.name))
+            (col(f.name) + expr(s"INTERVAL ${sign * off} MINUTE"))
+              .as(f.name, f.metadata)
+          else col(f.name)
+        }.toSeq: _*)
+      case _ => df
+    }
+  }
+
   /** Register the table view with TIMESTAMP columns shifted into the
     * session zone (stored values are UTC; the view is what SELECTs and
     * INSERT…SELECTs read). */
   private def tzView(name: String, store: DeltaStore): Unit = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val df0 = store.read()
-    val df = sessionTzMin match {
-      case Some(off) if off != 0 && df0.schema.exists(isTimestampDecl) =>
-        df0.select(df0.schema.map { f =>
-          if (isTimestampDecl(f))
-            (col(f.name) + expr(s"INTERVAL $off MINUTE"))
-              .as(f.name, f.metadata)
-          else col(f.name)
-        }.toSeq: _*)
-      case _ => df0
-    }
-    df.createOrReplaceTempView(name)
+    val df = store.read()
+    tzShift(df, timestampCols(df.schema), 1).createOrReplaceTempView(name)
+  }
+
+  /** The inverse of [[tzView]]: rows of `store`'s table read through
+    * its view, with the TIMESTAMP columns back at their stored values.
+    * A DML form that reads the view converts its rows here before it
+    * writes them or compares them with the stored rows; `extra` names
+    * further columns that hold values for the TIMESTAMP columns. */
+  private def viewToStored(df: DataFrame, store: DeltaStore,
+                           extra: String => String = identity): DataFrame = {
+    val ts = timestampCols(store.read().schema)
+    tzShift(df, ts ++ ts.map(extra), -1)
   }
 
   def attach(name: String, store: DeltaStore): Unit = {
@@ -215,9 +236,14 @@ class StatementRunner(spark: SparkSession) {
   // DML statement forms against attached stores (the reference's primary
   // write surface: handler INSERT ha_tianmu.h write_row, DELETE/UPDATE
   // ha_tianmu.h:101-102). INSERT appends through the delta store;
-  // DELETE/UPDATE execute as staged base rewrites (the columnar
-  // execution of row DML — what the reference's own delta-merge
-  // eventually does to packs). INSERT…ON DUPLICATE KEY UPDATE must be
+  // each DELETE/UPDATE form is one base rewrite (the columnar execution
+  // of row DML — what the reference's own delta-merge eventually does
+  // to packs), whose versioned base freezes the rows the statement
+  // read. Only the forms that must freeze a row set before other work
+  // runs stage it first: the multi-table DELETE, whose targets all
+  // keep the rows the join matched before the first rewrite, and a
+  // DELETE on a table with triggers (see Staging.stageOrdered).
+  // INSERT…ON DUPLICATE KEY UPDATE must be
   // matched BEFORE the plain InsertRe (whose non-greedy tuples group
   // would otherwise swallow the ON DUPLICATE clause).
   private val InsertOnDupRe: Regex =
@@ -2316,87 +2342,34 @@ class StatementRunner(spark: SparkSession) {
       val setExprs = entries.map { case (_, c, rhs) =>
         s"($rhs) AS `__set_$c`"
       }.mkString(", ")
-      val m = Staging.stageOrdered(
-        spark.sql(MySqlDialect.rewrite(
-          s"SELECT `$t`.*, $setExprs FROM $fromSpec$where"))
-          .dropDuplicates(cols), s"update-join-$t")
-      val n = m.count()
+      // the matched rows of t, each once, with the values they get;
+      // the rewrite evaluates them once and counts them
+      val m = viewToStored(spark.sql(MySqlDialect.rewrite(
+        s"SELECT `$t`.*, $setExprs FROM $fromSpec$where"))
+        .dropDuplicates(cols), store, "__set_" + _)
+      val obs = org.apache.spark.sql.Observation()
+      val mren = m.observe(obs, org.apache.spark.sql.functions.count(lit(1)))
+        .toDF((cols.map("__m_" + _) ++ entries.map(e => "__set_" + e._2)): _*)
+        .withColumn("__matched", lit(true))
+      def joined(base: DataFrame): DataFrame = base.join(mren,
+        cols.map(c => base(c) <=> mren("__m_" + c)).reduce(_ && _),
+        "left_outer")
+      val hit = coalesce(col("__matched"), lit(false))
+      def newValues(base: DataFrame) = base.schema.map { f =>
+        entries.find(_._2 == f.name) match {
+          case Some((_, c, _)) => when(hit, col("__set_" + c)
+            .cast(f.dataType)).otherwise(base(f.name)).as(f.name)
+          case None => base(f.name)
+        }
+      }.toSeq
       if (tableTriggered(t, "UPDATE")) {
-        // row-wise path: fire per processed BASE row (the multi-update
-        // golden counts every matched row, value-identical or not)
-        val schema = store.read().schema
-        val mrows = collectCapped(m, s"UPDATE $t (multi)")
-        val setByOld = mrows.map { r =>
-          val oldVals = (0 until cols.length).map(r.get)
-          oldVals -> entries.zipWithIndex.map { case ((_, c, _), k) =>
-            c.toLowerCase -> r.get(cols.length + k)
-          }.toMap
-        }.toMap
-        val pinned = Staging.stageOrdered(store.read(), s"updjoin-$t")
-        val baseRows = collectCapped(pinned, s"UPDATE $t (multi)")
-        val befores = triggersOn(t, "UPDATE", "BEFORE")
-        val afters = triggersOn(t, "UPDATE", "AFTER")
-        val keys = primaryKeys.getOrElse(t.toLowerCase, Seq.empty)
-        val keyIdx = keys.map(k => schema.fieldIndex(
-          schema.fieldNames.find(_.equalsIgnoreCase(k)).getOrElse(k)))
-        val currentKeys = scala.collection.mutable.Set[Seq[Any]]()
-        if (ignore && keys.nonEmpty)
-          baseRows.foreach(r => currentKeys += keyIdx.map(r.get))
-        val pairs = scala.collection.mutable.ArrayBuffer[
-          (Map[String, Any], scala.collection.mutable.Map[String, Any])]()
-        val out = baseRows.map { br =>
-          val oldVals = (0 until schema.length).map(br.get)
-          setByOld.get(oldVals) match {
-            case None => br
-            case Some(setVals) =>
-              val oldM = rowToMap(br, schema).toMap
-              val newM = rowToMap(br, schema)
-              setVals.foreach { case (c, v) => newM(c) = v }
-              befores.foreach(d => interp.runTriggerBody(d.body, newM,
-                oldM, newAssignable = true, schema))
-              val newRow = mapToRow(newM, schema)
-              val oldKey = keyIdx.map(br.get)
-              val newKey = keyIdx.map(newRow.get)
-              if (ignore && keys.nonEmpty && newKey != oldKey &&
-                  currentKeys.contains(newKey)) br // skipped under IGNORE
-              else {
-                if (keys.nonEmpty && newKey != oldKey) {
-                  currentKeys -= oldKey; currentKeys += newKey
-                }
-                pairs += ((oldM, newM))
-                newRow
-              }
-          }
-        }
-        import scala.jdk.CollectionConverters._
-        val rebuilt = spark.createDataFrame(out.toList.asJava, schema)
-        try store.rewriteWith(_ => rebuilt)
-        finally store.read().createOrReplaceTempView(t)
-        pairs.foreach { case (o, nw) =>
-          afters.foreach(d => interp.runTriggerBody(d.body, nw, o,
-            newAssignable = false, schema))
-        }
-      } else {
-      store.rewriteWith { base =>
-        val mren = m.toDF((cols.map("__m_" + _) ++
-          entries.map(e => "__set_" + e._2)): _*)
-          .withColumn("__matched", lit(true))
-        val cond = cols.map(c => base(c) <=> mren("__m_" + c))
-          .reduce(_ && _)
-        base.join(mren, cond, "left_outer")
-          .select(base.schema.map { f =>
-            entries.find(_._2 == f.name) match {
-              case Some((_, c, _)) =>
-                when(coalesce(col("__matched"), lit(false)),
-                  col("__set_" + c).cast(f.dataType))
-                  .otherwise(base(f.name)).as(f.name)
-              case None => base(f.name)
-            }
-          }.toSeq: _*)
-      }
-      store.read().createOrReplaceTempView(t)
-      }
-      (t, n)
+        val base = store.read()
+        updateRowWise(t, store, joined(base).select(
+          cols.map(base(_)) ++ (hit +: newValues(base)): _*), ignore)
+      } else try store.rewriteWith(base =>
+        joined(base).select(newValues(base): _*))
+      finally refreshTableView(t, store)
+      (t, StatementRunner.observedCount(obs)(m.count()))
     }
     import spark.implicits._
     counts.toDF("table_name", "rows_matched")
@@ -2475,14 +2448,14 @@ class StatementRunner(spark: SparkSession) {
     // t2.a)` must keep t11.a correlated, and error 1242 when the
     // subquery multi-matches)
     def deleteBySql(): Long = {
-      val before = store.read().count()
-      val keep = Staging.stageOrdered(
-        spark.sql(MySqlDialect.rewrite(
-          s"SELECT * FROM `$table` WHERE NOT " +
-            s"(($whereClause) <=> TRUE)")),
-        s"delete-subq-$table")
-      store.rewriteWith(_ => keep)
-      before - store.read().count()
+      import org.apache.spark.sql.functions.col
+      val obs = org.apache.spark.sql.Observation()
+      val marked = markDeleted(table, whereClause)
+      store.rewriteWith(_ => viewToStored(marked
+        .observe(obs, count_if(col("__del")))
+        .filter(!col("__del")).drop("__del"), store))
+      StatementRunner.observedCount(obs)(
+        marked.filter(col("__del")).count())
     }
     val deleted = try {
       if (whereClause == null) {
@@ -2523,28 +2496,33 @@ class StatementRunner(spark: SparkSession) {
     Seq((table, deleted)).toDF("table_name", "rows_deleted")
   }
 
+  /** `table`'s rows read through its view, with a `__del` column that
+    * is true where the DELETE's WHERE is (NULL counts as false: SQL
+    * DELETE keeps those rows). Evaluated as full SQL, so a subquery in
+    * the WHERE keeps its correlation. */
+  private def markDeleted(table: String, whereClause: String): DataFrame =
+    spark.sql(MySqlDialect.rewrite(s"SELECT *, ((" +
+      Option(whereClause).getOrElse("TRUE") +
+      s") <=> TRUE) AS `__del` FROM `$table`"))
+
   /** Row-wise DELETE over a trigger-bearing table: BEFORE DELETE per
     * matched row (OLD bound), the base rewrite, then AFTER DELETE per
-    * row. TRUNCATE never routes here — the golden pins that tianmu's
+    * row. The WHERE is evaluated once, into a staged copy, so the BEFORE
+    * triggers cannot change which rows go (they may write the tables it
+    * reads). TRUNCATE never routes here — the golden pins that tianmu's
     * TRUNCATE fires no delete triggers. */
   private def runDeleteTriggered(table: String, store: DeltaStore,
                                  whereClause: String): DataFrame = {
-    val schema = store.read().schema
-    val matched = Staging.stageOrdered(
-      if (whereClause == null) store.read()
-      else spark.sql(MySqlDialect.rewrite(
-        s"SELECT * FROM `$table` WHERE (($whereClause) <=> TRUE)")),
+    import org.apache.spark.sql.functions.col
+    val marked = Staging.stageOrdered(markDeleted(table, whereClause),
       s"deltrig-$table")
-    val keep = Staging.stageOrdered(
-      if (whereClause == null) store.read().limit(0)
-      else spark.sql(MySqlDialect.rewrite(
-        s"SELECT * FROM `$table` WHERE NOT (($whereClause) <=> TRUE)")),
-      s"deltrig-keep-$table")
-    val rows = collectCapped(matched, s"DELETE FROM $table")
-    fireDeleteTriggers(table, "BEFORE", rows, schema)
-    try store.rewriteWith(_ => keep)
+    val doomed = marked.filter(col("__del")).drop("__del")
+    val rows = collectCapped(doomed, s"DELETE FROM $table")
+    fireDeleteTriggers(table, "BEFORE", rows, doomed.schema)
+    try store.rewriteWith(_ => viewToStored(
+      marked.filter(!col("__del")).drop("__del"), store))
     finally refreshTableView(table, store)
-    fireDeleteTriggers(table, "AFTER", rows, schema)
+    fireDeleteTriggers(table, "AFTER", rows, doomed.schema)
     import spark.implicits._
     Seq((table, rows.length.toLong)).toDF("table_name", "rows_deleted")
   }
@@ -2630,172 +2608,67 @@ class StatementRunner(spark: SparkSession) {
     Seq((table, 1L)).toDF("table_name", "rows_inserted")
   }
 
-  /** The ≤n PRIMARY-KEY rows a row-limited DML statement targets:
-    * WHERE-filtered, ordered by the ORDER BY clause (PK order when
-    * absent — MySQL's pick is arbitrary; PK order is a deterministic
-    * refinement), first n, key columns only. STAGED to parquet before
-    * the caller's rewrite: the selection's lazy plan reads the
-    * pre-rewrite base∪delta, which the rewrite retires (a new base
-    * version, the delta cleared) — staging freezes the row set first,
-    * so the count and the rewrite see the same n keys (and bounds
-    * nothing on the driver; the n-row frame never collects). */
-  private def doomedKeys(table: String, store: DeltaStore,
-                         whereClause: String, orderClause: String,
-                         n: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, lit,
-      monotonically_increasing_id}
-    val keys = pkOf(table)
+  /** A MySQL ORDER BY list (`a DESC, b`) as sort columns. */
+  private def orderColumns(clause: String): Seq[org.apache.spark.sql.Column] =
+    splitTopLevel(clause).map { o =>
+      val e = org.apache.spark.sql.functions.expr(MySqlDialect.rewrite(
+        o.trim.replaceAll("(?i)\\s+(ASC|DESC)\\s*$", "")))
+      if ("""(?i)\s+DESC\s*$""".r.findFirstIn(o).isDefined) e.desc else e.asc
+    }
+
+  /** MySQL's row-limited forms, `DELETE FROM t [WHERE …] [ORDER BY …]
+    * LIMIT n` (delete.test) and `UPDATE t SET … [WHERE …] [ORDER BY …]
+    * LIMIT n` (issue781.test): the first n rows whose WHERE is true are
+    * deleted, or given `assigns`' values (`None` deletes). "First" is
+    * ORDER BY order with scan order as the tiebreak, MySQL's stable
+    * sort; a bare LIMIT picks in scan order, which is insert order, not
+    * PRIMARY KEY order (issue781 inserts 125 before -125 and updates
+    * 125 first). Row identity is the scan position, so a keyless table
+    * touches exactly n of its duplicate rows, like MySQL's rowids. One
+    * base rewrite ranks the matches, writes the rows back in scan order
+    * and counts the rows it touches. */
+  private def runLimited(table: String, whereClause: String,
+                         orderClause: String, n: Int,
+                         assigns: Option[Seq[(String, String)]]): Long = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, count_if, expr, lit, when,
+      monotonically_increasing_id, row_number}
+    val store = attachedStore(table)
     val cond =
       if (whereClause == null) lit(true)
       else expr(MySqlDialect.rewrite(whereClause))
-    // a bare LIMIT picks rows in TABLE SCAN order — insert order, not
-    // PRIMARY KEY order (issue781's PK sections insert 125 before
-    // -125 and the golden updates 125 first); an explicit ORDER BY
-    // keeps scan order as its tiebreak, MySQL's stable sort
-    val withRid = store.read()
-      .withColumn("__rid", monotonically_increasing_id())
-    val ord: Seq[org.apache.spark.sql.Column] =
-      if (orderClause == null) Seq(col("__rid"))
-      else splitTopLevel(orderClause).map { o =>
-        val desc = """(?i)\s+DESC\s*$""".r.findFirstIn(o).isDefined
-        val e = expr(MySqlDialect.rewrite(
-          o.trim.replaceAll("(?i)\\s+(ASC|DESC)\\s*$", "")))
-        if (desc) e.desc else e.asc
-      } :+ col("__rid").asc
-    Staging.stageOrdered(
-      withRid.filter(cond).orderBy(ord: _*).limit(n)
-        .select(keys.map(col): _*),
-      "dml-limit")
-  }
-
-  /** `DELETE FROM t [WHERE …] [ORDER BY …] LIMIT n` (delete.test):
-    * drop exactly the first n matching rows — one anti-join base
-    * rewrite against the staged key set. Needs a declared PRIMARY KEY
-    * for row identity (MySQL uses physical rowids) — EXCEPT when the
-    * match set is ≤ n anyway, where the LIMIT is vacuous and the plain
-    * DELETE path serves (delete.test's `… limit 1000` over ≤25 rows). */
-  private def runDeleteLimit(table: String, whereClause: String,
-                             orderClause: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, lit,
-      monotonically_increasing_id}
-    val store = attachedStore(table)
-    val hit =
-      if (primaryKeys.contains(table.toLowerCase)) {
-        val keys = pkOf(table)
-        val doomed = doomedKeys(table, store, whereClause, orderClause, n)
-        val k = doomed.count()
-        // the anti-join may plan as a sort-merge and SCRAMBLE the base's
-        // physical row order — scan order IS the statement tier's
-        // contract (issue781's LIMIT picks), so restore it by rowid
-        store.rewriteWith(base => base
-          .withColumn("__ord", org.apache.spark.sql.functions
-            .monotonically_increasing_id())
-          .join(doomed, keys, "left_anti")
-          .orderBy(col("__ord")).drop("__ord"))
-        k
-      } else {
-        // no declared PK: synthesize row identity by STAGING the table
-        // with a frozen rowid (MySQL deletes by physical rowid; staging
-        // freezes ours so both branches of the anti-join see the same
-        // ids — duplicates delete exactly n copies, like MySQL)
-        val staged = Staging.stageOrdered(store.read()
-          .withColumn("__rid", monotonically_increasing_id()),
-          "dml-limit-rid")
-        val cond =
-          if (whereClause == null) lit(true)
-          else expr(MySqlDialect.rewrite(whereClause))
-        val ord: Seq[org.apache.spark.sql.Column] =
-          if (orderClause == null) Seq(col("__rid"))
-          else splitTopLevel(orderClause).map { o =>
-            val desc = """(?i)\s+DESC\s*$""".r.findFirstIn(o).isDefined
-            val e = expr(MySqlDialect.rewrite(
-              o.trim.replaceAll("(?i)\\s+(ASC|DESC)\\s*$", "")))
-            if (desc) e.desc else e.asc
-          } :+ col("__rid").asc
-        val doomed = staged.filter(cond).orderBy(ord: _*).limit(n)
-          .select(col("__rid"))
-        val k = doomed.count()
-        store.rewriteWith(_ =>
-          staged.join(doomed, Seq("__rid"), "left_anti")
-            .orderBy(col("__rid")).drop("__rid"))
-        k
-      }
-    refreshTableView(table, store)
-    import spark.implicits._
-    Seq((table, hit)).toDF("table_name", "rows_deleted")
-  }
-
-  /** `UPDATE t SET … [WHERE …] [ORDER BY …] LIMIT n`: apply the
-    * assignments to exactly the first n matching rows (old-row
-    * semantics, single select — the runUpdate contract) selected by
-    * PK membership in the staged key set. */
-  private def runUpdateLimit(table: String, setList: String,
-                             whereClause: String, orderClause: String,
-                             n: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, lit, when,
-      monotonically_increasing_id}
-    val store = attachedStore(table)
-    val assigns = parseAssigns(setList, "UPDATE SET")
-    def applyAssigns(df: DataFrame, hitCol: org.apache.spark.sql.Column)
-        : DataFrame = {
-      val bad = assigns.map(_._1).filterNot(df.columns.contains)
+    val order = Option(orderClause).toSeq.flatMap(orderColumns)
+    assigns.foreach { as =>
+      val bad = as.map(_._1).filterNot(store.read().columns.contains)
       if (bad.nonEmpty) throw new IllegalArgumentException(
         s"UPDATE: unknown column(s) ${bad.mkString(", ")}")
-      df.select(store.read().schema.map { f =>
-        assigns.find(_._1 == f.name) match {
-          case Some((_, rhs)) =>
-            when(hitCol, expr(rhs).cast(f.dataType))
-              .otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }.toSeq: _*)
     }
-    val hit = primaryKeys.get(table.toLowerCase) match {
-      case Some(keys) =>
-        val doomed = doomedKeys(table, store, whereClause, orderClause, n)
-        val k = doomed.count()
-        store.rewriteWith { df =>
-          val mk = doomed.withColumn("__hit", lit(true))
-          // order-preserving: the outer join may sort-merge and scramble
-          // scan order (the statement tier's row-order contract)
-          applyAssigns(
-            df.withColumn("__ord", monotonically_increasing_id())
-              .join(mk, keys, "left_outer")
-              .orderBy(col("__ord")),
-            org.apache.spark.sql.functions.coalesce(col("__hit"),
-              lit(false)))
-        }
-        k
-      case None =>
-        // no declared PK (issue781.test): freeze a staged rowid — the
-        // same identity device runDeleteLimit uses — and update by it
-        val staged = Staging.stageOrdered(store.read()
-          .withColumn("__rid", monotonically_increasing_id()),
-          "dml-ulimit-rid")
-        val cond =
-          if (whereClause == null) lit(true)
-          else expr(MySqlDialect.rewrite(whereClause))
-        val ord: Seq[org.apache.spark.sql.Column] =
-          if (orderClause == null) Seq(col("__rid"))
-          else splitTopLevel(orderClause).map { o =>
-            val desc = """(?i)\s+DESC\s*$""".r.findFirstIn(o).isDefined
-            val e = expr(MySqlDialect.rewrite(
-              o.trim.replaceAll("(?i)\\s+(ASC|DESC)\\s*$", "")))
-            if (desc) e.desc else e.asc
-          } :+ col("__rid").asc
-        val doomed = staged.filter(cond).orderBy(ord: _*).limit(n)
-          .select(col("__rid"))
-        val k = doomed.count()
-        store.rewriteWith(_ => applyAssigns(
-          staged.join(doomed.withColumn("__hit", lit(true)),
-            Seq("__rid"), "left_outer").orderBy(col("__rid")),
-          org.apache.spark.sql.functions.coalesce(col("__hit"),
-            lit(false))))
-        k
-    }
-    refreshTableView(table, store)
-    import spark.implicits._
-    Seq((table, hit)).toDF("table_name", "rows_updated")
+    val obs = org.apache.spark.sql.Observation()
+    val prior = store.read()
+    try store.rewriteWith { base =>
+      // the window gathers the table into one ordered partition, so
+      // the sort back into scan order needs no exchange
+      val ranked = base
+        .withColumn("__rid", monotonically_increasing_id())
+        .withColumn("__m", cond <=> true)
+        .withColumn("__hit", col("__m") && row_number().over(Window
+          .orderBy((col("__m").desc +: order :+ col("__rid").asc): _*)) <= n)
+        .orderBy("__rid")
+        .observe(obs, count_if(col("__hit")))
+      assigns match {
+        case None => ranked.filter(!col("__hit"))
+          .select(base.columns.map(col).toSeq: _*)
+        case Some(as) => ranked.select(base.schema.map { f =>
+          as.find(_._1 == f.name) match {
+            case Some((_, rhs)) => when(col("__hit"),
+              expr(rhs).cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+            case None => col(f.name)
+          }
+        }.toSeq: _*)
+      }
+    } finally refreshTableView(table, store)
+    StatementRunner.observedCount(obs)(
+      prior.filter(cond <=> true).limit(n).count())
   }
 
   private def runUpdate(table: String, setList0: String,
@@ -2822,14 +2695,14 @@ class StatementRunner(spark: SparkSession) {
     val cond =
       if (whereClause == null) lit(true)
       else expr(MySqlDialect.rewrite(whereClause))
-    // ONE select so every RHS evaluates against the OLD row (standard
-    // UPDATE semantics — sequential withColumn would leak new values
-    // into later assignments)
-    def project(df: DataFrame): DataFrame = {
+    // every row's new values, for ONE select so every RHS evaluates
+    // against the OLD row (standard UPDATE semantics — sequential
+    // withColumn would leak new values into later assignments)
+    def newValues(df: DataFrame): Seq[org.apache.spark.sql.Column] = {
       val bad = assigns.map(_._1).filterNot(df.columns.contains)
       if (bad.nonEmpty) throw new IllegalArgumentException(
         s"UPDATE: unknown column(s) ${bad.mkString(", ")}")
-      df.select(df.schema.map { f =>
+      df.schema.map { f =>
         assigns.find(_._1 == f.name) match {
           case Some((_, rhs)) =>
             // UPDATE IGNORE downgrades data errors the MySQL way:
@@ -2862,8 +2735,9 @@ class StatementRunner(spark: SparkSession) {
               .otherwise(col(f.name)).as(f.name)
           case None => col(f.name)
         }
-      }.toSeq: _*)
+      }.toSeq
     }
+    def project(df: DataFrame): DataFrame = df.select(newValues(df): _*)
     // strict-mode range enforcement for the assigned values over the
     // affected rows (unsigned.test updates a BIGINT UNSIGNED to a
     // negative — MySQL 1264), checked on the PRE-cast expression;
@@ -2905,9 +2779,14 @@ class StatementRunner(spark: SparkSession) {
     // collides with the live 4 and is skipped, 4→5 then applies) — the
     // bulk rewrite can't skip rows, so route through the row-wise path
     // (it handles an empty trigger list).
-    if (tableTriggered(table, "UPDATE") || (ignore && touchesPk))
-      return runUpdateTriggered(table, store, cond, project, ignore,
-        store.read().filter(cond).count())
+    import spark.implicits._
+    if (tableTriggered(table, "UPDATE") || (ignore && touchesPk)) {
+      val df = store.read()
+      val n = updateRowWise(table, store, df.select(
+        df.columns.toSeq.map(col) ++ ((cond <=> true) +: newValues(df)): _*),
+        ignore)
+      return Seq((table, n)).toDF("table_name", "rows_updated")
+    }
     // the rewrite counts the rows its condition selects; a WHERE with a
     // subquery, or one that is not deterministic, is counted on its
     // own, before the rewrite
@@ -2921,33 +2800,28 @@ class StatementRunner(spark: SparkSession) {
       else df.observe(obs, org.apache.spark.sql.functions.count_if(
         cond <=> true))))
     finally refreshTableView(table, store)
-    import spark.implicits._
     Seq((table, counted.getOrElse(StatementRunner.observedCount(obs)(
         prior.filter(cond <=> true).count()))))
       .toDF("table_name", "rows_updated")
   }
 
-  /** Row-wise UPDATE over a trigger-bearing table: BEFORE UPDATE runs
-    * per matched row with a mutable NEW (its mutations are what gets
-    * written — trigger.test's trg2 rewrites new.j to -1), AFTER UPDATE
-    * runs per processed row (the multi-update golden counts fires even
-    * for value-identical assignments). Under IGNORE a row whose new
-    * PRIMARY KEY collides is skipped and its AFTER trigger never fires
-    * (the UPDATE IGNORE golden pins the empty audit table). */
-  private def runUpdateTriggered(table: String, store: DeltaStore,
-                                 cond: org.apache.spark.sql.Column,
-                                 project: DataFrame => DataFrame,
-                                 ignore: Boolean,
-                                 touched: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val pinned = Staging.stageOrdered(store.read(), s"updtrig-$table")
-    val schema = pinned.schema
-    // one staged source, two aligned projections: row order is the
-    // file order both times
-    val flagged = collectCapped(pinned.select(
-      (schema.fieldNames.map(col).toSeq :+ cond.as("__hit")): _*),
-      s"UPDATE $table")
-    val news = collectCapped(project(pinned), s"UPDATE $table")
+  /** Row-wise UPDATE, for a table with UPDATE triggers and for UPDATE
+    * IGNORE over key assignments. `rows` holds the table's rows in scan
+    * order, each as its old values, whether the UPDATE hits it, then its
+    * new values. BEFORE UPDATE runs per hit row with a mutable NEW (its
+    * mutations are what gets written — trigger.test's trg2 rewrites
+    * new.j to -1), AFTER UPDATE per processed row (the multi-update
+    * golden counts fires even for value-identical assignments). Under
+    * IGNORE a row whose new PRIMARY KEY collides is skipped and its
+    * AFTER trigger never fires (the UPDATE IGNORE golden pins the empty
+    * audit table). Returns the number of hit rows. */
+  private def updateRowWise(table: String, store: DeltaStore,
+                            rows: DataFrame, ignore: Boolean): Long = {
+    val schema = store.read().schema
+    val width = schema.length
+    val flagged = collectCapped(rows, s"UPDATE $table")
+    def hit(r: org.apache.spark.sql.Row) =
+      !r.isNullAt(width) && r.getBoolean(width)
     val befores = triggersOn(table, "UPDATE", "BEFORE")
     val afters = triggersOn(table, "UPDATE", "AFTER")
     val keys = primaryKeys.getOrElse(table.toLowerCase, Seq.empty)
@@ -2974,25 +2848,22 @@ class StatementRunner(spark: SparkSession) {
       case _ => a.toString.compareTo(b.toString)
     }
     val order: Seq[Int] =
-      if (keys.isEmpty) 0 until flagged.length
-      else (0 until flagged.length).sortWith { (a, b) =>
+      if (keys.isEmpty) flagged.indices
+      else flagged.indices.sortWith { (a, b) =>
         val ka = keyIdx.map(flagged(a).get)
         val kb = keyIdx.map(flagged(b).get)
         val c = ka.zip(kb).iterator.map { case (x, y) => cmpAny(x, y) }
           .find(_ != 0).getOrElse(0)
         if (c != 0) c < 0 else a < b
       }
-    var pos = 0
-    while (pos < flagged.length) {
-      val i = order(pos)
+    order.foreach { i =>
       val fr = flagged(i)
-      val hit = !fr.isNullAt(schema.length) && fr.getBoolean(schema.length)
-      val oldRow = org.apache.spark.sql.Row.fromSeq(
-        (0 until schema.length).map(fr.get))
-      if (!hit) out(i) = oldRow
+      val oldRow = org.apache.spark.sql.Row.fromSeq((0 until width).map(fr.get))
+      if (!hit(fr)) out(i) = oldRow
       else {
         val oldM = rowToMap(oldRow, schema).toMap
-        val newM = rowToMap(news(i), schema)
+        val newM = rowToMap(org.apache.spark.sql.Row.fromSeq(
+          (width + 1 to 2 * width).map(fr.get)), schema)
         befores.foreach(d => interp.runTriggerBody(d.body, newM, oldM,
           newAssignable = true, schema))
         val newRow = mapToRow(newM, schema)
@@ -3009,7 +2880,6 @@ class StatementRunner(spark: SparkSession) {
           pairs += ((oldM, newM))
         }
       }
-      pos += 1
     }
     import scala.jdk.CollectionConverters._
     val rebuilt = spark.createDataFrame(out.toList.asJava, schema)
@@ -3019,8 +2889,7 @@ class StatementRunner(spark: SparkSession) {
       afters.foreach(d => interp.runTriggerBody(d.body, nw, o,
         newAssignable = false, schema))
     }
-    import spark.implicits._
-    Seq((table, touched)).toDF("table_name", "rows_updated")
+    flagged.count(hit).toLong
   }
 
   // Admin/diagnostic statements (the MySQL client-session surface the
@@ -3971,7 +3840,7 @@ class StatementRunner(spark: SparkSession) {
       b.engine.foreach(tableEngines(key) = _)
       b.ownedRoot.foreach(ownedRoots(key) = _)
       b.autoBase.foreach(autoIncBase(key) = _)
-      b.store.read().createOrReplaceTempView(name)
+      refreshTableView(name, b.store)
       true
     }
   private val DropRe: Regex =
@@ -4962,7 +4831,7 @@ class StatementRunner(spark: SparkSession) {
     val prevCoercion =
       spark.conf.getOption("spark.graft.mysqlCoercion.enabled")
     spark.conf.set("spark.graft.mysqlCoercion.enabled", "true")
-    try runInner(sqlRaw)
+    try Staging.scoped(runInner(sqlRaw))
     finally prevCoercion match {
       case Some(v) =>
         spark.conf.set("spark.graft.mysqlCoercion.enabled", v)
@@ -5478,10 +5347,8 @@ class StatementRunner(spark: SparkSession) {
 
     case AlterOrderByRe(table, keys) =>
       import spark.implicits._
-      import org.apache.spark.sql.functions.expr
       val store = attachedStore(table)
-      store.rewriteWith(df => df.orderBy(splitTopLevel(keys).map(k =>
-        expr(MySqlDialect.rewrite(k.trim))): _*))
+      store.rewriteWith(_.orderBy(orderColumns(keys): _*))
       refreshTableView(table, store)
       Seq((table, s"rows ordered by ${keys.trim}"))
         .toDF("table_name", "status")
@@ -5536,11 +5403,9 @@ class StatementRunner(spark: SparkSession) {
           } else if (up.startsWith("LOCK")) "noop"
           else if (up.startsWith("ORDER BY")) {
             // physical row reorder (alter_table_v1.test)
-            import org.apache.spark.sql.functions.expr
-            val keys = splitTopLevel(act.substring(8)).map(_.trim)
-            attachedStore(current).rewriteWith(df =>
-              df.orderBy(keys.map(k => expr(MySqlDialect.rewrite(k))): _*))
-            attachedStore(current).read().createOrReplaceTempView(current)
+            val store = attachedStore(current)
+            store.rewriteWith(_.orderBy(orderColumns(act.substring(8)): _*))
+            refreshTableView(current, store)
             "ordered"
           } else {
             // `RENAME x` mid-list retargets subsequent actions
@@ -5670,7 +5535,7 @@ class StatementRunner(spark: SparkSession) {
       triggers.mapValuesInPlace((_, d) =>
         if (d.table == key) d.copy(table = nk) else d)
       spark.catalog.dropTempView(table)
-      store.read().createOrReplaceTempView(newName)
+      refreshTableView(newName, store)
       // renaming a TEMPORARY table that shadowed a base table
       // re-exposes the base under the old name (delete.test: temp t1
       // renamed to t2, then `select * from t1` reads the base rows)
@@ -5703,7 +5568,9 @@ class StatementRunner(spark: SparkSession) {
         if (s == null) null
         else s.replaceAll(
           "(?i)\\b" + java.util.regex.Pattern.quote(table) + "\\.", "")
-      runDeleteLimit(table, unq(whereClause), unq(orderClause), n.toInt)
+      import spark.implicits._
+      Seq((table, runLimited(table, unq(whereClause), unq(orderClause),
+        n.toInt, None))).toDF("table_name", "rows_deleted")
 
     case DeleteRe(ignoreMod, table, whereClause) =>
       if (ignoreMod != null)
@@ -5768,15 +5635,15 @@ class StatementRunner(spark: SparkSession) {
           else collectCapped(m, s"DELETE $t (multi)")
         if (delTrig)
           fireDeleteTriggers(t, "BEFORE", trigRows, store.read().schema)
-        store.rewriteWith { base =>
-          val mm = m.toDF(m.columns.map("__m_" + _): _*)
+        try store.rewriteWith { base =>
+          val mm = viewToStored(m, store)
+            .toDF(m.columns.toSeq.map("__m_" + _): _*)
           // null-safe equality on EVERY column: identical rows delete
           // together, exactly MySQL's full-row semantics
           val cond = base.columns.map(c =>
             base(c) <=> mm("__m_" + c)).reduce(_ && _)
           base.join(mm, cond, "left_anti")
-        }
-        store.read().createOrReplaceTempView(t)
+        } finally refreshTableView(t, store)
         if (delTrig)
           fireDeleteTriggers(t, "AFTER", trigRows, store.read().schema)
         (t, n)
@@ -5784,7 +5651,10 @@ class StatementRunner(spark: SparkSession) {
       counts.toDF("table_name", "rows_matched")
 
     case UpdateLimitRe(table, setList, whereClause, orderClause, n) =>
-      runUpdateLimit(table, setList, whereClause, orderClause, n.toInt)
+      import spark.implicits._
+      Seq((table, runLimited(table, whereClause, orderClause, n.toInt,
+        Some(parseAssigns(setList, "UPDATE SET")))))
+        .toDF("table_name", "rows_updated")
 
     case UpdateRe(ignoreMod, table, setList, whereClause) =>
       // the regex split is not paren-aware: a scalar-subquery SET value

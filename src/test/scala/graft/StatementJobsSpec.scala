@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Each DML statement evaluates its source once: the Spark jobs a
   * statement runs, the row count it returns (against a Spark recount)
-  * and what a strict-mode rejection leaves behind. */
+  * and what a strict-mode rejection leaves behind. Also the rows each
+  * DELETE and UPDATE form touches, the forms that read a table's view
+  * under a session time zone, and the staging directories a statement
+  * leaves. */
 class StatementJobsSpec extends AnyFunSuite {
   private def spark = TestSession.spark
   private lazy val dir = Files.createTempDirectory("graft_stmtjobs").toString
@@ -198,19 +201,315 @@ class StatementJobsSpec extends AnyFunSuite {
     store.writeBase(src.limit(0))
     runner.attach("jl", store)
     src.createOrReplaceTempView("jl_src")
-    // a staged batch leaves its staging directory behind
-    def stagings = Option(new java.io.File(System.getProperty(
-      "java.io.tmpdir")).list()).toSeq.flatten
-      .count(_.startsWith("graft-stage-select-jl"))
-    val staged0 = stagings
-    val n = run("INSERT INTO jl SELECT id, v FROM jl_src")
+    val ((n, _), staged) = jobsAndStagings(
+      run("INSERT INTO jl SELECT id, v FROM jl_src"))
     assert(n === DeltaStore.BufferCap + 1)
-    assert(stagings === staged0 + 1, "the batch was not staged")
+    assert(staged === 1, "the batch was not staged")
     assert(store.bufferedCount === 0, "the staged rows were buffered")
     assert(store.deltaFileCount() > 0)
     assert(store.deltaCount() === DeltaStore.BufferCap + 1)
     val rows = store.read().collect()
     assert(rows.map(_.getLong(0)).toSeq === (0L to DeltaStore.BufferCap))
     assert(rows.forall(r => r.getLong(1) === 2 * r.getLong(0)))
+  }
+
+  /** A write's target in a SQL execution's plan, when it is a staging
+    * directory. */
+  private val StagingWrite = """Arguments: file:[^,\n]*graft-stage-""".r
+  /** `body`'s result and jobs, and the staging directories it wrote
+    * (each staged frame is one write into a `graft-stage-` directory). */
+  private def jobsAndStagings[T](body: => T): ((T, Int), Int) = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    ListenerBridge.drain(sc)
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if StagingWrite.findFirstIn(s.physicalPlanDescription)
+              .isDefined =>
+          n.incrementAndGet()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = jobs(body)
+      ListenerBridge.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A runner on the test session with triggers enabled on tianmu
+    * tables. */
+  private def freshRunner(): StatementRunner = {
+    val r = new StatementRunner(spark)
+    r.run("SET SESSION tianmu_no_key_error=ON")
+    r
+  }
+  private def rowCount(r: StatementRunner, sql: String): Long =
+    r.run(sql).collect().head.getLong(1)
+  /** A table's rows in scan order, each cell as text. */
+  private def scan(r: StatementRunner, sql: String): Seq[Seq[String]] =
+    r.run(sql).collect().toSeq.map(_.toSeq.map(String.valueOf))
+
+  /** `name` (id PRIMARY KEY, v, tag) holding 200 rows whose ids are
+    * inserted out of key order. */
+  private def table200(r: StatementRunner, name: String): Unit = {
+    spark.range(200).createOrReplaceTempView(s"${name}_src")
+    r.run(s"CREATE TABLE $name (id INT NOT NULL PRIMARY KEY, v INT, " +
+      "tag VARCHAR(8)) ENGINE=TIANMU")
+    r.run(s"INSERT INTO $name SELECT CAST((id * 37) % 200 AS INT), " +
+      s"CAST(id % 10 AS INT), 'x' FROM ${name}_src")
+  }
+
+  test("DELETE and UPDATE … ORDER BY … LIMIT n on a PRIMARY KEY table " +
+      "touch the first n matches and keep scan order") {
+    val r = freshRunner()
+    table200(r, "lp")
+    def rows = scan(r, "SELECT id, v, tag FROM lp")
+    val start = rows
+    assert(start.map(_.head) ===
+      (0 until 200).map(i => ((i * 37) % 200).toString))
+    val del = start.filter(_(1).toInt < 5).map(_.head.toInt)
+      .sorted.reverse.take(7).toSet
+    assert(rowCount(r, "DELETE FROM lp WHERE v < 5 ORDER BY id DESC " +
+      "LIMIT 7") === 7)
+    val afterDel = start.filterNot(x => del(x.head.toInt))
+    assert(rows === afterDel)
+    val upd = afterDel.filter(_(1).toInt >= 5)
+      .sortBy(x => (x(1).toInt, x.head.toInt)).take(5).map(_.head).toSet
+    assert(rowCount(r, "UPDATE lp SET tag = 'u' WHERE v >= 5 " +
+      "ORDER BY v, id LIMIT 5") === 5)
+    val afterUpd = afterDel.map(x =>
+      if (upd(x.head)) Seq(x.head, x(1), "u") else x)
+    assert(rows === afterUpd)
+    // a bare LIMIT takes the first rows in scan order
+    assert(rowCount(r, "DELETE FROM lp LIMIT 3") === 3)
+    assert(rows === afterUpd.drop(3))
+    assert(rowCount(r, "UPDATE lp SET tag = 'f' LIMIT 2") === 2)
+    val afterFirst = afterUpd.drop(3).zipWithIndex.map { case (x, i) =>
+      if (i < 2) Seq(x.head, x(1), "f") else x
+    }
+    assert(rows === afterFirst)
+    // a LIMIT past the match set counts the matches
+    val nines = afterFirst.count(_(1) == "9")
+    assert(rowCount(r, "UPDATE lp SET v = v + 100 WHERE v = 9 " +
+      "LIMIT 1000") === nines)
+    assert(rowCount(r, "DELETE FROM lp WHERE v > 100 ORDER BY id " +
+      "LIMIT 1000") === nines)
+    assert(rows === afterFirst.filter(_(1) != "9"))
+  }
+
+  test("DELETE and UPDATE … LIMIT n on a keyless table touch exactly n " +
+      "of its duplicate rows") {
+    val r = freshRunner()
+    r.run("CREATE TABLE lk (a INT, b INT) ENGINE=TIANMU")
+    r.run("INSERT INTO lk VALUES (1,1),(2,2),(1,1),(3,3),(2,2),(1,1)," +
+      "(2,2)")
+    def rows = scan(r, "SELECT a, b FROM lk").map(_.mkString(","))
+    assert(rowCount(r, "DELETE FROM lk WHERE a = 1 LIMIT 2") === 2)
+    assert(rows === Seq("2,2", "3,3", "2,2", "1,1", "2,2"))
+    assert(rowCount(r, "UPDATE lk SET b = 9 WHERE a = 2 ORDER BY b " +
+      "LIMIT 2") === 2)
+    assert(rows === Seq("2,9", "3,3", "2,9", "1,1", "2,2"))
+    // ties in the ORDER BY fall back to scan order
+    assert(rowCount(r, "DELETE FROM lk WHERE b = 9 OR a = 3 " +
+      "ORDER BY a DESC LIMIT 2") === 2)
+    assert(rows === Seq("2,9", "1,1", "2,2"))
+    assert(rowCount(r, "DELETE FROM lk WHERE a = 7 LIMIT 1") === 0)
+    assert(rows === Seq("2,9", "1,1", "2,2"))
+  }
+
+  test("a DELETE whose WHERE holds a subquery deletes and counts the " +
+      "rows whose WHERE is true, and keeps scan order") {
+    val r = freshRunner()
+    r.run("CREATE TABLE sq (id INT NOT NULL PRIMARY KEY, g INT) " +
+      "ENGINE=TIANMU")
+    r.run("CREATE TABLE sq2 (g INT) ENGINE=TIANMU")
+    val ids = (0 until 20).map(i => (i * 7) % 20)
+    r.run("INSERT INTO sq VALUES " + ids.map(i =>
+      s"($i, ${if (i % 5 == 0) "NULL" else (i % 4).toString})")
+      .mkString(","))
+    r.run("INSERT INTO sq2 VALUES (1), (3), (NULL)")
+    def rows = scan(r, "SELECT id, g FROM sq")
+    val start = rows
+    val gone = start.filter(x => x(1) == "1" || x(1) == "3")
+    assert(rowCount(r, "DELETE FROM sq WHERE g IN (SELECT g FROM sq2)") ===
+      gone.length)
+    val kept = start.filterNot(gone.contains)
+    assert(rows === kept)
+    // a correlated subquery; NULL rows survive
+    val gone2 = kept.filter(x => x(1) == "0" || x(1) == "2")
+    assert(rowCount(r, "DELETE FROM sq WHERE EXISTS (SELECT 1 FROM sq2 " +
+      "WHERE sq2.g = sq.g + 1)") === gone2.length)
+    assert(rows === kept.filterNot(gone2.contains))
+    assert(rowCount(r, "DELETE FROM sq WHERE g > (SELECT MAX(g) FROM " +
+      "sq2)") === 0)
+    assert(rows === kept.filterNot(gone2.contains))
+  }
+
+  test("the DELETE and UPDATE forms run no more Spark jobs and staging " +
+      "writes than their bounds") {
+    val r = freshRunner()
+    Seq("fa", "fb", "fc", "fd", "fe", "ff", "fg", "fh")
+      .foreach(table200(r, _))
+    r.run("CREATE TABLE fk (a INT, b INT) ENGINE=TIANMU")
+    r.run("INSERT INTO fk SELECT CAST(id % 10 AS INT), CAST(id AS INT) " +
+      "FROM fa_src")
+    r.run("CREATE TABLE fj (id INT) ENGINE=TIANMU")
+    r.run("INSERT INTO fj VALUES (3), (5), (8)")
+    r.run("CREATE TRIGGER fc_bu BEFORE UPDATE ON fc FOR EACH ROW " +
+      "SET @fc = @fc + 1")
+    r.run("CREATE TRIGGER fd_bd BEFORE DELETE ON fd FOR EACH ROW " +
+      "SET @fd = @fd + 1")
+    r.run("CREATE TRIGGER fg_au AFTER UPDATE ON fg FOR EACH ROW " +
+      "SET @fg = @fg + 1")
+    r.run("SET @fc = 0, @fd = 0, @fg = 0")
+    // form, statement, rows it touches, the most jobs and staging
+    // writes it may run
+    val forms = Seq(
+      ("DELETE … LIMIT (PK)", "DELETE FROM fa WHERE v < 5 ORDER BY id " +
+        "LIMIT 10", 10L, 2, 0),
+      ("UPDATE … LIMIT (PK)", "UPDATE fb SET tag = 'u' WHERE v < 5 " +
+        "ORDER BY v DESC LIMIT 10", 10L, 2, 0),
+      ("DELETE … LIMIT (keyless)", "DELETE FROM fk WHERE a = 1 LIMIT 5",
+        5L, 2, 0),
+      ("UPDATE … LIMIT (keyless)", "UPDATE fk SET b = -b WHERE a = 2 " +
+        "ORDER BY b LIMIT 5", 5L, 2, 0),
+      ("UPDATE with triggers", "UPDATE fc SET tag = 't' WHERE v = 3",
+        20L, 3, 0),
+      ("DELETE with triggers", "DELETE FROM fd WHERE v = 3", 20L, 6, 1),
+      ("UPDATE … JOIN", "UPDATE fe JOIN fj ON fe.id = fj.id " +
+        "SET fe.tag = 'j'", 3L, 4, 0),
+      ("UPDATE … JOIN with triggers", "UPDATE fg JOIN fj ON " +
+        "fg.id = fj.id SET fg.tag = 'k'", 3L, 6, 0),
+      ("multi-table DELETE", "DELETE fh FROM fh JOIN fj ON fh.id = fj.id",
+        3L, 10, 1),
+      ("DELETE with a subquery", "DELETE FROM ff WHERE id IN " +
+        "(SELECT id FROM fj)", 3L, 2, 0),
+      ("plain DELETE", "DELETE FROM fa WHERE v = 7", 20L, 1, 0),
+      ("plain UPDATE", "UPDATE fb SET v = v + 1 WHERE v = 8", 20L, 1, 0))
+    val seen = forms.map { case (form, sql, want, maxJobs, maxStaged) =>
+      val ((n, j), staged) = jobsAndStagings(rowCount(r, sql))
+      info(s"$form: $j job(s), $staged staging write(s)")
+      assert(n === want, form)
+      (form, j, staged, maxJobs, maxStaged)
+    }
+    seen.foreach { case (form, j, staged, maxJobs, maxStaged) =>
+      assert(j <= maxJobs, s"$form ran $j job(s)")
+      assert(staged <= maxStaged, s"$form staged $staged frame(s)")
+    }
+    assert(r.run("SELECT @fc, @fd, @fg").collect().head.toSeq
+      .map(String.valueOf) === Seq("20", "20", "3"))
+  }
+
+  /** `tz1` (id, ts, v) and `tz2` (id) written at UTC, then the session
+    * zone set to +01:00. */
+  private def tzTables(r: StatementRunner): Unit = {
+    r.run("SET time_zone='+00:00'")
+    r.run("CREATE TABLE tz1 (id INT NOT NULL PRIMARY KEY, " +
+      "ts TIMESTAMP NULL, v INT) ENGINE=TIANMU")
+    r.run("CREATE TABLE tz2 (id INT) ENGINE=TIANMU")
+    r.run("INSERT INTO tz1 VALUES (1, '2020-01-01 10:00:00', 1), " +
+      "(2, '2020-01-01 11:00:00', 2), (3, '2020-01-01 12:00:00', 3)")
+    r.run("INSERT INTO tz2 VALUES (1)")
+    r.run("SET time_zone='+01:00'")
+  }
+  /** tz1's rows as stored (read under UTC): id -> (epoch ms, v). */
+  private def tzStored(r: StatementRunner): Map[Int, (Long, Int)] = {
+    r.run("SET time_zone='+00:00'")
+    try r.run("SELECT id, ts, v FROM tz1").collect().map(x =>
+      x.get(0).toString.toInt -> (x.getTimestamp(1).getTime,
+        x.get(2).toString.toInt)).toMap
+    finally r.run("SET time_zone='+01:00'")
+  }
+  private def utcMs(hour: Int): Long =
+    java.time.Instant.parse(f"2020-01-01T$hour%02d:00:00Z").toEpochMilli
+
+  test("a subquery DELETE under a session time zone keeps the stored " +
+      "TIMESTAMPs of the rows it keeps") {
+    val r = freshRunner()
+    tzTables(r)
+    assert(rowCount(r, "DELETE FROM tz1 WHERE id IN (SELECT id FROM " +
+      "tz2)") === 1)
+    assert(tzStored(r) === Map(2 -> (utcMs(11), 2), 3 -> (utcMs(12), 3)))
+  }
+
+  test("a DELETE on a table with triggers under a session time zone " +
+      "keeps the stored TIMESTAMPs of the rows it keeps") {
+    val r = freshRunner()
+    tzTables(r)
+    r.run("CREATE TRIGGER tz1_bd BEFORE DELETE ON tz1 FOR EACH ROW " +
+      "SET @tzd = OLD.id")
+    assert(rowCount(r, "DELETE FROM tz1 WHERE id = 1") === 1)
+    assert(r.run("SELECT @tzd").collect().head.get(0).toString === "1")
+    assert(tzStored(r) === Map(2 -> (utcMs(11), 2), 3 -> (utcMs(12), 3)))
+  }
+
+  test("UPDATE … JOIN under a session time zone updates the joined row") {
+    val r = freshRunner()
+    tzTables(r)
+    assert(rowCount(r, "UPDATE tz1 JOIN tz2 ON tz1.id = tz2.id " +
+      "SET tz1.v = 99") === 1)
+    assert(tzStored(r) === Map(1 -> (utcMs(10), 99), 2 -> (utcMs(11), 2),
+      3 -> (utcMs(12), 3)))
+  }
+
+  test("a multi-table DELETE under a session time zone deletes the " +
+      "joined row") {
+    val r = freshRunner()
+    tzTables(r)
+    assert(rowCount(r, "DELETE tz1 FROM tz1 JOIN tz2 ON tz1.id = " +
+      "tz2.id") === 1)
+    assert(tzStored(r) === Map(2 -> (utcMs(11), 2), 3 -> (utcMs(12), 3)))
+  }
+
+  test("after UPDATE … JOIN and a multi-table DELETE the table's view " +
+      "shows the session zone and views over it read the new rows") {
+    val r = freshRunner()
+    tzTables(r)
+    r.run("CREATE VIEW tzv AS SELECT id, v FROM tz1")
+    def shown(id: Int): Long = r.run(s"SELECT ts FROM tz1 WHERE id = $id")
+      .collect().head.getTimestamp(0).getTime
+    val local = shown(2)
+    assert(local === utcMs(12), "the view does not shift into +01:00")
+    r.run("UPDATE tz1 JOIN tz2 ON tz1.id = tz2.id SET tz1.v = 99")
+    assert(shown(2) === local)
+    assert(r.run("SELECT v FROM tzv WHERE id = 1").collect().head
+      .get(0).toString === "99")
+    r.run("DELETE tz1 FROM tz1 JOIN tz2 ON tz1.id = tz2.id")
+    assert(shown(2) === local)
+    assert(r.run("SELECT id FROM tzv").collect().map(_.get(0).toString)
+      .toSeq.sorted === Seq("2", "3"))
+    r.run("ALTER TABLE tz1 ALGORITHM=COPY, ORDER BY id DESC")
+    assert(shown(2) === local)
+    assert(r.run("SELECT id FROM tzv").collect().map(_.get(0).toString)
+      .toSeq === Seq("3", "2"))
+  }
+
+  test("a statement leaves no staging directory behind") {
+    def stagings = Option(new java.io.File(System.getProperty(
+      "java.io.tmpdir")).list()).toSeq.flatten
+      .count(_.startsWith("graft-stage-"))
+    val r = freshRunner()
+    r.run("CREATE TABLE sk (a INT, b INT) ENGINE=TIANMU")
+    r.run("INSERT INTO sk VALUES (1,1),(2,2),(1,1),(3,3)")
+    r.run("CREATE TABLE sk2 (a INT) ENGINE=TIANMU")
+    r.run("INSERT INTO sk2 VALUES (2)")
+    val s0 = stagings
+    assert(rowCount(r, "DELETE FROM sk WHERE a = 1 LIMIT 1") === 1)
+    assert(stagings === s0, "a LIMIT DELETE left a staging directory")
+    assert(rowCount(r, "DELETE sk FROM sk JOIN sk2 ON sk.a = sk2.a") === 1)
+    assert(stagings === s0, "a multi-table DELETE left a staging directory")
+    r.run("CREATE TABLE sk3 (id BIGINT) ENGINE=TIANMU")
+    spark.range(0, DeltaStore.BufferCap + 1).createOrReplaceTempView("sk_big")
+    assert(rowCount(r, "INSERT INTO sk3 SELECT id FROM sk_big") ===
+      DeltaStore.BufferCap + 1)
+    assert(stagings === s0, "a staged INSERT … SELECT left its staging " +
+      "directory")
+    assert(scan(r, "SELECT a, b FROM sk").map(_.mkString(",")) ===
+      Seq("1,1", "3,3"))
   }
 }
