@@ -107,13 +107,17 @@ object Bench {
     * and tasks; the union of the jobs' wall intervals (`job_ms`) and the
     * rest of the run's wall time (`driver_self_ms`: building, analysing,
     * optimizing and planning the query, and the driver's work between
-    * jobs); the tracker's analysis, optimization and planning times,
-    * summed over the queries the run executed (a DataFrame analysed while
-    * the query is built reports to no listener); executor run, CPU and GC
-    * time and the input and shuffle bytes, summed over its tasks. */
+    * jobs); `build_ms`, the wall time of the query builder call
+    * (`SparkEntry.queries(name)`), which creates and eagerly analyses
+    * the query's DataFrames and runs any job they need to open their
+    * tables, so it overlaps `job_ms` and `driver_self_ms`; the tracker's
+    * analysis, optimization and planning times, summed over the queries
+    * the run executed (a DataFrame analysed while the query is built
+    * reports to no listener); executor run, CPU and GC time and the
+    * input and shuffle bytes, summed over its tasks. */
   val SplitKeys: Seq[String] = Seq("jobs", "stages", "tasks", "job_ms",
-    "driver_self_ms", "analysis_ms", "optimization_ms", "planning_ms",
-    "executor_run_ms", "executor_cpu_ms", "gc_ms", "input_bytes",
+    "driver_self_ms", "build_ms", "analysis_ms", "optimization_ms",
+    "planning_ms", "executor_run_ms", "executor_cpu_ms", "gc_ms", "input_bytes",
     "shuffle_read_bytes", "shuffle_write_bytes")
 
   /** One measured run: seconds (-1 on error), the classes Spark compiled
@@ -191,15 +195,18 @@ object Bench {
     }
   }
 
-  /** One run of `name`, forced with a noop sink. Only the run is timed:
-    * draining the listener bus and counting come after it. */
+  /** One run of `name`, forced with a noop sink. Only the run is timed,
+    * and within it the builder call (`build_ms`): draining the listener
+    * bus and counting come after it. */
   def runOne(rec: Recorder, name: String, sfDir: String): Run = {
     val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
+    var buildMs = 0.0
     val ok =
       try {
-        SparkEntry.queries(name)(rec.spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
+        val query = SparkEntry.queries(name)(rec.spark, sfDir)
+        buildMs = (System.nanoTime() - t0) / 1e6
+        query.write.mode("overwrite").format("noop").save()
         true
       } catch {
         case e: Throwable =>
@@ -209,7 +216,8 @@ object Bench {
       }
     val wallMs = (System.nanoTime() - t0) / 1e6
     Run(if (ok) wallMs / 1e3 else -1.0,
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, rec.take(wallMs))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+      rec.take(wallMs) + ("build_ms" -> buildMs))
   }
 
   /** Per-query protocol: run 5×, report the MEDIAN. The reference's

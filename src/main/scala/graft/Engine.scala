@@ -32,6 +32,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    150-200, so at 100 entries every pass and every round recompiled
   *    its classes. The cost is metaspace: loaded classes stay resident,
   *    which perfbench reports as `peak_rss_mb`.
+  *  - `file:` paths go through [[NioLocalFileSystem]]. Hadoop's local file
+  *    system sets the permission of every file and directory it creates,
+  *    and without libhadoop each of those is a forked `chmod` (3.1-3.5 ms
+  *    on a 4-core host, about 57 per HTAP statement round). The
+  *    replacement sets the same mode through `java.nio`; the `.crc`
+  *    checksum files, their verification on read, and the output
+  *    committer are Hadoop's own and unchanged. Hadoop caches one file
+  *    system per scheme for the JVM, not per configuration, so the first
+  *    session fixes the class for every later one.
   */
 object Engine {
 
@@ -77,6 +86,7 @@ object Engine {
     .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
+    .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     .config("spark.ui.enabled", "false")
 

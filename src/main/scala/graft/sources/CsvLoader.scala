@@ -20,7 +20,15 @@ object CsvLoader {
 
   val CorruptCol = "_corrupt_record"
 
-  case class LoadResult(clean: DataFrame, rejects: DataFrame)
+  /** One parse of a delimited file. `rows` holds every record: the
+    * typed columns, then [[CorruptCol]], which is null on a clean record
+    * and holds the raw text of a rejected one. `clean` and `rejects` are
+    * its two sides; a caller that needs both reads `rows` once. */
+  case class LoadResult(rows: DataFrame) {
+    def clean: DataFrame = rows.filter(col(CorruptCol).isNull).drop(CorruptCol)
+    def rejects: DataFrame = rows.filter(col(CorruptCol).isNotNull)
+      .select(col(CorruptCol).as("raw_line"))
+  }
 
   /** Quote-aware record splitting: the line terminator only ends a
     * record OUTSIDE an enclosed field — MySQL reads an enclosed P_MSG
@@ -149,7 +157,14 @@ object CsvLoader {
     * wrong column count) does. Those columns are therefore parsed as
     * strings and cast value-level after the row-level reject split; an
     * unparseable date likewise degrades to NULL (MySQL converts it to
-    * the zero date with a warning rather than failing the load). */
+    * the zero date with a warning rather than failing the load).
+    *
+    * Nothing is cached: each action over the result parses the file
+    * again. Every read path parses whole records from a text scan, so a
+    * query that needs only [[CorruptCol]] (counting the rejects) still
+    * runs, and a record is rejected for any malformed field, not only
+    * the fields the query reads (Spark's CSV file source refuses the
+    * first and prunes its parse for the second). */
   def load(spark: SparkSession, path: String, schema: StructType,
            delimiter: String = ",", quote: String = "\"",
            trailingDelimiter: Boolean = false,
@@ -199,17 +214,20 @@ object CsvLoader {
     // Normalizing the record TEXT to exactly n fields and re-feeding
     // the CSV parser keeps one parsing engine. Unenclosed loads only —
     // a quote-aware splitter would be a different parser.
+    def lines = {
+      val r = spark.read
+      lineSep.foreach(ls => r.option("lineSep", ls))
+      r.textFile(path)
+    }
     val padded: Option[org.apache.spark.sql.Dataset[String]] =
       if (!padRows || quote != "\u0000" || skipLines > 0 ||
           trailingDelimiter) None
       else {
-        val r = spark.read
-        lineSep.foreach(ls => r.option("lineSep", ls))
         val n = parseSchema.length
         val d = delimiter
         val nv = nullValue
         import spark.implicits._
-        Some(r.textFile(path).map { l =>
+        Some(lines.map { l =>
           // a truly EMPTY record is a row of NULLs; a whitespace-only
           // one still parses its (unparseable) first field -- MySQL
           // stores 0 there (issue1209's trailing '\n' record)
@@ -264,14 +282,12 @@ object CsvLoader {
           }
         Some(spark.createDataFrame(rowRdd, strSchema))
       }
-    val raw = (mysqlParsedRaw match {
+    val raw = mysqlParsedRaw match {
       case Some(df) => df
-      case None => padded match {
-        case Some(ds) => reader.csv(ds)
-        case None if skipLines <= 0 => reader.csv(path)
-        case None => reader.csv(skipLeadingLines(spark, path, skipLines))
-      }
-    }).cache() // one pass parses; clean/reject split reuses it
+      case None => reader.csv(padded.getOrElse(
+        if (skipLines <= 0) lines
+        else skipLeadingLines(spark, path, skipLines)))
+    }
     // with a non-empty ENCLOSED BY, the UNENCLOSED word NULL reads as
     // SQL NULL (MySQL sql_load semantics — issue1153's second block);
     // the custom parser above already applied the rule field-level
@@ -279,8 +295,7 @@ object CsvLoader {
       if (nullWord && !customActive)
         when(upper(c) === lit("NULL"), lit(null)).otherwise(c)
       else c
-    val clean = raw.filter(col(CorruptCol).isNull)
-      .select(schema.fields.map { f =>
+    val typed = raw.select(schema.fields.map { f =>
         if (isTemporal(f))
           // zero date/timestamp → NULL, then loose (ANSI-off) cast
           nullif(nullif(nullWorded(col(f.name)), lit("0000-00-00")),
@@ -319,12 +334,12 @@ object CsvLoader {
         // the custom-parse path reads every field as STRING — cast to
         // the declared type (no-op for the typed CSV path)
         else nullWorded(col(f.name)).cast(f.dataType).as(f.name)
-      }.toSeq: _*)
+      }.toSeq :+ col(CorruptCol): _*)
     // a NULL field destined for a NOT NULL column takes the column's
     // implicit default with warning 1263 (issue1153: `\N` and the
     // unenclosed NULL word into `bigint NOT NULL` store 0) — LOAD
     // never rejects the row for it
-    val cleanND = clean.select(schema.fields.map { f =>
+    val rows = typed.select(schema.fields.map { f =>
       val req = f.metadata.contains("graft.mysql.notnull") &&
         f.metadata.getBoolean("graft.mysql.notnull")
       if (!req) col(f.name)
@@ -339,10 +354,8 @@ object CsvLoader {
           case None => col(f.name)
         }
       }
-    }.toSeq: _*)
-    val rejects = raw.filter(col(CorruptCol).isNotNull)
-      .select(col(CorruptCol).as("raw_line"))
-    LoadResult(cleanND, rejects)
+    }.toSeq :+ col(CorruptCol): _*)
+    LoadResult(rows)
   }
 
   /** `IGNORE n LINES`: drop the first n lines of the (single) input

@@ -86,11 +86,12 @@ class DeltaStore(spark: SparkSession, root: String) {
     * write job per INSERT (~0.3 s each; a 1000-statement MTR script was
     * minutes of file churn for kilobytes of data). Only plans whose
     * leaves are all LocalRelations buffer: VALUES text, and the rows of
-    * a statement-sized INSERT…SELECT, which the statement runner
-    * collects (at most [[DeltaStore.BufferCap]] + 1 rows) before it
-    * appends. The buffer is capped: anything file-backed or past the
-    * cap goes straight to the parquet delta, so a corpus-sized
-    * INSERT…SELECT is written, never held in driver memory.
+    * a statement-sized INSERT…SELECT or LOAD DATA, which the statement
+    * runner collects (at most [[DeltaStore.BufferCap]] + 1 rows) before
+    * it appends. The buffer is capped: anything file-backed or past the
+    * cap goes to the parquet delta, after the buffer it follows, so a
+    * corpus-sized INSERT…SELECT or load is written, never held in
+    * driver memory.
     * Volatile by design, like a lost merge-thread buffer; [[flush]] is
     * the durable point and every compact/rewrite path flushes first. */
   private val buffered = scala.collection.mutable.ArrayBuffer
@@ -133,7 +134,10 @@ class DeltaStore(spark: SparkSession, root: String) {
 
   /** Append rows to the delta side (the INSERT buffer analog): local
     * statement batches buffer in memory, file-backed frames go to the
-    * parquet delta. */
+    * parquet delta. A file-backed append flushes the buffer first:
+    * [[read]] returns delta parts before buffered rows, so rows
+    * buffered earlier would otherwise read back after the later
+    * append's (the scan-order contract of [[rewriteBase]]). */
   def append(df: DataFrame): Unit = {
     val localOnly = df.queryExecution.optimizedPlan.collectLeaves()
       .forall(_.isInstanceOf[
@@ -151,6 +155,7 @@ class DeltaStore(spark: SparkSession, root: String) {
       bumpEpoch()
       if (buffered.size >= BufferCap) flush()
     } else {
+      flush()
       (if (smallStore) orderedSingle(df) else df)
         .write.mode("append").parquet(deltaPath)
       bumpEpoch()

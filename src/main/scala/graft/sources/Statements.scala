@@ -30,10 +30,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SURVEY §1.2 MySQL mapping), plus passthrough:
   * `LOAD DATA [LOCAL] INFILE … INTO TABLE t [FIELDS
   * TERMINATED/ENCLOSED/ESCAPED BY …] [LINES TERMINATED BY …]` parses to
-  * a [[CsvLoader.load]] against the attached table's schema and appends
-  * the clean rows to its [[DeltaStore]]; `SELECT … INTO OUTFILE 'f'
-  * [export options]` strips the INTO clause, runs the remaining SELECT
-  * through `spark.sql`, and exports via [[CsvLoader.export]]; anything
+  * one [[CsvLoader.load]] against the attached table's schema, freezes
+  * and counts a statement-sized file on the driver like `INSERT …
+  * SELECT`, and appends the clean rows to its [[DeltaStore]]; `SELECT …
+  * INTO OUTFILE 'f' [export options]` strips the INTO clause, runs the
+  * remaining SELECT through `spark.sql`, and exports via
+  * [[CsvLoader.export]]; anything
   * else goes to `spark.sql` after the [[MySqlDialect]] rewrite (hash
   * comments, `&&`/`||`, `LIMIT n,m`, `FROM DUAL` — so verbatim
   * MTR-style SELECT text runs unchanged). Statement execution is thus a thin
@@ -42,8 +44,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * library, not a server: no wire protocol, no session state beyond the
   * attached stores).
   *
-  * Unsupported clauses (`IGNORE n LINES`, `REPLACE`/`IGNORE` dup-key
-  * modes) throw with a pointer at the API that covers the semantics
+  * Unsupported clauses (the `REPLACE`/`IGNORE` dup-key modes of LOAD
+  * DATA) throw with a pointer at the API that covers the semantics
   * ([[Dml.replaceInto]] / [[Dml.appendStrict]]) — failing fast beats
   * silently dropping a requested behavior.
   */
@@ -75,8 +77,18 @@ object StatementRunner {
       within: scala.concurrent.duration.FiniteDuration =
         scala.concurrent.duration.Duration(10, "s"))
       (recount: => Long): Long =
-    try scala.concurrent.Await.result(obs.future, within).getLong(0)
-    catch { case _: java.util.concurrent.TimeoutException => recount }
+    observedCounts(obs, within)(Seq(recount)).head
+
+  /** [[observedCount]] for an Observation of several counts, in the
+    * order they were given; `recount` returns all of them. */
+  private[graft] def observedCounts(obs: org.apache.spark.sql.Observation,
+      within: scala.concurrent.duration.FiniteDuration =
+        scala.concurrent.duration.Duration(10, "s"))
+      (recount: => Seq[Long]): Seq[Long] =
+    try {
+      val row = scala.concurrent.Await.result(obs.future, within)
+      (0 until row.length).map(row.getLong)
+    } catch { case _: java.util.concurrent.TimeoutException => recount }
 }
 
 class StatementRunner(spark: SparkSession) {
@@ -1438,6 +1450,44 @@ class StatementRunner(spark: SparkSession) {
     refreshTableView(table, store)
     fireAfterInsert(table, batch)
     n
+  }
+
+  /** Append the clean records of a parsed LOAD file and return how many
+    * loaded and how many were rejected. `tagged` holds every record, its
+    * last column [[CsvLoader.CorruptCol]] (null on a clean record), and
+    * `finish` aligns clean records to the table. The file is parsed once
+    * into at most [[DeltaStore.BufferCap]] + 1 collected records: up to
+    * the cap they split and count on the driver, and the clean ones
+    * append as a `LocalRelation`, which the store buffers with no job.
+    * A larger file is parsed again by one file-backed append, which an
+    * `Observation` counts; `recount` (loaded, rejected) stands in when
+    * the observed counts do not arrive. */
+  private def loadRecords(store: DeltaStore, tagged: DataFrame,
+                          finish: DataFrame => DataFrame)
+                         (recount: => Seq[Long]): (Long, Long) = {
+    import org.apache.spark.sql.functions.{col, count, when}
+    val cleanRecord = col(CsvLoader.CorruptCol).isNull
+    val records = tagged.limit(DeltaStore.BufferCap + 1).collect()
+    if (records.length <= DeltaStore.BufferCap) {
+      import scala.jdk.CollectionConverters._
+      val last = tagged.schema.length - 1
+      val (ok, bad) = records.partition(_.isNullAt(last))
+      val local = spark.createDataFrame(
+        ok.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.take(last)))
+          .toList.asJava,
+        org.apache.spark.sql.types.StructType(tagged.schema.fields
+          .take(last).map(_.copy(nullable = true))))
+      store.append(finish(local))
+      (ok.length.toLong, bad.length.toLong)
+    } else {
+      val obs = org.apache.spark.sql.Observation()
+      store.append(finish(tagged
+        .observe(obs, count(when(cleanRecord, 1)),
+          count(when(!cleanRecord, 1)))
+        .filter(cleanRecord).drop(CsvLoader.CorruptCol)))
+      val Seq(loaded, rejected) = StatementRunner.observedCounts(obs)(recount)
+      (loaded, rejected)
+    }
   }
 
   /** Whether `cond` gives the same value each time it is evaluated
@@ -5001,6 +5051,9 @@ class StatementRunner(spark: SparkSession) {
   private var lastInsertId: Long = 0L
 
   private def dispatch(stmtText: String): DataFrame = stmtText match {
+    // LOAD DATA: parse the clauses into one CsvLoader.load, then
+    // loadRecords appends the clean records and counts both sides from
+    // that one parse (one job for a file of at most BufferCap records)
     case LoadRe(path, dupMode, table, tail) =>
       if (dupMode != null)
         throw new UnsupportedOperationException(
@@ -5101,7 +5154,10 @@ class StatementRunner(spark: SparkSession) {
         // LOCAL/non-strict loads normalize row width instead of
         // rejecting (warnings 1261/1262 -- issue1209's ragged records)
         padRows = isLocalLoad || !strictMode)
-      val clean = (slots match {
+      // every parsed record as the table's columns (or the column list's
+      // and SET's), then CsvLoader.CorruptCol; `finish` aligns a frame
+      // of its clean records to the table
+      val (tagged, finish) = (slots match {
         case None if colsSetOpt.flatMap(_._2).isEmpty => None
         // a SET clause WITHOUT a column list applies over the full
         // positional parse (issue1153's `set a = @var1/2`)
@@ -5109,7 +5165,7 @@ class StatementRunner(spark: SparkSession) {
           Left(f.name): Either[String, String]).toSeq)
         case some => some
       }) match {
-        case None => res.clean
+        case None => (res.rows, (df: DataFrame) => df)
         case Some(ss) =>
           // @refs bound by the column list become synthetic field
           // columns; any OTHER @ref is a session user variable
@@ -5130,19 +5186,18 @@ class StatementRunner(spark: SparkSession) {
               val rhs = MySqlDialect.rewrite(bound)
               (tgt, rhs)
             }
-          val withSets = setAssigns.foldLeft(res.clean) { case (df, (t, r)) =>
+          val withSets = setAssigns.foldLeft(res.rows) { case (df, (t, r)) =>
             df.withColumn(t, org.apache.spark.sql.functions.expr(r))
           }
           val provided = (ss.collect { case Left(c) => c } ++
             setAssigns.map(_._1)).distinct
-          val projected = withSets.select(provided.map(
-            org.apache.spark.sql.functions.col): _*)
-          assignAutoInc(store, alignToSchema(projected,
-            provided.mkString(","), schema, strict = false))
+          (withSets.select((provided :+ CsvLoader.CorruptCol).map(
+            org.apache.spark.sql.functions.col): _*),
+            (df: DataFrame) => assignAutoInc(store, alignToSchema(df,
+              provided.mkString(","), schema, strict = false)))
       }
-      val loaded = clean.count()
-      val rejected = res.rejects.count()
-      store.append(clean)
+      val (loaded, rejected) = loadRecords(store, tagged, finish)(
+        Seq(res.clean.count(), res.rejects.count()))
       refreshTableView(table, store)
       import spark.implicits._
       Seq((table, loaded, rejected))

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Model-based test of [[DeltaStore]]: random operation sequences run
   * against a store and against an in-memory multiset model, and after
-  * every step `read()` must equal the model. This covers the reader
+  * every step `read()` must equal the model, rows in the model's
+  * insert order (buffered and file-backed appends interleave). This
+  * covers the reader
   * cache (base and delta-part DataFrames reused across reads, the base
   * entry seeded with the schema just written) and the mutation epoch,
   * which must strictly increase on every step that changes what
@@ -84,9 +86,19 @@ class DeltaStoreModelSpec extends AnyFunSuite {
       (names, df.select(names.map(df(_)): _*).collect()
         .map(_.toSeq.mkString("|")).toSeq.sorted)
     }
-    def expected: (Seq[String], Seq[String]) = {
+    def expected: (Seq[String], Seq[String]) =
+      (cols.sorted, expectedInOrder.sorted)
+    /** The model's rows in insert order, rendered as [[observed]] does. */
+    def expectedInOrder: Seq[String] = {
       val order = cols.zipWithIndex.sortBy(_._1).map(_._2)
-      (cols.sorted, model.map(r => order.map(r(_)).mkString("|")).sorted)
+      model.map(r => order.map(r(_)).mkString("|"))
+    }
+    /** `read()`'s rows in scan order, rendered as [[observed]] does. */
+    def observedInOrder: Seq[String] = {
+      val df = store.read()
+      val names = df.columns.toSeq.sorted
+      df.select(names.map(df(_)): _*).collect().map(_.toSeq.mkString("|"))
+        .toSeq
     }
 
     /** Rows in the delta's parquet parts, counted by a Spark job. */
@@ -107,6 +119,8 @@ class DeltaStoreModelSpec extends AnyFunSuite {
       val after = observed()
       last = after
       assert(after === expected, s"read() diverged from the model after $what")
+      assert(observedInOrder === expectedInOrder,
+        s"read() returned rows out of insert order after $what")
       if (holdsFiles)
         assert(observed(prior) === before,
           s"a frame read before $what changed or lost its files")

@@ -30,6 +30,30 @@ class IngestSpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  test("a load caches nothing: CsvLoader.load with both counts, and " +
+      "LOAD DATA") {
+    val tmp = Files.createTempDirectory("graft_nocache").toString
+    val f = Paths.get(tmp, "t.csv")
+    Files.write(f, "1|alpha|10\n2|beta|20\nbroken|x|y\n".getBytes)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id BIGINT, name STRING, v INT")
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val res = CsvLoader.load(spark, f.toString, schema, delimiter = "|")
+    assert(res.clean.count() === 2 && res.rejects.count() === 1)
+    assert(cache.isEmpty, "CsvLoader.load left a cached relation")
+    val store = new DeltaStore(spark, s"$tmp/store")
+    store.writeBase(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
+    val runner = new graft.sources.StatementRunner(spark)
+    runner.attach("nocache", store)
+    val summary = runner.run(s"LOAD DATA INFILE '$f' INTO TABLE nocache " +
+      "FIELDS TERMINATED BY '|'").first()
+    assert(summary.getAs[Long]("rows_loaded") === 2L)
+    assert(summary.getAs[Long]("rows_rejected") === 1L)
+    assert(cache.isEmpty, "LOAD DATA left a cached relation")
+  }
+
   test("events ts schema drift: Engine.table normalizes both µs-timestamp " +
       "and long-ns encodings to the same timestamps") {
     // r12 regression guard: the driver's events.parquet stores ts as a

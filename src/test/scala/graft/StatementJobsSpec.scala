@@ -213,6 +213,116 @@ class StatementJobsSpec extends AnyFunSuite {
     assert(rows.forall(r => r.getLong(1) === 2 * r.getLong(0)))
   }
 
+  test("rows buffered before a file-backed INSERT … SELECT read back " +
+      "before its rows") {
+    runner.run("CREATE TABLE jb (id BIGINT) ENGINE=TIANMU")
+    run("INSERT INTO jb VALUES (-3), (-2), (-1)")
+    spark.range(0, DeltaStore.BufferCap + 1).createOrReplaceTempView("jb_src")
+    assert(run("INSERT INTO jb SELECT id FROM jb_src") ===
+      DeltaStore.BufferCap + 1)
+    assert(runner.run("SELECT id FROM jb LIMIT 5").collect()
+      .map(_.getLong(0)).toSeq === Seq(-3L, -2L, -1L, 0L, 1L))
+  }
+
+  /** `lines` written to a new file under the spec's directory. */
+  private def textFile(name: String, lines: Seq[String]): String = {
+    val f = java.nio.file.Paths.get(dir, name)
+    Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    f.toString
+  }
+
+  /** The `(loaded, rejected)` counts a LOAD DATA statement returns. */
+  private def load(sql: String): (Long, Long) = {
+    val r = runner.run(sql).collect().head
+    (r.getAs[Long]("rows_loaded"), r.getAs[Long]("rows_rejected"))
+  }
+
+  /** A Spark recount of a comma-separated file: its records, and those
+    * whose first field is not an integer. */
+  private def recount(path: String): (Long, Long) = {
+    val first = org.apache.spark.sql.functions.split(col("value"), ",")(0)
+    val lines = spark.read.textFile(path)
+    val bad = lines.filter(first.cast("bigint").isNull).count()
+    (lines.count() - bad, bad)
+  }
+
+  /** A store attached as `name` with columns (id BIGINT, amount INT,
+    * tag STRING) and no rows. */
+  private def loadTable(name: String): DeltaStore = {
+    val store = new DeltaStore(spark, s"$dir/$name")
+    store.writeBase(spark.range(0).selectExpr("id",
+      "CAST(id AS INT) AS amount", "CAST(id AS STRING) AS tag"))
+    runner.attach(name, store)
+    store
+  }
+
+  test("LOAD DATA of at most BufferCap rows runs one job, writes no " +
+      "delta part and counts both sides from its one parse") {
+    val store = loadTable("jlsmall")
+    val f = textFile("jlsmall.csv",
+      (1 to 400).map(i => s"$i,${i * 2},t${i % 7}")
+        .patch(200, Seq("oops,1,x"), 0))
+    val files0 = store.deltaFileCount()
+    val ((loaded, rejected), j) = jobs(load(
+      s"LOAD DATA INFILE '$f' INTO TABLE jlsmall FIELDS TERMINATED BY ','"))
+    assert(j === 1, s"LOAD DATA ran $j job(s)")
+    assert((loaded, rejected) === recount(f))
+    assert((loaded, rejected) === (400L, 1L))
+    assert(store.deltaFileCount() === files0, "the load wrote a delta part")
+    assert(store.bufferedCount === 400)
+    val back = runner.run("SELECT id, amount, tag FROM jlsmall").collect()
+    assert(back.map(_.getLong(0)).toSeq === (1L to 400L))
+    assert(back.forall(r => r.getInt(1) === 2 * r.getLong(0) &&
+      r.getString(2) === s"t${r.getLong(0) % 7}"))
+  }
+
+  test("LOAD DATA of BufferCap + 1 rows is one file-backed append that " +
+      "counts both sides") {
+    val store = loadTable("jlbig")
+    val n = DeltaStore.BufferCap + 1
+    val f = textFile("jlbig.csv",
+      (0 until n).map(i => s"$i,$i,x") :+ "1.5e,2,y")
+    val files0 = store.deltaFileCount()
+    val (loaded, rejected) = load(
+      s"LOAD DATA INFILE '$f' INTO TABLE jlbig FIELDS TERMINATED BY ','")
+    assert((loaded, rejected) === recount(f))
+    assert((loaded, rejected) === (n.toLong, 1L))
+    assert(store.bufferedCount === 0, "the load was buffered")
+    assert(store.deltaFileCount() === files0 + 1)
+    assert(store.deltaCount() === n)
+    assert(runner.run("SELECT SUM(id), SUM(amount) FROM jlbig").collect()
+      .head.toSeq === Seq(n.toLong * (n - 1) / 2, n.toLong * (n - 1) / 2))
+  }
+
+  test("LOAD DATA LOCAL, column-list/SET and IGNORE n LINES keep their " +
+      "results") {
+    def table(name: String) = { loadTable(name); name }
+    def rows(t: String) = scan(runner, s"SELECT id, amount, tag FROM $t")
+      .map(_.mkString(","))
+    // LOCAL pads a short record, cuts a long one and prefix-parses a bad
+    // number instead of rejecting the record
+    val local = textFile("jllocal.csv",
+      Seq("1,10,a", "2,20", "3,30,c,extra", "x4,40,d", "5,5q,e"))
+    val lt = table("jllocal")
+    assert(load(s"LOAD DATA LOCAL INFILE '$local' INTO TABLE $lt " +
+      "FIELDS TERMINATED BY ','") === (5L, 0L))
+    assert(rows(lt) === Seq("1,10,a", "2,20,null", "3,30,c", "0,40,d",
+      "5,5,e"))
+    // a column list binds a field to a variable that SET reads
+    val set = textFile("jlset.csv", Seq("1,2,a", "3,4,b", "bad,5,c"))
+    val st = table("jlset")
+    assert(load(s"LOAD DATA INFILE '$set' INTO TABLE $st " +
+      "FIELDS TERMINATED BY ',' (id, @a, tag) SET amount = @a * 10") ===
+      (2L, 1L))
+    assert(rows(st) === Seq("1,20,a", "3,40,b"))
+    // IGNORE n LINES skips a header
+    val hdr = textFile("jlhdr.csv", Seq("id,amount,tag", "7,70,g", "8,80,h"))
+    val ht = table("jlhdr")
+    assert(load(s"LOAD DATA INFILE '$hdr' INTO TABLE $ht " +
+      "FIELDS TERMINATED BY ',' IGNORE 1 LINES") === (2L, 0L))
+    assert(rows(ht) === Seq("7,70,g", "8,80,h"))
+  }
+
   /** A write's target in a SQL execution's plan, when it is a staging
     * directory. */
   private val StagingWrite = """Arguments: file:[^,\n]*graft-stage-""".r
