@@ -204,9 +204,13 @@ object Bench {
     var buildMs = 0.0
     val ok =
       try {
-        val query = SparkEntry.queries(name)(rec.spark, sfDir)
-        buildMs = (System.nanoTime() - t0) / 1e6
-        query.write.mode("overwrite").format("noop").save()
+        // the query's staged frames (packing, auto-increment) are
+        // deleted when it has run
+        graft.sources.Staging.scoped {
+          val query = SparkEntry.queries(name)(rec.spark, sfDir)
+          buildMs = (System.nanoTime() - t0) / 1e6
+          query.write.mode("overwrite").format("noop").save()
+        }
         true
       } catch {
         case e: Throwable =>

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,8 +17,7 @@ object Verify {
     val attempted = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
     attempted.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try dump(spark, fn, sfDir, s"$outDir/$name")
       catch { case e: Throwable =>
         failed += name -> s"${e.getClass.getName}: ${e.getMessage}"
         System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
@@ -52,4 +51,12 @@ object Verify {
         failed.map(_._1).mkString(", "))
     spark.stop()
   }
+
+  /** Write one query's result to `out` as one parquet file. The query
+    * runs to completion inside a staging scope, so the directories staged
+    * while building it (packing, auto-increment) are deleted after it. */
+  def dump(spark: SparkSession, query: (SparkSession, String) => DataFrame,
+           sfDir: String, out: String): Unit =
+    graft.sources.Staging.scoped(query(spark, sfDir).coalesce(1).write
+      .mode("overwrite").parquet(out))
 }

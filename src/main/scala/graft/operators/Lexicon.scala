@@ -633,13 +633,16 @@ object Lexicon {
         s"concat('$BpeSep', concat_ws('$BpeSep$BpeSep', filter(split(tok, ''), x -> x != '')), '$BpeSep')")
         .as("seq"), col("wc"))
     // parquet-staged, not localCheckpoint'd: the vocab must survive
-    // executor loss mid-training (graft.sources.Staging rationale)
-    vocab = graft.sources.Staging.stage(vocab, "bpe-vocab")
+    // executor loss mid-training (graft.sources.Staging rationale). Each
+    // step stages the next vocabulary from the current one and then
+    // deletes the current one's directory; the last one lives until the
+    // caller's Staging.scoped returns.
+    var staged = graft.sources.Staging.staged(vocab, "bpe-vocab")
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, Long)]()
     var step = 0
     var continue = true
     while (step < merges && continue) {
-      val best = vocab
+      val best = staged.frame
         .where(expr(s"size(filter(split(seq, '$BpeSep'), x -> x != ''))") >= 2)
         .select(explode(expr(pairsExprSql("seq"))).as("pair"), col("wc"))
         .groupBy(col("pair")).agg(sum(col("wc")).as("cnt"))
@@ -655,15 +658,17 @@ object Lexicon {
         // call_function binds the corpus-derived pair as a literal — an
         // expr() string interpolation here would let a token containing a
         // quote or backslash break (or inject into) the parsed SQL.
-        vocab = graft.sources.Staging.stage(vocab
+        val next = graft.sources.Staging.staged(staged.frame
           .select(col("tok"),
             call_function("replace", col("seq"), lit(target), lit(repl))
               .as("seq"),
             col("wc")), "bpe-step")
+        staged.delete()
+        staged = next
         step += 1
       }
     }
-    (out.toSeq, vocab)
+    (out.toSeq, staged.frame)
   }
 
   /** Ad-hoc training entry (tests, exploratory frames): runs the loop
@@ -672,7 +677,8 @@ object Lexicon {
   def bpeTrain(docs: DataFrame, merges: Int = BpeMerges): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    bpeLoop(docs, merges)._1.toDF("step", "pair", "cnt")
+    graft.sources.Staging.scoped(bpeLoop(docs, merges)._1)
+      .toDF("step", "pair", "cnt")
       .select(col("step").cast("int").as("step"), col("pair"), col("cnt"))
       .orderBy(col("step"))
   }
@@ -701,18 +707,22 @@ object Lexicon {
     val root =
       graft.sources.ArtifactStore.root("bpe", BpeStoreVersion, dir)
     graft.sources.ArtifactStore.ensureBuilt(root) { staging =>
-      bpeBuilds.incrementAndGet()
-      import s.implicits._
-      val (mergeTab, vocab) =
-        bpeLoop(Engine.rebalance(t(s, dir, "documents")), merges)
-      mergeTab.toDF("step", "pair", "cnt")
-        .select(col("step").cast("int").as("step"), col("pair"), col("cnt"))
-        .coalesce(1).write.parquet(s"$staging/merges")
-      vocab
-        .select(col("tok"),
-          expr(s"size(filter(split(seq, '$BpeSep'), x -> x != ''))")
-            .cast("long").as("n_pieces"))
-        .coalesce(1).write.parquet(s"$staging/vocab")
+      // the loop's last staged vocabulary is deleted once written out
+      graft.sources.Staging.scoped {
+        bpeBuilds.incrementAndGet()
+        import s.implicits._
+        val (mergeTab, vocab) =
+          bpeLoop(Engine.rebalance(t(s, dir, "documents")), merges)
+        mergeTab.toDF("step", "pair", "cnt")
+          .select(col("step").cast("int").as("step"), col("pair"),
+            col("cnt"))
+          .coalesce(1).write.parquet(s"$staging/merges")
+        vocab
+          .select(col("tok"),
+            expr(s"size(filter(split(seq, '$BpeSep'), x -> x != ''))")
+              .cast("long").as("n_pieces"))
+          .coalesce(1).write.parquet(s"$staging/vocab")
+      }
     }
     root
   }

@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, InterpretedPredicate, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, CommonExpressionRef, Expression, InterpretedPredicate, RuntimeReplaceable, With}
 import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, SubqueryAlias, View}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.{FILTER, LOCAL_RELATION}
 
@@ -30,27 +30,58 @@ import org.apache.spark.sql.catalyst.trees.TreePattern.{FILTER, LOCAL_RELATION}
   * predicate. So the rule is also a plan-normalization rule
   * (`injectPlanNormalizationRule`), which Spark applies to the analyzed
   * and checked plan before optimizing it; there it also looks through
-  * the `SubqueryAlias` that names a VALUES table.
+  * the `SubqueryAlias` that names a VALUES table and the `View` of a
+  * temporary view over in-memory rows (a resident
+  * [[graft.sources.DeltaStore]]'s table view), which the optimizer
+  * strips before that early batch.
   *
   * Keeps Spark's guard: a condition holding an unevaluable expression
-  * (a subquery, say) is left to the planner, and so is one holding an
-  * expression the optimizer has yet to replace (`RuntimeReplaceable`).
+  * (a subquery, say) is left to the planner. An expression the
+  * optimizer has yet to replace (`RuntimeReplaceable`, such as
+  * `BETWEEN`) is evaluated through its replacement, as the optimizer's
+  * `ReplaceExpressions` would rewrite it: otherwise the early batch
+  * would fold a range over a resident table with a compiled predicate.
   * Projections and limits over a `LocalRelation` stay with
   * `ConvertToLocalRelation`, which already interprets them.
   */
 object LocalFilterRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformWithPruning(
       _.containsAllPatterns(FILTER, LOCAL_RELATION)) {
-    case Filter(cond, rel: LocalRelation) if evaluable(cond) =>
-      filtered(cond, rel)
-    case Filter(cond, a @ SubqueryAlias(_, rel: LocalRelation))
-        if evaluable(cond) =>
-      a.copy(child = filtered(cond, rel))
+    case f @ Filter(cond0, child) if cond0.resolved &&
+        evaluable(replaced(cond0)) =>
+      val cond = replaced(cond0)
+      within(child)(filtered(cond, _)).getOrElse(f)
+  }
+
+  /** `cond` with every `RuntimeReplaceable` replaced, nested ones
+    * included, and the `With` a replacement may bind its shared input
+    * in (`BETWEEN`'s) inlined when that input is deterministic. */
+  private def replaced(cond: Expression): Expression = {
+    val next = cond.transformDown {
+      case e: RuntimeReplaceable => e.replacement
+      case w: With if w.defs.forall(_.child.deterministic) =>
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        w.child.transformDown {
+          case r: CommonExpressionRef if defs.contains(r.id) => defs(r.id)
+        }
+    }
+    if (next.fastEquals(cond)) cond else replaced(next)
+  }
+
+  /** `plan` with `f` applied to the `LocalRelation` it names, when only
+    * aliases and views (which pass their child's output through) stand
+    * between them. */
+  private def within(plan: LogicalPlan)(
+      f: LocalRelation => LocalRelation): Option[LogicalPlan] = plan match {
+    case rel: LocalRelation => Some(f(rel))
+    case a: SubqueryAlias => within(a.child)(f).map(c => a.copy(child = c))
+    case v: View if v.output == v.child.output =>
+      within(v.child)(f).map(c => v.copy(child = c))
+    case _ => None
   }
 
   private def evaluable(cond: Expression): Boolean =
-    cond.resolved && !ConvertToLocalRelation.hasUnevaluableExpr(cond) &&
-      !cond.exists(_.isInstanceOf[RuntimeReplaceable])
+    cond.resolved && !ConvertToLocalRelation.hasUnevaluableExpr(cond)
 
   private def filtered(cond: Expression, rel: LocalRelation): LocalRelation = {
     val pred = InterpretedPredicate(

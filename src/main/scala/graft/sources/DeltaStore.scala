@@ -1,7 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.StructType
 
 /** HTAP delta-store analog (SURVEY.md §3.3): the reference buffers DML in
   * a row-oriented RocksDB delta table (core/delta_table.h:37), readers
@@ -17,8 +20,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partitioned by arrival, queries see base ∪ delta with no blocking,
   * compaction rewrites asynchronously (row-level upserts would graduate
   * to a table format like Delta/Iceberg — out of scope per SURVEY §2.11).
+  *
+  * Driver residency (the reference serves a table's recent rows from
+  * its in-memory delta the same way): while the whole table holds at
+  * most [[DeltaStore.BufferCap]] rows, the driver keeps the rows of the
+  * current files (base, then delta parts, in scan order) as Catalyst
+  * rows, and [[read]] returns them and the buffered rows as ONE
+  * `LocalRelation`. A point lookup or range over a small table then
+  * folds on the driver ([[graft.plans.LocalFilterRule]]): no file scan,
+  * no Spark job. Residency is a cache of the durable files, never a
+  * substitute: every writer still writes its Parquet files, and the
+  * rows a writer already holds seed the new version — a local frame
+  * given to [[writeBase]] or a rewrite, the buffer a [[flush]] writes
+  * (after the resident rows), and the rows a rewrite of a resident
+  * store writes, which the write job itself observes. A version no
+  * writer seeded (a reopened store, a file-backed append) is cold: the
+  * next read sums the Parquet footers' row counts on the driver and,
+  * at most the cap, loads the files with one collect. A version past
+  * the cap drops its rows and reads the files as before. Memory bound:
+  * at most BufferCap resident rows besides the buffer, converted to
+  * Catalyst rows once per version, not per read.
   */
 class DeltaStore(spark: SparkSession, root: String) {
+  import DeltaStore.{BufferCap, Cold, Files, Large, Resident}
 
   // ---- versioned base and delta directories ----
   // The base is NEVER rewritten in place: each rewrite lands in a fresh
@@ -67,17 +91,21 @@ class DeltaStore(spark: SparkSession, root: String) {
   /** Promote a freshly written `base-(v)` dir holding `schema` to
     * current, and GC stale versions. The reader cache is seeded with
     * `schema`, so the next read infers nothing (inference is a Spark
-    * job reading the footers). */
-  private def promoteBase(v: Long,
-                          schema: org.apache.spark.sql.types.StructType
-  ): Unit = synchronized {
-    baseVer = v
-    baseCacheDf = spark.read.schema(schema).parquet(baseDirOf(v))
-    baseCacheVer = v
-    partCache.clear()
-    bumpEpoch()
-    collectGarbage(BaseVerRe, v, txnBaseVer)
-  }
+    * job reading the footers). `seed`, the rows of the whole new file
+    * version when the writer holds them, makes it resident; without
+    * one it is cold. */
+  private def promoteBase(v: Long, schema: StructType,
+                          seed: Option[Vector[InternalRow]]): Unit =
+    synchronized {
+      baseVer = v
+      baseCacheDf = spark.read.schema(schema).parquet(baseDirOf(v))
+      baseCacheVer = v
+      partCache.clear()
+      files = seed.filter(_ => sameFields(baseCacheDf.schema, schema))
+        .fold[Files](Cold)(residentOrLarge(baseCacheDf.schema, _))
+      bumpEpoch()
+      collectGarbage(BaseVerRe, v, txnBaseVer)
+    }
 
   /** In-memory insert buffer — the direct analog of the reference's
     * row-store insert buffer (core/delta_table.h:37 keeps DML rows in a
@@ -95,9 +123,80 @@ class DeltaStore(spark: SparkSession, root: String) {
     * Volatile by design, like a lost merge-thread buffer; [[flush]] is
     * the durable point and every compact/rewrite path flushes first. */
   private val buffered = scala.collection.mutable.ArrayBuffer
-    .empty[org.apache.spark.sql.Row]
-  private var bufferedSchema: org.apache.spark.sql.types.StructType = null
-  import DeltaStore.BufferCap
+    .empty[InternalRow]
+  private var bufferedSchema: StructType = null
+
+  // ---- driver residency ----
+  private var files: Files = Cold
+  private def residentOrLarge(schema: StructType,
+                              rows: Vector[InternalRow]): Files =
+    if (rows.size + buffered.size <= BufferCap) Resident(schema, rows)
+    else Large
+
+  /** Same column names and types, in order (nullability and metadata
+    * aside): rows of one are valid rows of the other. */
+  private def sameFields(a: StructType, b: StructType): Boolean =
+    a.length == b.length && a.fields.zip(b.fields).forall { case (x, y) =>
+      x.name == y.name && x.dataType == y.dataType }
+
+  /** `df`'s rows when its optimized plan is one `LocalRelation` (a
+    * statement's VALUES, or a transform the optimizer folded over
+    * resident rows): the driver holds them, so taking them runs no job.
+    * A frame that reads a file is never optimized here. */
+  private def heldRows(df: DataFrame): Option[Vector[InternalRow]] =
+    if (df.queryExecution.analyzed.collectLeaves().exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]))
+      None
+    else df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data.toVector)
+      case _ => None
+    }
+  private def localOnly(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+
+  private def toInternal(schema: StructType, rows: Iterator[Row])
+      : Vector[InternalRow] = {
+    val convert = CatalystTypeConverters.createToCatalystConverter(schema)
+    rows.map(convert(_).asInstanceOf[InternalRow]).toVector
+  }
+
+  /** The file version's rows as read, when the footers say it fits:
+    * one collect, or none for a version of no rows (a table just
+    * created). */
+  private def load(): Files = {
+    val parquet = Seq(basePath, deltaPath).filter(exists).flatMap(p =>
+      fs.listStatus(new Path(p)).toSeq
+        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
+    val rows = parquet.map(s => footerRowCount(s.getPath)).sum
+    if (rows + buffered.size > BufferCap) Large
+    else {
+      val df = fileRead()
+      Resident(df.schema,
+        if (rows == 0) Vector.empty
+        else toInternal(df.schema, df.collect().iterator))
+    }
+  }
+
+  /** The resident state that [[read]] serves, loading a cold version
+    * first; None when the store reads its files. */
+  private def serving: Option[Resident] = synchronized {
+    if (files == Cold) files = load()
+    files match {
+      case r: Resident if r.rows.size + buffered.size <= BufferCap &&
+          (buffered.isEmpty || sameFields(r.schema, bufferedSchema)) =>
+        Some(r)
+      case _ => None
+    }
+  }
+  /** The frame [[read]] last built over resident rows, and the epoch
+    * and state it was built for. */
+  private var residentFrame: (Long, Resident, DataFrame) = null
+
+  /** Rows the driver holds of the current files (0 when it holds none). */
+  private[graft] def residentCount: Int = synchronized {
+    files match { case r: Resident => r.rows.size; case _ => 0 }
+  }
 
   private def fs = new Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -119,16 +218,15 @@ class DeltaStore(spark: SparkSession, root: String) {
 
   /** Initialize (or replace) the base table. One file for the
     * statement tier's tables: read order must equal write order (see
-    * [[rewriteBase]]); a genuinely large initial frame keeps its
+    * [[replaceTable]]); a genuinely large initial frame keeps its
     * partitioning. */
   def writeBase(df: DataFrame): Unit = {
-    val single = df.queryExecution.optimizedPlan.collectLeaves()
-      .forall(_.isInstanceOf[
-        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
     val next = baseVer + 1
-    (if (single || smallStore) orderedSingle(df) else df)
+    (if (localOnly(df) || smallStore) orderedSingle(df) else df)
       .write.mode("overwrite").parquet(baseDirOf(next))
-    promoteBase(next, df.schema)
+    // a local frame seeds the version unless delta parts follow it
+    promoteBase(next, df.schema,
+      if (deltaFileCount() == 0) heldRows(df) else None)
     bumpEpoch()
   }
 
@@ -137,40 +235,62 @@ class DeltaStore(spark: SparkSession, root: String) {
     * parquet delta. A file-backed append flushes the buffer first:
     * [[read]] returns delta parts before buffered rows, so rows
     * buffered earlier would otherwise read back after the later
-    * append's (the scan-order contract of [[rewriteBase]]). */
+    * append's (the scan-order contract of [[replaceTable]]). */
   def append(df: DataFrame): Unit = {
-    val localOnly = df.queryExecution.optimizedPlan.collectLeaves()
-      .forall(_.isInstanceOf[
-        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-    if (localOnly && buffered.size < BufferCap) {
-      val rows = df.collect()
+    if (localOnly(df) && buffered.size < BufferCap) {
       // nullable-ized: a VALUES batch's literal columns report
       // non-nullable while a later tuple holds NULL — a LocalRelation
       // with that contradiction breaks codegen. Parquet reads are
       // nullable anyway, so this matches the spilled path exactly.
-      if (bufferedSchema == null) bufferedSchema =
-        org.apache.spark.sql.types.StructType(
-          df.schema.fields.map(_.copy(nullable = true)))
-      buffered ++= rows
-      bumpEpoch()
+      val schema = StructType(df.schema.fields.map(_.copy(nullable = true)))
+      // buffered rows are typed by the buffer's schema: a batch of
+      // other columns or types starts a new buffer
+      if (bufferedSchema != null && !sameFields(bufferedSchema, schema))
+        flush()
+      val rows = heldRows(df).getOrElse(
+        toInternal(schema, df.collect().iterator))
+      synchronized {
+        if (bufferedSchema == null) bufferedSchema = schema
+        buffered ++= rows
+        files match {
+          case r: Resident if r.rows.size + buffered.size > BufferCap =>
+            files = Large
+          case _ =>
+        }
+        bumpEpoch()
+      }
       if (buffered.size >= BufferCap) flush()
     } else {
       flush()
       (if (smallStore) orderedSingle(df) else df)
         .write.mode("append").parquet(deltaPath)
-      bumpEpoch()
+      synchronized {
+        if (files != Large) files = Cold
+        bumpEpoch()
+      }
     }
   }
 
+  private def bufferFrame(): DataFrame =
+    GraftSqlBridge.localFrame(spark, bufferedSchema, buffered.toVector)
+
   /** Persist the in-memory buffer into the parquet delta (the durable
-    * point; no-op when empty). */
+    * point; no-op when empty). A resident version appends the buffered
+    * rows to its own. */
   def flush(): Unit = if (buffered.nonEmpty) {
-    import scala.jdk.CollectionConverters._
-    orderedSingle(spark.createDataFrame(buffered.toList.asJava,
-      bufferedSchema)).write.mode("append").parquet(deltaPath)
-    buffered.clear()
-    bufferedSchema = null
-    bumpEpoch()
+    orderedSingle(bufferFrame()).write.mode("append").parquet(deltaPath)
+    synchronized {
+      val (rows, schema) = (buffered.toVector, bufferedSchema)
+      buffered.clear()
+      bufferedSchema = null
+      files = files match {
+        case r: Resident if sameFields(r.schema, schema) =>
+          residentOrLarge(r.schema, r.rows ++ rows)
+        case _: Resident => Cold
+        case other => other
+      }
+      bumpEpoch()
+    }
   }
 
   // ---- mutation epoch ----
@@ -217,17 +337,39 @@ class DeltaStore(spark: SparkSession, root: String) {
       spark.read.schema(schema).parquet(path))
   }
 
-  /** Merged read view: base ∪ delta (DeltaIterator analog). The
-    * buffered rows enter as a LocalRelation — Catalyst folds/broadcasts
-    * them like any small side. */
-  def read(): DataFrame = {
-    import scala.jdk.CollectionConverters._
+  /** Merged read view: base ∪ delta (DeltaIterator analog). A resident
+    * store returns one `LocalRelation` of the file rows then the
+    * buffered rows, built once per version; any other reads its files
+    * and adds the buffered rows as a `LocalRelation`, which Catalyst
+    * folds/broadcasts like any small side. */
+  def read(): DataFrame = synchronized {
+    serving match {
+      case Some(r) =>
+        if (residentFrame == null || residentFrame._1 != mutEpoch ||
+            !(residentFrame._2 eq r))
+          residentFrame = (mutEpoch, r,
+            GraftSqlBridge.localFrame(spark, r.schema, r.rows ++ buffered))
+        residentFrame._3
+      case None =>
+        residentFrame = null
+        fileBackedRead()
+    }
+  }
+
+  /** [[read]] from the files and the buffer, resident or not. */
+  private[graft] def fileBackedRead(): DataFrame = synchronized {
+    if (buffered.isEmpty) fileRead()
+    else fileRead().unionByName(bufferFrame())
+  }
+
+  /** The current file version: base ∪ delta parts. */
+  private def fileRead(): DataFrame = {
     val base = baseDf()
     val withFiles =
       if (!exists(deltaPath)) base
       else {
         // Spark orders a multi-file read by SIZE; the scan-order
-        // contract (insert order — see rewriteBase scaladoc) needs the
+        // contract (insert order — see replaceTable scaladoc) needs the
         // delta PARTS in append order, so a small store unions its
         // delta files oldest-first (Union concatenates child
         // partitions in order). Large stores take the one-shot
@@ -242,9 +384,7 @@ class DeltaStore(spark: SparkSession, root: String) {
         else parts.foldLeft(base)((acc, p) =>
           acc.unionByName(partDf(p, base.schema)))
       }
-    if (buffered.isEmpty) withFiles
-    else withFiles.unionByName(
-      spark.createDataFrame(buffered.toList.asJava, bufferedSchema))
+    withFiles
   }
 
   // ---- statement savepoint (trigger atomicity) ----
@@ -257,8 +397,9 @@ class DeltaStore(spark: SparkSession, root: String) {
   // snapshot is buffered-rows + the delta file SET, with the base dir
   // backed up lazily on the first in-transaction rewrite.
   private var txnActive = false
-  private var txnBuffered: List[org.apache.spark.sql.Row] = null
-  private var txnBufferedSchema: org.apache.spark.sql.types.StructType = _
+  private var txnBuffered: List[InternalRow] = null
+  private var txnBufferedSchema: StructType = _
+  private var txnFiles: Files = Cold
   private var txnDeltaFiles: Set[String] = Set.empty
   private var txnBaseVer = 0L
   private var txnDeltaVer = 0L
@@ -267,10 +408,11 @@ class DeltaStore(spark: SparkSession, root: String) {
     else fs.listStatus(new Path(deltaPath)).filter(_.isFile)
       .map(_.getPath.getName).toSet
 
-  def beginTxn(): Unit = {
+  def beginTxn(): Unit = synchronized {
     txnActive = true
     txnBuffered = buffered.toList
     txnBufferedSchema = bufferedSchema
+    txnFiles = files
     txnDeltaFiles = deltaFileNames
     txnBaseVer = baseVer
     txnDeltaVer = deltaVer
@@ -282,7 +424,7 @@ class DeltaStore(spark: SparkSession, root: String) {
     txnBufferedSchema = null
   }
 
-  def rollbackTxn(): Unit = {
+  def rollbackTxn(): Unit = synchronized {
     if (!txnActive) return
     buffered.clear()
     if (txnBuffered != null) buffered ++= txnBuffered
@@ -304,6 +446,8 @@ class DeltaStore(spark: SparkSession, root: String) {
       fs.listStatus(new Path(deltaPath)).filter(_.isFile)
         .filterNot(st => txnDeltaFiles.contains(st.getPath.getName))
         .foreach(st => fs.delete(st.getPath, false))
+    // the pinned files are back, and so is what the driver held of them
+    files = txnFiles
     txnActive = false
     txnBuffered = null
     txnBufferedSchema = null
@@ -312,20 +456,17 @@ class DeltaStore(spark: SparkSession, root: String) {
 
   /** Retire the current delta version: appends go to a fresh one, and
     * the old parts stay readable for [[KeepVersions]] versions (a
-    * savepoint pins its own, so rollback flips back to it). */
+    * savepoint pins its own, so rollback flips back to it). The fresh
+    * version's directory is made at once: a reopened store takes the
+    * highest delta version, which must not be the retired one. */
   private def discardDelta(): Unit = {
-    if (!exists(deltaPath)) return
+    if (deltaFileCount() == 0) return
     deltaVer += 1
+    fs.mkdirs(new Path(deltaPath))
     collectGarbage(DeltaVerRe, deltaVer, txnDeltaVer)
     bumpEpoch()
   }
 
-  /** Versioned base rewrite shared by compact/truncate/alter: write the
-    * new base fully into `base-N+1`, then flip the version pointer. A
-    * crash mid-sequence leaves the old version current; a concurrent
-    * reader's resolved plan keeps reading `base-N`, whose files survive
-    * the grace window — no delete-then-rename gap. Single-writer
-    * discipline assumed, as in the reference's background merge. */
   /** MySQL's table scan order is INSERT order, and the statement tier
     * leans on it: `UPDATE … LIMIT 1` touches the FIRST matching row,
     * IGNORE's per-row collision skip walks in order, and the MTR
@@ -342,33 +483,60 @@ class DeltaStore(spark: SparkSession, root: String) {
   private def smallStore: Boolean =
     dirBytes(basePath) + dirBytes(deltaPath) < SingleFileBytes
 
-  private def rewriteBase(df0: DataFrame): Unit = {
-    val df = if (smallStore) orderedSingle(df0) else df0
-    val next = baseVer + 1
-    df.write.mode("overwrite").parquet(baseDirOf(next))
-    promoteBase(next, df0.schema)
-  }
-
   /** Write `df` as the new base and clear the delta: the one base
-    * rewrite behind compact, truncate, rewriteWith and ALTER. `df` is
+    * rewrite behind compact, truncate, rewriteWith and ALTER. It writes
+    * the new base fully into `base-N+1`, then flips the version
+    * pointer: a crash mid-sequence leaves the old version current, and
+    * a concurrent reader's resolved plan keeps reading `base-N`, whose
+    * files survive the grace window — no delete-then-rename gap.
+    * Single-writer discipline assumed, as in the reference's background
+    * merge. `df` is
     * planned before the buffer is cleared (the buffered rows entered
     * it as a LocalRelation copy) and reads the retired delta version,
-    * which the grace window keeps. */
-  private def replaceTable(df: DataFrame): Unit = {
-    rewriteBase(df)
-    buffered.clear()
-    bufferedSchema = null
-    discardDelta()
+    * which the grace window keeps. The new version is seeded with
+    * `known`, else with `df`'s rows when the driver holds them, else —
+    * for a resident store, whose rewrite writes one ordered file — with
+    * the rows the write job observed in its single task (a list
+    * aggregate beside the write, so it costs no job of its own). */
+  private def replaceTable(df: DataFrame,
+                           known: Option[Vector[InternalRow]] = None): Unit = {
+    val held = known.orElse(heldRows(df))
+    val small = smallStore
+    val ordered = if (small) orderedSingle(df) else df
+    val captured =
+      if (held.isEmpty && small && df.columns.nonEmpty &&
+          serving.isDefined) {
+        import org.apache.spark.sql.functions.{col, collect_list, struct}
+        val obs = org.apache.spark.sql.Observation()
+        Some(obs -> ordered.observe(obs, collect_list(struct(
+          df.columns.toSeq.map(c => col(s"`${c.replace("`", "``")}`")): _*))))
+      } else None
+    val next = baseVer + 1
+    captured.fold(ordered)(_._2).write.mode("overwrite")
+      .parquet(baseDirOf(next))
+    val seed = held.orElse(captured.flatMap { case (obs, _) =>
+      try {
+        val row = scala.concurrent.Await.result(obs.future,
+          scala.concurrent.duration.Duration(10, "s"))
+        Some(toInternal(df.schema, row.getSeq[Row](0).iterator))
+      } catch { case _: java.util.concurrent.TimeoutException => None }
+    })
+    synchronized {
+      buffered.clear()
+      bufferedSchema = null
+      promoteBase(next, df.schema, seed)
+      discardDelta()
+    }
   }
 
   /** Fold the delta into the base and clear it (background-merge analog). */
   def compact(): Unit =
-    if (exists(deltaPath) || buffered.nonEmpty) replaceTable(read())
+    if (deltaFileCount() > 0 || buffered.nonEmpty) replaceTable(read())
 
   /** TRUNCATE analog (the reference's TianmuTable::Truncate,
     * core/tianmu_table.h:76): keep the schema, drop all rows — base is
     * overwritten with an empty frame, delta cleared. */
-  def truncate(): Unit = replaceTable(baseDf().limit(0))
+  def truncate(): Unit = replaceTable(baseDf().limit(0), Some(Vector.empty))
 
   /** Rows currently sitting in the unmerged delta (buffered + spilled),
     * counted on the driver: the buffer's size plus the row counts in
@@ -474,4 +642,16 @@ object DeltaStore {
     * parquet delta; also the largest `INSERT … SELECT` result the
     * statement runner collects to the driver instead of staging. */
   val BufferCap = 65536
+
+  /** What the driver holds of a store's current file version (base ∪
+    * delta parts): its rows ([[Resident]]), nothing because it is past
+    * the cap ([[Large]]), or nothing yet ([[Cold]]: the next read
+    * decides). */
+  private sealed trait Files
+  private case object Cold extends Files
+  private case object Large extends Files
+  /** The file version's rows in scan order, typed by `schema` (the
+    * base's read schema, which a file-backed read reports). */
+  private final case class Resident(schema: StructType,
+                                    rows: Vector[InternalRow]) extends Files
 }

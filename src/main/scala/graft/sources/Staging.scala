@@ -56,8 +56,10 @@ object Staging {
       () => Nil)
 
   /** Run `body`, then delete the staging directories it wrote: for a
-    * caller, such as one SQL statement, that has consumed its staged
-    * frames when it returns. Nested scopes delete only their own. */
+    * caller that has consumed its staged frames when it returns — one
+    * SQL statement, or a driver that runs a query built over staged
+    * frames (packing, auto-increment) to completion. Nested scopes
+    * delete only their own. */
   def scoped[T](body: => T): T = {
     val dirs = scala.collection.mutable.Buffer[String]()
     scopes.set(dirs :: scopes.get)
@@ -70,12 +72,28 @@ object Staging {
   }
 
   def stage(df: DataFrame, tag: String,
-            ordered: Boolean = false): DataFrame = {
+            ordered: Boolean = false): DataFrame =
+    staged(df, tag, ordered).frame
+
+  /** A staged frame and the directory that holds it. */
+  final case class Staged(frame: DataFrame, dir: String) {
+    /** Delete the directory, once nothing reads `frame` any more (a
+      * loop that stages each step from the previous one). */
+    def delete(): Unit =
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  /** [[stage]], keeping the directory: it is deleted by [[Staged.delete]]
+    * or when the innermost [[scoped]] call returns. Outside a scope
+    * nothing deletes it, so a caller that returns a staged frame leaves
+    * it to the caller that consumes the frame to scope. */
+  def staged(df: DataFrame, tag: String,
+             ordered: Boolean = false): Staged = {
     val top = java.nio.file.Files
       .createTempDirectory(s"graft-stage-$tag").toString
     scopes.get.headOption.foreach(_ += top)
     val dir = top + "/data"
-    if (ordered) {
+    Staged(if (ordered) {
       import org.apache.spark.sql.functions._
       df.withColumn("__stage_order", monotonically_increasing_id())
         .write.parquet(dir)
@@ -84,6 +102,6 @@ object Staging {
     } else {
       df.write.parquet(dir)
       df.sparkSession.read.parquet(dir)
-    }
+    }, top)
   }
 }

@@ -1386,7 +1386,7 @@ class StatementRunner(spark: SparkSession) {
     refreshTableView(table, store)
     fireAfterInsert(table, aligned)
     import spark.implicits._
-    Seq((table, rows.toLong)).toDF("table_name", "rows_inserted")
+    dmlResult(table, "rows_inserted" -> rows.toLong)
   }
 
   private def runInsert(table0: String, colList: String,
@@ -1407,7 +1407,7 @@ class StatementRunner(spark: SparkSession) {
     import spark.implicits._
     // a VALUES batch is a LocalRelation: its rows count on the driver
     val n = localPlanRows(aligned).fold(aligned.count())(_.length.toLong)
-    Seq((table, n)).toDF("table_name", "rows_inserted")
+    dmlResult(table, "rows_inserted" -> n)
   }
 
   /** Every SELECT-sourced insert (`INSERT`, `REPLACE` and `CREATE
@@ -1527,7 +1527,7 @@ class StatementRunner(spark: SparkSession) {
       spark.sql(MySqlDialect.rewrite(selectEff)), colList,
       checkPk = true)(store.append)
     import spark.implicits._
-    Seq((table, n)).toDF("table_name", "rows_inserted")
+    dmlResult(table, "rows_inserted" -> n)
   }
 
   /** `INSERT IGNORE INTO t [cols] VALUES …`: batch rows that duplicate
@@ -1570,7 +1570,7 @@ class StatementRunner(spark: SparkSession) {
     refreshTableView(table, store)
     fireAfterInsert(table, survivors)
     import spark.implicits._
-    Seq((table, n)).toDF("table_name", "rows_inserted")
+    dmlResult(table, "rows_inserted" -> n)
   }
 
   /** One column definition (or table-level constraint) from a CREATE
@@ -2166,8 +2166,7 @@ class StatementRunner(spark: SparkSession) {
       refreshTableView(table, store)
       fireAfterInsert(table, fired)
       import spark.implicits._
-      return Seq((table, 0L, n)).toDF(
-        "table_name", "rows_updated", "rows_inserted")
+      return dmlResult(table, "rows_updated" -> 0L, "rows_inserted" -> n)
     }
     val keys = pkOf(table)
     if (triggers.values.exists(_.table == table.toLowerCase))
@@ -2199,8 +2198,8 @@ class StatementRunner(spark: SparkSession) {
       updated.unionByName(inserted)
     } finally refreshTableView(table, store)
     import spark.implicits._
-    Seq((table, matchedCount, batch.count() - matchedCount))
-      .toDF("table_name", "rows_updated", "rows_inserted")
+    dmlResult(table, "rows_updated" -> matchedCount,
+      "rows_inserted" -> (batch.count() - matchedCount))
   }
 
   /** ON DUPLICATE KEY UPDATE over a trigger-bearing table: MySQL runs
@@ -2342,8 +2341,7 @@ class StatementRunner(spark: SparkSession) {
       withUpdates.unionByName(insertedDf)
     } finally refreshTableView(table, store)
     import spark.implicits._
-    Seq((table, updated, inserted)).toDF(
-      "table_name", "rows_updated", "rows_inserted")
+    dmlResult(table, "rows_updated" -> updated, "rows_inserted" -> inserted)
   }
 
   /** MySQL multi-table UPDATE (`UPDATE t1 JOIN t2 ON … SET t1.c = …`):
@@ -2421,8 +2419,7 @@ class StatementRunner(spark: SparkSession) {
       finally refreshTableView(t, store)
       (t, StatementRunner.observedCount(obs)(m.count()))
     }
-    import spark.implicits._
-    counts.toDF("table_name", "rows_matched")
+    dmlRows("rows_matched", counts)
   }
 
   /** MySQL safe-update mode (`SET sql_safe_updates=1`, issue781.test):
@@ -2543,7 +2540,7 @@ class StatementRunner(spark: SparkSession) {
     // finally: a failed rewrite may still have compacted the base files
     } finally refreshTableView(table, store)
     import spark.implicits._
-    Seq((table, deleted)).toDF("table_name", "rows_deleted")
+    dmlResult(table, "rows_deleted" -> deleted)
   }
 
   /** `table`'s rows read through its view, with a `__del` column that
@@ -2574,7 +2571,7 @@ class StatementRunner(spark: SparkSession) {
     finally refreshTableView(table, store)
     fireDeleteTriggers(table, "AFTER", rows, doomed.schema)
     import spark.implicits._
-    Seq((table, rows.length.toLong)).toDF("table_name", "rows_deleted")
+    dmlResult(table, "rows_deleted" -> rows.length.toLong)
   }
 
   /** Parse a `col = expr, …` assignment list (shared by UPDATE,
@@ -2655,7 +2652,7 @@ class StatementRunner(spark: SparkSession) {
     refreshTableView(table, store)
     fireAfterInsert(table, aligned)
     import spark.implicits._
-    Seq((table, 1L)).toDF("table_name", "rows_inserted")
+    dmlResult(table, "rows_inserted" -> 1L)
   }
 
   /** A MySQL ORDER BY list (`a DESC, b`) as sort columns. */
@@ -2835,7 +2832,7 @@ class StatementRunner(spark: SparkSession) {
       val n = updateRowWise(table, store, df.select(
         df.columns.toSeq.map(col) ++ ((cond <=> true) +: newValues(df)): _*),
         ignore)
-      return Seq((table, n)).toDF("table_name", "rows_updated")
+      return dmlResult(table, "rows_updated" -> n)
     }
     // the rewrite counts the rows its condition selects; a WHERE with a
     // subquery, or one that is not deterministic, is counted on its
@@ -2850,9 +2847,8 @@ class StatementRunner(spark: SparkSession) {
       else df.observe(obs, org.apache.spark.sql.functions.count_if(
         cond <=> true))))
     finally refreshTableView(table, store)
-    Seq((table, counted.getOrElse(StatementRunner.observedCount(obs)(
-        prior.filter(cond <=> true).count()))))
-      .toDF("table_name", "rows_updated")
+    dmlResult(table, "rows_updated" -> counted.getOrElse(
+      StatementRunner.observedCount(obs)(prior.filter(cond <=> true).count())))
   }
 
   /** Row-wise UPDATE, for a table with UPDATE triggers and for UPDATE
@@ -5033,18 +5029,37 @@ class StatementRunner(spark: SparkSession) {
             throw e
         } finally dmlTxnDepth -= 1
       }
-    val dmlCols = Set("rows_inserted", "rows_updated", "rows_deleted",
-      "rows_matched", "rows_loaded")
-    df.columns.find(dmlCols) foreach { c =>
-      scala.util.Try(df.select(c).first().get(0) match {
-        case l: Long => lastRowCount = l
-        case i: Int => lastRowCount = i.toLong
-        case _ =>
-      })
-    }
+    if (dmlCount != null && (dmlCount._1 eq df))
+      dmlCount._2.foreach(lastRowCount = _)
     df
   }
   private var lastRowCount: Long = 0L
+  /** The last [[dmlRows]] frame and the ROW_COUNT() it carries. */
+  private var dmlCount: (DataFrame, Option[Long]) = null
+
+  /** The result of a DML statement on `table`: one row of its name and
+    * the named counts. */
+  private def dmlResult(table: String, counts: (String, Long)*): DataFrame =
+    dmlRows(counts.map(_._1), Seq(table -> counts.map(_._2)))
+  private def dmlRows(col: String, counts: Seq[(String, Long)]): DataFrame =
+    dmlRows(Seq(col), counts.map { case (t, n) => t -> Seq(n) })
+  /** A DML result frame: per table, its name and its counts under
+    * `cols`. The first row's first count is the statement's
+    * ROW_COUNT(), recorded here with the frame, so [[runInner]] reads
+    * it without executing the frame. Every DML statement builds its
+    * result here. */
+  private def dmlRows(cols: Seq[String],
+                      rows: Seq[(String, Seq[Long])]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField,
+      StructType}
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (t, ns) =>
+        org.apache.spark.sql.Row.fromSeq(t +: ns) }: _*),
+      StructType(StructField("table_name", StringType) +:
+        cols.map(StructField(_, LongType, nullable = false))))
+    dmlCount = (df, rows.headOption.map(_._2.head))
+    df
+  }
   // first auto-generated id of the LAST insert (MySQL LAST_INSERT_ID();
   // update_v1.test); assignAutoInc refreshes it from the per-partition
   // stats it already collects driver-side
@@ -5200,8 +5215,7 @@ class StatementRunner(spark: SparkSession) {
         Seq(res.clean.count(), res.rejects.count()))
       refreshTableView(table, store)
       import spark.implicits._
-      Seq((table, loaded, rejected))
-        .toDF("table_name", "rows_loaded", "rows_rejected")
+      dmlResult(table, "rows_loaded" -> loaded, "rows_rejected" -> rejected)
 
     case RoughlyRe(aggList, table, whereClause) =>
       runRoughly(aggList, table, whereClause)
@@ -5624,8 +5638,8 @@ class StatementRunner(spark: SparkSession) {
         else s.replaceAll(
           "(?i)\\b" + java.util.regex.Pattern.quote(table) + "\\.", "")
       import spark.implicits._
-      Seq((table, runLimited(table, unq(whereClause), unq(orderClause),
-        n.toInt, None))).toDF("table_name", "rows_deleted")
+      dmlResult(table, "rows_deleted" -> runLimited(table, unq(whereClause),
+        unq(orderClause), n.toInt, None))
 
     case DeleteRe(ignoreMod, table, whereClause) =>
       if (ignoreMod != null)
@@ -5639,7 +5653,7 @@ class StatementRunner(spark: SparkSession) {
               if e.isInstanceOf[org.apache.spark.SparkThrowable] &&
                 String.valueOf(e.getMessage).contains("SCALAR_SUBQUERY") =>
             import spark.implicits._
-            Seq((table, 0L)).toDF("table_name", "rows_deleted")
+            dmlResult(table, "rows_deleted" -> 0L)
         }
       else
       runDelete(table, whereClause)
@@ -5703,13 +5717,12 @@ class StatementRunner(spark: SparkSession) {
           fireDeleteTriggers(t, "AFTER", trigRows, store.read().schema)
         (t, n)
       }
-      counts.toDF("table_name", "rows_matched")
+      dmlRows("rows_matched", counts)
 
     case UpdateLimitRe(table, setList, whereClause, orderClause, n) =>
       import spark.implicits._
-      Seq((table, runLimited(table, whereClause, orderClause, n.toInt,
-        Some(parseAssigns(setList, "UPDATE SET")))))
-        .toDF("table_name", "rows_updated")
+      dmlResult(table, "rows_updated" -> runLimited(table, whereClause,
+        orderClause, n.toInt, Some(parseAssigns(setList, "UPDATE SET"))))
 
     case UpdateRe(ignoreMod, table, setList, whereClause) =>
       // the regex split is not paren-aware: a scalar-subquery SET value

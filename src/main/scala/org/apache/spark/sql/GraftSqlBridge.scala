@@ -1,6 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into `private[sql]` Spark internals, the standard pattern for
   * Spark-extension libraries that define native Catalyst expressions
@@ -23,4 +27,12 @@ object GraftSqlBridge {
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** A frame over rows already in Catalyst's internal form: one
+    * `LocalRelation` with `schema`'s fields (names, types, nullability,
+    * metadata), with no per-row conversion. */
+  def localFrame(spark: SparkSession, schema: StructType,
+                 rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

@@ -22,7 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * which must equal the buffered rows plus a Spark count of the delta
   * parts. A frame read before a step must still return the
   * rows from before it: no step but a rollback deletes files a reader
-  * may hold. */
+  * may hold. Residency never changes an answer: after every step
+  * `read()` equals a file-backed read of the current files plus the
+  * buffer, cell by cell, in order and with the same schema, and a
+  * table of at most `BufferCap` rows reads as one `LocalRelation`. */
 class DeltaStoreModelSpec extends AnyFunSuite {
   private def spark = TestSession.spark
 
@@ -129,10 +132,32 @@ class DeltaStoreModelSpec extends AnyFunSuite {
       assert(store.deltaCount() === store.bufferedCount + sparkDeltaCount,
         s"deltaCount() is not the buffer plus a Spark count of the " +
           s"delta parts after $what")
+      checkResidency(what)
       assert(store.mutationEpoch >= e0, s"epoch went back after $what")
       if (after != before)
         assert(store.mutationEpoch > e0,
           s"read() changed but mutationEpoch did not after $what")
+    }
+
+    /** `read()` against a file-backed read of the same version: equal
+      * schemas (names, types, nullability, metadata) and equal rows in
+      * order; one `LocalRelation` exactly while the table fits the cap,
+      * and never more than the cap held besides the buffer. */
+    def checkResidency(what: String): Unit = {
+      val (res, files) = (store.read(), store.fileBackedRead())
+      assert(res.schema === files.schema,
+        s"read() schema differs from a file-backed read after $what")
+      assert(res.collect().toSeq === files.collect().toSeq,
+        s"read() rows differ from a file-backed read after $what")
+      val local = res.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      assert(local === (model.size <= DeltaStore.BufferCap),
+        s"resident is $local for ${model.size} rows after $what")
+      assert(store.residentCount <= DeltaStore.BufferCap,
+        s"${store.residentCount} rows resident after $what")
+      if (model.size > DeltaStore.BufferCap)
+        assert(store.residentCount === 0,
+          s"rows held past the cap after $what")
     }
 
     def apply(op: Op): Unit = op match {
@@ -189,6 +214,52 @@ class DeltaStoreModelSpec extends AnyFunSuite {
       f"${(System.nanoTime() - t0) / 1e9}%.1f s")
   }
 
+  /** `BufferCap + 1` rows with keys below every generated one, so a
+    * `RewriteFilter(-21)` deletes exactly them. */
+  private val pastCap: Rows =
+    List.tabulate(DeltaStore.BufferCap + 1)(i => (-100 - i, Some("p")))
+
+  test("residency follows BufferCap both ways, in and out of a " +
+      "transaction, and a reopened store reads the same rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dscap").toString
+    val run = new Run(dir, List((1, Some("a")), (2, None)))
+    def resident = run.store.residentCount > 0
+    run(AppendLocal(List((3, Some("b")))))
+    run(Flush)
+    assert(resident, "a flushed small table is not resident")
+    // a rolled-back crossing restores the pinned version's residency
+    run(Txn(List(AppendFile(pastCap)), commit = false))
+    assert(resident, "rollback did not restore residency")
+    run(Txn(List(AppendFile(pastCap), RewriteFilter(-21), AppendLocal(
+      List((4, None)))), commit = false))
+    assert(resident)
+    // outside a transaction: past the cap, then a DELETE back under it
+    run(AppendFile(pastCap))
+    assert(run.store.residentCount === 0, "rows held past the cap")
+    run(AppendLocal(List((5, Some("c")))))
+    run(RewriteFilter(-21))
+    assert(resident, "a rewrite back under the cap is not resident")
+    // near the cap, buffered rows push the table past it
+    run(AppendFile(pastCap))
+    run(RewriteFilter(-65600))
+    assert(resident)
+    run(AppendLocal(List.tabulate(100)(i => (30 + i, None))))
+    assert(run.store.residentCount === 0, "rows held past the cap")
+    run(RewriteFilter(-21))
+    // committed crossings inside a transaction
+    run(Txn(List(AppendFile(pastCap), Compact), commit = true))
+    run(Txn(List(RewriteFilter(-21), AlterAdd), commit = true))
+    assert(resident)
+    run(AppendFile(pastCap))
+    val reopened = new DeltaStore(spark, s"$dir/store")
+    assert(run.observed(reopened.read()) === run.observed())
+    run(RewriteFilter(-21))
+    val reopened2 = new DeltaStore(spark, s"$dir/store")
+    assert(reopened2.read().collect().toSeq === run.store.read().collect().toSeq)
+    assert(reopened2.residentCount > 0, "a small reopened store is not " +
+      "loaded on its first read")
+  }
+
   test("a frame read before compact() or truncate() still returns its rows") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dsgrace").toString
     val run = new Run(dir, List((1, Some("a")), (2, None)))
@@ -243,24 +314,33 @@ class DeltaStoreModelSpec extends AnyFunSuite {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsnojob").toString
-    val store = new DeltaStore(spark, s"$dir/store")
-    val df = spark.range(5).selectExpr("CAST(id AS INT) AS k")
-    def readsWithNoJob(what: String)(op: => Unit): Unit = {
-      op
-      ListenerBridge.drain(sc)
-      jobs.set(0)
-      store.read()
-      ListenerBridge.drain(sc)
-      assert(jobs.get === 0, s"read() after $what ran ${jobs.get} job(s)")
-    }
+    // a store above BufferCap reads its files; a small one, written
+    // from a local frame, reads its resident rows
+    val big = spark.range(DeltaStore.BufferCap + 5)
+      .selectExpr("CAST(id AS INT) AS k")
+    val small = spark.createDataFrame(java.util.Arrays.asList(
+      (0 until 5).map(Row(_)): _*), StructType(Seq(StructField("k",
+        IntegerType))))
     sc.addSparkListener(listener)
-    try {
-      readsWithNoJob("writeBase")(store.writeBase(df))
-      readsWithNoJob("compact")({ store.append(df); store.compact() })
-      readsWithNoJob("rewriteWith")(store.rewriteWith(_.filter("k > 1")))
-      readsWithNoJob("ALTER ADD")(store.alterAddColumn("c", lit(1)))
-      readsWithNoJob("truncate")(store.truncate())
+    try Seq("above the cap" -> big, "resident" -> small).foreach {
+      case (size, df) =>
+        val dir = java.nio.file.Files.createTempDirectory("graft_dsnojob")
+        val store = new DeltaStore(spark, s"$dir/store")
+        def readsWithNoJob(what: String)(op: => Unit): Unit = {
+          op
+          ListenerBridge.drain(sc)
+          jobs.set(0)
+          store.read()
+          ListenerBridge.drain(sc)
+          assert(jobs.get === 0,
+            s"read() after $what ($size) ran ${jobs.get} job(s)")
+        }
+        readsWithNoJob("writeBase")(store.writeBase(df))
+        readsWithNoJob("flush")({ store.append(small); store.flush() })
+        readsWithNoJob("compact")({ store.append(df); store.compact() })
+        readsWithNoJob("rewriteWith")(store.rewriteWith(_.filter("k > 1")))
+        readsWithNoJob("ALTER ADD")(store.alterAddColumn("c", lit(1)))
+        readsWithNoJob("truncate")(store.truncate())
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -558,8 +558,8 @@ class LlmOpsSpec extends AnyFunSuite {
       "the last; totals conserve the corpus") {
     import org.apache.spark.sql.functions.col
     val docs = Engine.table(spark, sf, "documents")
-    val plan = operators.Packing.packPlan(docs, operators.Packing.PackBudget)
-      .collect()
+    val plan = sources.Staging.scoped(operators.Packing.packPlan(docs,
+      operators.Packing.PackBudget).collect())
     val b = operators.Packing.PackBudget
     assert(plan.nonEmpty)
     // chunk ids are dense 0..K-1
@@ -587,7 +587,8 @@ class LlmOpsSpec extends AnyFunSuite {
     // stage() freezes contents: roundtrip is exact
     val frame = docs.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("n_tok"))
-    val staged = sources.Staging.stage(frame, "spec")
+    val staging = sources.Staging.staged(frame, "spec")
+    val staged = staging.frame
     assert(staged.orderBy("doc_id").collect().toSeq ===
       frame.orderBy("doc_id").collect().toSeq)
     // executor-loss analog: every cached/checkpoint block dropped — a
@@ -600,10 +601,12 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(staged.orderBy("doc_id").collect().toSeq === before)
     // the partition-id-keyed prefix sum is reproducible run to run (the
     // staged __pid column is data, not a property of block placement)
-    val p1 = operators.Packing.packPlan(docs, operators.Packing.PackBudget)
-      .collect().toSeq
-    val p2 = operators.Packing.packPlan(docs, operators.Packing.PackBudget)
-      .collect().toSeq
+    val (p1, p2) = sources.Staging.scoped((
+      operators.Packing.packPlan(docs, operators.Packing.PackBudget)
+        .collect().toSeq,
+      operators.Packing.packPlan(docs, operators.Packing.PackBudget)
+        .collect().toSeq))
+    staging.delete()
     assert(p1 === p2)
   }
 
@@ -656,7 +659,8 @@ class LlmOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val docs = Engine.table(spark, sf, "documents")
     for (b <- Seq(64L, 333L, 1000000000L)) {
-      val plan = operators.Packing.packPlan(docs, b).collect()
+      val plan = sources.Staging.scoped(
+        operators.Packing.packPlan(docs, b).collect())
       val total = docs.select(expr("sum(size(split(text, ' ')))"))
         .first().getLong(0)
       assert(plan.map(_.getAs[Long]("n_tokens")).sum === total, s"budget $b")

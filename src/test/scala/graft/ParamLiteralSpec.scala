@@ -38,9 +38,17 @@ class ParamLiteralSpec extends AnyFunSuite {
   private lazy val orders = Engine.table(spark, sf, "orders")
     .select("o_orderkey", "o_custkey", "o_totalprice").collect()
 
+  /** `ord`: the orders table copied past [[DeltaStore.BufferCap]] rows,
+    * each copy's keys shifted by a multiple of 10^7 (copy 0 keeps the
+    * original keys), so the store is not resident and its statements
+    * run generated code over a file scan. */
   private lazy val runner = {
     val store = new DeltaStore(spark, s"$dir/ord")
-    store.writeBase(Engine.table(spark, sf, "orders"))
+    store.writeBase(Engine.table(spark, sf, "orders").crossJoin(
+      spark.range(DeltaStore.BufferCap / orders.length + 1)
+        .withColumnRenamed("id", "copy"))
+      .withColumn("o_orderkey", col("o_orderkey") + col("copy") * 10000000L)
+      .drop("copy"))
     val r = new StatementRunner(spark)
     r.attach("ord", store)
     r

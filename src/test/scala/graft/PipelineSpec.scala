@@ -133,8 +133,8 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val sf = TestSession.sf
     val docs = Engine.table(spark, sf, "documents")
-    val manifest = Pipeline.trainReady(docs, operators.Packing.PackBudget)
-      .collect()
+    val manifest = sources.Staging.scoped(
+      Pipeline.trainReady(docs, operators.Packing.PackBudget).collect())
     val b = operators.Packing.PackBudget
     // classifier keeps a strict, nonempty subset
     val nKept = docs.where(TextOps.scoreMicro("text") > 0L).count()

@@ -1,6 +1,9 @@
 """Tests of tools/htap_classes.py. Run: python3 -m unittest discover tools"""
+import contextlib
+import io
 import json
 import os
+import sys
 import tempfile
 import unittest
 
@@ -72,6 +75,67 @@ class ClassesTest(unittest.TestCase):
         self.assertEqual((r["n"], r["jobs"], r["jobs_max"], r["job_ms"]),
                          (1, 0, 0, 0))
         self.assertAlmostEqual(r["driver_ms"], 20.0)
+
+    def test_table_of_labels(self):
+        cases = {
+            "SELECT o_orderkey, o_custkey FROM ord WHERE o_orderkey = 5": "ord",
+            "SELECT id, cust, amount, tag FROM t3 WHERE id = 7": "small",
+            "INSERT INTO t3 SELECT o_orderkey + 1, o_custkey FROM ord "
+            "WHERE o_orderkey BETWEEN 1 AND 50": "small",
+            "INSERT INTO ord VALUES (1, 2, 'O')": "ord",
+            "LOAD DATA INFILE '/x/load_0.csv' INTO TABLE t12 "
+            "FIELDS TERMINATED BY ','": "small",
+            "SELECT id, cust INTO OUTFILE '/x/out_9' FIELDS TERMINATED BY ',' "
+            "FROM t4 WHERE id BETWEEN 1 AND 101": "small",
+            "UPDATE t2 SET amount = amount + 7 WHERE id BETWEEN 1 AND 6": "small",
+            "DELETE FROM ord WHERE o_orderkey BETWEEN 9 AND 19": "ord",
+            "OPTIMIZE TABLE ord": "ord",
+            "SELECT ROUGHLY COUNT(*) AS n FROM ord_packed WHERE o_totalprice "
+            "BETWEEN 1.00 AND 2.00": "ord_packed",
+            "CREATE TABLE t9 (id BIGINT NOT NULL) ENGINE=TIANMU": "small",
+            "ord": "ord",
+        }
+        for label, want in cases.items():
+            self.assertEqual(htap_classes.table_of(label), want, label)
+
+    def test_split_by_table(self):
+        result = {"traced_ops": [
+            {"i": 1, "cls": "delete", "label": "DELETE FROM ord WHERE o_orderkey = 1"},
+            {"i": 2, "cls": "delete", "label": "DELETE FROM t1 WHERE id = 1"},
+            {"i": 3, "cls": "select_point", "label": "SELECT id FROM t1 WHERE id = 2"},
+        ]}
+        t = htap_classes.classes(SPANS, htap_classes.op_tables(result))
+        self.assertEqual(sorted(t), ["delete@ord", "delete@small",
+                                     "select_point@small"])
+        self.assertEqual((t["delete@ord"]["n"], t["delete@ord"]["p50_ms"]),
+                         (1, 100.0))
+        self.assertEqual(t["delete@small"]["jobs"], 2)
+        self.assertEqual(t["select_point@small"]["jobs"], 0)
+        # an op the result does not label keeps its class, marked unknown
+        t = htap_classes.classes(SPANS, {1: "ord"})
+        self.assertIn("delete@?", t)
+
+    def test_main_with_result(self):
+        with tempfile.TemporaryDirectory() as d:
+            spans = os.path.join(d, "spans.jsonl")
+            with open(spans, "w") as f:
+                f.write("\n".join(json.dumps(s) for s in SPANS) + "\n")
+            res = os.path.join(d, "result.json")
+            with open(res, "w") as f:
+                json.dump({"traced_ops": [
+                    {"i": 1, "label": "DELETE FROM ord WHERE o_orderkey = 1"},
+                    {"i": 2, "label": "DELETE FROM t1 WHERE id = 1"},
+                    {"i": 3, "label": "SELECT id FROM t1 WHERE id = 2"}]}, f)
+            out = io.StringIO()
+            argv = sys.argv
+            sys.argv = ["htap_classes.py", "--json", "--result", res, spans]
+            try:
+                with contextlib.redirect_stdout(out):
+                    htap_classes.main()
+            finally:
+                sys.argv = argv
+        self.assertEqual(sorted(json.loads(out.getvalue())),
+                         ["delete@ord", "delete@small", "select_point@small"])
 
     def test_reads_jsonl_and_renders(self):
         with tempfile.TemporaryDirectory() as d:
