@@ -75,7 +75,7 @@ object LocalFilterRule extends Rule[LogicalPlan] {
       f: LocalRelation => LocalRelation): Option[LogicalPlan] = plan match {
     case rel: LocalRelation => Some(f(rel))
     case a: SubqueryAlias => within(a.child)(f).map(c => a.copy(child = c))
-    case v: View if v.output == v.child.output =>
+    case v: View =>
       within(v.child)(f).map(c => v.copy(child = c))
     case _ => None
   }

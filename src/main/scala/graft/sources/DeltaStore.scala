@@ -31,15 +31,19 @@ import org.apache.spark.sql.types.StructType
   * no Spark job. Residency is a cache of the durable files, never a
   * substitute: every writer still writes its Parquet files, and the
   * rows a writer already holds seed the new version — a local frame
-  * given to [[writeBase]] or a rewrite, the buffer a [[flush]] writes
+  * given to [[writeBase]] or a rewrite (written as held, so the file
+  * and the seed are one evaluation), the buffer a [[flush]] writes
   * (after the resident rows), and the rows a rewrite of a resident
-  * store writes, which the write job itself observes. A version no
+  * store writes, which the write job itself observes (the first
+  * BufferCap of them; it seeds only if that is all). A version no
   * writer seeded (a reopened store, a file-backed append) is cold: the
   * next read sums the Parquet footers' row counts on the driver and,
   * at most the cap, loads the files with one collect. A version past
   * the cap drops its rows and reads the files as before. Memory bound:
-  * at most BufferCap resident rows besides the buffer, converted to
-  * Catalyst rows once per version, not per read.
+  * at most BufferCap resident rows besides the buffer, and only while
+  * the store's files are under `SingleFileBytes` (the one-file bound
+  * of a small store); converted to Catalyst rows once per version, not
+  * per read. Nothing bounds the sum over stores.
   */
 class DeltaStore(spark: SparkSession, root: String) {
   import DeltaStore.{BufferCap, Cold, Files, Large, Resident}
@@ -101,8 +105,7 @@ class DeltaStore(spark: SparkSession, root: String) {
       baseCacheDf = spark.read.schema(schema).parquet(baseDirOf(v))
       baseCacheVer = v
       partCache.clear()
-      files = seed.filter(_ => sameFields(baseCacheDf.schema, schema))
-        .fold[Files](Cold)(residentOrLarge(baseCacheDf.schema, _))
+      files = seed.fold[Files](Cold)(residentOrLarge(baseCacheDf.schema, _))
       bumpEpoch()
       collectGarbage(BaseVerRe, v, txnBaseVer)
     }
@@ -130,7 +133,8 @@ class DeltaStore(spark: SparkSession, root: String) {
   private var files: Files = Cold
   private def residentOrLarge(schema: StructType,
                               rows: Vector[InternalRow]): Files =
-    if (rows.size + buffered.size <= BufferCap) Resident(schema, rows)
+    if (rows.size + buffered.size <= BufferCap && smallStore)
+      Resident(schema, rows)
     else Large
 
   /** Same column names and types, in order (nullability and metadata
@@ -151,6 +155,13 @@ class DeltaStore(spark: SparkSession, root: String) {
       case l: LocalRelation => Some(l.data.toVector)
       case _ => None
     }
+
+  /** The frame a writer writes: the rows it holds, when it holds them,
+    * so the files and the seed come from one evaluation (a second
+    * planning of `df` would evaluate `NOW()` anew). */
+  private def writable(df: DataFrame,
+                       held: Option[Vector[InternalRow]]): DataFrame =
+    held.fold(df)(GraftSqlBridge.localFrame(spark, df.schema, _))
   private def localOnly(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.collectLeaves()
       .forall(_.isInstanceOf[LocalRelation])
@@ -169,7 +180,8 @@ class DeltaStore(spark: SparkSession, root: String) {
       fs.listStatus(new Path(p)).toSeq
         .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
     val rows = parquet.map(s => footerRowCount(s.getPath)).sum
-    if (rows + buffered.size > BufferCap) Large
+    if (rows + buffered.size > BufferCap ||
+        parquet.map(_.getLen).sum >= SingleFileBytes) Large
     else {
       val df = fileRead()
       Resident(df.schema,
@@ -222,11 +234,12 @@ class DeltaStore(spark: SparkSession, root: String) {
     * partitioning. */
   def writeBase(df: DataFrame): Unit = {
     val next = baseVer + 1
-    (if (localOnly(df) || smallStore) orderedSingle(df) else df)
+    val held = heldRows(df)
+    val frame = writable(df, held)
+    (if (localOnly(df) || smallStore) orderedSingle(frame) else frame)
       .write.mode("overwrite").parquet(baseDirOf(next))
     // a local frame seeds the version unless delta parts follow it
-    promoteBase(next, df.schema,
-      if (deltaFileCount() == 0) heldRows(df) else None)
+    promoteBase(next, df.schema, if (deltaFileCount() == 0) held else None)
     bumpEpoch()
   }
 
@@ -494,22 +507,32 @@ class DeltaStore(spark: SparkSession, root: String) {
     * planned before the buffer is cleared (the buffered rows entered
     * it as a LocalRelation copy) and reads the retired delta version,
     * which the grace window keeps. The new version is seeded with
-    * `known`, else with `df`'s rows when the driver holds them, else —
-    * for a resident store, whose rewrite writes one ordered file — with
-    * the rows the write job observed in its single task (a list
-    * aggregate beside the write, so it costs no job of its own). */
+    * `known`, else with `df`'s rows when the driver holds them (either
+    * is what the write writes), else — for a resident store, whose
+    * rewrite writes one ordered file — with the rows the write job
+    * observed in its single task: a list aggregate beside the write,
+    * so it costs no job of its own, that takes the first BufferCap rows
+    * and a count of all, so a rewrite past the cap (an upsert of a
+    * large batch) holds at most BufferCap rows and seeds nothing. */
   private def replaceTable(df: DataFrame,
                            known: Option[Vector[InternalRow]] = None): Unit = {
     val held = known.orElse(heldRows(df))
     val small = smallStore
-    val ordered = if (small) orderedSingle(df) else df
+    val frame = writable(df, held)
+    val ordered = if (small) orderedSingle(frame) else frame
     val captured =
       if (held.isEmpty && small && df.columns.nonEmpty &&
           serving.isDefined) {
-        import org.apache.spark.sql.functions.{col, collect_list, struct}
+        import org.apache.spark.sql.functions.{col, collect_list, count,
+          lit, monotonically_increasing_id, struct, when}
         val obs = org.apache.spark.sql.Observation()
-        Some(obs -> ordered.observe(obs, collect_list(struct(
-          df.columns.toSeq.map(c => col(s"`${c.replace("`", "``")}`")): _*))))
+        // the one ordered partition numbers its rows 0, 1, …; the list
+        // skips the NULLs past the first BufferCap
+        Some(obs -> ordered.withColumn("__wrow", monotonically_increasing_id())
+          .observe(obs, count(lit(1)), collect_list(when(
+            col("__wrow") < BufferCap, struct(df.columns.toSeq.map(c =>
+              col(s"`${c.replace("`", "``")}`")): _*))))
+          .drop("__wrow"))
       } else None
     val next = baseVer + 1
     captured.fold(ordered)(_._2).write.mode("overwrite")
@@ -518,7 +541,8 @@ class DeltaStore(spark: SparkSession, root: String) {
       try {
         val row = scala.concurrent.Await.result(obs.future,
           scala.concurrent.duration.Duration(10, "s"))
-        Some(toInternal(df.schema, row.getSeq[Row](0).iterator))
+        if (row.getLong(0) > BufferCap) None
+        else Some(toInternal(df.schema, row.getSeq[Row](1).iterator))
       } catch { case _: java.util.concurrent.TimeoutException => None }
     })
     synchronized {

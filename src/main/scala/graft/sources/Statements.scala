@@ -319,7 +319,7 @@ class StatementRunner(spark: SparkSession) {
   private val InsertSetRe: Regex =
     """(?is)^\s*INSERT\s+(?:LOW_PRIORITY\s+|DELAYED\s+|HIGH_PRIORITY\s+)?(?:INTO\s+)?`?(\w+)`?\s+SET\s+(.+?)\s*;?\s*$""".r
 
-  private def attachedStore(table: String): DeltaStore =
+  private[graft] def attachedStore(table: String): DeltaStore =
     stores.getOrElse(table.toLowerCase,
       throw new IllegalArgumentException(
         s"DML: table '$table' is not attached to this runner"))
@@ -2419,7 +2419,7 @@ class StatementRunner(spark: SparkSession) {
       finally refreshTableView(t, store)
       (t, StatementRunner.observedCount(obs)(m.count()))
     }
-    dmlRows("rows_matched", counts)
+    dmlRows(Seq("rows_matched"), counts.map { case (t, n) => t -> Seq(n) })
   }
 
   /** MySQL safe-update mode (`SET sql_safe_updates=1`, issue781.test):
@@ -5041,8 +5041,6 @@ class StatementRunner(spark: SparkSession) {
     * the named counts. */
   private def dmlResult(table: String, counts: (String, Long)*): DataFrame =
     dmlRows(counts.map(_._1), Seq(table -> counts.map(_._2)))
-  private def dmlRows(col: String, counts: Seq[(String, Long)]): DataFrame =
-    dmlRows(Seq(col), counts.map { case (t, n) => t -> Seq(n) })
   /** A DML result frame: per table, its name and its counts under
     * `cols`. The first row's first count is the statement's
     * ROW_COUNT(), recorded here with the frame, so [[runInner]] reads
@@ -5717,7 +5715,7 @@ class StatementRunner(spark: SparkSession) {
           fireDeleteTriggers(t, "AFTER", trigRows, store.read().schema)
         (t, n)
       }
-      dmlRows("rows_matched", counts)
+      dmlRows(Seq("rows_matched"), counts.map { case (t, n) => t -> Seq(n) })
 
     case UpdateLimitRe(table, setList, whereClause, orderClause, n) =>
       import spark.implicits._

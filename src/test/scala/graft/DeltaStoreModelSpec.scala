@@ -38,6 +38,8 @@ class DeltaStoreModelSpec extends AnyFunSuite {
   private case object Truncate extends Op
   private case object AlterAdd extends Op
   private case class RewriteFilter(minKey: Int) extends Op
+  /** A rewrite that unions in `rows` read from a Parquet file. */
+  private case class RewriteUnionFile(rows: Rows) extends Op
   private case class Txn(ops: List[Op], commit: Boolean) extends Op
 
   private val rowsGen: Gen[Rows] = Gen.choose(0, 4).flatMap(Gen.listOfN(_,
@@ -184,6 +186,13 @@ class DeltaStoreModelSpec extends AnyFunSuite {
         step(s"rewriteWith k > $minKey")(
           store.rewriteWith(_.filter(s"k > $minKey")))(
           { model = model.filter(_.head.asInstanceOf[Int] > minKey) })
+      case RewriteUnionFile(rows) =>
+        val (df, data) = frame(rows)
+        files += 1
+        val path = s"$dir/src-$files"
+        df.coalesce(1).write.parquet(path)
+        step(s"rewriteWith ∪ a file of ${rows.size}")(store.rewriteWith(
+          _.unionByName(spark.read.parquet(path))))(model ++= data)
       case Txn(ops, commit) =>
         val (savedModel, savedExtra) = (model, extra)
         step("beginTxn")(store.beginTxn())(())
@@ -258,6 +267,42 @@ class DeltaStoreModelSpec extends AnyFunSuite {
     assert(reopened2.read().collect().toSeq === run.store.read().collect().toSeq)
     assert(reopened2.residentCount > 0, "a small reopened store is not " +
       "loaded on its first read")
+  }
+
+  test("a rewrite of a resident store observes at most BufferCap of the " +
+      "rows it writes, and holds none past the cap") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsbound").toString
+    val run = new Run(dir, List((1, Some("a")), (2, None), (3, Some("b"))))
+    val lists = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = ObservedLists(lists)
+    /** The sizes of the row lists `op`'s executions observed. */
+    def listsIn(op: => Unit): Seq[Int] = {
+      ListenerBridge.drain(spark.sparkContext)
+      lists.clear()
+      op
+      ListenerBridge.drain(spark.sparkContext)
+      lists.toArray.toSeq.map(_.asInstanceOf[Int])
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(run.store.residentCount === 3)
+      // a sort of the resident rows is not folded on the driver: the
+      // write observes its rows and seeds the new version with them
+      assert(listsIn(run.store.rewriteWith(_.sort("k"))) === Seq(3))
+      assert(run.store.residentCount === 3)
+      run.checkResidency("a sorted rewrite")
+      // past the cap the write observes only the first BufferCap rows,
+      // and the version holds none
+      assert(listsIn(run(RewriteUnionFile(pastCap))) ===
+        Seq(DeltaStore.BufferCap))
+      assert(run.store.residentCount === 0, "rows held past the cap")
+      // a store past the cap observes nothing; its next read loads the
+      // small version the rewrite wrote
+      assert(listsIn(run(RewriteFilter(-21))) === Nil)
+      assert(run.store.residentCount === 3)
+      assert(listsIn(run(RewriteUnionFile(List((7, Some("c")))))) === Seq(4))
+      assert(run.store.residentCount === 4)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("a frame read before compact() or truncate() still returns its rows") {
@@ -343,4 +388,21 @@ class DeltaStoreModelSpec extends AnyFunSuite {
         readsWithNoJob("truncate")(store.truncate())
     } finally sc.removeSparkListener(listener)
   }
+}
+
+/** Adds the size of each row list a successful execution observed (an
+  * `Observation`'s `collect_list`) to `sizes`. */
+private final case class ObservedLists(
+    sizes: java.util.Queue[Int])
+    extends org.apache.spark.sql.util.QueryExecutionListener {
+  override def onSuccess(f: String,
+                         qe: org.apache.spark.sql.execution.QueryExecution,
+                         d: Long): Unit =
+    qe.observedMetrics.values.foreach(_.toSeq.foreach {
+      case l: scala.collection.Seq[_] => sizes.add(l.size)
+      case _ =>
+    })
+  override def onFailure(f: String,
+                         qe: org.apache.spark.sql.execution.QueryExecution,
+                         e: Exception): Unit = ()
 }

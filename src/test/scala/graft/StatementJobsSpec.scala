@@ -136,6 +136,47 @@ class StatementJobsSpec extends AnyFunSuite {
     lookups(after)
   }
 
+  test("an upsert of more than BufferCap rows into a resident table " +
+      "observes at most BufferCap of them and holds none") {
+    val r = freshRunner()
+    table200(r, "ru")
+    assert(rowCount(r, "DELETE FROM ru WHERE id = 0") === 1)
+    val store = r.attachedStore("ru")
+    assert(store.residentCount === 199)
+    spark.range(DeltaStore.BufferCap + 1).createOrReplaceTempView("ru_big")
+    val lists = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = ObservedLists(lists)
+    spark.listenerManager.register(listener)
+    try {
+      ListenerBridge.drain(spark.sparkContext)
+      r.run("INSERT INTO ru SELECT CAST(id AS INT), 1, 'y' FROM ru_big " +
+        "ON DUPLICATE KEY UPDATE v = VALUES(v)")
+      ListenerBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(lists.toArray.toSeq === Seq(DeltaStore.BufferCap),
+      "the upsert's write did not observe exactly BufferCap rows")
+    assert(store.residentCount === 0, "rows held past the cap")
+    assert(r.run("SELECT COUNT(*) FROM ru").first().getLong(0) ===
+      DeltaStore.BufferCap + 1)
+    assert(scan(r, "SELECT id, v, tag FROM ru WHERE id IN (5, 70000)")
+      .map(_.mkString(",")) === Seq("5,1,x"))
+  }
+
+  test("CREATE TABLE … AS SELECT NOW() over a resident table holds the " +
+      "rows its file holds") {
+    val r = freshRunner()
+    table200(r, "rn")
+    assert(rowCount(r, "DELETE FROM rn WHERE id = 0") === 1)
+    r.run("CREATE TABLE rn2 AS SELECT id, NOW() AS ts FROM rn")
+    val store = r.attachedStore("rn2")
+    val (held, files) = (store.read().collect().toSeq,
+      store.fileBackedRead().collect().toSeq)
+    assert(held.size === files.size)
+    val differ = held.zip(files).count { case (a, b) => a != b }
+    assert(differ === 0, s"$differ rows read differ from the file's")
+    assert(store.residentCount === 199)
+  }
+
   test("INSERT … VALUES runs no Spark job") {
     runner.run("CREATE TABLE jv (id BIGINT NOT NULL, amount INT, " +
       "tag VARCHAR(8)) ENGINE=TIANMU")
