@@ -625,6 +625,93 @@ class StatementJobsSpec extends AnyFunSuite {
       .map(String.valueOf) === Seq("20", "20", "3"))
   }
 
+  test("the INSERT and REPLACE forms run no more Spark jobs and staging " +
+      "writes than their bounds and keep their results") {
+    val r = freshRunner()
+    val names = Seq("ia", "ib", "ic", "id", "ie", "ig", "ih", "ii", "ij",
+      "il")
+    names.foreach(table200(r, _))
+    r.run("CREATE TABLE ik (a INT DEFAULT 7, b VARCHAR(8) DEFAULT 'd') " +
+      "ENGINE=TIANMU")
+    r.run("CREATE TRIGGER il_bi BEFORE INSERT ON il FOR EACH ROW " +
+      "SET NEW.tag = 'trg'")
+    val start = scan(r, "SELECT id, v, tag FROM ia")
+    def row(id: Int, v: Int, tag: String) = Seq(id.toString, v.toString, tag)
+    def key(x: Seq[String]) = x.head.toInt
+    def v(x: Seq[String]) = x(1).toInt
+    val low = start.filter(key(_) < 3)
+    // form, statement, table, its contents after the statement in scan
+    // order, the result's columns and rows, the most jobs and staging
+    // writes it may run
+    val forms = Seq(
+      ("INSERT VALUES", "INSERT INTO ia VALUES (200, 1, 'a'), (201, 2, 'b')",
+        "ia", start ++ Seq(row(200, 1, "a"), row(201, 2, "b")),
+        Seq("rows_inserted"), Seq(Seq("ia", "2")), 5, 0),
+      ("INSERT SET", "INSERT INTO ib SET id = 200, v = 3, tag = 's'",
+        "ib", start :+ row(200, 3, "s"),
+        Seq("rows_inserted"), Seq(Seq("ib", "1")), 5, 0),
+      ("keyless VALUES ()", "INSERT INTO ik VALUES (), ()",
+        "ik", Seq(Seq("7", "d"), Seq("7", "d")),
+        Seq("rows_inserted"), Seq(Seq("ik", "2")), 1, 0),
+      ("INSERT IGNORE", "INSERT IGNORE INTO ic VALUES (5, 9, 'dup'), " +
+        "(200, 9, 'new'), (200, 8, 'twice')",
+        "ic", start :+ row(200, 9, "new"),
+        Seq("rows_inserted"), Seq(Seq("ic", "1")), 7, 0),
+      ("INSERT SELECT", "INSERT INTO id SELECT id + 200, v, 'sel' FROM id " +
+        "WHERE id < 3",
+        "id", start ++ low.map(x => row(key(x) + 200, v(x), "sel")),
+        Seq("rows_inserted"), Seq(Seq("id", "3")), 5, 0),
+      ("ODKU VALUES", "INSERT INTO ie VALUES (5, 0, 'o'), (200, 1, 'n') " +
+        "ON DUPLICATE KEY UPDATE v = v + 100",
+        "ie", start.map(x => if (key(x) == 5) row(5, v(x) + 100, "x")
+          else x) :+ row(200, 1, "n"),
+        Seq("rows_updated", "rows_inserted"), Seq(Seq("ie", "1", "1")),
+        8, 0),
+      ("ODKU SELECT", "INSERT INTO ig SELECT id + 198, v, 's' FROM ig " +
+        "WHERE id < 3 ON DUPLICATE KEY UPDATE tag = 'u'",
+        "ig", start.map(x => if (key(x) >= 198) row(key(x), v(x), "u")
+          else x) ++ low.filter(key(_) >= 2)
+          .map(x => row(key(x) + 198, v(x), "s")),
+        Seq("rows_updated", "rows_inserted"), Seq(Seq("ig", "2", "1")),
+        12, 1),
+      ("REPLACE VALUES", "REPLACE INTO ih VALUES (5, 50, 'r'), " +
+        "(200, 1, 'r')",
+        "ih", start.filterNot(key(_) == 5) ++
+          Seq(row(5, 50, "r"), row(200, 1, "r")),
+        Seq("rows_replaced"), Seq(Seq("ih", "2")), 5, 0),
+      ("REPLACE SET", "REPLACE INTO ii SET id = 5, v = 55, tag = 's'",
+        "ii", start.filterNot(key(_) == 5) :+ row(5, 55, "s"),
+        Seq("rows_replaced"), Seq(Seq("ii", "1")), 2, 0),
+      ("REPLACE SELECT", "REPLACE INTO ij SELECT id, v + 1, 'rs' FROM ij " +
+        "WHERE id < 3",
+        "ij", start.filterNot(key(_) < 3) ++
+          low.map(x => row(key(x), v(x) + 1, "rs")),
+        Seq("rows_replaced"), Seq(Seq("ij", "3")), 3, 0),
+      ("INSERT with a BEFORE trigger", "INSERT INTO il VALUES " +
+        "(200, 1, 'a'), (201, 2, 'b')",
+        "il", start ++ Seq(row(200, 1, "trg"), row(201, 2, "trg")),
+        Seq("rows_inserted"), Seq(Seq("il", "2")), 5, 0))
+    val seen = forms.map { case (form, sql, table, contents, cols, result,
+        maxJobs, maxStaged) =>
+      val ((df, j), staged) = jobsAndStagings {
+        val df = r.run(sql)
+        df.collect()
+        df
+      }
+      info(s"$form: $j job(s), $staged staging write(s)")
+      assert(df.columns.toSeq === "table_name" +: cols, form)
+      assert(df.collect().toSeq.map(_.toSeq.map(String.valueOf)) === result,
+        form)
+      val cs = if (table == "ik") "a, b" else "id, v, tag"
+      assert(scan(r, s"SELECT $cs FROM $table") === contents, form)
+      (form, j, staged, maxJobs, maxStaged)
+    }
+    seen.foreach { case (form, j, staged, maxJobs, maxStaged) =>
+      assert(j <= maxJobs, s"$form ran $j job(s)")
+      assert(staged <= maxStaged, s"$form staged $staged frame(s)")
+    }
+  }
+
   /** `tz1` (id, ts, v) and `tz2` (id) written at UTC, then the session
     * zone set to +01:00. */
   private def tzTables(r: StatementRunner): Unit = {
