@@ -89,9 +89,36 @@ object StatementRunner {
       val row = scala.concurrent.Await.result(obs.future, within)
       (0 until row.length).map(row.getLong)
     } catch { case _: java.util.concurrent.TimeoutException => recount }
+
+  /** What an INSERT-family statement does with a row whose PRIMARY KEY
+    * the table already holds: MySQL's duplicate-key modes of
+    * `write_record` (sql_insert.cc). */
+  private[sources] sealed trait DupMode
+  private[sources] object DupMode {
+    /** Plain INSERT and LOAD DATA: error 1062, and nothing is written. */
+    case object Error extends DupMode
+    /** INSERT IGNORE, LOAD DATA … IGNORE and LOAD DATA LOCAL: the row is
+      * skipped. */
+    case object Ignore extends DupMode
+    /** REPLACE and LOAD DATA … REPLACE: the row replaces the stored one. */
+    case object Replace extends DupMode
+    /** INSERT … ON DUPLICATE KEY UPDATE: the assignments update the
+      * stored row. */
+    final case class Update(assignments: String) extends DupMode
+  }
+
+  /** Where the rows of an INSERT-family statement come from: `raw`
+    * holds them as the statement gives them (VALUES tuples, all-default
+    * rows, a SET list, a SELECT, or a parsed LOAD DATA file), and
+    * `align` shapes a frozen frame of them into the table's columns. A
+    * LOAD file's records (`file`) carry [[CsvLoader.CorruptCol]] last,
+    * set on each record the parse rejected. */
+  private[sources] final case class RowSource(raw: DataFrame,
+      align: DataFrame => DataFrame, file: Boolean = false)
 }
 
 class StatementRunner(spark: SparkSession) {
+  import StatementRunner.{DupMode, RowSource}
 
   // the runner's dialect includes the MySQL function surface — make
   // the SQL-name shims resolvable regardless of how the session was
@@ -247,42 +274,26 @@ class StatementRunner(spark: SparkSession) {
 
   // DML statement forms against attached stores (the reference's primary
   // write surface: handler INSERT ha_tianmu.h write_row, DELETE/UPDATE
-  // ha_tianmu.h:101-102). INSERT appends through the delta store;
-  // each DELETE/UPDATE form is one base rewrite (the columnar execution
+  // ha_tianmu.h:101-102). Every INSERT-family statement writes through
+  // insertRows; each DELETE/UPDATE form is one base rewrite (the columnar execution
   // of row DML — what the reference's own delta-merge eventually does
   // to packs), whose versioned base freezes the rows the statement
   // read. Only the forms that must freeze a row set before other work
   // runs stage it first: the multi-table DELETE, whose targets all
   // keep the rows the join matched before the first rewrite, and a
   // DELETE on a table with triggers (see Staging.stageOrdered).
-  // INSERT…ON DUPLICATE KEY UPDATE must be
-  // matched BEFORE the plain InsertRe (whose non-greedy tuples group
-  // would otherwise swallow the ON DUPLICATE clause).
-  private val InsertOnDupRe: Regex =
-    """(?is)^\s*INSERT\s+(?:LOW_PRIORITY\s+|DELAYED\s+|HIGH_PRIORITY\s+)?(?:INTO\s+)?`?(\w+)`?\s*(?:\(([^)]*)\))?\s*VALUES\s*(.+?)\s+ON\s+DUPLICATE\s+KEY\s+UPDATE\s+(.+?)\s*;?\s*$""".r
-  // INSERT IGNORE (reference insert_ignore path): rows whose PRIMARY KEY
-  // already exists — or that duplicate an earlier batch row — are
-  // silently skipped; the rest append through the delta store.
-  private val InsertIgnoreRe: Regex =
-    """(?is)^\s*INSERT\s+(?:LOW_PRIORITY\s+|DELAYED\s+|HIGH_PRIORITY\s+)?IGNORE\s+(?:INTO\s+)?`?(\w+)`?\s*(?:\(([^)]*)\))?\s*VALUES\s*(.+?)\s*;?\s*$""".r
+
+  // Every INSERT and REPLACE (engine_execute.cpp:470-513; insert.test,
+  // replace_into.test, insert_select.test, insert_update.test): verb,
+  // IGNORE, table, then a body of `[(cols)] VALUES …`, `SET a = …` or
+  // `[(cols)] [(]SELECT …[)]`, then an optional ON DUPLICATE KEY UPDATE
+  // list. The body stops at the first ON DUPLICATE KEY UPDATE. Its
+  // groups feed insertStatement.
   private val InsertRe: Regex =
-    """(?is)^\s*INSERT\s+(?:LOW_PRIORITY\s+|DELAYED\s+|HIGH_PRIORITY\s+)?(?:INTO\s+)?`?(\w+)`?\s*(?:\(([^)]*)\))?\s*VALUES\s*(.+?)\s*;?\s*$""".r
-  // INSERT … SELECT — a first-class statement form in the reference
-  // (core/engine_execute.cpp:470-513, incl. self-referencing inserts;
-  // MTR insert_select.test / insert_into_select.test).
-  private val InsertSelectRe: Regex =
-    """(?is)^\s*INSERT\s+(?:LOW_PRIORITY\s+|DELAYED\s+|HIGH_PRIORITY\s+)?(?:INTO\s+)?`?(\w+)`?\s*(?:\(([^)]*)\))?\s*(\(?\s*SELECT\b.*?\)?)\s*;?\s*$""".r
-  // the SELECT-sourced upsert combo (insert_update.test `INSERT INTO t1
-  // SELECT … ON DUPLICATE KEY UPDATE …`)
-  private val InsertSelectOnDupRe: Regex =
-    """(?is)^\s*INSERT\s+(?:LOW_PRIORITY\s+|DELAYED\s+|HIGH_PRIORITY\s+)?(?:INTO\s+)?`?(\w+)`?\s*(?:\(([^)]*)\))?\s*(\(?\s*SELECT\b.*?\)?)\s+ON\s+DUPLICATE\s+KEY\s+UPDATE\s+(.+?)\s*;?\s*$""".r
-  private val ReplaceRe: Regex =
-    """(?is)^\s*REPLACE\s+(?:LOW_PRIORITY\s+|DELAYED\s+)?(?:INTO\s+)?`?(\w+)`?\s*(?:\(([^)]*)\))?\s*VALUES\s*(.+?)\s*;?\s*$""".r
-  // REPLACE's SELECT and SET forms (replace_into.test uses all three)
-  private val ReplaceSelectRe: Regex =
-    """(?is)^\s*REPLACE\s+(?:LOW_PRIORITY\s+|DELAYED\s+)?(?:INTO\s+)?`?(\w+)`?\s*(?:\(([^)]*)\))?\s*(\(?\s*SELECT\b.*?\)?)\s*;?\s*$""".r
-  private val ReplaceSetRe: Regex =
-    """(?is)^\s*REPLACE\s+(?:LOW_PRIORITY\s+|DELAYED\s+)?(?:INTO\s+)?`?(\w+)`?\s+SET\s+(.+?)\s*;?\s*$""".r
+    ("""(?is)^\s*(INSERT|REPLACE)\s+(?:LOW_PRIORITY\s+|DELAYED\s+|HIGH_PRIORITY\s+)?""" +
+      """(IGNORE\s+)?(?:INTO\s+)?`?(\w+)`?\s*(?:\(([^)]*)\)\s*)?""" +
+      """(?:VALUES\s*(.+?)|SET\s+(.+?)|(\(?\s*SELECT\b.+?))""" +
+      """(?:\s+ON\s+DUPLICATE\s+KEY\s+UPDATE\s+(.+?))?\s*;?\s*$""").r
   // MySQL's row-limited DML forms (reference delete.test: `DELETE FROM
   // t1 WHERE a > 0 ORDER BY a LIMIT 1`; aggregate.test UPDATE … LIMIT):
   // must be matched BEFORE the plain forms or the LIMIT clause lands
@@ -314,11 +325,6 @@ class StatementRunner(spark: SparkSession) {
     """(?is)^\s*DELETE\s+((?:LOW_PRIORITY\s+|QUICK\s+|IGNORE\s+)*)((?:`?\w+`?(?:\.\*)?\s*,\s*)*`?\w+`?(?:\.\*)?)\s+FROM\s+(.+?)(?:\s+WHERE\s+(.+?))?\s*;?\s*$""".r
   private val UpdateRe: Regex =
     """(?is)^\s*UPDATE\s+(?:LOW_PRIORITY\s+)?(IGNORE\s+)?`?(\w+)`?\s+SET\s+(.+?)(?:\s+WHERE\s+(.+?))?\s*;?\s*$""".r
-  // MySQL's `INSERT INTO t SET a = 1, b = 'x'` single-row form
-  // (reference insert.test: `insert into t1 set a=1`).
-  private val InsertSetRe: Regex =
-    """(?is)^\s*INSERT\s+(?:LOW_PRIORITY\s+|DELAYED\s+|HIGH_PRIORITY\s+)?(?:INTO\s+)?`?(\w+)`?\s+SET\s+(.+?)\s*;?\s*$""".r
-
   private[graft] def attachedStore(table: String): DeltaStore =
     stores.getOrElse(table.toLowerCase,
       throw new IllegalArgumentException(
@@ -1144,13 +1150,13 @@ class StatementRunner(spark: SparkSession) {
     }.toSeq: _*)
   }
 
-  private def valuesBatch(tuples: String, colList: String,
-                          schema: org.apache.spark.sql.types.StructType,
-                          strict: Boolean = true)
+  /** The rows of a VALUES list as Spark reads the tuples, before they
+    * are aligned to the table. */
+  private def valuesFrame(tuples: String, colList: String,
+                          schema: org.apache.spark.sql.types.StructType)
       : DataFrame = {
     // tuples ride the dialect rewrite too (bit literals b'0101'/0b0101,
     // &&/|| inside row expressions; string literals stay protected)
-    if (strict && strictMode) rejectLiteralDivZero(tuples, "INSERT")
     val rewritten =
       MySqlDialect.rewrite(substituteDefaultKeyword(tuples, colList, schema))
     // a bit-operator expression inside VALUES must NOT ride Spark's
@@ -1192,7 +1198,7 @@ class StatementRunner(spark: SparkSession) {
       }
       spark.sql(selects.mkString(" UNION ALL "))
     }
-    val df = try {
+    try {
       if (hasBitOps) tupleSelects()
       else spark.sql(s"SELECT * FROM VALUES $rewritten")
     } catch {
@@ -1216,18 +1222,6 @@ class StatementRunner(spark: SparkSession) {
         // cells cast to the TARGET column types, unioned.
         tupleSelects()
     }
-    // MySQL's NOT NULL enforcement is per-arity on this engine tier:
-    // a SINGLE-row VALUES with NULL errors (1048), a MULTI-row one
-    // downgrades NULL to the column default with a warning — the
-    // STRICT_TRANS_TABLES mode does not harden non-transactional
-    // engines' multi-row inserts (insert.test pins both behaviors)
-    alignToSchema(df, colList, schema, strict && strictMode,
-      strictNulls = topLevelTuples(rewritten).length <= 1,
-      // the caller's strict=false IS the IGNORE regime (runInsertIgnore
-      // passes it); a session-level non-strict sql_mode arrives with
-      // strict=true + strictMode=false and keeps the 1048 single-row
-      // rejection above
-      ignoreMode = !strict)
   }
 
   /** Contents of each top-level `(…)` tuple group (string-aware). */
@@ -1357,138 +1351,509 @@ class StatementRunner(spark: SparkSession) {
         s"for PRIMARY KEY (${keys.mkString(", ")}) (MySQL error 1062)")
   }
 
-  /** `INSERT INTO t VALUES(),(),…` — MySQL's all-defaults rows. */
-  private def runInsertDefaults(table: String, rows: Int): DataFrame = {
-    val store = attachedStore(table)
-    val schema = store.read().schema
-    val missing = schema.filter(f =>
-      requiredCol(f) && declaredDefault(f).isEmpty).map(_.name)
-    if (missing.nonEmpty) throw new IllegalArgumentException(
-      s"INSERT: field(s) ${missing.mkString(", ")} don't have a default " +
-        "value (MySQL strict mode, error 1364)")
-    val row = spark.range(rows.toLong)
-      .select(schema.map(f => fillUnprovided(f, strict = true)).toSeq: _*)
-    val aligned0 = fireBeforeInsert(table, assignAutoInc(store, row))
-    // materialize the statement-sized batch into a LocalRelation so the
-    // append lands in the store's ORDERED in-memory buffer — a
-    // Range-leafed plan would spill one parquet delta file per
-    // statement, and a multi-file delta reads in SIZE order, not insert
-    // order (the statement tier's scan-order contract)
-    val aligned = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(
-        aligned0.collect().toList.asJava,
-        org.apache.spark.sql.types.StructType(
-          aligned0.schema.fields.map(_.copy(nullable = true))))
-    }
-    enforcePkUnique(table, store, aligned)
-    store.append(aligned)
-    refreshTableView(table, store)
-    fireAfterInsert(table, aligned)
-    import spark.implicits._
-    dmlResult(table, "rows_inserted" -> rows.toLong)
+  /** `rows` as a `LocalRelation` of `schema`'s columns, each nullable:
+    * a VALUES literal column reports non-nullable while a later tuple
+    * may hold NULL. */
+  private def localRows(rows: Seq[org.apache.spark.sql.Row],
+                        schema: org.apache.spark.sql.types.StructType)
+      : DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, org.apache.spark.sql.types.StructType(
+      schema.fields.map(_.copy(nullable = true))))
   }
 
-  private def runInsert(table0: String, colList: String,
-                        tuples: String): DataFrame = {
-    val table = dmlTableFor(table0, Option(colList).toSeq.flatMap(splitTopLevel(_))
-      .map(_.trim.stripPrefix("`").stripSuffix("`")))
-    if (tuples.trim.matches("""\(\s*\)(\s*,\s*\(\s*\))*""") && (colList == null
-        || colList.trim.isEmpty))
-      return runInsertDefaults(table,
-        tuples.count(_ == '('))
-    val store = attachedStore(table)
-    val aligned = fireBeforeInsert(table, assignAutoInc(store,
-      valuesBatch(tuples, colList, store.read().schema)))
-    enforcePkUnique(table, store, aligned)
-    store.append(aligned)
-    refreshTableView(table, store)
-    fireAfterInsert(table, aligned)
-    import spark.implicits._
-    // a VALUES batch is a LocalRelation: its rows count on the driver
-    val n = localPlanRows(aligned).fold(aligned.count())(_.length.toLong)
-    dmlResult(table, "rows_inserted" -> n)
-  }
-
-  /** Every SELECT-sourced insert (`INSERT`, `REPLACE` and `CREATE
-    * TABLE … SELECT`): run `source` once as `limit(BufferCap + 1)
-    * .collect()`, align and check the rows, hand the frozen batch to
-    * `write` between the insert triggers, and return its row count.
-    * Up to [[DeltaStore.BufferCap]] rows become a `LocalRelation`, so
-    * the checks, auto-increment numbering and the append (which
-    * buffers them) need no Spark job; a larger result is staged in one
-    * ordered write that an `Observation` counts. Either way the batch
-    * is frozen before the append, so `INSERT INTO t SELECT … FROM t`
-    * (insert_select.test) never reads its own rows (the Halloween
-    * problem; the reference materializes through its insert buffer
-    * too), and it keeps the source's scan order
-    * (insert_into_select.test's LIMIT 3). */
-  private def insertFromSelect(table: String, store: DeltaStore,
-                               source: DataFrame, colList: String,
-                               checkPk: Boolean)
-                              (write: DataFrame => Unit): Long = {
-    import org.apache.spark.sql.functions.{count, lit}
-    val schema = store.read().schema
-    def aligned(df: DataFrame) =
-      assignAutoInc(store, alignToSchema(df, colList, schema))
-    val rows = source.limit(DeltaStore.BufferCap + 1).collect()
-    val (batch, n) =
-      if (rows.length <= DeltaStore.BufferCap) {
-        import scala.jdk.CollectionConverters._
-        val local = spark.createDataFrame(rows.toList.asJava,
-          org.apache.spark.sql.types.StructType(
-            source.schema.fields.map(_.copy(nullable = true))))
-        (fireBeforeInsert(table, aligned(local)), rows.length.toLong)
-      } else {
-        val obs = org.apache.spark.sql.Observation()
-        val staged = fireBeforeInsert(table, Staging.stageOrdered(
-          aligned(source).observe(obs, count(lit(1))), s"select-$table"))
-        (staged, StatementRunner.observedCount(obs)(staged.count()))
-      }
-    if (checkPk) enforcePkUnique(table, store, batch)
-    write(batch)
-    refreshTableView(table, store)
-    fireAfterInsert(table, batch)
-    n
-  }
-
-  /** Append the clean records of a parsed LOAD file and return how many
-    * loaded and how many were rejected. `tagged` holds every record, its
-    * last column [[CsvLoader.CorruptCol]] (null on a clean record), and
-    * `finish` aligns clean records to the table. The file is parsed once
-    * into at most [[DeltaStore.BufferCap]] + 1 collected records: up to
-    * the cap they split and count on the driver, and the clean ones
-    * append as a `LocalRelation`, which the store buffers with no job.
-    * A larger file is parsed again by one file-backed append, which an
-    * `Observation` counts; `recount` (loaded, rejected) stands in when
-    * the observed counts do not arrive. */
-  private def loadRecords(store: DeltaStore, tagged: DataFrame,
-                          finish: DataFrame => DataFrame)
-                         (recount: => Seq[Long]): (Long, Long) = {
-    import org.apache.spark.sql.functions.{col, count, when}
-    val cleanRecord = col(CsvLoader.CorruptCol).isNull
-    val records = tagged.limit(DeltaStore.BufferCap + 1).collect()
-    if (records.length <= DeltaStore.BufferCap) {
-      import scala.jdk.CollectionConverters._
-      val last = tagged.schema.length - 1
-      val (ok, bad) = records.partition(_.isNullAt(last))
-      val local = spark.createDataFrame(
-        ok.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.take(last)))
-          .toList.asJava,
-        org.apache.spark.sql.types.StructType(tagged.schema.fields
-          .take(last).map(_.copy(nullable = true))))
-      store.append(finish(local))
-      (ok.length.toLong, bad.length.toLong)
+  /** Step 1 of [[insertRows]]: `raw`'s rows frozen before anything is
+    * written, and a count of them, read once they have been written.
+    * Up to [[DeltaStore.BufferCap]] rows are taken into a
+    * `LocalRelation` by one collect (none for VALUES tuples, which are
+    * one already), so the checks, the numbering and the append (which
+    * buffers them) need no job of their own. A larger result is staged
+    * in one ordered write, which an `Observation` counts. Either way
+    * `INSERT INTO t SELECT … FROM t` (insert_select.test) never reads
+    * its own rows (the Halloween problem; the reference materializes
+    * through its insert buffer too), and the rows keep the source's
+    * order (insert_into_select.test's LIMIT 3). A LOAD file (`file`)
+    * is split into its clean records and a count of the rejected ones;
+    * past the cap it is not staged, since the file cannot change under
+    * the statement: its one parse is counted by the write that reads
+    * it. The count is (rows, rejected records). */
+  private def freeze(raw: DataFrame, tag: String, file: Boolean = false)
+      : (DataFrame, () => (Long, Long)) = {
+    import org.apache.spark.sql.functions.{col, count, lit, when}
+    val width = raw.schema.length - (if (file) 1 else 0)
+    val taken = localPlanRows(raw)
+      .getOrElse(raw.limit(DeltaStore.BufferCap + 1).collect())
+    if (taken.length <= DeltaStore.BufferCap) {
+      val (ok, bad) =
+        if (!file) (taken.toSeq, Nil)
+        else taken.toSeq.partition(_.isNullAt(width)) match {
+          case (ok, bad) => (ok.map(r =>
+            org.apache.spark.sql.Row.fromSeq(r.toSeq.take(width))), bad)
+        }
+      (localRows(ok, org.apache.spark.sql.types.StructType(
+        raw.schema.fields.take(width))),
+        () => (ok.size.toLong, bad.size.toLong))
+    } else if (file) {
+      val clean = col(CsvLoader.CorruptCol).isNull
+      val obs = org.apache.spark.sql.Observation()
+      val rows = raw.observe(obs, count(when(clean, 1)),
+        count(when(!clean, 1))).filter(clean).drop(CsvLoader.CorruptCol)
+      (rows, () => StatementRunner.observedCounts(obs)(
+        Seq(raw.filter(clean).count(), raw.filter(!clean).count())) match {
+          case Seq(loaded, rejected) => (loaded, rejected)
+        })
     } else {
       val obs = org.apache.spark.sql.Observation()
-      store.append(finish(tagged
-        .observe(obs, count(when(cleanRecord, 1)),
-          count(when(!cleanRecord, 1)))
-        .filter(cleanRecord).drop(CsvLoader.CorruptCol)))
-      val Seq(loaded, rejected) = StatementRunner.observedCounts(obs)(recount)
-      (loaded, rejected)
+      val staged = Staging.stageOrdered(raw.observe(obs, count(lit(1))), tag)
+      (staged, () => (StatementRunner.observedCount(obs)(staged.count()), 0L))
     }
   }
+
+  /** The one INSERT pipeline. Every INSERT, REPLACE, `INSERT … ON
+    * DUPLICATE KEY UPDATE`, LOAD DATA and column-list `CREATE TABLE …
+    * SELECT` writes its rows here, as MySQL's `write_record`
+    * (sql_insert.cc, also called from sql_load.cc) does, in six steps:
+    *  1. freeze the source ([[freeze]]);
+    *  2. align the rows to the table, then assign AUTO_INCREMENT ids;
+    *  3. fire the BEFORE INSERT triggers (on every row, a skipped
+    *     duplicate's too: trigger.test's @log golden);
+    *  4. apply `mode` against the declared PRIMARY KEY. Error checks the
+    *     key ([[enforcePkUnique]]) and appends; Ignore skips the rows
+    *     whose key the table or an earlier batch row holds, then
+    *     appends; Replace rewrites through [[Dml.replaceInto]]; Update
+    *     upserts, row by row on a table with triggers
+    *     ([[upsertEachRow]], which fires every trigger itself). A
+    *     keyless table appends in every mode: nothing can conflict
+    *     (trigger.test replaces into a keyless table, insert.test runs
+    *     ON DUPLICATE KEY UPDATE on one);
+    *  5. refresh the table's view, then fire the AFTER INSERT triggers
+    *     on the rows written;
+    *  6. build the result through [[dmlResult]]: the rows written as
+    *     `countAs` (by default `rows_replaced` for Replace and
+    *     `rows_inserted` otherwise), or `rows_updated` and
+    *     `rows_inserted` for Update; a LOAD adds `rows_rejected`. */
+  private def insertRows(table: String, source: RowSource, mode: DupMode,
+                         countAs: Option[String] = None): DataFrame = {
+    import org.apache.spark.sql.functions.{col, count, expr, lit, when}
+    val store = attachedStore(table)
+    val schema = store.read().schema
+    val keys = primaryKeys.getOrElse(table.toLowerCase, Seq.empty)
+    val assigns = mode match {
+      case DupMode.Update(list) => odkuAssigns(table, schema, list)
+      case _ => Nil
+    }
+    val rowWise = assigns.nonEmpty && keys.nonEmpty &&
+      (tableTriggered(table, "INSERT") || tableTriggered(table, "UPDATE"))
+    val (frozen, counted) = freeze(source.raw, s"insert-$table", source.file)
+    val aligned = assignAutoInc(store, source.align(frozen))
+    val batch = if (rowWise) aligned else fireBeforeInsert(table, aligned)
+    def written(n: Long): Seq[(String, Long)] = mode match {
+      case DupMode.Update(_) => Seq("rows_updated" -> 0L, "rows_inserted" -> n)
+      case _ => Seq(countAs.getOrElse(
+        if (mode == DupMode.Replace) "rows_replaced" else "rows_inserted") -> n)
+    }
+    // the view is refreshed whichever way the write ends (insert.test's
+    // `update f1 = f3 + 10` through a view fails to resolve inside the
+    // rewrite, which then leaves the store as it was)
+    val (after, counts) = try {
+      if (keys.isEmpty) {
+        store.append(batch)
+        (Some(batch), written(counted()._1))
+      } else mode match {
+        case DupMode.Error =>
+          enforcePkUnique(table, store, batch)
+          store.append(batch)
+          (Some(batch), written(counted()._1))
+        case DupMode.Ignore =>
+          // the anti-join is lazy against the store's read view: the
+          // survivors are frozen before the append, so the AFTER
+          // triggers see the rows that were appended
+          val (survivors, kept) = freeze(batch.dropDuplicates(keys)
+            .join(store.read().select(keys.map(col): _*), keys, "left_anti"),
+            s"ignore-$table")
+          store.append(survivors)
+          (Some(survivors), written(kept()._1))
+        case DupMode.Replace =>
+          store.rewriteWith(base => Dml.replaceInto(base, batch, keys))
+          (Some(batch), written(counted()._1))
+        case DupMode.Update(_) if rowWise =>
+          val (updated, inserted) =
+            upsertEachRow(table, store, schema, keys, batch, assigns)
+          (None, Seq("rows_updated" -> updated, "rows_inserted" -> inserted))
+        case DupMode.Update(_) =>
+          val matched = store.read()
+            .join(batch.select(keys.map(col): _*), keys, "left_semi")
+            .agg(count(lit(1))).first().getLong(0)
+          // incoming columns are renamed `__v_*` before the key outer
+          // join, so a bare name is the stored row's and `VALUES(x)`
+          // (rewritten to `__v_x`) the incoming one
+          store.rewriteWith { base =>
+            val inc = batch.select(
+              schema.map(f => col(f.name).as(s"__v_${f.name}")).toSeq: _*)
+            val hit = col(s"__v_${keys.head}").isNotNull
+            base.join(inc, keys.map(k => col(k) === col(s"__v_$k"))
+                .reduce(_ && _), "left_outer")
+              .select(schema.map { f =>
+                assigns.find(_._1 == f.name) match {
+                  case Some((_, rhs)) =>
+                    when(hit, expr(rhs).cast(f.dataType))
+                      .otherwise(col(f.name)).as(f.name)
+                  case None => col(f.name)
+                }
+              }.toSeq: _*)
+              .unionByName(batch.join(base.select(keys.map(col): _*), keys,
+                "left_anti"))
+          }
+          (None, Seq("rows_updated" -> matched,
+            "rows_inserted" -> (counted()._1 - matched)))
+      }
+    } finally refreshTableView(table, store)
+    after.foreach(fireAfterInsert(table, _))
+    dmlResult(table, counts ++
+      (if (source.file) Seq("rows_rejected" -> counted()._2) else Nil): _*)
+  }
+
+  /** An INSERT or REPLACE statement ([[InsertRe]]'s groups) as a row
+    * source and a duplicate-key mode for [[insertRows]]. The body is
+    * `VALUES` tuples (`()` tuples with no column list are all-default
+    * rows), a `SET` list, or a SELECT. IGNORE aligns the rows with
+    * `strict = false` ([[alignToSchema]]'s IGNORE regime) and skips
+    * duplicate keys, unless ON DUPLICATE KEY UPDATE names the mode. */
+  private def insertStatement(verb: String, ignore: String, table0: String,
+      colList0: String, tuples: String, setList: String, select0: String,
+      odku: String): DataFrame = {
+    import org.apache.spark.sql.functions.expr
+    val replace = verb.equalsIgnoreCase("REPLACE")
+    if (replace && (ignore != null || odku != null))
+      throw new IllegalArgumentException("REPLACE takes neither IGNORE " +
+        "nor ON DUPLICATE KEY UPDATE (MySQL error 1064)")
+    val what = verb.toUpperCase + (if (setList != null) " SET" else "")
+    val colList = Option(colList0).filter(_.trim.nonEmpty).orNull
+    val table = dmlTableFor(table0,
+      (if (setList != null) splitTopLevel(setList).map(_.takeWhile(_ != '='))
+       else Option(colList).toSeq.flatMap(splitTopLevel(_)))
+        .map(_.trim.stripPrefix("`").stripSuffix("`")))
+    val schema = attachedStore(table).read().schema
+    val strict = ignore == null
+    val source =
+      if (tuples != null && colList == null &&
+          tuples.trim.matches("""\(\s*\)(\s*,\s*\(\s*\))*""")) {
+        // `VALUES (), ()`: every column takes its default
+        val missing = schema.filter(f =>
+          requiredCol(f) && declaredDefault(f).isEmpty).map(_.name)
+        if (strict && missing.nonEmpty) throw new IllegalArgumentException(
+          s"INSERT: field(s) ${missing.mkString(", ")} don't have a " +
+            "default value (MySQL strict mode, error 1364)")
+        RowSource(org.apache.spark.sql.GraftSqlBridge.localFrame(spark,
+          new org.apache.spark.sql.types.StructType(),
+          Seq.fill(tuples.count(_ == '('))(
+            org.apache.spark.sql.catalyst.InternalRow.empty)),
+          _.select(schema.map(fillUnprovided(_, strict)).toSeq: _*))
+      } else if (tuples != null) {
+        if (strict && strictMode) rejectLiteralDivZero(tuples, "INSERT")
+        // MySQL's NOT NULL enforcement is per-arity on this engine tier:
+        // a SINGLE-row VALUES with NULL errors (1048), a MULTI-row one
+        // downgrades NULL to the column default with a warning — the
+        // STRICT_TRANS_TABLES mode does not harden non-transactional
+        // engines' multi-row inserts (insert.test pins both behaviors).
+        // A session-level non-strict sql_mode keeps the single-row 1048
+        // (strict = true, strictMode = false); IGNORE drops it too.
+        val single = topLevelTuples(tuples).length <= 1
+        RowSource(valuesFrame(tuples, colList, schema), alignToSchema(_,
+          colList, schema, strict && strictMode, strictNulls = single,
+          ignoreMode = !strict))
+      } else if (setList != null) {
+        if (strict && strictMode) rejectLiteralDivZero(setList, what)
+        // `SET col = DEFAULT` takes the declared/implicit default
+        // (insert.test stmt `insert into t1 set a=default,…`)
+        val assigns = parseAssigns(setList, what).map { case (c, rhs) =>
+          if (!rhs.trim.equalsIgnoreCase("default")) (c, rhs)
+          else (c, schema.find(_.name.equalsIgnoreCase(c)) match {
+            case Some(f) if f.metadata.contains("graft.mysql.default") =>
+              f.metadata.getString("graft.mysql.default")
+            case Some(f) if f.nullable => "NULL"
+            case Some(f) => implicitDefaultSql(f.dataType)
+            case None => rhs
+          })
+        }
+        val bad = assigns.map(_._1).filterNot(schema.fieldNames.contains)
+        if (bad.nonEmpty) throw new IllegalArgumentException(
+          s"$what: unknown column(s) ${bad.mkString(", ")}")
+        // `SET a=1,b=2,a=1` — naming a column twice is ER_FIELD_SPECIFIED
+        // _TWICE (insert.test pins 1110)
+        assigns.groupBy(_._1.toLowerCase).collectFirst {
+          case (n, vs) if vs.size > 1 => n
+        }.foreach(n => throw new IllegalArgumentException(
+          s"$what: column '$n' specified twice (MySQL error 1110)"))
+        val missing = schema.filter(f =>
+          requiredCol(f) && !assigns.exists(_._1 == f.name)
+            && declaredDefault(f).isEmpty).map(_.name)
+        if (strict && missing.nonEmpty) throw new IllegalArgumentException(
+          s"$what: field(s) ${missing.mkString(", ")} don't have a " +
+            "default value (MySQL strict mode, error 1364)")
+        // one row of the assigned expressions, aligned like a one-tuple
+        // VALUES list (range check or clamp, zero-date sentinels, TIME
+        // grammar, my_gcvt into CHAR — `insert into t1 set t=0` with
+        // `timestamp NOT NULL` must store the zero date, not the column
+        // default; insert.test)
+        RowSource(org.apache.spark.sql.GraftSqlBridge.localFrame(spark,
+            new org.apache.spark.sql.types.StructType(),
+            Seq(org.apache.spark.sql.catalyst.InternalRow.empty))
+            .select(assigns.map { case (c, rhs) => expr(rhs).as(c) }: _*),
+          alignToSchema(_, assigns.map(_._1).mkString(","), schema,
+            strict && strictMode, ignoreMode = !strict))
+      } else {
+        val select = select0.trim.stripPrefix("(").stripSuffix(")")
+        // a pure `@var := expr` projection with no other @-references
+        // is the expression itself (update_v1.test `INSERT … SELECT
+        // @newA := 1 + a`); running accumulators stay unsupported
+        val selectEff =
+          if (!select.contains(":=")) select
+          else {
+            val s2 = select.replaceAll("(?i)@\\w+\\s*:=\\s*", "")
+            if (s2.contains("@")) select else s2
+          }
+        RowSource(spark.sql(MySqlDialect.rewrite(selectEff)), alignToSchema(_,
+          colList, schema, strict, ignoreMode = !strict))
+      }
+    val mode =
+      if (replace) DupMode.Replace
+      else if (odku != null) DupMode.Update(
+        if (select0 == null) odku
+        else odkuOverSelect(odku, select0, source.raw.columns, colList, schema))
+      else if (!strict) DupMode.Ignore
+      else DupMode.Error
+    insertRows(table, source, mode)
+  }
+
+  /** `VALUES(col)` references inside an ON DUPLICATE KEY UPDATE
+    * assignment — MySQL's way of naming the would-be-inserted value. */
+  private val ValuesRefRe: Regex = """(?i)VALUES\s*\(\s*`?(\w+)`?\s*\)""".r
+
+  /** An ON DUPLICATE KEY UPDATE list as (column, expression) pairs in
+    * MySQL's scoping (insert_on_duplicate_update.test): a bare column
+    * is the stored row's value, and `VALUES(col)`, rewritten to
+    * `__v_col`, the incoming one. The list is checked even where
+    * nothing can conflict (1054 fires on a keyless table too). */
+  private def odkuAssigns(table: String,
+                          schema: org.apache.spark.sql.types.StructType,
+                          updateList: String): Seq[(String, String)] = {
+    // a table-QUALIFIED name inside VALUES() is not valid MySQL —
+    // VALUES takes a bare target column (insert_select.test pins the
+    // error for `update x=values(t2.x)`)
+    """(?i)VALUES\s*\(\s*`?\w+`?\s*\.""".r.findFirstIn(updateList)
+      .foreach(_ => throw new IllegalArgumentException(
+        "ON DUPLICATE KEY UPDATE: VALUES() takes an unqualified target " +
+          "column name (MySQL error 1064)"))
+    val assigns = splitTopLevel(updateList).map { a =>
+      val i = a.indexOf('=')
+      if (i < 0) throw new IllegalArgumentException(
+        s"ON DUPLICATE KEY UPDATE: malformed assignment '$a'")
+      val lhs = a.substring(0, i).trim.stripPrefix("`").stripSuffix("`")
+      // `t1.b` qualifies the OLD row's column (insert_update.test
+      // `IF(VALUES(b) > t1.b, …)`) — the frame here is unqualified
+      val rhs = ValuesRefRe.replaceAllIn(
+        MySqlDialect.rewrite(a.substring(i + 1).trim)
+          .replaceAll("(?i)\\b" +
+            java.util.regex.Pattern.quote(table) + "\\.", ""),
+        m => {
+          // VALUES(col) must name a column of the TARGET table
+          // (insert_select.test pins 1054 for `values(z)` where z is
+          // only a source column)
+          if (!schema.fieldNames.exists(_.equalsIgnoreCase(m.group(1))))
+            throw new IllegalArgumentException(
+              s"ON DUPLICATE KEY UPDATE: VALUES(${m.group(1)}) does " +
+                "not name a target column (MySQL error 1054)")
+          "__v_" + m.group(1)
+        })
+      (lhs, rhs)
+    }
+    val bad = assigns.map(_._1).filterNot(schema.fieldNames.contains)
+    if (bad.nonEmpty) throw new IllegalArgumentException(
+      s"ON DUPLICATE KEY UPDATE: unknown column(s) ${bad.mkString(", ")}")
+    assigns
+  }
+
+  /** The ON DUPLICATE KEY UPDATE list of a SELECT-sourced insert
+    * (insert_update.test), with the names MySQL lets it take from the
+    * SELECT rewritten to the incoming value: an output column that is
+    * not a target column (`UPDATE j = a`) becomes `VALUES(<target>)`,
+    * and a source alias qualifier (`UPDATE f1 = 100 + src.f1`,
+    * insert_select.test) is dropped. */
+  private def odkuOverSelect(updateList: String, select: String,
+                             columns: Seq[String], colList: String,
+                             schema: org.apache.spark.sql.types.StructType)
+      : String = {
+    val provided: Seq[String] =
+      if (colList == null) schema.map(_.name).toSeq
+      else splitTopLevel(colList).map(_.stripPrefix("`").stripSuffix("`"))
+        .map(p => schema.fieldNames.find(_.equalsIgnoreCase(p)).getOrElse(p))
+    var updates = updateList
+    // the bare name then rides the VALUES machinery (for a key column
+    // the old and incoming values coincide on a duplicate, so bare
+    // resolution is exact either way)
+    """(?is)\b(?:FROM|JOIN)\s+`?\w+`?\s+(?:AS\s+)?`?(\w+)`?""".r
+      .findAllMatchIn(select).map(_.group(1))
+      .filterNot(a => Set("WHERE", "ON", "GROUP", "ORDER", "LIMIT",
+        "HAVING", "UNION", "JOIN", "LEFT", "RIGHT", "INNER", "CROSS",
+        "SET", "AS", "USING").contains(a.toUpperCase))
+      .foreach { a =>
+        updates = updates.replaceAll(
+          "(?i)\\b" + java.util.regex.Pattern.quote(a) + "\\.", "")
+      }
+    columns.zip(provided).foreach { case (srcName, tgt) =>
+      if (!schema.fieldNames.exists(_.equalsIgnoreCase(srcName)))
+        updates = updates.replaceAll(
+          // a ref already inside VALUES(…) is NOT the rename shorthand —
+          // it must stay and fail 1054 (insert_select.test's
+          // `update x=values(z)` with z only a source column)
+          "(?i)(?<!values\\()\\b" +
+            java.util.regex.Pattern.quote(srcName) + "\\b",
+          java.util.regex.Matcher.quoteReplacement(s"VALUES($tgt)"))
+    }
+    updates
+  }
+
+  /** ON DUPLICATE KEY UPDATE over a trigger-bearing table: MySQL runs
+    * the statement row by row — BEFORE INSERT always fires; a duplicate
+    * key then routes the row through the UPDATE trigger pair with OLD =
+    * the stored row and the assignments evaluated in MySQL's ODKU
+    * scoping (bare column = OLD value, VALUES(col) = incoming value).
+    * The @log golden in trigger.test pins the interleaved order, and
+    * the fld1=1100 golden pins that AFTER UPDATE fires on the dup
+    * path. */
+  private def upsertEachRow(table: String, store: DeltaStore,
+                            schema: org.apache.spark.sql.types.StructType,
+                            keys: Seq[String], batch: DataFrame,
+                            assigns: Seq[(String, String)]): (Long, Long) = {
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col,
+      lit, when}
+    val keyIdx = keys.map(k => schema.fieldIndex(
+      schema.fieldNames.find(_.equalsIgnoreCase(k)).getOrElse(k)))
+    // only the BATCH is driver-materialized (it bounds the row-wise
+    // trigger loop); the base contributes just its key-matched slice
+    // via one broadcast semi-join — a 100M-row base passes through as
+    // a keyed rewrite, never a full collect
+    val batchRows = collectCapped(batch, s"ON DUP $table")
+    val prefetched = scala.collection.mutable.HashMap[
+      Seq[Any], org.apache.spark.sql.Row]()
+    if (batchRows.nonEmpty) {
+      val keyDf = batch.select(keys.map(col): _*).dropDuplicates()
+      store.read().join(broadcast(keyDf), keys, "left_semi")
+        .collect().foreach(r => prefetched(keyIdx.map(r.get)) = r)
+    }
+    // touched keys only: updates replace their base row in place,
+    // inserts append in batch order
+    val byKey = scala.collection.mutable.LinkedHashMap[
+      Seq[Any], org.apache.spark.sql.Row]()
+    val insertedKeys = scala.collection.mutable.LinkedHashSet[Seq[Any]]()
+    // a BEFORE INSERT trigger may mutate the key away from the
+    // incoming value — one targeted probe covers that rare path.
+    // `covered` = the key equals the row's incoming (pre-trigger) key,
+    // which the broadcast semi-join prefetch already resolved against
+    // the base: a prefetched miss there is a PROVEN absence, so a
+    // mostly-insert batch never fires per-row base-scan jobs
+    def lookupOld(k: Seq[Any], covered: Boolean)
+        : Option[org.apache.spark.sql.Row] =
+      byKey.get(k).orElse(prefetched.get(k)).orElse {
+        if (covered) None
+        else {
+          val cond = keys.zip(k).map { case (c, v) =>
+            if (v == null) col(c).isNull else col(c) === lit(v)
+          }.reduce(_ && _)
+          val hit = store.read().filter(cond).limit(1).collect()
+            .headOption
+          hit.foreach(r => prefetched(k) = r)
+          hit
+        }
+      }
+    val insBefore = triggersOn(table, "INSERT", "BEFORE")
+    val insAfter = triggersOn(table, "INSERT", "AFTER")
+    val updBefore = triggersOn(table, "UPDATE", "BEFORE")
+    val updAfter = triggersOn(table, "UPDATE", "AFTER")
+    var updated = 0L
+    var inserted = 0L
+    batchRows.foreach { br =>
+      val newM = rowToMap(br, schema)
+      insBefore.foreach(d => interp.runTriggerBody(d.body, newM, null,
+        newAssignable = true, schema))
+      val row = mapToRow(newM, schema)
+      val k = keyIdx.map(row.get)
+      val k0 = keyIdx.map(br.get)
+      lookupOld(k, covered = insBefore.isEmpty || k == k0) match {
+        case Some(oldRow) =>
+          val oldM = rowToMap(oldRow, schema).toMap
+          val updM = rowToMap(oldRow, schema)
+          assigns.foreach { case (c, rhs) =>
+            val ctx = new ProcCtx(procHost)
+            oldM.foreach { case (cn, v) =>
+              ctx.locals(cn) = new ctx.Local("", None, v)
+            }
+            newM.foreach { case (cn, v) =>
+              ctx.locals("__v_" + cn) = new ctx.Local("", None, v)
+            }
+            val f = schema.fields.find(_.name.equalsIgnoreCase(c)).get
+            updM(c.toLowerCase) =
+              interp.coerceToSpark(interp.evalExpr(rhs, ctx), f.dataType)
+          }
+          updBefore.foreach(d => interp.runTriggerBody(d.body, updM,
+            oldM, newAssignable = true, schema))
+          byKey(k) = mapToRow(updM, schema)
+          updated += 1
+          updAfter.foreach(d => interp.runTriggerBody(d.body, updM,
+            oldM, newAssignable = false, schema))
+        case None =>
+          byKey(k) = row
+          insertedKeys += k
+          inserted += 1
+          insAfter.foreach(d => interp.runTriggerBody(d.body, newM,
+            null, newAssignable = false, schema))
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    val insertedDf = spark.createDataFrame(
+      insertedKeys.toList.map(byKey(_)).asJava, schema)
+    val updatedEntries = byKey.toList.filterNot(e =>
+      insertedKeys.contains(e._1))
+    store.rewriteWith { base =>
+      val withUpdates =
+        if (updatedEntries.isEmpty) base
+        else {
+          // replace matched rows IN PLACE: join the base against the
+          // (small, driver-built) updated snapshot on the ORIGINAL
+          // key — an assignment may have moved a key column, so the
+          // match key travels separately from the new values
+          val nf = schema.fields.map(f => org.apache.spark.sql.types
+            .StructField("__n_" + f.name, f.dataType, nullable = true))
+          val kf = keys.zipWithIndex.map { case (kc, i) =>
+            org.apache.spark.sql.types.StructField(s"__k_$i",
+              schema(schema.fieldNames
+                .find(_.equalsIgnoreCase(kc)).getOrElse(kc)).dataType,
+              nullable = true)
+          }
+          val hf = org.apache.spark.sql.types.StructField("__hit",
+            org.apache.spark.sql.types.BooleanType, nullable = true)
+          val updDf = spark.createDataFrame(
+            updatedEntries.map { case (k, r) =>
+              org.apache.spark.sql.Row.fromSeq(
+                r.toSeq ++ k :+ true)
+            }.asJava,
+            org.apache.spark.sql.types.StructType(nf ++ kf :+ hf))
+          val cond = keys.zipWithIndex.map { case (kc, i) =>
+            base(kc) <=> updDf(s"__k_$i")
+          }.reduce(_ && _)
+          base.join(broadcast(updDf), cond, "left_outer")
+            .select(schema.fields.map { f =>
+              when(coalesce(col("__hit"), lit(false)),
+                col("__n_" + f.name)).otherwise(base(f.name))
+                .as(f.name)
+            }.toSeq: _*)
+        }
+      withUpdates.unionByName(insertedDf)
+    }
+    (updated, inserted)
+  }
+
 
   /** Whether `cond` gives the same value each time it is evaluated
     * over `df` (no RAND(), UUID(), …), so one plan may both apply it and
@@ -1497,81 +1862,6 @@ class StatementRunner(spark: SparkSession) {
       cond: org.apache.spark.sql.Column): Boolean =
     df.select(cond).queryExecution.analyzed.expressions
       .forall(_.deterministic)
-
-  /** `INSERT INTO t [cols] SELECT …` (engine_execute.cpp:470-513): run
-    * the SELECT through the dialect rewrite and append it through the
-    * delta store by [[insertFromSelect]]. */
-  private def runInsertSelect(table0: String, colList0: String,
-                              select0: String): DataFrame = {
-    // `INSERT INTO t (SELECT …)` parses the parenthesized select into the
-    // column-list group — reclassify
-    val (colList, select) =
-      if (colList0 != null && colList0.trim.toUpperCase.startsWith("SELECT"))
-        (null: String, colList0)
-      else (colList0, select0.trim.stripPrefix("(").stripSuffix(")"))
-    val table = dmlTableFor(table0, Option(colList).toSeq
-      .flatMap(splitTopLevel(_))
-      .map(_.trim.stripPrefix("`").stripSuffix("`")))
-    val store = attachedStore(table)
-    val schema = store.read().schema
-    // a pure `@var := expr` projection with no other @-references is
-    // the expression itself (update_v1.test `INSERT … SELECT
-    // @newA := 1 + a`); running accumulators stay unsupported
-    val selectEff =
-      if (!select.contains(":=")) select
-      else {
-        val s2 = select.replaceAll("(?i)@\\w+\\s*:=\\s*", "")
-        if (s2.contains("@")) select else s2
-      }
-    val n = insertFromSelect(table, store,
-      spark.sql(MySqlDialect.rewrite(selectEff)), colList,
-      checkPk = true)(store.append)
-    import spark.implicits._
-    dmlResult(table, "rows_inserted" -> n)
-  }
-
-  /** `INSERT IGNORE INTO t [cols] VALUES …`: batch rows that duplicate
-    * an existing PRIMARY KEY (or an earlier batch row — MySQL keeps the
-    * first occurrence) are skipped; survivors append through the delta
-    * store. Unlike REPLACE/upsert this NEVER rewrites the base — it is
-    * a pure filtered append (one key-columns-only anti-join probe).
-    * Data errors downgrade per MySQL's IGNORE rules (strict = false):
-    * out-of-range values clamp, NOT NULL columns take the implicit
-    * default. */
-  private def runInsertIgnore(table0: String, colList: String,
-                              tuples: String): DataFrame = {
-    val table = dmlTableFor(table0, Option(colList).toSeq.flatMap(splitTopLevel(_))
-      .map(_.trim.stripPrefix("`").stripSuffix("`")))
-    import org.apache.spark.sql.functions.col
-    val store = attachedStore(table)
-    // without a declared PK there is nothing to dedup against — IGNORE
-    // then only downgrades data errors (issue682)
-    val keys = primaryKeys.getOrElse(table.toLowerCase, Seq.empty)
-    // BEFORE INSERT fires for every batch row — dup-skipped ones too
-    // (trigger.test's @log golden); AFTER fires only for survivors
-    val batch0 = fireBeforeInsert(table, assignAutoInc(store,
-      valuesBatch(tuples, colList, store.read().schema, strict = false)))
-    val batch = if (keys.isEmpty) batch0 else batch0.dropDuplicates(keys)
-    val survivors0 = if (keys.isEmpty) batch else batch
-      .join(store.read().select(keys.map(col): _*), keys, "left_anti")
-    // freeze before appending: the anti-join is lazy against the
-    // store's read view, and the AFTER-trigger pass must see the rows
-    // that actually appended, not a post-append re-evaluation
-    val survivors =
-      if (triggersOn(table, "INSERT", "AFTER").isEmpty) survivors0
-      else {
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(
-          collectCapped(survivors0, s"INSERT IGNORE $table")
-            .toList.asJava, survivors0.schema)
-      }
-    val n = survivors.count()
-    store.append(survivors)
-    refreshTableView(table, store)
-    fireAfterInsert(table, survivors)
-    import spark.implicits._
-    dmlResult(table, "rows_inserted" -> n)
-  }
 
   /** One column definition (or table-level constraint) from a CREATE
     * TABLE body. Returns Left(field) for a column, Right(pkCols) for a
@@ -1940,12 +2230,11 @@ class StatementRunner(spark: SparkSession) {
           .withMetadata(f.metadata)
           .putString("graft.mysql.engine", engine.toUpperCase).build()))
     val schema = org.apache.spark.sql.types.StructType(fields3)
-    // ONE empty partition, not emptyRDD's zero: a zero-partition write
-    // emits no parquet footers and the store's read-back cannot infer
-    // the schema
-    val empty = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        Seq.empty[org.apache.spark.sql.Row], 1), schema)
+    // an empty local frame: the write still leaves one footer for a
+    // reopened store to read the schema from, and the new version is
+    // seeded with no rows, so the first read opens no file
+    val empty = org.apache.spark.sql.GraftSqlBridge.localFrame(spark, schema,
+      Nil)
     val root = java.nio.file.Files
       .createTempDirectory(s"graft-create-$key").toString
     val store = new DeltaStore(spark, root)
@@ -1958,390 +2247,6 @@ class StatementRunner(spark: SparkSession) {
     Seq((table, fields.size.toLong,
       pk.map(_.mkString(",")).getOrElse("")))
       .toDF("table_name", "n_columns", "primary_key")
-  }
-
-  /** `REPLACE INTO t [cols] VALUES …` (replace_into.test; handler path
-    * sql/ha_my_tianmu.cpp): delete any base row sharing the declared
-    * PRIMARY KEY with the batch, then insert the batch — executed as one
-    * staged base rewrite via [[Dml.replaceInto]]. */
-  private def runReplace(table0: String, colList: String,
-                         tuples: String): DataFrame = {
-    val table = dmlTableFor(table0, Option(colList).toSeq.flatMap(splitTopLevel(_))
-      .map(_.trim.stripPrefix("`").stripSuffix("`")))
-    val store = attachedStore(table)
-    // `REPLACE INTO t() VALUES()` — all-defaults rows, the INSERT
-    // discipline (trigger.test scenario 1.3)
-    if (tuples.trim.matches("""\(\s*\)(\s*,\s*\(\s*\))*""") &&
-        (colList == null || colList.trim.isEmpty))
-      return runInsertDefaults(table, tuples.count(_ == '('))
-    // REPLACE without any unique key cannot conflict — MySQL runs it as
-    // a plain INSERT (trigger.test replaces into a keyless
-    // timestamp-default table)
-    val keys = primaryKeys.getOrElse(table.toLowerCase, Seq.empty)
-    // REPLACE runs the insert-trigger pair per row (trigger.test's
-    // scenario 1.3/1.4 pin BEFORE INSERT on REPLACE forms); the
-    // displaced row's delete triggers are out of scope — the corpus
-    // never replaces into a delete-triggered table
-    val batch = fireBeforeInsert(table, assignAutoInc(store,
-      valuesBatch(tuples, colList, store.read().schema)))
-    if (keys.isEmpty) store.append(batch)
-    else store.rewriteWith(base => Dml.replaceInto(base, batch, keys))
-    refreshTableView(table, store)
-    fireAfterInsert(table, batch)
-    import spark.implicits._
-    Seq((table, batch.count())).toDF("table_name", "rows_replaced")
-  }
-
-  /** `REPLACE INTO t [cols] SELECT …` — the batch comes from a query,
-    * frozen like INSERT…SELECT's ([[insertFromSelect]]: the select may
-    * read the target). */
-  private def runReplaceSelect(table: String, colList0: String,
-                               select0: String): DataFrame = {
-    val (colList, select) =
-      if (colList0 != null && colList0.trim.toUpperCase.startsWith("SELECT"))
-        (null: String, colList0)
-      else (colList0, select0.trim.stripPrefix("(").stripSuffix(")"))
-    val store = attachedStore(table)
-    val keys = primaryKeys.getOrElse(table.toLowerCase, Seq.empty)
-    val n = insertFromSelect(table, store,
-      spark.sql(MySqlDialect.rewrite(select)), colList, checkPk = false) {
-      batch =>
-        if (keys.isEmpty) store.append(batch)
-        else store.rewriteWith(base => Dml.replaceInto(base, batch, keys))
-    }
-    import spark.implicits._
-    Seq((table, n)).toDF("table_name", "rows_replaced")
-  }
-
-  /** `REPLACE INTO t SET a = 1, …` — the named single-row form. */
-  private def runReplaceSet(table: String, setList: String): DataFrame = {
-    import org.apache.spark.sql.functions.expr
-    val store = attachedStore(table)
-    val keys = pkOf(table)
-    val schema = store.read().schema
-    val assigns = parseAssigns(setList, "REPLACE SET")
-    val bad = assigns.map(_._1).filterNot(schema.fieldNames.contains)
-    if (bad.nonEmpty) throw new IllegalArgumentException(
-      s"REPLACE SET: unknown column(s) ${bad.mkString(", ")}")
-    rangeCheck(
-      spark.range(1).select(assigns.map { case (c, rhs) =>
-        expr(rhs).as(c)
-      }: _*),
-      schema, assigns.map(_._1))
-    val row = fireBeforeInsert(table,
-      assignAutoInc(store, spark.range(1).select(schema.map { f =>
-        assigns.find(_._1 == f.name) match {
-          case Some((_, rhs)) => expr(rhs).cast(f.dataType).as(f.name)
-          case None => fillUnprovided(f, strict = true)
-        }
-      }.toSeq: _*)))
-    store.rewriteWith(base => Dml.replaceInto(base, row, keys))
-    refreshTableView(table, store)
-    fireAfterInsert(table, row)
-    import spark.implicits._
-    Seq((table, 1L)).toDF("table_name", "rows_replaced")
-  }
-
-  /** `VALUES(col)` references inside an ON DUPLICATE KEY UPDATE
-    * assignment — MySQL's way of naming the would-be-inserted value. */
-  private val ValuesRefRe: Regex = """(?i)VALUES\s*\(\s*`?(\w+)`?\s*\)""".r
-
-  /** `INSERT … VALUES … ON DUPLICATE KEY UPDATE a = expr, …`
-    * (insert_on_duplicate_update.test): batch rows whose PRIMARY KEY
-    * exists apply the assignments to the existing row (MySQL scoping:
-    * bare column = OLD row value, `VALUES(col)` = incoming value); new
-    * keys insert whole. One staged rewrite: incoming columns are renamed
-    * `__v_*` before the key-outer-join so bare names resolve to the base
-    * unambiguously, and `VALUES(x)` rewrites to `__v_x`. */
-  private def runInsertOnDup(table0: String, colList: String, tuples: String,
-                             updateList: String): DataFrame = {
-    val table = dmlTableFor(table0, Option(colList).toSeq.flatMap(splitTopLevel(_))
-      .map(_.trim.stripPrefix("`").stripSuffix("`")))
-    val store = attachedStore(table)
-    val batch = assignAutoInc(store,
-      valuesBatch(tuples, colList, store.read().schema))
-    upsertBatch(table, batch, updateList)
-  }
-
-  /** The SELECT-sourced upsert combo (insert_update.test): the source
-    * rows are staged first — a self-referencing SELECT must not observe
-    * the rewrite it feeds. */
-  private def runInsertSelectOnDup(table: String, colList0: String,
-                                   select0: String,
-                                   updateList: String): DataFrame = {
-    val (colList, select) =
-      if (colList0 != null && colList0.trim.toUpperCase.startsWith("SELECT"))
-        (null: String, colList0)
-      else (colList0, select0.trim.stripPrefix("(").stripSuffix(")"))
-    val store = attachedStore(table)
-    val result = spark.sql(MySqlDialect.rewrite(select))
-    val schema = store.read().schema
-    // MySQL lets the ODKU expressions name the SELECT's output columns
-    // (insert_update.test `UPDATE j = a`): such a name denotes the
-    // to-be-inserted value — rewrite it to VALUES(<aligned target col>)
-    val provided: Seq[String] =
-      if (colList == null || colList.trim.isEmpty) schema.map(_.name).toSeq
-      else splitTopLevel(colList).map(_.stripPrefix("`").stripSuffix("`"))
-        // MySQL column names are case-insensitive — `INSERT INTO st1
-        // (NAME, uid)` targets the `name` column (escape.test stored
-        // NULLs there before this canonicalization)
-        .map(p => schema.fieldNames
-          .find(_.equalsIgnoreCase(p)).getOrElse(p))
-    var updates = updateList
-    // a SOURCE-alias-qualified ref (`UPDATE f1 = 100 + src.f1`,
-    // insert_select.test) denotes the to-be-inserted value; strip the
-    // qualifier so the bare name rides the rename/VALUES machinery
-    // below (for a key column the old and incoming values coincide on
-    // a duplicate, so bare resolution is exact either way)
-    """(?is)\b(?:FROM|JOIN)\s+`?\w+`?\s+(?:AS\s+)?`?(\w+)`?""".r
-      .findAllMatchIn(select).map(_.group(1))
-      .filterNot(a => Set("WHERE", "ON", "GROUP", "ORDER", "LIMIT",
-        "HAVING", "UNION", "JOIN", "LEFT", "RIGHT", "INNER", "CROSS",
-        "SET", "AS", "USING").contains(a.toUpperCase))
-      .foreach { a =>
-        updates = updates.replaceAll(
-          "(?i)\\b" + java.util.regex.Pattern.quote(a) + "\\.", "")
-      }
-    result.columns.zip(provided).foreach { case (srcName, tgt) =>
-      if (!schema.fieldNames.exists(_.equalsIgnoreCase(srcName)))
-        updates = updates.replaceAll(
-          // a ref already inside VALUES(…) is NOT the rename shorthand —
-          // it must stay and fail 1054 (insert_select.test's
-          // `update x=values(z)` with z only a source column)
-          "(?i)(?<!values\\()\\b" +
-            java.util.regex.Pattern.quote(srcName) + "\\b",
-          java.util.regex.Matcher.quoteReplacement(s"VALUES($tgt)"))
-    }
-    val batch = Staging.stageOrdered(assignAutoInc(store,
-      alignToSchema(result, colList, schema)),
-      s"insert-select-odku-$table")
-    upsertBatch(table, batch, updates)
-  }
-
-  private def upsertBatch(table: String, batch: DataFrame,
-                          updateList: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, expr, lit, when}
-    val store = attachedStore(table)
-    val schema = store.read().schema
-    // a table-QUALIFIED name inside VALUES() is not valid MySQL —
-    // VALUES takes a bare target column (insert_select.test pins the
-    // error for `update x=values(t2.x)`)
-    """(?i)VALUES\s*\(\s*`?\w+`?\s*\.""".r.findFirstIn(updateList)
-      .foreach(_ => throw new IllegalArgumentException(
-        "ON DUPLICATE KEY UPDATE: VALUES() takes an unqualified target " +
-          "column name (MySQL error 1064)"))
-    val assigns = splitTopLevel(updateList).map { a =>
-      val i = a.indexOf('=')
-      if (i < 0) throw new IllegalArgumentException(
-        s"ON DUPLICATE KEY UPDATE: malformed assignment '$a'")
-      val lhs = a.substring(0, i).trim.stripPrefix("`").stripSuffix("`")
-      // `t1.b` qualifies the OLD row's column (insert_update.test
-      // `IF(VALUES(b) > t1.b, …)`) — the frame here is unqualified
-      val rhs = ValuesRefRe.replaceAllIn(
-        MySqlDialect.rewrite(a.substring(i + 1).trim)
-          .replaceAll("(?i)\\b" +
-            java.util.regex.Pattern.quote(table) + "\\.", ""),
-        m => {
-          // VALUES(col) must name a column of the TARGET table
-          // (insert_select.test pins 1054 for `values(z)` where z is
-          // only a source column)
-          if (!schema.fieldNames.exists(_.equalsIgnoreCase(m.group(1))))
-            throw new IllegalArgumentException(
-              s"ON DUPLICATE KEY UPDATE: VALUES(${m.group(1)}) does " +
-                "not name a target column (MySQL error 1054)")
-          "__v_" + m.group(1)
-        })
-      (lhs, rhs)
-    }
-    val bad = assigns.map(_._1).filterNot(schema.fieldNames.contains)
-    if (bad.nonEmpty) throw new IllegalArgumentException(
-      s"ON DUPLICATE KEY UPDATE: unknown column(s) ${bad.mkString(", ")}")
-    // without any unique key nothing can conflict: MySQL runs the ODKU
-    // form as a plain insert (insert.test on a keyless t1) — but the
-    // update list is still VALIDATED above (1054 fires either way)
-    if (!primaryKeys.contains(table.toLowerCase)) {
-      val fired = fireBeforeInsert(table, batch)
-      val n = fired.count()
-      store.append(fired)
-      refreshTableView(table, store)
-      fireAfterInsert(table, fired)
-      import spark.implicits._
-      return dmlResult(table, "rows_updated" -> 0L, "rows_inserted" -> n)
-    }
-    val keys = pkOf(table)
-    if (triggers.values.exists(_.table == table.toLowerCase))
-      return upsertBatchTriggered(table, store, schema, keys, batch,
-        assigns)
-    val matchedCount = store.read()
-      .join(batch.select(keys.map(col): _*), keys, "left_semi")
-      .agg(count(lit(1))).first().getLong(0)
-    // refresh in a finally: the view must track the store whichever
-    // way the statement ends (insert.test's `update f1 = f3 + 10`
-    // through a view fails to resolve; rewriteWith then leaves the
-    // store as it was, since it writes nothing before `f` returns)
-    try store.rewriteWith { base =>
-      val inc = batch.select(
-        schema.map(f => col(f.name).as(s"__v_${f.name}")).toSeq: _*)
-      val joinCond = keys.map(k => col(k) === col(s"__v_$k")).reduce(_ && _)
-      val matched = col(s"__v_${keys.head}").isNotNull
-      val updated = base.join(inc, joinCond, "left_outer")
-        .select(schema.map { f =>
-          assigns.find(_._1 == f.name) match {
-            case Some((_, rhs)) =>
-              when(matched, expr(rhs).cast(f.dataType))
-                .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }.toSeq: _*)
-      val inserted = batch.join(base.select(keys.map(col): _*), keys,
-        "left_anti")
-      updated.unionByName(inserted)
-    } finally refreshTableView(table, store)
-    import spark.implicits._
-    dmlResult(table, "rows_updated" -> matchedCount,
-      "rows_inserted" -> (batch.count() - matchedCount))
-  }
-
-  /** ON DUPLICATE KEY UPDATE over a trigger-bearing table: MySQL runs
-    * the statement row by row — BEFORE INSERT always fires; a duplicate
-    * key then routes the row through the UPDATE trigger pair with OLD =
-    * the stored row and the assignments evaluated in MySQL's ODKU
-    * scoping (bare column = OLD value, VALUES(col) = incoming value).
-    * The @log golden in trigger.test pins the interleaved order, and
-    * the fld1=1100 golden pins that AFTER UPDATE fires on the dup
-    * path. */
-  private def upsertBatchTriggered(table: String, store: DeltaStore,
-                                   schema: org.apache.spark.sql.types.StructType,
-                                   keys: Seq[String], batch: DataFrame,
-                                   assigns: Seq[(String, String)])
-      : DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col,
-      lit, when}
-    val keyIdx = keys.map(k => schema.fieldIndex(
-      schema.fieldNames.find(_.equalsIgnoreCase(k)).getOrElse(k)))
-    // only the BATCH is driver-materialized (it bounds the row-wise
-    // trigger loop); the base contributes just its key-matched slice
-    // via one broadcast semi-join — a 100M-row base passes through as
-    // a keyed rewrite, never a full collect
-    val batchRows = collectCapped(batch, s"ON DUP $table")
-    val prefetched = scala.collection.mutable.HashMap[
-      Seq[Any], org.apache.spark.sql.Row]()
-    if (batchRows.nonEmpty) {
-      val keyDf = batch.select(keys.map(col): _*).dropDuplicates()
-      store.read().join(broadcast(keyDf), keys, "left_semi")
-        .collect().foreach(r => prefetched(keyIdx.map(r.get)) = r)
-    }
-    // touched keys only: updates replace their base row in place,
-    // inserts append in batch order
-    val byKey = scala.collection.mutable.LinkedHashMap[
-      Seq[Any], org.apache.spark.sql.Row]()
-    val insertedKeys = scala.collection.mutable.LinkedHashSet[Seq[Any]]()
-    // a BEFORE INSERT trigger may mutate the key away from the
-    // incoming value — one targeted probe covers that rare path.
-    // `covered` = the key equals the row's incoming (pre-trigger) key,
-    // which the broadcast semi-join prefetch already resolved against
-    // the base: a prefetched miss there is a PROVEN absence, so a
-    // mostly-insert batch never fires per-row base-scan jobs
-    def lookupOld(k: Seq[Any], covered: Boolean)
-        : Option[org.apache.spark.sql.Row] =
-      byKey.get(k).orElse(prefetched.get(k)).orElse {
-        if (covered) None
-        else {
-          val cond = keys.zip(k).map { case (c, v) =>
-            if (v == null) col(c).isNull else col(c) === lit(v)
-          }.reduce(_ && _)
-          val hit = store.read().filter(cond).limit(1).collect()
-            .headOption
-          hit.foreach(r => prefetched(k) = r)
-          hit
-        }
-      }
-    val insBefore = triggersOn(table, "INSERT", "BEFORE")
-    val insAfter = triggersOn(table, "INSERT", "AFTER")
-    val updBefore = triggersOn(table, "UPDATE", "BEFORE")
-    val updAfter = triggersOn(table, "UPDATE", "AFTER")
-    var updated = 0L
-    var inserted = 0L
-    batchRows.foreach { br =>
-      val newM = rowToMap(br, schema)
-      insBefore.foreach(d => interp.runTriggerBody(d.body, newM, null,
-        newAssignable = true, schema))
-      val row = mapToRow(newM, schema)
-      val k = keyIdx.map(row.get)
-      val k0 = keyIdx.map(br.get)
-      lookupOld(k, covered = insBefore.isEmpty || k == k0) match {
-        case Some(oldRow) =>
-          val oldM = rowToMap(oldRow, schema).toMap
-          val updM = rowToMap(oldRow, schema)
-          assigns.foreach { case (c, rhs) =>
-            val ctx = new ProcCtx(procHost)
-            oldM.foreach { case (cn, v) =>
-              ctx.locals(cn) = new ctx.Local("", None, v)
-            }
-            newM.foreach { case (cn, v) =>
-              ctx.locals("__v_" + cn) = new ctx.Local("", None, v)
-            }
-            val f = schema.fields.find(_.name.equalsIgnoreCase(c)).get
-            updM(c.toLowerCase) =
-              interp.coerceToSpark(interp.evalExpr(rhs, ctx), f.dataType)
-          }
-          updBefore.foreach(d => interp.runTriggerBody(d.body, updM,
-            oldM, newAssignable = true, schema))
-          byKey(k) = mapToRow(updM, schema)
-          updated += 1
-          updAfter.foreach(d => interp.runTriggerBody(d.body, updM,
-            oldM, newAssignable = false, schema))
-        case None =>
-          byKey(k) = row
-          insertedKeys += k
-          inserted += 1
-          insAfter.foreach(d => interp.runTriggerBody(d.body, newM,
-            null, newAssignable = false, schema))
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    val insertedDf = spark.createDataFrame(
-      insertedKeys.toList.map(byKey(_)).asJava, schema)
-    val updatedEntries = byKey.toList.filterNot(e =>
-      insertedKeys.contains(e._1))
-    try store.rewriteWith { base =>
-      val withUpdates =
-        if (updatedEntries.isEmpty) base
-        else {
-          // replace matched rows IN PLACE: join the base against the
-          // (small, driver-built) updated snapshot on the ORIGINAL
-          // key — an assignment may have moved a key column, so the
-          // match key travels separately from the new values
-          val nf = schema.fields.map(f => org.apache.spark.sql.types
-            .StructField("__n_" + f.name, f.dataType, nullable = true))
-          val kf = keys.zipWithIndex.map { case (kc, i) =>
-            org.apache.spark.sql.types.StructField(s"__k_$i",
-              schema(schema.fieldNames
-                .find(_.equalsIgnoreCase(kc)).getOrElse(kc)).dataType,
-              nullable = true)
-          }
-          val hf = org.apache.spark.sql.types.StructField("__hit",
-            org.apache.spark.sql.types.BooleanType, nullable = true)
-          val updDf = spark.createDataFrame(
-            updatedEntries.map { case (k, r) =>
-              org.apache.spark.sql.Row.fromSeq(
-                r.toSeq ++ k :+ true)
-            }.asJava,
-            org.apache.spark.sql.types.StructType(nf ++ kf :+ hf))
-          val cond = keys.zipWithIndex.map { case (kc, i) =>
-            base(kc) <=> updDf(s"__k_$i")
-          }.reduce(_ && _)
-          base.join(broadcast(updDf), cond, "left_outer")
-            .select(schema.fields.map { f =>
-              when(coalesce(col("__hit"), lit(false)),
-                col("__n_" + f.name)).otherwise(base(f.name))
-                .as(f.name)
-            }.toSeq: _*)
-        }
-      withUpdates.unionByName(insertedDf)
-    } finally refreshTableView(table, store)
-    import spark.implicits._
-    dmlResult(table, "rows_updated" -> updated, "rows_inserted" -> inserted)
   }
 
   /** MySQL multi-table UPDATE (`UPDATE t1 JOIN t2 ON … SET t1.c = …`):
@@ -2587,73 +2492,6 @@ class StatementRunner(spark: SparkSession) {
       (a.substring(0, i).trim.replace("`", "").split('.').last,
         MySqlDialect.rewrite(a.substring(i + 1).trim))
     }
-
-  /** `INSERT INTO t SET a = 1, b = 'x'` — MySQL's named single-row
-    * insert (insert.test); unmentioned columns arrive NULL. */
-  private def runInsertSet(table0: String, setList: String): DataFrame = {
-    import org.apache.spark.sql.functions.{expr, lit}
-    if (strictMode) rejectLiteralDivZero(setList, "INSERT SET")
-    val table = dmlTableFor(table0,
-      splitTopLevel(setList).map(_.takeWhile(_ != '=').trim
-        .stripPrefix("`").stripSuffix("`")))
-    val store = attachedStore(table)
-    val schema = store.read().schema
-    // `SET col = DEFAULT` takes the declared/implicit default
-    // (insert.test stmt `insert into t1 set a=default,…`)
-    val assigns = parseAssigns(setList, "INSERT SET").map { case (c, rhs) =>
-      if (!rhs.trim.equalsIgnoreCase("default")) (c, rhs)
-      else (c, schema.find(_.name.equalsIgnoreCase(c)) match {
-        case Some(f) if f.metadata.contains("graft.mysql.default") =>
-          f.metadata.getString("graft.mysql.default")
-        case Some(f) if f.nullable => "NULL"
-        case Some(f) => implicitDefaultSql(f.dataType)
-        case None => rhs
-      })
-    }
-    val bad = assigns.map(_._1).filterNot(schema.fieldNames.contains)
-    if (bad.nonEmpty) throw new IllegalArgumentException(
-      s"INSERT SET: unknown column(s) ${bad.mkString(", ")}")
-    // `SET a=1,b=2,a=1` — naming a column twice is ER_FIELD_SPECIFIED
-    // _TWICE (insert.test pins 1110)
-    assigns.groupBy(_._1.toLowerCase).collectFirst {
-      case (n, vs) if vs.size > 1 => n
-    }.foreach(n => throw new IllegalArgumentException(
-      s"INSERT SET: column '$n' specified twice (MySQL error 1110)"))
-    val missingRequired = schema.filter(f =>
-      requiredCol(f) && !assigns.exists(_._1 == f.name)
-        && declaredDefault(f).isEmpty).map(_.name)
-    if (missingRequired.nonEmpty) throw new IllegalArgumentException(
-      s"INSERT SET: field(s) ${missingRequired.mkString(", ")} don't " +
-        "have a default value (MySQL strict mode, error 1364)")
-    // one row of the assigned expressions, routed through the SAME
-    // value-coercion pipeline as the VALUES form (alignToSchema:
-    // range check / clamp, zero-date sentinels, TIME grammar, my_gcvt
-    // into CHAR — `insert into t1 set t=0` with `timestamp NOT NULL`
-    // must store the zero date, not the column default; insert.test)
-    val rawRow = spark.range(1)
-      .select(assigns.map { case (c, rhs) => expr(rhs).as(c) }: _*)
-    val row = alignToSchema(rawRow, assigns.map(_._1).mkString(","),
-      schema, strict = strictMode)
-    val aligned0 = fireBeforeInsert(table, assignAutoInc(store, row))
-    // materialize the statement-sized batch into a LocalRelation so the
-    // append lands in the store's ORDERED in-memory buffer — a
-    // Range-leafed plan would spill one parquet delta file per
-    // statement, and a multi-file delta reads in SIZE order, not insert
-    // order (the statement tier's scan-order contract)
-    val aligned = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(
-        aligned0.collect().toList.asJava,
-        org.apache.spark.sql.types.StructType(
-          aligned0.schema.fields.map(_.copy(nullable = true))))
-    }
-    enforcePkUnique(table, store, aligned)
-    store.append(aligned)
-    refreshTableView(table, store)
-    fireAfterInsert(table, aligned)
-    import spark.implicits._
-    dmlResult(table, "rows_inserted" -> 1L)
-  }
 
   /** A MySQL ORDER BY list (`a DESC, b`) as sort columns. */
   private def orderColumns(clause: String): Seq[org.apache.spark.sql.Column] =
@@ -5008,7 +4846,7 @@ class StatementRunner(spark: SparkSession) {
     // all attached stores around the OUTERMOST DML only — statements a
     // trigger body issues run inside the same transaction.
     val needTxn = triggers.nonEmpty && dmlTxnDepth == 0 &&
-      """(?is)^\s*(INSERT|UPDATE|DELETE|REPLACE)\b""".r
+      """(?is)^\s*(INSERT|UPDATE|DELETE|REPLACE|LOAD)\b""".r
         .findFirstIn(resolvedLi).isDefined
     val df =
       if (!needTxn) dispatch(resolvedLi)
@@ -5064,15 +4902,10 @@ class StatementRunner(spark: SparkSession) {
   private var lastInsertId: Long = 0L
 
   private def dispatch(stmtText: String): DataFrame = stmtText match {
-    // LOAD DATA: parse the clauses into one CsvLoader.load, then
-    // loadRecords appends the clean records and counts both sides from
-    // that one parse (one job for a file of at most BufferCap records)
+    // LOAD DATA: parse the clauses into one CsvLoader.load, whose
+    // records insertRows writes and counts, both sides from that one
+    // parse (one job for a file of at most BufferCap records)
     case LoadRe(path, dupMode, table, tail) =>
-      if (dupMode != null)
-        throw new UnsupportedOperationException(
-          s"LOAD DATA ${dupMode.toUpperCase}: duplicate-key modes need a " +
-            "declared key — use Dml.replaceInto (REPLACE) or " +
-            "Dml.appendStrict (reject) on the store directly")
       val skipLines = """(?is)\bIGNORE\s+(\d+)\s+LINES""".r
         .findFirstMatchIn(tail).map(_.group(1).toInt).getOrElse(0)
       val store = stores.getOrElse(table.toLowerCase,
@@ -5206,44 +5039,28 @@ class StatementRunner(spark: SparkSession) {
             setAssigns.map(_._1)).distinct
           (withSets.select((provided :+ CsvLoader.CorruptCol).map(
             org.apache.spark.sql.functions.col): _*),
-            (df: DataFrame) => assignAutoInc(store, alignToSchema(df,
-              provided.mkString(","), schema, strict = false)))
+            (df: DataFrame) => alignToSchema(df, provided.mkString(","),
+              schema, strict = false))
       }
-      val (loaded, rejected) = loadRecords(store, tagged, finish)(
-        Seq(res.clean.count(), res.rejects.count()))
-      refreshTableView(table, store)
-      import spark.implicits._
-      dmlResult(table, "rows_loaded" -> loaded, "rows_rejected" -> rejected)
+      // the duplicate-key clause names the mode; without one LOCAL skips
+      // duplicate keys (the server cannot stop a client's transfer,
+      // MySQL's rule) and the server-side form stops with error 1062
+      val mode = Option(dupMode).map(_.toUpperCase) match {
+        case Some("REPLACE") => DupMode.Replace
+        case Some(_) => DupMode.Ignore
+        case None if isLocalLoad => DupMode.Ignore
+        case None => DupMode.Error
+      }
+      insertRows(table, RowSource(tagged, finish, file = true), mode,
+        countAs = Some("rows_loaded"))
 
     case RoughlyRe(aggList, table, whereClause) =>
       runRoughly(aggList, table, whereClause)
 
-    case InsertOnDupRe(table, colList, tuples, updateList) =>
-      runInsertOnDup(table, colList, tuples, updateList)
-
-    case InsertIgnoreRe(table, colList, tuples) =>
-      runInsertIgnore(table, colList, tuples)
-
-    case InsertRe(table, colList, tuples) =>
-      runInsert(table, colList, tuples)
-
-    case InsertSetRe(table, setList) =>
-      runInsertSet(table, setList)
-
-    case InsertSelectOnDupRe(table, colList, select, updateList) =>
-      runInsertSelectOnDup(table, colList, select, updateList)
-
-    case InsertSelectRe(table, colList, select) =>
-      runInsertSelect(table, colList, select)
-
-    case ReplaceRe(table, colList, tuples) =>
-      runReplace(table, colList, tuples)
-
-    case ReplaceSetRe(table, setList) =>
-      runReplaceSet(table, setList)
-
-    case ReplaceSelectRe(table, colList, select) =>
-      runReplaceSelect(table, colList, select)
+    case InsertRe(verb, ignore, table, colList, tuples, setList, select,
+        odku) =>
+      insertStatement(verb, ignore, table, colList, tuples, setList, select,
+        odku)
 
     case AlterAddPkRe(table, cols) =>
       import spark.implicits._
@@ -5804,9 +5621,8 @@ class StatementRunner(spark: SparkSession) {
               }
           }
         }
-      val empty = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          Seq.empty[org.apache.spark.sql.Row], 1), schema)
+      val empty = org.apache.spark.sql.GraftSqlBridge.localFrame(spark,
+        schema, Nil)
       val root = java.nio.file.Files
         .createTempDirectory(s"graft-like-$key").toString
       val store = new DeltaStore(spark, root)
@@ -6078,10 +5894,10 @@ class StatementRunner(spark: SparkSession) {
         store.read().columns.exists(_.equalsIgnoreCase(f.name))).foreach {
         f => store.alterAddColumn(f.name, lit(null).cast(f.dataType))
       }
-      val n = insertFromSelect(table, store, result,
-        result.columns.map(c => s"`$c`").mkString(","),
-        checkPk = true)(store.append)
-      Seq((table, n)).toDF("table_name", "rows_created")
+      val schema = store.read().schema
+      insertRows(table, RowSource(result, alignToSchema(_,
+        result.columns.map(c => s"`$c`").mkString(","), schema)),
+        DupMode.Error, countAs = Some("rows_created"))
 
     case CreateTableRe(temporary, ifNotExists, table, body, options) =>
       // a TEMPORARY table shadows a BASE table of the same name, but a
@@ -6351,8 +6167,7 @@ class StatementRunner(spark: SparkSession) {
       }
       attach(table, store)
       ownedRoots(key) = root
-      Seq((table, store.read().count()))
-        .toDF("table_name", "rows_created")
+      dmlResult(table, "rows_created" -> store.read().count())
 
     case DropRe(ifExists, tableList) =>
       import spark.implicits._

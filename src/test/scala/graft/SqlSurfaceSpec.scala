@@ -246,7 +246,9 @@ class SqlSurfaceSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("graft_stmt_x").toString)
     store.writeBase(Engine.table(spark, sf, "region").limit(0))
     runner.attach("stmt_region_x", store)
-    intercept[UnsupportedOperationException] {
+    // the REPLACE and IGNORE duplicate-key clauses are supported load
+    // modes now — the missing file is the only failure left here
+    intercept[org.apache.spark.sql.AnalysisException] {
       runner.run("LOAD DATA INFILE '/tmp/x' REPLACE INTO TABLE stmt_region_x")
     }
     // IGNORE n LINES is a SUPPORTED load clause now (skip-lines read
@@ -1055,6 +1057,124 @@ class SqlSurfaceSpec extends AnyFunSuite {
 
     intercept[IllegalArgumentException] {
       runner.run("DESCRIBE never_attached_tbl")
+    }
+  }
+
+  /** A runner with triggers enabled on tianmu tables, and a table's
+    * rows in scan order, each row as comma-joined text. */
+  private def keyedRunner(): sources.StatementRunner = {
+    val r = new sources.StatementRunner(spark)
+    r.run("SET SESSION tianmu_no_key_error=ON")
+    r
+  }
+  private def rows(r: sources.StatementRunner, sql: String): Seq[String] =
+    r.run(sql).collect().toSeq.map(_.toSeq.mkString(","))
+  /** `lines` in a new file. */
+  private def csvFile(lines: String*): String = {
+    val f = java.nio.file.Files.createTempFile("graft_load_", ".csv")
+    java.nio.file.Files.write(f, lines.mkString("", "\n", "\n").getBytes)
+    f.toString
+  }
+
+  test("statement front-end: INSERT IGNORE … SELECT and INSERT IGNORE … " +
+      "SET skip duplicate keys and downgrade data errors") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE ign (id INT NOT NULL PRIMARY KEY, v INT, " +
+      "tag VARCHAR(4)) ENGINE=TIANMU")
+    r.run("INSERT INTO ign VALUES (1, 10, 'a'), (2, 20, 'b')")
+    // id 2 is stored already, id 3 is new; the SELECT reads ign before
+    // the write
+    assert(r.run("INSERT IGNORE INTO ign SELECT id + 1, v + 1, 'sel' " +
+      "FROM ign").first().getAs[Long]("rows_inserted") === 1L)
+    assert(r.run("INSERT IGNORE INTO ign SET id = 3, v = 0, tag = 'dup'")
+      .first().getAs[Long]("rows_inserted") === 0L)
+    // IGNORE truncates the over-long string instead of rejecting it
+    assert(r.run("INSERT IGNORE INTO ign SET id = 4, v = 40, " +
+      "tag = 'toolong'").first().getAs[Long]("rows_inserted") === 1L)
+    assert(rows(r, "SELECT id, v, tag FROM ign") ===
+      Seq("1,10,a", "2,20,b", "3,21,sel", "4,40,tool"))
+  }
+
+  test("statement front-end: LOAD DATA honors the PRIMARY KEY — a plain " +
+      "load stops with 1062, IGNORE and LOCAL skip, REPLACE replaces") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE lpk (id INT NOT NULL PRIMARY KEY, v INT, " +
+      "tag VARCHAR(8)) ENGINE=TIANMU")
+    r.run("INSERT INTO lpk VALUES (1, 10, 'a'), (2, 20, 'b')")
+    def contents = rows(r, "SELECT id, v, tag FROM lpk")
+    def load(sql: String): (Long, Long) = {
+      val x = r.run(sql).first()
+      (x.getAs[Long]("rows_loaded"), x.getAs[Long]("rows_rejected"))
+    }
+    val fields = "FIELDS TERMINATED BY ','"
+    val dup = csvFile("2,200,dup", "3,30,c")
+    val e = intercept[IllegalArgumentException](
+      r.run(s"LOAD DATA INFILE '$dup' INTO TABLE lpk $fields"))
+    assert(e.getMessage.contains("1062"))
+    assert(contents === Seq("1,10,a", "2,20,b"))
+    // a key repeated inside the file is a duplicate too
+    val twice = csvFile("5,1,x", "5,2,y")
+    assert(intercept[IllegalArgumentException](r.run(
+      s"LOAD DATA INFILE '$twice' INTO TABLE lpk $fields"))
+      .getMessage.contains("1062"))
+    assert(contents === Seq("1,10,a", "2,20,b"))
+    assert(load(s"LOAD DATA INFILE '$dup' IGNORE INTO TABLE lpk $fields") ===
+      (1L, 0L))
+    assert(contents === Seq("1,10,a", "2,20,b", "3,30,c"))
+    val rep = csvFile("3,300,r", "4,40,d", "bad,1,z")
+    assert(load(s"LOAD DATA INFILE '$rep' REPLACE INTO TABLE lpk $fields") ===
+      (2L, 1L))
+    assert(contents === Seq("1,10,a", "2,20,b", "3,300,r", "4,40,d"))
+    // LOCAL skips duplicate keys, MySQL's rule for a client-side file
+    val local = csvFile("1,1,x", "6,60,f")
+    assert(load(s"LOAD DATA LOCAL INFILE '$local' INTO TABLE lpk $fields") ===
+      (1L, 0L))
+    assert(contents ===
+      Seq("1,10,a", "2,20,b", "3,300,r", "4,40,d", "6,60,f"))
+  }
+
+  test("statement front-end: LOAD DATA fires the INSERT triggers once " +
+      "per loaded row") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE ltr (id INT, v INT) ENGINE=TIANMU")
+    r.run("CREATE TRIGGER ltr_bi BEFORE INSERT ON ltr FOR EACH ROW " +
+      "SET @qb = @qb + 1")
+    r.run("CREATE TRIGGER ltr_ai AFTER INSERT ON ltr FOR EACH ROW " +
+      "SET @qa = @qa + NEW.v")
+    r.run("SET @qb = 0, @qa = 0")
+    val f = csvFile("1,10", "oops,5", "2,20")
+    val x = r.run(s"LOAD DATA INFILE '$f' INTO TABLE ltr " +
+      "FIELDS TERMINATED BY ','").first()
+    assert(x.getAs[Long]("rows_loaded") === 2L)
+    assert(x.getAs[Long]("rows_rejected") === 1L)
+    assert(rows(r, "SELECT @qb, @qa") === Seq("2,30"))
+    r.run("INSERT INTO ltr VALUES (3, 300)")
+    assert(rows(r, "SELECT @qb, @qa") === Seq("3,330"))
+    assert(rows(r, "SELECT id, v FROM ltr") === Seq("1,10", "2,20", "3,300"))
+  }
+
+  test("statement front-end: CREATE TABLE and CREATE TABLE LIKE seed an " +
+      "empty version: no read opens a file, and a reopened store reads " +
+      "the declared schema and no rows") {
+    /** Bytes read through the local file system in this JVM so far. */
+    def bytesRead: Long = Option(org.apache.hadoop.fs.FileSystem
+        .getGlobalStorageStatistics.get("file"))
+      .flatMap(s => Option(s.getLong("bytesRead"))).fold(0L)(_.longValue)
+    val r = keyedRunner()
+    val read0 = bytesRead
+    r.run("CREATE TABLE seeded (id INT NOT NULL, tag VARCHAR(8)) " +
+      "ENGINE=TIANMU")
+    r.run("CREATE TABLE seeded_like LIKE seeded")
+    assert(rows(r, "SELECT COUNT(*) FROM seeded") === Seq("0"))
+    assert(rows(r, "SELECT COUNT(*) FROM seeded_like") === Seq("0"))
+    assert(bytesRead === read0, "a new table's read opened a file")
+    Seq("seeded", "seeded_like").foreach { t =>
+      val reopened = new sources.DeltaStore(spark,
+        new java.io.File(r.attachedStore(t).basePath).getParent)
+      assert(reopened.read().schema.map(f => (f.name, f.dataType)) ===
+        Seq(("id", org.apache.spark.sql.types.IntegerType),
+          ("tag", org.apache.spark.sql.types.StringType)), t)
+      assert(reopened.read().count() === 0L, t)
     }
   }
 }

@@ -712,6 +712,41 @@ class StatementJobsSpec extends AnyFunSuite {
     }
   }
 
+  test("ROW_COUNT() after every INSERT, REPLACE, LOAD, CTAS, UPDATE and " +
+      "DELETE form is the first count of its result") {
+    val r = freshRunner()
+    table200(r, "rc")
+    r.run("CREATE TABLE rcj (id INT) ENGINE=TIANMU")
+    r.run("INSERT INTO rcj VALUES (3), (5)")
+    val f = textFile("rc.csv", Seq("300,1,l", "301,2,l", "302,3,l"))
+    val forms = Seq(
+      "INSERT INTO rc VALUES (200, 1, 'a'), (201, 2, 'b')",
+      "INSERT INTO rc SET id = 202, v = 1, tag = 's'",
+      "INSERT INTO rc SELECT id + 1000, v, 'c' FROM rc WHERE id < 4",
+      "INSERT IGNORE INTO rc VALUES (1, 1, 'i'), (203, 1, 'i')",
+      "INSERT INTO rc VALUES (1, 1, 'o'), (2, 2, 'o'), (204, 1, 'o') " +
+        "ON DUPLICATE KEY UPDATE tag = 'u'",
+      "REPLACE INTO rc VALUES (5, 5, 'r'), (6, 6, 'r'), (7, 7, 'r')",
+      "REPLACE INTO rc SET id = 8, v = 8, tag = 'r'",
+      "REPLACE INTO rc SELECT id, v, 'rs' FROM rc WHERE id BETWEEN 10 AND 13",
+      s"LOAD DATA INFILE '$f' INTO TABLE rc FIELDS TERMINATED BY ','",
+      "CREATE TABLE rc2 AS SELECT id, v FROM rc WHERE id < 20",
+      "CREATE TABLE rc3 (id INT, v INT) SELECT id, v FROM rc WHERE id < 30",
+      "UPDATE rc SET v = v + 1 WHERE id < 40",
+      "UPDATE rc SET tag = 'l' WHERE id < 50 ORDER BY id LIMIT 3",
+      "UPDATE rc JOIN rcj ON rc.id = rcj.id SET rc.tag = 'j'",
+      "DELETE FROM rc WHERE id BETWEEN 60 AND 69",
+      "DELETE FROM rc WHERE id >= 70 ORDER BY id LIMIT 4",
+      "DELETE rc FROM rc JOIN rcj ON rc.id = rcj.id",
+      "DELETE FROM rc2 WHERE id IN (SELECT id FROM rcj)")
+    forms.foreach { sql =>
+      assert(rowCount(r, "DELETE FROM rcj WHERE id < 0") === 0)
+      val first = rowCount(r, sql)
+      assert(first > 0, sql)
+      assert(r.run("SELECT ROW_COUNT()").first().getLong(0) === first, sql)
+    }
+  }
+
   /** `tz1` (id, ts, v) and `tz2` (id) written at UTC, then the session
     * zone set to +01:00. */
   private def tzTables(r: StatementRunner): Unit = {
