@@ -15,10 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `StatementRunner.run(sql)` accepts those two statement forms, the
   * `SELECT ROUGHLY` rough-query mode (engine_execute.cpp:450 — see
   * [[StatementRunner.attachPacked]]), the DML statement forms against
-  * attached stores (`INSERT INTO … [cols] VALUES …` through the delta
-  * append; `INSERT INTO … [cols] SELECT …` incl. self-referencing
-  * inserts, engine_execute.cpp:470-513; `REPLACE INTO` and `INSERT … ON
-  * DUPLICATE KEY UPDATE` against the declared PRIMARY KEY; `DELETE FROM
+  * attached stores (every INSERT, REPLACE and `INSERT … ON DUPLICATE
+  * KEY UPDATE`, whose VALUES, SET or SELECT body incl. self-referencing
+  * inserts, engine_execute.cpp:470-513, is written by one pipeline
+  * against the declared PRIMARY KEY — see `insertRows`; `DELETE FROM
   * … [WHERE]` / `UPDATE … SET … [WHERE]` as staged base rewrites with
   * old-row UPDATE semantics — the reference's handler-level row DML,
   * ha_tianmu.h:101-102, executed the columnar way), the DDL statement
@@ -30,9 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SURVEY §1.2 MySQL mapping), plus passthrough:
   * `LOAD DATA [LOCAL] INFILE … INTO TABLE t [FIELDS
   * TERMINATED/ENCLOSED/ESCAPED BY …] [LINES TERMINATED BY …]` parses to
-  * one [[CsvLoader.load]] against the attached table's schema, freezes
-  * and counts a statement-sized file on the driver like `INSERT …
-  * SELECT`, and appends the clean rows to its [[DeltaStore]]; `SELECT …
+  * one [[CsvLoader.load]] against the attached table's schema, whose
+  * clean records the same pipeline writes to its [[DeltaStore]] (the
+  * `REPLACE`/`IGNORE` clauses are its duplicate-key modes); `SELECT …
   * INTO OUTFILE 'f' [export options]` strips the INTO clause, runs the
   * remaining SELECT through `spark.sql`, and exports via
   * [[CsvLoader.export]]; anything
@@ -44,10 +44,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * library, not a server: no wire protocol, no session state beyond the
   * attached stores).
   *
-  * Unsupported clauses (the `REPLACE`/`IGNORE` dup-key modes of LOAD
-  * DATA) throw with a pointer at the API that covers the semantics
-  * ([[Dml.replaceInto]] / [[Dml.appendStrict]]) — failing fast beats
-  * silently dropping a requested behavior.
+  * Unsupported clauses (a multi-character LOAD DATA line terminator,
+  * an unknown trailing LOAD clause) throw rather than being silently
+  * dropped.
   */
 object StatementRunner {
   /** Monotonic id source for per-runner I/O sandboxes (parallel MTR
@@ -1420,10 +1419,11 @@ class StatementRunner(spark: SparkSession) {
     *  4. apply `mode` against the declared PRIMARY KEY. Error checks the
     *     key ([[enforcePkUnique]]) and appends; Ignore skips the rows
     *     whose key the table or an earlier batch row holds, then
-    *     appends; Replace rewrites through [[Dml.replaceInto]]; Update
-    *     upserts, row by row on a table with triggers
-    *     ([[upsertEachRow]], which fires every trigger itself). A
-    *     keyless table appends in every mode: nothing can conflict
+    *     appends the rest in batch order; Replace rewrites through
+    *     [[Dml.replaceInto]]; Update upserts, row by row on a table with
+    *     triggers ([[upsertEachRow]], which fires every trigger
+    *     itself). A keyless table appends in every mode: nothing can
+    *     conflict
     *     (trigger.test replaces into a keyless table, insert.test runs
     *     ON DUPLICATE KEY UPDATE on one);
     *  5. refresh the table's view, then fire the AFTER INSERT triggers
@@ -1434,7 +1434,8 @@ class StatementRunner(spark: SparkSession) {
     *     `rows_inserted` for Update; a LOAD adds `rows_rejected`. */
   private def insertRows(table: String, source: RowSource, mode: DupMode,
                          countAs: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, expr, lit, when}
+    import org.apache.spark.sql.functions.{col, count, expr, lit,
+      monotonically_increasing_id, row_number, when}
     val store = attachedStore(table)
     val schema = store.read().schema
     val keys = primaryKeys.getOrElse(table.toLowerCase, Seq.empty)
@@ -1465,11 +1466,19 @@ class StatementRunner(spark: SparkSession) {
           store.append(batch)
           (Some(batch), written(counted()._1))
         case DupMode.Ignore =>
-          // the anti-join is lazy against the store's read view: the
-          // survivors are frozen before the append, so the AFTER
-          // triggers see the rows that were appended
-          val (survivors, kept) = freeze(batch.dropDuplicates(keys)
-            .join(store.read().select(keys.map(col): _*), keys, "left_anti"),
+          // the first row of a key survives unless the table holds the
+          // key, and the survivors keep the batch's order. The anti-join
+          // is lazy against the store's read view: the survivors are
+          // frozen before the append, so the AFTER triggers see the rows
+          // that were appended
+          val first = org.apache.spark.sql.expressions.Window
+            .partitionBy(keys.map(col): _*).orderBy("__ord")
+          val (survivors, kept) = freeze(batch
+            .withColumn("__ord", monotonically_increasing_id())
+            .withColumn("__nth", row_number().over(first))
+            .filter(col("__nth") === 1)
+            .join(store.read().select(keys.map(col): _*), keys, "left_anti")
+            .orderBy("__ord").select(batch.columns.map(col).toSeq: _*),
             s"ignore-$table")
           store.append(survivors)
           (Some(survivors), written(kept()._1))

@@ -1091,8 +1091,14 @@ class SqlSurfaceSpec extends AnyFunSuite {
     // IGNORE truncates the over-long string instead of rejecting it
     assert(r.run("INSERT IGNORE INTO ign SET id = 4, v = 40, " +
       "tag = 'toolong'").first().getAs[Long]("rows_inserted") === 1L)
+    // the first row of a key survives, and the survivors keep the
+    // statement's order
+    assert(r.run("INSERT IGNORE INTO ign VALUES (9, 1, 'p'), (1, 0, 'q'), " +
+      "(7, 1, 'r'), (9, 2, 's'), (5, 1, 't'), (8, 1, 'u'), (6, 1, 'v')")
+      .first().getAs[Long]("rows_inserted") === 5L)
     assert(rows(r, "SELECT id, v, tag FROM ign") ===
-      Seq("1,10,a", "2,20,b", "3,21,sel", "4,40,tool"))
+      Seq("1,10,a", "2,20,b", "3,21,sel", "4,40,tool", "9,1,p", "7,1,r",
+        "5,1,t", "8,1,u", "6,1,v"))
   }
 
   test("statement front-end: LOAD DATA honors the PRIMARY KEY — a plain " +
