@@ -1350,17 +1350,6 @@ class StatementRunner(spark: SparkSession) {
         s"for PRIMARY KEY (${keys.mkString(", ")}) (MySQL error 1062)")
   }
 
-  /** `rows` as a `LocalRelation` of `schema`'s columns, each nullable:
-    * a VALUES literal column reports non-nullable while a later tuple
-    * may hold NULL. */
-  private def localRows(rows: Seq[org.apache.spark.sql.Row],
-                        schema: org.apache.spark.sql.types.StructType)
-      : DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, org.apache.spark.sql.types.StructType(
-      schema.fields.map(_.copy(nullable = true))))
-  }
-
   /** Step 1 of [[insertRows]]: `raw`'s rows frozen before anything is
     * written, and a count of them, read once they have been written.
     * Up to [[DeltaStore.BufferCap]] rows are taken into a
@@ -1383,14 +1372,15 @@ class StatementRunner(spark: SparkSession) {
     val taken = localPlanRows(raw)
       .getOrElse(raw.limit(DeltaStore.BufferCap + 1).collect())
     if (taken.length <= DeltaStore.BufferCap) {
-      val (ok, bad) =
-        if (!file) (taken.toSeq, Nil)
-        else taken.toSeq.partition(_.isNullAt(width)) match {
-          case (ok, bad) => (ok.map(r =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq.take(width))), bad)
-        }
-      (localRows(ok, org.apache.spark.sql.types.StructType(
-        raw.schema.fields.take(width))),
+      import scala.jdk.CollectionConverters._
+      val (ok, bad) = taken.toSeq.partition(r => !file || r.isNullAt(width))
+      // nullable columns: a VALUES literal column reports non-nullable
+      // while a later tuple may hold NULL
+      (spark.createDataFrame(
+        ok.map(r => if (file) org.apache.spark.sql.Row.fromSeq(
+          r.toSeq.take(width)) else r).asJava,
+        org.apache.spark.sql.types.StructType(raw.schema.fields.take(width)
+          .map(_.copy(nullable = true)))),
         () => (ok.size.toLong, bad.size.toLong))
     } else if (file) {
       val clean = col(CsvLoader.CorruptCol).isNull
