@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * statement runs, the row count it returns (against a Spark recount)
   * and what a strict-mode rejection leaves behind. Also the rows each
   * DELETE and UPDATE form touches, the forms that read a table's view
-  * under a session time zone, and the staging directories a statement
-  * leaves. */
+  * under a session time zone, the staging directories a statement
+  * leaves, and the result, schema, contents and jobs of each ALTER TABLE
+  * form. */
 class StatementJobsSpec extends AnyFunSuite {
   private def spark = TestSession.spark
   private lazy val dir = Files.createTempDirectory("graft_stmtjobs").toString
@@ -744,6 +745,131 @@ class StatementJobsSpec extends AnyFunSuite {
       val first = rowCount(r, sql)
       assert(first > 0, sql)
       assert(r.run("SELECT ROW_COUNT()").first().getLong(0) === first, sql)
+    }
+  }
+
+  test("the ALTER TABLE forms run no more Spark jobs than their bounds " +
+      "and keep their results, schemas and contents") {
+    import org.apache.spark.sql.types.{DataType, IntegerType, Metadata}
+    val r = freshRunner()
+    type Field = (String, DataType, Metadata)
+    def schemaOf(t: String): Seq[Field] = r.attachedStore(t).read().schema
+      .map(f => (f.name, f.dataType, f.metadata))
+    // the field CREATE TABLE gives a column definition
+    def field(defn: String): Field = {
+      r.run(s"CREATE TABLE aref ($defn) ENGINE=TIANMU")
+      try schemaOf("aref").head finally r.run("DROP TABLE aref")
+    }
+    table200(r, "a00")
+    val start = scan(r, "SELECT * FROM a00")
+    val s0 = schemaOf("a00")
+    val Seq(id, _, tag) = s0
+    def key(x: Seq[String]) = x.head.toInt
+    def v(x: Seq[String]) = x(1).toInt
+    // form, setup statements, statement, the table afterwards, the
+    // result's columns and rows, the table's schema and its contents in
+    // scan order, the most jobs the statement may run
+    val forms = Seq(
+      ("ADD", Nil, "ALTER TABLE a01 ADD c INT", "a01",
+        Seq("table_name", "status"), Seq(Seq("a01", "ADD COLUMN c")),
+        s0 :+ field("c INT"), start.map(_ :+ "null"), 1),
+      ("ADD … DEFAULT", Nil, "ALTER TABLE a02 ADD c INT DEFAULT 5", "a02",
+        Seq("table_name", "status"), Seq(Seq("a02", "ADD COLUMN c")),
+        s0 :+ field("c INT DEFAULT 5"), start.map(_ :+ "5"), 1),
+      ("ADD … AFTER", Nil, "ALTER TABLE a03 ADD c INT AFTER id", "a03",
+        Seq("table_name", "status"), Seq(Seq("a03", "ADD COLUMN c")),
+        id +: field("c INT") +: s0.tail,
+        start.map(x => x.head +: "null" +: x.tail), 2),
+      ("ADD … FIRST", Nil, "ALTER TABLE a04 ADD c INT FIRST", "a04",
+        Seq("table_name", "status"), Seq(Seq("a04", "ADD COLUMN c")),
+        field("c INT") +: s0, start.map("null" +: _), 2),
+      ("DROP", Nil, "ALTER TABLE a05 DROP COLUMN tag", "a05",
+        Seq("table_name", "status"), Seq(Seq("a05", "DROP COLUMN tag")),
+        s0.take(2), start.map(_.take(2)), 1),
+      ("MODIFY", Nil, "ALTER TABLE a06 MODIFY v BIGINT", "a06",
+        Seq("table_name", "status"),
+        Seq(Seq("a06", "MODIFY COLUMN v BIGINT")),
+        Seq(id, field("v BIGINT"), tag), start, 3),
+      ("CHANGE", Nil, "ALTER TABLE a07 CHANGE v w INT", "a07",
+        Seq("table_name", "status"),
+        Seq(Seq("a07", "CHANGE COLUMN v w INT")),
+        Seq(id, ("w", IntegerType, Metadata.empty), tag), start, 1),
+      ("SET DEFAULT", Nil, "ALTER TABLE a08 ALTER v SET DEFAULT 7", "a08",
+        Seq("table_name", "status"),
+        Seq(Seq("a08", "DEFAULT of v set to 7")),
+        Seq(id, field("v INT DEFAULT 7"), tag), start, 1),
+      ("DROP DEFAULT", Seq("ALTER TABLE a09 ALTER v SET DEFAULT 7"),
+        "ALTER TABLE a09 ALTER COLUMN v DROP DEFAULT", "a09",
+        Seq("table_name", "status"), Seq(Seq("a09", "DEFAULT of v dropped")),
+        s0, start, 1),
+      ("ORDER BY", Nil, "ALTER TABLE a10 ORDER BY v, id", "a10",
+        Seq("table_name", "status"),
+        Seq(Seq("a10", "rows ordered by v, id")), s0,
+        start.sortBy(x => (v(x), key(x))), 3),
+      ("ADD PRIMARY KEY", Seq("ALTER TABLE a11 DROP PRIMARY KEY"),
+        "ALTER TABLE a11 ADD PRIMARY KEY (id)", "a11",
+        Seq("table_name", "status"), Seq(Seq("a11", "PRIMARY KEY (id)")),
+        s0, start, 0),
+      ("DROP PRIMARY KEY", Nil, "ALTER TABLE a12 DROP PRIMARY KEY", "a12",
+        Seq("table_name", "status"), Seq(Seq("a12", "PRIMARY KEY dropped")),
+        s0, start, 0),
+      ("AUTO_INCREMENT=n", Nil, "ALTER TABLE a13 AUTO_INCREMENT = 300",
+        "a13", Seq("table_name", "status"),
+        Seq(Seq("a13", "AUTO_INCREMENT=300")), s0, start, 0),
+      ("ENGINE=", Nil, "ALTER TABLE a14 ENGINE=InnoDB", "a14",
+        Seq("table_name", "status"), Seq(Seq("a14", "ENGINE=InnoDB")),
+        s0, start, 0),
+      ("COMMENT=", Nil, "ALTER TABLE a15 COMMENT = 'forms'", "a15",
+        Seq("table_name", "status"),
+        Seq(Seq("a15", "COMMENT = 'forms' accepted (engine is UTF-8 " +
+          "native)")), s0, start, 0),
+      ("ALGORITHM=COPY, ORDER BY", Nil,
+        "ALTER TABLE a16 ALGORITHM=COPY, ORDER BY id DESC", "a16",
+        Seq("table_name", "status"), Seq(Seq("a16", "2 alter action(s)")),
+        s0, start.sortBy(x => -key(x)), 3),
+      ("four clauses", Nil, "ALTER TABLE a17 ADD f INT, ADD g INT, " +
+        "DROP COLUMN tag, MODIFY v BIGINT", "a17",
+        Seq("table_name", "status"), Seq(Seq("a17", "4 alter action(s)")),
+        Seq(id, field("v BIGINT"), field("f INT"), field("g INT")),
+        start.map(x => x.take(2) ++ Seq("null", "null")), 6),
+      ("RENAME TO, ADD", Nil, "ALTER TABLE a18 RENAME TO a18r, ADD h INT",
+        "a18r", Seq("table_name", "status"),
+        Seq(Seq("a18", "2 alter action(s)")),
+        s0 :+ field("h INT"), start.map(_ :+ "null"), 1),
+      ("CREATE INDEX", Nil, "CREATE INDEX i19 ON a19 (v)", "a19",
+        Seq("table_name", "status"),
+        Seq(Seq("a19", "INDEX i19 (v) accepted (metadata only; scan " +
+          "pruning rides the pack stats sidecar)")), s0, start, 0),
+      ("DROP INDEX", Seq("CREATE INDEX i20 ON a20 (v)"),
+        "DROP INDEX i20 ON a20", "a20", Seq("table_name", "status"),
+        Seq(Seq("a20", "INDEX i20 dropped (metadata only)")), s0, start, 0),
+      ("RENAME TABLE", Nil, "RENAME TABLE a21 TO a21r", "a21r",
+        Seq("from", "to"), Seq(Seq("a21", "a21r")), s0, start, 0),
+      ("ADD UNIQUE INDEX (InnoDB)", Seq("ALTER TABLE a22 ENGINE=InnoDB"),
+        "ALTER TABLE a22 ADD UNIQUE INDEX u22 (id)", "a22",
+        Seq("table_name", "status"),
+        Seq(Seq("a22", "UNIQUE INDEX (id) accepted (metadata only)")),
+        s0, start, 0))
+    val seen = forms.map { case (form, setup, sql, table, cols, result,
+        schema, contents, maxJobs) =>
+      // the statement's first table name is the table it starts from
+      table200(r, """\ba\d\d\b""".r.findFirstIn(sql).get)
+      setup.foreach(r.run)
+      val (df, j) = jobs {
+        val df = r.run(sql)
+        df.collect()
+        df
+      }
+      info(s"$form: $j job(s)")
+      assert(df.columns.toSeq === cols, form)
+      assert(df.collect().toSeq.map(_.toSeq.map(String.valueOf)) === result,
+        form)
+      assert(schemaOf(table) === schema, form)
+      assert(scan(r, s"SELECT * FROM $table") === contents, form)
+      (form, j, maxJobs)
+    }
+    seen.foreach { case (form, j, maxJobs) =>
+      assert(j <= maxJobs, s"$form ran $j job(s)")
     }
   }
 
