@@ -648,17 +648,6 @@ class DeltaStore(spark: SparkSession, root: String) {
 
   /** ALTER TABLE … DROP COLUMN analog. */
   def alterDropColumn(name: String): Unit = replaceTable(read().drop(name))
-
-  /** ALTER TABLE … CHANGE COLUMN analog: rename (and optionally retype)
-    * one column. */
-  def alterRenameColumn(oldName: String, newName: String,
-                        dt: Option[org.apache.spark.sql.types.DataType])
-      : Unit = {
-    val df = read()
-    val retyped = dt.fold(df)(t => df.withColumn(oldName,
-      org.apache.spark.sql.functions.col(oldName).cast(t)))
-    replaceTable(retyped.withColumnRenamed(oldName, newName))
-  }
 }
 
 object DeltaStore {

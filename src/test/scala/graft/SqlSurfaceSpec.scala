@@ -1183,4 +1183,104 @@ class SqlSurfaceSpec extends AnyFunSuite {
       assert(reopened.read().count() === 0L, t)
     }
   }
+
+  /** A table's column names and its rows, for checking that a failed
+    * statement changed nothing. */
+  private def snapshot(r: sources.StatementRunner, t: String)
+      : (Seq[String], Seq[String]) =
+    (r.attachedStore(t).read().columns.toSeq, rows(r, s"SELECT * FROM $t"))
+
+  test("statement front-end: a multi-clause ALTER TABLE whose clause " +
+      "fails raises its MySQL error and leaves the table unchanged") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE am1 (id INT NOT NULL PRIMARY KEY, f INT, c INT) " +
+      "ENGINE=TIANMU")
+    r.run("INSERT INTO am1 VALUES (1, 10, 100), (2, 20, 200)")
+    r.run("CREATE TABLE am2 (id INT, c INT) ENGINE=TIANMU")
+    r.run("INSERT INTO am2 VALUES (1, 100), (2, 200)")
+    Seq(
+      ("am1", "ADD x INT, DROP COLUMN no_such", "1091"),
+      ("am1", "ADD i INT, ALGORITHM=INPLACE", "1846"),
+      ("am1", "DROP COLUMN f, DROP COLUMN f", "1091"),
+      ("am1", "ADD z INT, ADD z INT", "1060"),
+      ("am1", "ADD q INT, MODIFY c TINYINT", "1264"),
+      ("am2", "DROP COLUMN id, DROP COLUMN c", "1090")
+    ).foreach { case (t, clauses, code) =>
+      val before = snapshot(r, t)
+      val e = intercept[Exception](r.run(s"ALTER TABLE $t $clauses"))
+      assert(snapshot(r, t) === before, clauses)
+      assert(e.getMessage.contains(code), s"$clauses: ${e.getMessage}")
+    }
+  }
+
+  test("statement front-end: ALTER TABLE CHANGE keeps the definition it " +
+      "is given: UNSIGNED rejects a negative value, AUTO_INCREMENT " +
+      "numbers the next row") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE ach (id INT NOT NULL PRIMARY KEY, v INT) " +
+      "ENGINE=TIANMU")
+    r.run("INSERT INTO ach VALUES (1, 10), (2, 20)")
+    r.run("ALTER TABLE ach CHANGE v w INT UNSIGNED")
+    val e = intercept[Exception](r.run("INSERT INTO ach (id, w) VALUES (3, -1)"))
+    assert(e.getMessage.contains("1264"), e.getMessage)
+    r.run("ALTER TABLE ach CHANGE id id BIGINT NOT NULL AUTO_INCREMENT")
+    r.run("INSERT INTO ach (w) VALUES (30)")
+    assert(rows(r, "SELECT id, w FROM ach") === Seq("1,10", "2,20", "3,30"))
+  }
+
+  test("statement front-end: a dropped key column leaves the PRIMARY KEY, " +
+      "and ADD PRIMARY KEY of an unknown column is 1072") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE akd (id INT NOT NULL PRIMARY KEY, v INT) " +
+      "ENGINE=TIANMU")
+    r.run("INSERT INTO akd VALUES (1, 10)")
+    r.run("ALTER TABLE akd DROP COLUMN id")
+    r.run("INSERT INTO akd VALUES (20)")
+    assert(rows(r, "SELECT v FROM akd") === Seq("10", "20"))
+    val e = intercept[Exception](
+      r.run("ALTER TABLE akd ADD PRIMARY KEY (no_such)"))
+    assert(e.getMessage.contains("1072"), e.getMessage)
+    r.run("INSERT INTO akd VALUES (30)")
+    assert(rows(r, "SELECT v FROM akd") === Seq("10", "20", "30"))
+  }
+
+  test("statement front-end: ALTER TABLE finds a column whatever the " +
+      "case of its name") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE acs (id INT, v INT, u INT, w INT) ENGINE=TIANMU")
+    r.run("INSERT INTO acs VALUES (1, 2, 3, 4)")
+    r.run("ALTER TABLE acs DROP COLUMN V")
+    r.run("ALTER TABLE acs MODIFY U BIGINT")
+    r.run("ALTER TABLE acs CHANGE W x INT")
+    val schema = r.attachedStore("acs").read().schema
+    assert(schema.map(f => (f.name, f.dataType.simpleString)) ===
+      Seq(("id", "int"), ("u", "bigint"), ("x", "int")))
+    assert(rows(r, "SELECT * FROM acs") === Seq("1,3,4"))
+  }
+
+  test("statement front-end: ALTER TABLE ADD COLUMN takes a " +
+      "parenthesized list") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE acl (id INT) ENGINE=TIANMU")
+    r.run("INSERT INTO acl VALUES (1)")
+    r.run("ALTER TABLE acl ADD COLUMN (m INT, n VARCHAR(4) DEFAULT 'd', " +
+      "dd DATE NOT NULL)")
+    assert(r.attachedStore("acl").read().schema
+      .map(f => (f.name, f.dataType.simpleString)) ===
+      Seq(("id", "int"), ("m", "int"), ("n", "string"), ("dd", "date")))
+    assert(rows(r, "SELECT * FROM acl") === Seq("1,null,d,null"))
+  }
+
+  test("statement front-end: ALTER TABLE ADD UNIQUE INDEX on an InnoDB " +
+      "table that holds duplicates is 1062, as CREATE UNIQUE INDEX is") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE aui (id INT, v INT) ENGINE=InnoDB")
+    r.run("INSERT INTO aui VALUES (1, 10), (1, 20)")
+    Seq("ALTER TABLE aui ADD UNIQUE INDEX u (id)",
+      "CREATE UNIQUE INDEX u ON aui (id)").foreach { sql =>
+      val e = intercept[Exception](r.run(sql))
+      assert(e.getMessage.contains("1062"), s"$sql: ${e.getMessage}")
+    }
+    r.run("ALTER TABLE aui ADD UNIQUE INDEX uv (v)")
+  }
 }

@@ -750,7 +750,7 @@ class StatementJobsSpec extends AnyFunSuite {
 
   test("the ALTER TABLE forms run no more Spark jobs than their bounds " +
       "and keep their results, schemas and contents") {
-    import org.apache.spark.sql.types.{DataType, IntegerType, Metadata}
+    import org.apache.spark.sql.types.{DataType, Metadata}
     val r = freshRunner()
     type Field = (String, DataType, Metadata)
     def schemaOf(t: String): Seq[Field] = r.attachedStore(t).read().schema
@@ -779,21 +779,25 @@ class StatementJobsSpec extends AnyFunSuite {
       ("ADD … AFTER", Nil, "ALTER TABLE a03 ADD c INT AFTER id", "a03",
         Seq("table_name", "status"), Seq(Seq("a03", "ADD COLUMN c")),
         id +: field("c INT") +: s0.tail,
-        start.map(x => x.head +: "null" +: x.tail), 2),
+        start.map(x => x.head +: "null" +: x.tail), 1),
       ("ADD … FIRST", Nil, "ALTER TABLE a04 ADD c INT FIRST", "a04",
         Seq("table_name", "status"), Seq(Seq("a04", "ADD COLUMN c")),
-        field("c INT") +: s0, start.map("null" +: _), 2),
+        field("c INT") +: s0, start.map("null" +: _), 1),
       ("DROP", Nil, "ALTER TABLE a05 DROP COLUMN tag", "a05",
         Seq("table_name", "status"), Seq(Seq("a05", "DROP COLUMN tag")),
         s0.take(2), start.map(_.take(2)), 1),
       ("MODIFY", Nil, "ALTER TABLE a06 MODIFY v BIGINT", "a06",
         Seq("table_name", "status"),
         Seq(Seq("a06", "MODIFY COLUMN v BIGINT")),
-        Seq(id, field("v BIGINT"), tag), start, 3),
+        Seq(id, field("v BIGINT"), tag), start, 1),
+      ("MODIFY, narrower", Nil, "ALTER TABLE a23 MODIFY v TINYINT", "a23",
+        Seq("table_name", "status"),
+        Seq(Seq("a23", "MODIFY COLUMN v TINYINT")),
+        Seq(id, field("v TINYINT"), tag), start, 3),
       ("CHANGE", Nil, "ALTER TABLE a07 CHANGE v w INT", "a07",
         Seq("table_name", "status"),
         Seq(Seq("a07", "CHANGE COLUMN v w INT")),
-        Seq(id, ("w", IntegerType, Metadata.empty), tag), start, 1),
+        Seq(id, field("w INT"), tag), start, 1),
       ("SET DEFAULT", Nil, "ALTER TABLE a08 ALTER v SET DEFAULT 7", "a08",
         Seq("table_name", "status"),
         Seq(Seq("a08", "DEFAULT of v set to 7")),
@@ -821,8 +825,7 @@ class StatementJobsSpec extends AnyFunSuite {
         s0, start, 0),
       ("COMMENT=", Nil, "ALTER TABLE a15 COMMENT = 'forms'", "a15",
         Seq("table_name", "status"),
-        Seq(Seq("a15", "COMMENT = 'forms' accepted (engine is UTF-8 " +
-          "native)")), s0, start, 0),
+        Seq(Seq("a15", "COMMENT = 'forms' accepted")), s0, start, 0),
       ("ALGORITHM=COPY, ORDER BY", Nil,
         "ALTER TABLE a16 ALGORITHM=COPY, ORDER BY id DESC", "a16",
         Seq("table_name", "status"), Seq(Seq("a16", "2 alter action(s)")),
@@ -831,15 +834,15 @@ class StatementJobsSpec extends AnyFunSuite {
         "DROP COLUMN tag, MODIFY v BIGINT", "a17",
         Seq("table_name", "status"), Seq(Seq("a17", "4 alter action(s)")),
         Seq(id, field("v BIGINT"), field("f INT"), field("g INT")),
-        start.map(x => x.take(2) ++ Seq("null", "null")), 6),
+        start.map(x => x.take(2) ++ Seq("null", "null")), 1),
       ("RENAME TO, ADD", Nil, "ALTER TABLE a18 RENAME TO a18r, ADD h INT",
         "a18r", Seq("table_name", "status"),
-        Seq(Seq("a18", "2 alter action(s)")),
+        Seq(Seq("a18r", "2 alter action(s)")),
         s0 :+ field("h INT"), start.map(_ :+ "null"), 1),
       ("CREATE INDEX", Nil, "CREATE INDEX i19 ON a19 (v)", "a19",
         Seq("table_name", "status"),
-        Seq(Seq("a19", "INDEX i19 (v) accepted (metadata only; scan " +
-          "pruning rides the pack stats sidecar)")), s0, start, 0),
+        Seq(Seq("a19", "secondary INDEX i19 (v) accepted (metadata " +
+          "only)")), s0, start, 0),
       ("DROP INDEX", Seq("CREATE INDEX i20 ON a20 (v)"),
         "DROP INDEX i20 ON a20", "a20", Seq("table_name", "status"),
         Seq(Seq("a20", "INDEX i20 dropped (metadata only)")), s0, start, 0),
@@ -848,8 +851,8 @@ class StatementJobsSpec extends AnyFunSuite {
       ("ADD UNIQUE INDEX (InnoDB)", Seq("ALTER TABLE a22 ENGINE=InnoDB"),
         "ALTER TABLE a22 ADD UNIQUE INDEX u22 (id)", "a22",
         Seq("table_name", "status"),
-        Seq(Seq("a22", "UNIQUE INDEX (id) accepted (metadata only)")),
-        s0, start, 0))
+        Seq(Seq("a22", "UNIQUE INDEX u22 (id) accepted (metadata only)")),
+        s0, start, 5))
     val seen = forms.map { case (form, setup, sql, table, cols, result,
         schema, contents, maxJobs) =>
       // the statement's first table name is the table it starts from
