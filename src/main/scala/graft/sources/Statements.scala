@@ -1917,7 +1917,7 @@ class StatementRunner(spark: SparkSession) {
   /** One column definition (or table-level constraint) from a CREATE
     * TABLE body. Returns Left(field) for a column, Right(pkCols) for a
     * PRIMARY KEY clause, None-equivalent for ignorable index clauses. */
-  private def parseColumnDef(d: String, tianmu: Boolean = true,
+  private def parseColumnDef(d: String, tianmu: Boolean,
                              forTable: String = "")
       : Either[org.apache.spark.sql.types.StructField, Option[Seq[String]]] = {
     import org.apache.spark.sql.types._
