@@ -154,7 +154,7 @@ object StatementRunner {
   /** The table an ALTER TABLE statement builds: its name, its columns
     * (each the field it gets and the value it takes from a stored
     * row), key, indexes, engine and counter start, and what the write
-    * does: the strict-mode violations it counts, the UNIQUE keys it
+    * does: the strict-mode violations it probes, the UNIQUE keys it
     * checks and the order it writes the rows in. */
   private[sources] final case class AlterState(
       name: String,
@@ -3979,17 +3979,13 @@ class StatementRunner(spark: SparkSession) {
         val f = field(rename.getOrElse(old.name), spec)
         // rows that violate the new definition reject the statement in
         // strict mode (bigint_unsigned.test MODIFYs negative data to
-        // UNSIGNED); a bound the old definition already keeps needs no
-        // check
+        // UNSIGNED)
         val x = v.cast(DecimalType(38, 4))
-        val violations = mysqlBounds(f).filterNot { case (lo, hi) =>
-          mysqlBounds(old).exists(b => b._1 >= lo && b._2 <= hi)
-        }.map { case (lo, hi) =>
+        val violations = mysqlBounds(f).map { case (lo, hi) =>
           v.isNotNull &&
             (x < lit(lo.bigDecimal) || x > lit(hi.bigDecimal) || x.isNull)
-        } ++ maxLenOf(f).filterNot(cap => maxLenOf(old).exists(_ <= cap))
-          .map(cap => length(v.cast("string")) > cap) ++
-          Some(v.isNull).filter(_ => requiredCol(f) && !requiredCol(old))
+        } ++ maxLenOf(f).map(cap => length(v.cast("string")) > cap) ++
+          Some(v.isNull).filter(_ => requiredCol(f))
         (st.copy(cols = insert(rest, (f, v.cast(f.dataType)), after, i),
           pk = st.pk.map(_.map(k =>
             if (k.equalsIgnoreCase(old.name)) f.name else k)),
@@ -4048,40 +4044,42 @@ class StatementRunner(spark: SparkSession) {
 
   /** ALTER TABLE `table` by `ops` as one statement. The ops fold, in
     * order, over a working copy of the table's definition, each checked
-    * against it. Then the write: one strict-mode aggregate over every
+    * against it. Then the write: one strict-mode probe over every
     * MODIFY and CHANGE, the duplicate check of each new UNIQUE index,
-    * and, when the columns or the row order change, one base rewrite.
+    * and, when a column's field or value or the row order changes, one
+    * base rewrite.
     * Only then is the catalog committed. A failing op or check leaves
     * the table as it was. */
   private def alterTable(table: String, ops: Seq[AlterOp]): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, count, when}
+    import org.apache.spark.sql.functions.col
     val key = table.toLowerCase
     val store = attachedStore(table)
-    val fields = store.read().schema.fields.toVector
-    val (st, statuses) = ops.foldLeft((AlterState(table,
-        fields.map(f => (f, col(s"`${f.name.replace("`", "``")}`"))),
+    val initial = store.read().schema.fields.toVector
+      .map(f => (f, col(s"`${f.name.replace("`", "``")}`")))
+    val (st, statuses) = ops.foldLeft((AlterState(table, initial,
         primaryKeys.get(key), indexDefs.get(key).fold(Map.empty[String,
           String])(_.toMap), tableEngines.get(key), autoIncBase.get(key)),
         Vector.empty[String])) { case ((s, done), op) =>
       val (next, status) = alterStep(key, s, op)
       (next, done :+ status)
     }
-    if (st.violations.nonEmpty) {
-      val n = store.read().agg(count(when(st.violations.reduce(_ || _), 1)))
-        .first().getLong(0)
-      if (n > 0) throw new IllegalArgumentException(
-        s"ALTER TABLE: $n existing row(s) violate a new column definition " +
+    if (st.violations.nonEmpty &&
+        !store.read().where(st.violations.reduce(_ || _)).isEmpty)
+      throw new IllegalArgumentException(
+        "ALTER TABLE: an existing row violates a new column definition " +
           "(MySQL strict mode, 1264/1048/1406)")
-    }
+    // a UNIQUE index admits any number of rows with a NULL key part
     st.uniques.foreach { case (index, keys) =>
-      val t = store.read().select(keys: _*)
-      if (t.count() > t.distinct().count())
+      if (!store.read().where(keys.map(_.isNotNull).reduce(_ && _))
+          .groupBy(keys: _*).count().where(col("count") > 1).isEmpty)
         throw new IllegalArgumentException(
           s"ALTER TABLE: UNIQUE index $index: duplicate entry " +
             "(MySQL ER_DUP_ENTRY 1062)")
     }
-    if (st.orderBy.isDefined || st.cols.map(_._1) != fields)
+    // the values decide too: DROP COLUMN c, ADD c INT leaves the fields
+    // as they were but every c NULL
+    if (st.orderBy.isDefined || st.cols != initial)
       store.rewriteWith { df =>
         val out = df.select(st.cols.map { case (f, v) =>
           v.as(f.name, f.metadata) }: _*)

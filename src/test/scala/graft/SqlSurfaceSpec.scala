@@ -1283,4 +1283,29 @@ class SqlSurfaceSpec extends AnyFunSuite {
     }
     r.run("ALTER TABLE aui ADD UNIQUE INDEX uv (v)")
   }
+
+  test("statement front-end: a UNIQUE index admits any number of rows " +
+      "with a NULL key part") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE aun (id INT, k INT, v INT) ENGINE=InnoDB")
+    r.run("INSERT INTO aun VALUES (NULL, 1, 10), (NULL, 1, 20), " +
+      "(1, NULL, 30), (2, NULL, 40)")
+    r.run("ALTER TABLE aun ADD UNIQUE INDEX u1 (id)")
+    r.run("CREATE UNIQUE INDEX u2 ON aun (id, k)")
+    val e = intercept[Exception](r.run("ALTER TABLE aun ADD UNIQUE INDEX u3 (k)"))
+    assert(e.getMessage.contains("1062"), e.getMessage)
+  }
+
+  test("statement front-end: a column dropped and added back in one " +
+      "ALTER TABLE takes its new value, not its old one") {
+    val r = keyedRunner()
+    r.run("CREATE TABLE adb (id INT, c INT) ENGINE=TIANMU")
+    r.run("INSERT INTO adb VALUES (1, 10), (2, 20)")
+    r.run("ALTER TABLE adb DROP COLUMN c, ADD c INT")
+    assert(rows(r, "SELECT * FROM adb") === Seq("1,null", "2,null"))
+    r.run("CREATE TABLE add0 (id INT, c INT DEFAULT 0) ENGINE=TIANMU")
+    r.run("INSERT INTO add0 VALUES (1, 10), (2, 20)")
+    r.run("ALTER TABLE add0 DROP COLUMN c, ADD c INT DEFAULT 0")
+    assert(rows(r, "SELECT * FROM add0") === Seq("1,0", "2,0"))
+  }
 }
